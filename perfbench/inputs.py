@@ -1,11 +1,13 @@
-"""Seeded inputs: the driver-schema tables (events, documents, embeddings)
-and raw log lines with mixed timestamp formats.
+"""Seeded inputs: the driver-schema tables (events, documents) and raw log
+lines with mixed timestamp formats.
 
-Everything is a pure function of the seed. Shapes follow the driver corpus
-schemas the query registry declares: events have unique, time-ordered
-``event_id`` below 2^21 and 2-decimal values; documents draw from a small
-vocabulary with planted near-duplicates; embeddings are unit vectors
-clustered by label.
+Everything is a pure function of the seed. The tables follow the shapes of
+the driver's sf0.1 corpus, measured from its parquet files: events have
+1,500 users, 5 equally likely event types, a 30-day span from 2024-01-01,
+unique time-ordered ``event_id``, values drawn from an exponential
+distribution with mean 50 rounded to 2 decimals, and 100 distinct
+``props``; documents have 10–100 words drawn from a 31-word vocabulary,
+5 languages (41 % ``en``), 20 sources and 0.16 % exact duplicates.
 """
 
 from __future__ import annotations
@@ -15,68 +17,63 @@ import os
 
 import numpy as np
 
+SF01_ROWS = {"events": 100_000, "documents": 5_000}
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
+N_USERS = 1_500
+SPAN_DAYS = 30
+VALUE_MEAN = 50.0
+N_PROPS = 100
 VOCAB = (
     "a agg batch big column customer data fast filter group hash join key "
     "line merge order part query row scan slow small sort spark stream table "
     "the value vector window"
 ).split()
-LANGS = ["en", "en", "zh", "de", "es", "fr"]
+WORDS = (10, 100)
+LANGS = {"en": 0.41, "zh": 0.15, "fr": 0.15, "es": 0.15, "de": 0.14}
+N_SOURCES = 20
+DUP_RATE = 0.0016
 START = dt.datetime(2024, 1, 1)
 LOG_APPS = ["api", "auth", "db", "web", "cache"]
 LOG_START_S = 1_704_067_200  # 2024-01-01T00:00:00Z
 
 
-def write_tables(out_dir: str, seed: int, n_events: int, n_docs: int, n_emb: int) -> None:
+def write_tables(out_dir: str, seed: int, n_events: int, n_docs: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
 
-    # events: unique microsecond timestamps over 30 days, ids in ts order
-    span_us = 30 * 86_400 * 1_000_000
+    # events: unique microsecond timestamps, ids in ts order
+    span_us = SPAN_DAYS * 86_400 * 1_000_000
     offs = np.sort(rng.choice(span_us, size=n_events, replace=False))
     ts = np.datetime64(START, "us") + offs.astype("timedelta64[us]")
     events = pa.table({
         "event_id": pa.array(np.arange(n_events, dtype=np.int64)),
         "ts": pa.array(ts, type=pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, 1500, n_events, dtype=np.int64)),
+        "user_id": pa.array(rng.integers(0, N_USERS, n_events, dtype=np.int64)),
         "event_type": pa.array(rng.choice(EVENT_TYPES, n_events)),
-        "value": pa.array(np.round(rng.gamma(1.5, 40.0, n_events), 2)),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)]),
+        "value": pa.array(np.round(rng.exponential(VALUE_MEAN, n_events), 2)),
+        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, N_PROPS, n_events)]),
     })
     pq.write_table(events, os.path.join(out_dir, "events.parquet"))
 
-    # documents: every 10th doc is a near-duplicate of an earlier one
-    texts = []
+    # documents: a few exact copies of earlier documents
+    texts: list[str] = []
     for i in range(n_docs):
-        if i >= 10 and i % 10 == 0:
-            src = texts[int(rng.integers(0, i))]
-            texts.append(src + " dup")
+        if i and rng.random() < DUP_RATE:
+            texts.append(texts[int(rng.integers(0, i))])
         else:
-            n = int(rng.integers(8, 100))
+            n = int(rng.integers(WORDS[0], WORDS[1] + 1))
             texts.append(" ".join(rng.choice(VOCAB, n)))
     docs = pa.table({
         "doc_id": pa.array(np.arange(n_docs, dtype=np.int64)),
         "text": pa.array(texts),
-        "lang": pa.array(rng.choice(LANGS, n_docs)),
-        "source": pa.array([f"src{i % 20}" for i in range(n_docs)]),
+        "lang": pa.array(rng.choice(list(LANGS), n_docs, p=list(LANGS.values()))),
+        "source": pa.array([f"src{i % N_SOURCES}" for i in range(n_docs)]),
         "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
     })
     pq.write_table(docs, os.path.join(out_dir, "documents.parquet"))
-
-    # embeddings: 64-d unit vectors around 10 label centroids
-    labels = rng.integers(0, 10, n_emb)
-    cent = rng.normal(size=(10, 64))
-    vec = cent[labels] + rng.normal(scale=1.5, size=(n_emb, 64))
-    vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
-    emb = pa.table({
-        "vec_id": pa.array(np.arange(n_emb, dtype=np.int64)),
-        "embedding": pa.array(list(vec), type=pa.list_(pa.float32())),
-        "label": pa.array(labels.astype(np.int32)),
-    })
-    pq.write_table(emb, os.path.join(out_dir, "embeddings.parquet"))
 
 
 def _fmt_ts(epoch_s: int, kind: int) -> str:
@@ -90,7 +87,7 @@ def _fmt_ts(epoch_s: int, kind: int) -> str:
     return str(epoch_s)
 
 
-def log_records(seed: int, n_lines: int, span_s: int = 600) -> list[tuple[int, str, int, int]]:
+def log_records(seed: int, n_lines: int, span_s: int) -> list[tuple[int, str, int, int]]:
     """(epoch_s, app, bytes, ts_format) per line, in arrival order. The
     timestamp format (ISO-8601, CLF, RFC2822, epoch) is drawn per line."""
     rng = np.random.default_rng(seed + 1_000_003)

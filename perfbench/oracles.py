@@ -19,7 +19,7 @@ import pandas as pd
 
 from scripts.correctness_canary import _value_hash
 
-TABLES = ("events", "documents", "embeddings")
+TABLES = ("events", "documents")
 
 
 def duckdb_views(data_dir: str):

@@ -46,6 +46,22 @@ def _benchmark_spec() -> dict:
         return json.load(f)
 
 
+def _commit_label(store, df, table, *args, **kwargs) -> str:
+    """Span label of ``TierStore.commit(df, table, ...)``."""
+    return f"commit:{table}"
+
+
+def _udf_counters() -> list[tuple]:
+    """(owner, factory, key): the pandas UDFs whose input rows are counted."""
+    from pq_spark.engine import ingest
+    from pq_spark.rollup import pages
+
+    return [
+        (pages, "extract_text_udf", "rollup.pages.extract_rows"),
+        (ingest, "_guess_ts_udf", "engine.ingest.ts_fallback_rows"),
+    ]
+
+
 def _trace_targets(tracer_mod) -> list[tuple]:
     from pq_spark import program, textops, timejoin
     from pq_spark.engine import formatter, ingest, planner, runner
@@ -67,7 +83,8 @@ def _trace_targets(tracer_mod) -> list[tuple]:
         (gorilla, "pack_blocks", "rollup.gorilla", "pack_blocks", False),
         (gorilla, "unpack_blocks", "rollup.gorilla", "unpack_blocks", False),
     ]
-    for attr in ("commit", "fingerprints", "finalize_commit", "read",
+    t.append((lineage.TierStore, "commit", "rollup.lineage", _commit_label, False))
+    for attr in ("fingerprints", "finalize_commit", "read",
                  "_write_manifest", "_append_snapshot", "_publish_snapshot"):
         t.append((lineage.TierStore, attr, "rollup.lineage", attr, False))
     for attr in ("promapi_lines", "promhuman_lines", "entries_json_lines", "records_json_lines"):
@@ -150,16 +167,14 @@ def main() -> int:
                 t = time.perf_counter()
                 wl.setup_round()
                 rounds.append(time.perf_counter() - t)
-            t = time.perf_counter()
-            wl.warmup()
-            setup_s = session_s + statistics.median(rounds) + time.perf_counter() - t
+            setup_s = session_s + statistics.median(rounds)
             if traced_run:
-                tracer.install(
-                    [m for k, m in sys.modules.items() if k.startswith("pq_spark")],
-                    _trace_targets(trace),
-                )
-                # one more unrecorded pass, so that the untraced and traced
-                # passes compared for the overhead are equally warm
+                loaded = [m for k, m in sys.modules.items() if k.startswith("pq_spark")]
+                tracer.install(loaded, _trace_targets(trace))
+                for owner, attr, key in _udf_counters():
+                    tracer.count_udf_rows(loaded, owner, attr, key)
+                # one unrecorded (cold) pass, so that the untraced and
+                # traced passes compared for the overhead are equally warm
                 wl.one_pass()
                 wl.passes.clear()
             untraced, traced = [], []
@@ -199,6 +214,7 @@ def main() -> int:
             metrics = {
                 **_generic_layers(spans, attr, traced, untraced, trace),
                 **wl.layers(spans, attr, traced),
+                **{k: acc.value / len(traced) for k, acc in tracer.udf_rows.items()},
                 **extras,
                 "host.control_probe_s": probe_s,
             }
@@ -210,7 +226,8 @@ def main() -> int:
             print(f"perfbench: {e}", file=sys.stderr)
         op_medians = workloads.medians([p["ops"] for p in wl.passes]) if wl.passes else {}
         print(json.dumps({"host": facts, "workload": args.workload, "seed": args.seed,
-                          "setup_rounds_s": rounds, "control_probe_s": probe_s,
+                          "setup_rounds_s": rounds, "session_s": session_s,
+                          "control_probe_s": probe_s,
                           "passes": len(wl.passes),
                           "op_median_s": op_medians, "errors": run.errors[:5]}))
         print(json.dumps({"correct": ok, "attempted": max(run.attempted, 1),

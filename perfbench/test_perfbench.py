@@ -8,7 +8,7 @@ import json
 
 import pytest
 
-from perfbench import oracles, trace
+from perfbench import oracles, trace, workloads
 
 
 def _ev(**kw) -> str:
@@ -34,7 +34,9 @@ def _task(stage, run_ms, cpu_ns, shuffle_w=0, py_sent=0, spill=0):
 PLAN = {"nodeName": "AdaptiveSparkPlan", "children": [
     {"nodeName": "Exchange", "children": [
         {"nodeName": "BroadcastExchange", "children": [{"nodeName": "Scan parquet ", "children": []}]},
-        {"nodeName": "Scan parquet ", "children": []},
+        {"nodeName": "InMemoryTableScan", "children": [
+            {"nodeName": "Scan parquet ", "children": []},
+        ]},
     ]},
 ]}
 
@@ -76,7 +78,7 @@ def test_event_log_attribution():
     assert (s3["shuffle_write_bytes"], s3["shuffle_read_bytes"]) == (10, 6)
     assert (s3["python_bytes"], s3["spill_bytes"]) == (40, 3)
     # the final (adaptive) plan counts, not the initial one
-    assert (s3["exchanges"], s3["scans"]) == (2, 2)
+    assert (s3["exchanges"], s3["scans"], s3["cache_scans"]) == (2, 2, 1)
     assert (s4["jobs"], s4["tasks"], s4["task_s"]) == (1, 1, pytest.approx(0.05))
     assert a["jobs"] == {3: [(1.0, 3.0)], 4: [(3.5, 4.0)]}
     assert a["free_jobs"] == [5.0]
@@ -130,13 +132,24 @@ def test_tracer_spans_and_wrapping():
     def outer(x):
         return w_inner(x) * 2
 
-    w_inner = t.wrap(inner, "a", "inner")
+    w_inner = t.wrap(inner, "a", lambda x: f"inner:{x}")
     w_outer = t.wrap(outer, "b", "outer")
     assert w_outer(1) == 4 and t.spans == []         # disabled: no spans
     t.enabled = True
     assert w_outer(1) == 4
-    assert [(s["layer"], s["parent"]) for s in t.spans] == [("b", None), ("a", 0)]
+    assert [(s["layer"], s["name"], s["parent"]) for s in t.spans] == [
+        ("b", "outer", None), ("a", "inner:1", 0)]
     assert trace.subtree(t.spans, 0) == [0, 1]
+
+
+def test_stage_sum_requires_every_commit_stage():
+    stage = {"partitions_written": 2, "partitions_skipped": 1}
+    m = {"stages": {st: dict(stage) for st in workloads.COMMIT_STAGES}}
+    m["stages"]["verify_extraction"] = {"elapsed_s": 0.1}
+    assert workloads._stage_sum(m, "partitions_written") == 8
+    del m["stages"]["tier_1h"]["partitions_skipped"]
+    with pytest.raises(KeyError):
+        workloads._stage_sum(m, "partitions_skipped")
 
 
 def test_value_hash_comparison():

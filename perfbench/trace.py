@@ -6,7 +6,9 @@ span (layer, name, start, end, parent) and tags the Spark jobs it starts
 with a job group naming that span. After the Spark session stops, the
 event log is parsed and each job's tasks (time, CPU, GC, shuffle, spill,
 Python-worker bytes) and SQL plans (Exchanges, scans) are attributed to
-the span whose group the job carries.
+the span whose group the job carries. Selected pandas-UDF factories are
+wrapped too, so that the UDFs the program builds count the rows they
+receive into Spark accumulators.
 
 Self time of a span is its duration minus the part its children cover.
 The wall time of the span's own Spark jobs is then moved out of the
@@ -20,16 +22,17 @@ import contextlib
 import functools
 import inspect
 import json
-import threading
 import time
 from collections import defaultdict
+
+import pandas as pd
 
 GROUP_PREFIX = "pb"
 PY_BYTES_METRICS = ("data sent to Python workers", "data returned from Python workers")
 SPARK_FIELDS = (
     "jobs", "stages", "tasks", "task_s", "task_cpu_s", "gc_s",
     "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes", "python_bytes",
-    "exchanges", "scans",
+    "exchanges", "scans", "cache_scans",
 )
 
 
@@ -40,14 +43,9 @@ class Tracer:
         self.sc = sc
         self.spans: list[dict] = []
         self.enabled = False
-        self._local = threading.local()
-        self._lock = threading.Lock()
+        self.udf_rows: dict[str, object] = {}  # key -> Spark accumulator
+        self._stack: list[int] = []  # open spans; the benchmark is one client
         self._patched: list[tuple[object, str, object]] = []
-
-    def _stack(self) -> list[int]:
-        if not hasattr(self._local, "stack"):
-            self._local.stack = []
-        return self._local.stack
 
     def _set_group(self, sid: int | None) -> None:
         if self.sc is None:
@@ -63,13 +61,12 @@ class Tracer:
         if not self.enabled:
             yield None
             return
-        stack = self._stack()
-        with self._lock:
-            sid = len(self.spans)
-            self.spans.append({
-                "id": sid, "parent": stack[-1] if stack else None,
-                "layer": layer, "name": name, "t0": time.time(), "t1": None,
-            })
+        stack = self._stack
+        sid = len(self.spans)
+        self.spans.append({
+            "id": sid, "parent": stack[-1] if stack else None,
+            "layer": layer, "name": name, "t0": time.time(), "t1": None,
+        })
         stack.append(sid)
         self._set_group(sid)
         try:
@@ -79,43 +76,71 @@ class Tracer:
             stack.pop()
             self._set_group(stack[-1] if stack else None)
 
-    def wrap(self, fn, layer: str, name: str, outermost: bool = False):
-        """``outermost``: a recursive entry point (the planner) opens a span
-        only for the outermost call of the layer on this thread."""
+    def wrap(self, fn, layer: str, name, outermost: bool = False):
+        """``name``: the span label, or a callable building it from the
+        call's arguments. ``outermost``: a recursive entry point (the
+        planner) opens a span only for the outermost call of the layer."""
 
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
             if not self.enabled:
                 return fn(*args, **kwargs)
-            if outermost:
-                stack = self._stack()
-                if stack and self.spans[stack[-1]]["layer"] == layer:
-                    return fn(*args, **kwargs)
-            label = name
-            if name == "commit":  # TierStore.commit(df, table, ...)
-                table = kwargs.get("table", args[2] if len(args) > 2 else "?")
-                label = f"commit:{table}"
+            if outermost and self._stack and self.spans[self._stack[-1]]["layer"] == layer:
+                return fn(*args, **kwargs)
+            label = name(*args, **kwargs) if callable(name) else name
             with self.span(layer, label):
                 return fn(*args, **kwargs)
 
         return wrapper
 
+    def _replace(self, modules: list, owner, attr: str, make) -> None:
+        """Replace ``owner.attr`` by ``make(original)``. A module-level
+        function is also replaced where other loaded modules imported it
+        by name, so calls through either reference see the replacement."""
+        raw = inspect.getattr_static(owner, attr)
+        is_static = isinstance(raw, staticmethod)
+        fn = raw.__func__ if is_static else raw
+        w = make(fn)
+        self._patched.append((owner, attr, raw))
+        setattr(owner, attr, staticmethod(w) if is_static else w)
+        if inspect.ismodule(owner):
+            for mod in modules:
+                if mod is not owner and getattr(mod, attr, None) is fn:
+                    self._patched.append((mod, attr, fn))
+                    setattr(mod, attr, w)
+
     def install(self, modules: list, targets: list[tuple]) -> None:
-        """``targets``: (owner, attr, layer, name, outermost). Module-level
-        functions are also replaced where other loaded modules imported
-        them by name, so calls through either reference open a span."""
+        """``targets``: (owner, attr, layer, name, outermost)."""
         for owner, attr, layer, name, outermost in targets:
-            raw = inspect.getattr_static(owner, attr)
-            is_static = isinstance(raw, staticmethod)
-            fn = raw.__func__ if is_static else raw
-            w = self.wrap(fn, layer, name, outermost)
-            self._patched.append((owner, attr, raw))
-            setattr(owner, attr, staticmethod(w) if is_static else w)
-            if inspect.ismodule(owner):
-                for mod in modules:
-                    if mod is not owner and getattr(mod, attr, None) is fn:
-                        self._patched.append((mod, attr, fn))
-                        setattr(mod, attr, w)
+            self._replace(modules, owner, attr,
+                          lambda fn: self.wrap(fn, layer, name, outermost))
+
+    def count_udf_rows(self, modules: list, owner, attr: str, key: str) -> None:
+        """``owner.attr`` is a factory returning a one-column scalar pandas
+        UDF. While tracing is enabled, the UDFs it returns add the number
+        of non-null rows they receive to the accumulator ``udf_rows[key]``,
+        so the count is of the rows the program's own plans hand to Python."""
+        from pyspark.sql.functions import pandas_udf
+
+        acc = self.udf_rows[key] = self.sc.accumulator(0)
+
+        def make(factory):
+            @functools.wraps(factory)
+            def counting_factory(*args, **kwargs):
+                udf = factory(*args, **kwargs)
+                if not self.enabled:
+                    return udf
+                inner = udf.func
+
+                def counted(s: pd.Series) -> pd.Series:
+                    acc.add(int(s.notna().sum()))
+                    return inner(s)
+
+                return pandas_udf(counted, udf.returnType)
+
+            return counting_factory
+
+        self._replace(modules, owner, attr, make)
 
     def uninstall(self) -> None:
         for owner, attr, raw in reversed(self._patched):
@@ -188,8 +213,9 @@ def self_times(spans: list[dict], job_intervals: dict[int, list]) -> dict[int, d
 # -- event log ------------------------------------------------------------------
 
 
-def _plan_counts(info: dict) -> tuple[int, int]:
-    exchanges = scans = 0
+def _plan_counts(info: dict) -> tuple[int, int, int]:
+    """(Exchanges, file scans, scans of cached relations) in a plan tree."""
+    exchanges = scans = cache_scans = 0
     todo = [info]
     while todo:
         n = todo.pop()
@@ -198,8 +224,10 @@ def _plan_counts(info: dict) -> tuple[int, int]:
             exchanges += 1
         elif name.startswith("Scan"):
             scans += 1
+        elif name == "InMemoryTableScan":
+            cache_scans += 1
         todo.extend(n.get("children", []))
-    return exchanges, scans
+    return exchanges, scans, cache_scans
 
 
 def parse_event_log(lines) -> dict:
@@ -278,9 +306,9 @@ def parse_event_log(lines) -> dict:
 
     for eid, sid in exec_span.items():
         if eid in exec_plan:
-            ex, sc = _plan_counts(exec_plan[eid])
-            totals[sid]["exchanges"] += ex
-            totals[sid]["scans"] += sc
+            counts = _plan_counts(exec_plan[eid])
+            for field, v in zip(("exchanges", "scans", "cache_scans"), counts):
+                totals[sid][field] += v
     return {"spans": dict(totals), "jobs": dict(jobs), "free_jobs": free}
 
 
