@@ -19,6 +19,7 @@ import glob
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -145,6 +146,9 @@ def main() -> int:
     import bench  # the fixed pure-JVM control probe
     from perfbench import session, trace, workloads
 
+    session.adopt_orphans()
+    # a TERM ends the run through the finally below, which stops the JVM
+    signal.signal(signal.SIGTERM, lambda signum, frame: sys.exit(128 + signum))
     if args.workload not in workloads.WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}", file=sys.stderr)
         return 2
@@ -167,7 +171,11 @@ def main() -> int:
                 t = time.perf_counter()
                 wl.setup_round()
                 rounds.append(time.perf_counter() - t)
-            setup_s = session_s + statistics.median(rounds)
+            # the answers depend on the seed only, so they are prepared once
+            t = time.perf_counter()
+            wl.prepare_answers()
+            answers_s = time.perf_counter() - t
+            setup_s = session_s + statistics.median(rounds) + answers_s
             if traced_run:
                 loaded = [m for k, m in sys.modules.items() if k.startswith("pq_spark")]
                 tracer.install(loaded, _trace_targets(trace))
@@ -180,7 +188,7 @@ def main() -> int:
             untraced, traced = [], []
             deadline = time.perf_counter() + args.seconds
             while run.failed == 0:
-                tracer.enabled = traced_run and len(traced) < len(untraced)
+                tracer.enabled = traced_run and len(traced) <= len(untraced)
                 t = time.perf_counter()
                 p = wl.one_pass()
                 if p is None:
@@ -189,18 +197,17 @@ def main() -> int:
                 p["roots"] = dict(run.roots)
                 (traced if tracer.enabled else untraced).append(p)
                 tracer.enabled = False
-                # a traced run ends on an untraced pass, so every traced pass
-                # sits between two untraced ones and warming drift cancels
-                # out of the overhead
+                # a traced run alternates traced and untraced passes and
+                # ends on an untraced one, so the two kinds are equally many
                 if time.perf_counter() >= deadline and (
-                    not traced_run or (traced and len(untraced) > len(traced))
+                    not traced_run or len(untraced) == len(traced)
                 ):
                     break
             probe_s = bench._control_probe(spark)  # host weather, on the warm JVM
             wl.verify()
             extras = wl.trace_extras() if traced_run and run.failed == 0 else {}
         facts = session.host_facts(ROOT, spark)
-        spark.stop()
+        session.stop_spark(spark)
         spark = None
         ok = run.failed == 0 and bool(wl.passes)
         metrics: dict[str, float] = {}
@@ -227,6 +234,7 @@ def main() -> int:
         op_medians = workloads.medians([p["ops"] for p in wl.passes]) if wl.passes else {}
         print(json.dumps({"host": facts, "workload": args.workload, "seed": args.seed,
                           "setup_rounds_s": rounds, "session_s": session_s,
+                          "answers_s": answers_s,
                           "control_probe_s": probe_s,
                           "passes": len(wl.passes),
                           "op_median_s": op_medians, "errors": run.errors[:5]}))
@@ -234,13 +242,16 @@ def main() -> int:
                           "failed": run.failed, "metrics": metrics}))
         return 0
     finally:
-        if spark is not None:
-            spark.stop()
-        shutil.rmtree(work, ignore_errors=True)
         try:
-            os.rmdir(os.path.dirname(work))
-        except OSError:
-            pass
+            if spark is not None:
+                session.stop_spark(spark)
+        finally:
+            session.reap_children()
+            shutil.rmtree(work, ignore_errors=True)
+            try:
+                os.rmdir(os.path.dirname(work))
+            except OSError:
+                pass
 
 
 if __name__ == "__main__":

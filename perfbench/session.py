@@ -5,6 +5,7 @@ from __future__ import annotations
 import hashlib
 import os
 import platform
+import signal
 import subprocess
 import threading
 import time
@@ -138,6 +139,58 @@ class RssSampler:
 
 def jvm_pid(spark) -> int:
     return spark.sparkContext._gateway.proc.pid
+
+
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def adopt_orphans() -> None:
+    """Make this process the reaper of its orphaned descendants. The Python
+    daemon and workers of the JVM outlive it for a moment when it exits; as
+    our children they can be waited for by ``reap_children``."""
+    import ctypes
+
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def stop_spark(spark, timeout: float = 60.0) -> None:
+    """Stop the session, then end the gateway JVM and wait until it has
+    exited. ``spark.stop()`` alone leaves the JVM running until this
+    process exits (it quits when its stdin closes)."""
+    gateway = spark.sparkContext._gateway
+    proc = gateway.proc
+    try:
+        spark.stop()
+    finally:
+        try:
+            gateway.shutdown()
+        finally:
+            proc.stdin.close()
+            try:
+                proc.wait(timeout)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+
+
+def reap_children(grace: float = 10.0) -> None:
+    """Wait until this process has no child left. Children still running
+    after ``grace`` seconds get SIGTERM, then SIGKILL after another grace."""
+    for sig in (None, signal.SIGTERM, signal.SIGKILL):
+        if sig is not None:
+            for pid in _children().get(os.getpid(), []):
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+        deadline = time.monotonic() + grace
+        while time.monotonic() < deadline:
+            try:
+                while os.waitpid(-1, os.WNOHANG)[0]:
+                    pass
+            except ChildProcessError:
+                return
+            time.sleep(0.05)
 
 
 def source_digest(root: str) -> str:

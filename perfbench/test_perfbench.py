@@ -1,10 +1,14 @@
 """Checks of the benchmark's own arithmetic: event-log attribution, span
-self times and the value-hash comparison. No Spark session needed.
+self times and the value-hash comparison; and of its process clean-up.
+No Spark session needed.
 
     python3 -m pytest perfbench/test_perfbench.py -q
 """
 
 import json
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -175,3 +179,26 @@ def test_cli_oracle_grid():
         '{"resultType":"vector","result":[]}',
         '{"resultType":"vector","result":[{"metric":{"app":"web"},"value":[129.999,"4"]}]}',
     ]
+
+
+def test_reap_children_waits_for_orphans_and_ends_stragglers():
+    """A grandchild orphaned by its parent is waited for; one still running
+    after the grace period is terminated. Runs in a child process, which
+    becomes the reaper of its orphans."""
+    code = (
+        "import subprocess, time\n"
+        "from perfbench import session\n"
+        "session.adopt_orphans()\n"
+        "subprocess.run(['sh', '-c', 'sleep 1 &'], check=True)\n"
+        "t = time.monotonic(); session.reap_children(grace=10.0)\n"
+        "waited = time.monotonic() - t\n"
+        "subprocess.run(['sh', '-c', 'sleep 60 &'], check=True)\n"
+        "t = time.monotonic(); session.reap_children(grace=0.2)\n"
+        "print(waited, time.monotonic() - t)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, capture_output=True,
+                         text=True, timeout=60, check=True)
+    waited, ended = map(float, out.stdout.split())
+    assert 0.5 < waited < 5
+    assert ended < 5
