@@ -172,7 +172,7 @@ def run_pipeline_bench(spark, sf: float, n_pages: int | None, out_dir: str,
     def one_rep(tag):
         rep_dir = os.path.join(out_dir, f"rep{tag}")
         m = run_pipeline(
-            spark, pages, rep_dir, salt_buckets=0,
+            spark, pages, rep_dir,
             gorilla_block_ms=6 * 3_600_000, cache_pages=True,
         )
         shutil.rmtree(rep_dir, ignore_errors=True)
@@ -328,7 +328,7 @@ def kernel_bench(executors: int, n_pages: int) -> dict:
         dim = spark.read.parquet(tmp + "/dim")
 
         def cascade():
-            p1m = tier_partials(fact, "1m", dim=dim).persist()
+            p1m = tier_partials(fact, "1m").persist()
             n1m = p1m.count()
             p1h = tier_from_tier(p1m, "1h").persist()
             n1h = p1h.count()
@@ -345,7 +345,7 @@ def kernel_bench(executors: int, n_pages: int) -> dict:
         # pays codegen once per stage shape, not once per batch)
         sample = fact.limit(2000).persist()
         sample.count()
-        p1m_w = tier_partials(sample, "1m", dim=dim).persist()
+        p1m_w = tier_partials(sample, "1m").persist()
         p1m_w.count()
         p1h_w = tier_from_tier(p1m_w, "1h").persist()
         p1h_w.count()

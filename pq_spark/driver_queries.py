@@ -25,7 +25,10 @@ from pyspark.sql.window import Window
 from . import textops
 from .engine.ingest import samples_from_table
 from .engine.runner import PqEngine
-from .rollup.tiers import gapfill, rollup_tier, tier_from_tier
+from .rollup.tiers import (
+    gapfill, over_time_from_tier, rollup_cascade, rollup_tier, series_dim,
+    tier_partials,
+)
 
 SINCE_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z
 MIN_MS = 60_000
@@ -395,18 +398,10 @@ def _tier_query(bucket: str):
 
 
 def _cascade_query(levels: list[str]):
-    # narrow cascade with ONE shared dim: cascading the wide schema
-    # re-derives the dim per level and re-embeds the lower pipeline
-    # (see rollup_cascade) — same rows, ~3x smaller plan
     def q(spark, sf):
-        from .rollup.tiers import attach_series, series_dim, tier_partials
-
-        samples = event_samples(spark, sf)
-        dim = series_dim(samples)
-        p = tier_partials(samples, levels[0], dim=dim)
-        for lvl in levels[1:]:
-            p = tier_from_tier(p, lvl)
-        return _flatten_tier(attach_series(p, dim))
+        return _flatten_tier(
+            rollup_cascade(event_samples(spark, sf), levels)[levels[-1]]
+        )
 
     return q
 
@@ -419,16 +414,13 @@ register("tier_1d_cascade", _cascade_query(["1m", "1h", "1d"]), _tier_sql(86_400
 
 
 def _gapfill_query(spark, sf):
-    from .rollup.tiers import series_dim, tier_partials
-
     samples = event_samples(spark, sf)
     day1 = samples.filter(F.col("ts") < SINCE_MS + DAY_MS)
     # narrow partials + one dim, with the partials materialized once:
-    # gapfill consumes its input three times (bounds, serve, identity) —
-    # the wide form re-ran the whole tier pipeline per consumer
+    # gapfill reads them twice (global bounds, serving explode)
     dim = series_dim(day1)
-    p = tier_partials(day1, "1m", dim=dim).persist()
-    out = gapfill(p, 60_000, lookback_buckets=5, dim=dim)
+    p = tier_partials(day1, "1m").persist()
+    out = gapfill(p, 60_000, dim, lookback_buckets=5)
     return out.select(
         "bucket_ts",
         F.col("labels").getItem("et").alias("et"),
@@ -500,6 +492,15 @@ FROM t GROUP BY bucket_ts, et"""
 register("pq_sum_by_et_over_tier_1m", _sum_over_tier, _SUM_OVER_TIER_SQL)
 
 
+def _over_tier_1m_5m(spark, sf) -> DataFrame:
+    """5m windows served from skey-keyed 1m partials, labels attached by
+    one dim join at the edge (the dim is derived once; no string-keyed
+    shuffle of tier rows)."""
+    samples = event_samples(spark, sf)
+    w = over_time_from_tier(tier_partials(samples, "1m"), MIN_MS, 5 * MIN_MS)
+    return w.join(series_dim(samples), "skey")
+
+
 def _over_time_over_tier(spark, sf):
     """All *_over_time functions served FROM 1m-tier partials at a 5m
     range (the north rule's serving pattern): count/sum/min/max merge
@@ -507,10 +508,7 @@ def _over_time_over_tier(spark, sf):
     last_over_time quirk is the first_val of the earliest bucket. The
     oracle below computes the same windows from RAW events — it checks
     tier construction AND window serving end-to-end."""
-    from .rollup.tiers import over_time_from_tier
-
-    tier = rollup_tier(event_samples(spark, sf), "1m")
-    w = over_time_from_tier(tier, MIN_MS, 5 * MIN_MS)
+    w = _over_tier_1m_5m(spark, sf)
     return w.select(
         (F.col("bucket_ts") + F.lit(MIN_MS - 1)).alias("instant"),
         F.col("labels").getItem("et").alias("et"),
@@ -555,10 +553,7 @@ def _rate_over_tier(spark, sf):
     newest_val) of the earliest/latest contributing buckets, so
     rate = (lv − fv)/((lt − ft)/1000) is exact — the north rule's
     'PromQL rate over a continuous aggregate' serving pattern."""
-    from .rollup.tiers import over_time_from_tier
-
-    tier = rollup_tier(event_samples(spark, sf), "1m")
-    w = over_time_from_tier(tier, MIN_MS, 5 * MIN_MS)
+    w = _over_tier_1m_5m(spark, sf)
     rate = (F.col("newest_val") - F.col("oldest_val")) / (
         (F.col("newest_ts") - F.col("oldest_ts")) / F.lit(1000.0)
     )
@@ -2896,17 +2891,15 @@ def _routed_window_query(spark, sf):
     360 minute partials or the raw corpus. The oracle computes the same
     windows from RAW events, so a hash match proves tier construction,
     the routing decision, AND strided window serving end-to-end."""
-    from .rollup.tiers import (
-        serve_over_time_routed, series_dim, tier_from_tier, tier_partials,
-    )
+    from .rollup.tiers import serve_over_time_routed, tier_from_tier
 
     HOUR = 60 * MIN_MS
     # narrow tiers + one dim attach at the end: the router/serving path
-    # stays skey-keyed (over_time_from_tier's narrow branch), so the plan
+    # stays skey-keyed (over_time_from_tier keys by skey), so the plan
     # carries no label maps and no per-level dim re-derivation
     samples = event_samples(spark, sf)
     dim = series_dim(samples)
-    p1m = tier_partials(samples, "1m", dim=dim)
+    p1m = tier_partials(samples, "1m")
     tiers = {"1m": p1m, "1h": tier_from_tier(p1m, "1h")}
     b, w = serve_over_time_routed(tiers, 2 * HOUR, 6 * HOUR)
     assert b == HOUR, f"router picked {b}, expected 1h"

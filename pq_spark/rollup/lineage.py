@@ -96,8 +96,27 @@ class TierStore:
     # writer-balance floor: a partition with >= k × this many rows may use
     # up to k writer cores even when that makes files smaller than
     # target_rows_per_file (never smaller than this floor, ~10-16 MB at
-    # tier row widths) — commit() takes max(size width, balance width)
+    # tier row widths) — see _writer_width
     MIN_ROWS_PER_FILE = 65536
+
+    def _writer_width(self, rows: int, par: int) -> int:
+        """Files one partition of ``rows`` rows is written as — the single
+        layout rule of ``commit`` and ``compact`` (two rules would make
+        every compaction rewrite what the last commit just wrote).
+
+        Width = max(size-derived, balance-derived), each capped at the
+        session parallelism ``par``: size wants ceil(rows/target) files of
+        ~target rows; balance wants a partition with enough rows to keep
+        the writer cores busy (rows // MIN_ROWS_PER_FILE writers, never
+        making files below the parquet floor). A pure size rule serialized
+        each date onto ONE writer below target rows — measured on the
+        1->4-executor scaling pair as a multi-second 4-exec-only tax with
+        zero 1-exec effect."""
+        return max(
+            1,
+            min(par, -(-rows // self.target_rows_per_file)),
+            min(par, rows // self.MIN_ROWS_PER_FILE),
+        )
 
     # -- manifest I/O --------------------------------------------------------
 
@@ -323,7 +342,7 @@ class TierStore:
 
         configure_session(df.sparkSession)
         # the input plan is evaluated twice (fingerprint pass + write pass) —
-        # persist so expensive upstreams (salted aggs, Gorilla packing) run once
+        # persist so expensive upstreams (tier aggs, Gorilla packing) run once
         df = df.persist()
         fps = self.fingerprints(df, part_col)
         result = CommitResult(table_path=os.path.join(self.base_path, table))
@@ -350,9 +369,9 @@ class TierStore:
             # (a 3-day corpus writes on 3 cores of a 1000-core cluster) —
             # while a raw write would emit (tasks × partitions) small
             # files. The sub-split width is derived from the EXACT row
-            # counts the fingerprint pass already computed: the busiest
-            # stale partition gets ceil(rows / target_rows_per_file)
-            # writer tasks, capped at the session's parallelism — so a
+            # counts the fingerprint pass already computed: each stale
+            # partition gets ``_writer_width(rows)`` writer tasks, capped
+            # at the session's parallelism — so a
             # 10B-row date still spreads over every writer core while a
             # cascade tier's few-thousand-row date writes one file
             # instead of parallelism-many tiny ones. The key hashes a
@@ -363,20 +382,8 @@ class TierStore:
             # a global max-based width would shatter a small date committed
             # alongside a big one into max-width tiny files (the round-6
             # small-tier tax, reappearing WITHIN a mixed-size commit).
-            # Width = max(size-derived, balance-derived): size wants
-            # ceil(rows/target) files of ~target rows; balance wants a
-            # partition with enough rows to keep the writer cores busy
-            # (rows // MIN_ROWS_PER_FILE writers, never making files
-            # below the parquet floor). A pure size rule serialized each
-            # date onto ONE writer below target rows — measured on the
-            # 1->4-executor scaling pair as a multi-second 4-exec-only
-            # tax with zero 1-exec effect.
             k_by_part = {
-                str(p): max(
-                    1,
-                    min(par, -(-int(fps[p]["rows"]) // self.target_rows_per_file)),
-                    min(par, int(fps[p]["rows"]) // self.MIN_ROWS_PER_FILE),
-                )
+                str(p): self._writer_width(int(fps[p]["rows"]), par)
                 for p in stale
             }
             atomic = [
@@ -562,8 +569,8 @@ class TierStore:
         """Small-file compaction — the ``rewrite_data_files`` maintenance
         action of an Iceberg table, expressed on the manifest store: every
         live partition whose parquet file count exceeds its row-derived
-        writer width (``ceil(rows / target_rows_per_file)``, capped at the
-        session parallelism) by more than ``slack_files`` is rewritten into
+        writer width (``_writer_width`` — the rule ``commit`` writes with)
+        by more than ``slack_files`` is rewritten into
         a fresh immutable ``data/<cid>/`` directory at the correct width,
         and a new snapshot is published.
 
@@ -585,7 +592,7 @@ class TierStore:
         for part, rel in sorted(parts.items()):
             m = self.read_manifest(table, part) or {}
             rows = int((m.get("fingerprint") or {}).get("rows", 0))
-            want = max(1, min(par, -(-rows // self.target_rows_per_file)))
+            want = self._writer_width(rows, par)
             have = len(glob.glob(os.path.join(root, rel, "*.parquet")))
             if have > want + int(slack_files):
                 frag[part] = (rel, want)

@@ -7,8 +7,8 @@ at 10^12-document scale. This module provides:
 - ``synth_pages``: a deterministic, seeded, *distributed* generator for any
   scale (rows are generated from their index via ``spark.range`` — no driver
   data, no collect; safe to scale to billions of rows on a cluster).
-  Domains are Zipfian so hot-key skew is real, exercising the salted
-  two-phase aggregation path.
+  Domains are Zipfian so hot-key skew is real (map-side partial
+  aggregation collapses the hot series before the tier shuffle).
 - ``extract_text_udf``: the byte-identical extraction invariant — a pure
   Arrow-batched pandas UDF from ``html`` bytes to ``text``; a pure function
   of the bytes, independent of row order/partitioning.
@@ -160,18 +160,13 @@ def page_samples(pages: DataFrame) -> DataFrame:
     return samples_from_table(_page_enriched(pages), **_PAGE_TABLE_ARGS)
 
 
-def page_series_dim(pages: DataFrame) -> DataFrame:
-    """Series dim of ``page_samples(pages)`` via the label-space fast path
-    (one narrow aggregate over page rows; equals
-    ``series_dim(page_samples(pages))`` by the ``series_dim_for_table``
-    contract — pinned in tests/test_rollup.py)."""
-    return page_series_dim_from_enriched(_page_enriched(pages))
-
-
 def page_series_dim_from_enriched(enriched: DataFrame) -> DataFrame:
-    """Same dim, built from an already-enriched (possibly persisted)
-    projection so the pipeline's fused-verify cache is reused instead of
-    re-scanning the page table."""
+    """Series dim of ``page_samples`` over the same pages via the
+    label-space fast path (one narrow aggregate over page rows; equals
+    ``series_dim(page_samples(pages))`` by the ``series_dim_for_table``
+    contract — pinned in tests/test_rollup.py). Built from an
+    already-enriched (possibly persisted) projection so the pipeline's
+    fused-verify cache is reused instead of re-scanning the page table."""
     from ..engine.ingest import series_dim_for_table
     from .tiers import series_dim_from_labelspace
 

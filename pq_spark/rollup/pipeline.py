@@ -17,16 +17,17 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.ingest import samples_from_table
+from ..engine.planner import sig_expr
 from . import gorilla
 from .lineage import TierStore, with_date
 from .pages import (
     _PAGE_TABLE_ARGS,
     _page_enriched,
     extract_text_udf,
-    page_samples,  # noqa: F401 — public seam, used by tests/benchmarks
     page_series_dim_from_enriched,
 )
-from .tiers import TIER_MS, attach_series, tier_from_tier, tier_partials
+from .tiers import attach_series, series_key, tier_from_tier, tier_partials
 
 
 def verify_extraction(pages: DataFrame) -> int:
@@ -42,7 +43,6 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     out_path: str,
-    salt_buckets: int = 0,
     gorilla_block_ms: int = 3_600_000,
     check_extraction: bool = True,
     pack: bool = True,
@@ -65,16 +65,11 @@ def run_pipeline(
     if cache_pages:
         pages = pages.persist()
 
-    # star schema: the NARROW fact (sig, ts, seq, value) feeds both the tier
-    # cascade and the Gorilla packer — label maps live in the tiny series
-    # dim. Only the fact is cached; at cluster scale it'd be a checkpointed
-    # table.
-    from pyspark.sql import functions as _F
-
-    from ..engine.ingest import samples_from_table
-    from ..engine.planner import sig_expr
-    from .tiers import series_dim, series_key  # noqa: F401
-
+    # star schema: the NARROW fact (skey, ts, seq, value) feeds both the
+    # tier cascade and the Gorilla packer — label maps live in the tiny
+    # series dim. Only the fact is cached; at cluster scale it'd be a
+    # checkpointed table.
+    #
     # FUSED extraction check: the enriched projection already decodes the
     # heavy `html` column (content_len), so the byte-identity invariant
     # (`_bad`) rides the SAME scan instead of a second full read of the
@@ -86,9 +81,9 @@ def run_pipeline(
     # precomputes (same string sig_expr derives from the map, minus the
     # per-row map build/sort) — fall back for sample sources without it
     skey_col = (
-        series_key(_F.col("_sig"))
+        series_key(F.col("_sig"))
         if "_sig" in samples_wide.columns
-        else series_key(sig_expr(_F.col("labels")))
+        else series_key(sig_expr(F.col("labels")))
     )
     samples = samples_wide.select(
         skey_col.alias("skey"), "ts", "seq", "value"
@@ -104,7 +99,7 @@ def run_pipeline(
     # tier commits date-partitioned with manifests; unchanged partitions are
     # skipped on re-runs.
     t0 = time.time()
-    p1m = tier_partials(samples, "1m", salt_buckets=salt_buckets, dim=dim).persist()
+    p1m = tier_partials(samples, "1m").persist()
     # tier_1m's heavy data write runs BEFORE the invariant check joins, but
     # with publish=False nothing it wrote is visible (manifests + CURRENT
     # swap are staged) — a violation aborts with zero published state, so
@@ -116,7 +111,7 @@ def run_pipeline(
 
     if check_extraction:
         t0v = time.time()
-        mismatches = enriched.agg(_F.sum("_bad")).first()[0] or 0
+        mismatches = enriched.agg(F.sum("_bad")).first()[0] or 0
         if mismatches:
             raise RuntimeError(
                 f"extraction invariant violated for {mismatches} pages"
@@ -195,7 +190,6 @@ def main() -> None:
     ap.add_argument("--warc", help="glob of .warc/.warc.gz files to ingest")
     ap.add_argument("--synth-pages", type=int, help="generate N synthetic pages instead")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--salt-buckets", type=int, default=0)
     ap.add_argument("--block-ms", type=int, default=6 * 3_600_000)
     ap.add_argument("--no-pack", action="store_true")
     args = ap.parse_args()
@@ -223,7 +217,6 @@ def main() -> None:
 
     metrics = run_pipeline(
         spark, pages, args.out,
-        salt_buckets=args.salt_buckets,
         gorilla_block_ms=args.block_ms,
         pack=not args.no_pack,
     )

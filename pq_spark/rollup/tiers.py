@@ -13,13 +13,15 @@ bucketed into 1m/1h/1d tiers carrying *algebraic partials*
   with no data carries the last value within ``lookback``, and is absent
   beyond it.
 
+Representation: a tier is NARROW partials ``(bucket_ts, skey, cnt, sum,
+min, max, first_ts, first_val, last_ts, last_val)`` keyed by the 64-bit
+series key, plus ONE explicit series dim ``(skey, sig, name, labels)``.
+Labels attach only at the edge (``attach_series`` or a join on ``skey``).
+
 Scale design (100 TB):
-- one shuffle per tier, keyed by (bucket_ts, sig). Map-side partial
-  aggregation is automatic for these algebraic functions.
-- hot series (Zipfian domains) are handled by an optional salted two-phase
-  aggregation: phase 1 groups by (bucket, sig, salt) — spreading a hot key
-  over ``salt_buckets`` reducers — phase 2 merges partials. All partials
-  are algebraic, so this is exact.
+- one shuffle per tier, keyed by (bucket_ts, skey). Map-side partial
+  aggregation is automatic for these algebraic functions, so hot series
+  (Zipfian domains) collapse before the shuffle.
 - tier tables are tiny relative to raw data (1m tier ≈ #series × minutes),
   so the 1h/1d cascade costs ~nothing; AQE coalesces the small shuffles.
 """
@@ -45,9 +47,9 @@ def series_key(sig: Column) -> Column:
     """64-bit shuffle key for a series: fact rows carry an 8-byte hash of
     the signature instead of the ~60-byte string — big shuffles shrink ~3×.
     The string signature lives only in the series dim; ``series_dim``
-    asserts hash-injectivity over the observed series (a 64-bit collision
-    over even 10^9 series is ~3% birthday risk — the check catches it and
-    the caller can fall back to string keys)."""
+    asserts hash-injectivity over the observed series on request (a 64-bit
+    collision over even 10^9 series is ~3% birthday risk — the check
+    catches it)."""
     return F.xxhash64(sig)
 
 
@@ -58,21 +60,32 @@ def series_dim(samples: DataFrame, check_collisions: bool = False) -> DataFrame:
 
     Discovery runs as a plain string-distinct (HashAggregate) over the
     INVERTIBLE signature; the label map is rebuilt from the string on the
-    post-shuffle dim-sized rows (``_series_dim_from_wide``). Grouping on
-    the map (or carrying it through first()) would force SortAggregate —
-    a per-partition sort of every fact row (the engine's planner uses the
-    same trick)."""
-    dim = _series_dim_from_wide(samples).select(
-        series_key(F.col("sig")).alias("skey"), "sig", "name", "labels"
+    post-shuffle dim-sized rows. Grouping on the map (or carrying it
+    through first()) would force SortAggregate — a per-partition sort of
+    every fact row (the engine's planner uses the same trick)."""
+    from ..engine.ingest import NAME_LABEL
+    from ..engine.planner import _PAIR_SEP, _labels_from_sig2, _sig2_expr
+
+    dim = (
+        samples.select(_sig2_expr(F.col("labels")).alias("_sig2"))
+        .distinct()
+        .select(
+            F.replace(F.col("_sig2"), F.lit(_PAIR_SEP), F.lit("")).alias("sig"),
+            _labels_from_sig2(F.col("_sig2")).alias("labels"),
+        )
+        .select(
+            series_key(F.col("sig")).alias("skey"),
+            "sig",
+            F.col("labels").getItem(NAME_LABEL).alias("name"),
+            "labels",
+        )
     )
     if check_collisions:
         agg = dim.agg(
             F.count("*").alias("n"), F.countDistinct("skey").alias("d")
         ).collect()[0]
         if agg["n"] != agg["d"]:
-            raise RuntimeError(
-                "series-key hash collision detected — rerun with string keys"
-            )
+            raise RuntimeError("series-key hash collision detected")
     return dim
 
 
@@ -97,28 +110,15 @@ def attach_series(partials: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def tier_partials(
-    samples: DataFrame,
-    tier: str | int,
-    salt_buckets: int = 0,
-    dim: DataFrame | None = None,
-) -> DataFrame:
+def tier_partials(samples: DataFrame, tier: str | int) -> DataFrame:
     """Raw samples → NARROW tier partials (bucket_ts, skey, partial cols).
 
-    The whole cascade runs on this narrow shape; label maps / signature
-    strings join back from the series dim only at the edges
-    (``attach_series``).
-
-    On salting: for these ALGEBRAIC aggregates Spark's map-side partial
-    aggregation already collapses hot keys before the shuffle, so two-phase
-    salting is pure overhead in the common case (measured ~5× slower at
-    salt_buckets=8 on a Zipfian corpus); it remains available for
-    non-algebraic skewed paths and is exactness-tested.
-    """
+    Accepts the narrow fact (skey, ts, seq, value) or wide samples with a
+    ``labels`` map (the skey is hashed from their signature). The whole
+    cascade runs on this narrow shape; label maps / signature strings join
+    back from the series dim only at the edges (``attach_series``)."""
     tier_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
     narrow_input = "skey" in samples.columns and "labels" not in samples.columns
-    if not narrow_input and dim is None:
-        pass  # partials don't need the dim
     skey_col = (
         F.col("skey") if narrow_input else series_key(sig_expr(F.col("labels")))
     )
@@ -129,17 +129,16 @@ def tier_partials(
     # arbitrarily; all drivers keep seq (event_id / line_no) far below 2^21
     # per ms.
     _B = F.lit(1 << 21)
-    base = samples.select(
-        _bucket(F.col("ts"), tier_ms).alias("bucket_ts"),
-        skey_col.alias("skey"),
-        "ts",
-        "seq",
-        "value",
-        (F.col("ts") * _B + F.pmod(F.col("seq"), _B)).alias("_okey"),
-    )
-
-    def aggs(g):
-        return g.agg(
+    return (
+        samples.select(
+            _bucket(F.col("ts"), tier_ms).alias("bucket_ts"),
+            skey_col.alias("skey"),
+            "ts",
+            "value",
+            (F.col("ts") * _B + F.pmod(F.col("seq"), _B)).alias("_okey"),
+        )
+        .groupBy("bucket_ts", "skey")
+        .agg(
             F.count("value").alias("cnt"),
             F.sum("value").alias("sum"),
             F.min("value").alias("min"),
@@ -149,68 +148,24 @@ def tier_partials(
             F.max("ts").alias("last_ts"),
             F.max_by("value", "_okey").alias("last_val"),
         )
-
-    if salt_buckets > 1:
-        # two-phase: spread hot (bucket, series) keys over salt_buckets
-        # reducers. Phase-1 partials carry min/max _okey so the merge
-        # tie-breaks first/last EXACTLY like the unsalted path (same-ms
-        # samples landing in different salt buckets would otherwise pick
-        # first_val/last_val nondeterministically).
-        phase1 = (
-            base.withColumn("_salt", F.pmod(F.col("seq"), F.lit(salt_buckets)))
-            .groupBy("bucket_ts", "skey", "_salt")
-            .agg(
-                F.count("value").alias("cnt"),
-                F.sum("value").alias("sum"),
-                F.min("value").alias("min"),
-                F.max("value").alias("max"),
-                F.min("ts").alias("first_ts"),
-                F.min_by("value", "_okey").alias("first_val"),
-                F.max("ts").alias("last_ts"),
-                F.max_by("value", "_okey").alias("last_val"),
-                F.min("_okey").alias("_first_okey"),
-                F.max("_okey").alias("_last_okey"),
-            )
-        )
-        merged = (
-            phase1.groupBy("bucket_ts", "skey")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("sum").alias("sum"),
-                F.min("min").alias("min"),
-                F.max("max").alias("max"),
-                F.min("first_ts").alias("first_ts"),
-                F.min_by("first_val", "_first_okey").alias("first_val"),
-                F.max("last_ts").alias("last_ts"),
-                F.max_by("last_val", "_last_okey").alias("last_val"),
-            )
-        )
-    else:
-        merged = aggs(base.groupBy("bucket_ts", "skey"))
-
-    return merged.select("bucket_ts", "skey", *PARTIAL_COLS)
+        .select("bucket_ts", "skey", *PARTIAL_COLS)
+    )
 
 
-def rollup_tier(
-    samples: DataFrame,
-    tier: str | int,
-    salt_buckets: int = 0,
-    dim: DataFrame | None = None,
-) -> DataFrame:
-    """Raw samples → one tier with series labels attached (public schema:
-    bucket_ts, sig, name, labels, cnt, sum, min, max, first/last ±ts)."""
-    narrow_input = "skey" in samples.columns and "labels" not in samples.columns
-    if dim is None:
-        if narrow_input:
-            raise ValueError("narrow fact input requires an explicit series dim")
-        dim = series_dim(samples)
-    return attach_series(tier_partials(samples, tier, salt_buckets, dim), dim)
+def rollup_tier(samples: DataFrame, tier: str | int) -> DataFrame:
+    """Raw (wide) samples → one tier with series labels attached (public
+    schema: bucket_ts, sig, name, labels, cnt, sum, min, max, first/last
+    ±ts)."""
+    return attach_series(tier_partials(samples, tier), series_dim(samples))
 
 
-def merge_partials_narrow(partials: DataFrame) -> DataFrame:
-    """Exact merge of narrow partial rows sharing (bucket_ts, skey)."""
+def tier_from_tier(lower: DataFrame, tier: str | int) -> DataFrame:
+    """Re-aggregate narrow lower-tier partials into a coarser tier — exact,
+    never touching raw data (the continuous-aggregate cascade)."""
+    tier_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
     return (
-        partials.groupBy("bucket_ts", "skey")
+        lower.withColumn("bucket_ts", _bucket(F.col("bucket_ts"), tier_ms))
+        .groupBy("bucket_ts", "skey")
         .agg(
             F.sum("cnt").alias("cnt"),
             F.sum("sum").alias("sum"),
@@ -225,79 +180,19 @@ def merge_partials_narrow(partials: DataFrame) -> DataFrame:
     )
 
 
-def _series_dim_from_wide(tier: DataFrame) -> DataFrame:
-    """(sig → name, labels) mapping out of a wide tier — a string-distinct
-    HashAggregate over the invertible signature with the map rebuilt on
-    the dim-sized result (carrying the map through the aggregation would
-    force SortAggregate on every tier row)."""
-    from ..engine.ingest import NAME_LABEL
-    from ..engine.planner import _PAIR_SEP, _labels_from_sig2, _sig2_expr
-
-    return (
-        tier.select(_sig2_expr(F.col("labels")).alias("_sig2"))
-        .distinct()
-        .select(
-            F.replace(F.col("_sig2"), F.lit(_PAIR_SEP), F.lit("")).alias("sig"),
-            _labels_from_sig2(F.col("_sig2")).alias("labels"),
-        )
-        .select("sig", F.col("labels").getItem(NAME_LABEL).alias("name"), "labels")
-    )
-
-
-def _merge_partials(partials: DataFrame) -> DataFrame:
-    """Exact merge of partial-aggregate rows sharing (bucket_ts, sig).
-    Numeric-only aggregation (HashAggregate) + a broadcast dim join for
-    the identity columns."""
-    merged = (
-        partials.groupBy("bucket_ts", "sig")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.min("first_ts").alias("first_ts"),
-            F.min_by("first_val", "first_ts").alias("first_val"),
-            F.max("last_ts").alias("last_ts"),
-            F.max_by("last_val", "last_ts").alias("last_val"),
-        )
-    )
-    dim = _series_dim_from_wide(partials)
-    return merged.join(F.broadcast(dim), "sig").select(
-        "bucket_ts", "sig", "name", "labels", *PARTIAL_COLS
-    )
-
-
-def tier_from_tier(lower: DataFrame, tier: str | int) -> DataFrame:
-    """Re-aggregate a lower tier into a coarser one — exact, never touching
-    raw data (the continuous-aggregate cascade). Accepts either narrow
-    (skey-keyed) partials or the public wide schema."""
-    tier_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
-    rebucketed = lower.withColumn("bucket_ts", _bucket(F.col("bucket_ts"), tier_ms))
-    if "skey" in lower.columns:
-        return merge_partials_narrow(rebucketed)
-    return _merge_partials(rebucketed)
-
-
 def rollup_cascade(
-    samples: DataFrame, tiers: list[str] = ("1m", "1h", "1d"), salt_buckets: int = 0
+    samples: DataFrame, tiers: list[str] = ("1m", "1h", "1d")
 ) -> dict[str, DataFrame]:
     """Full cascade: raw → tiers[0] → tiers[1] → … (each from the previous).
 
     The cascade runs NARROW (skey-keyed partials) with ONE shared series
-    dim attached at each exposed level. Cascading the wide schema instead
-    would re-derive the dim from the lower tier's partials at every level
-    (``_merge_partials``) — each level's plan then embeds the whole lower
-    pipeline twice and shuffles string sig keys (measured on the r08
-    tier_1d_cascade bar: ~30 Exchanges and three copies of the 1m subtree
-    for the wide form)."""
+    dim attached at each exposed level, so no level re-derives the dim or
+    re-embeds the lower pipeline in its plan."""
     out: dict[str, DataFrame] = {}
     dim = series_dim(samples)
     prev: DataFrame | None = None
     for t in tiers:
-        if prev is None:
-            prev = tier_partials(samples, t, salt_buckets=salt_buckets, dim=dim)
-        else:
-            prev = tier_from_tier(prev, t)
+        prev = tier_partials(samples, t) if prev is None else tier_from_tier(prev, t)
         out[t] = attach_series(prev, dim)
     return out
 
@@ -356,7 +251,8 @@ def over_time_from_tier(
 
     Output (one row per window-end bucket × series with ≥1 point):
     ``bucket_ts`` = window-END bucket (grid instant = bucket_ts + B − 1),
-    the input's identity columns (sig/name/labels or skey), and
+    the input's series key (``skey``, or ``sig`` for a tier without one,
+    e.g. the public schema or streaming_tier output), and
     cnt/sum/min/max/oldest_val/newest_val/oldest_ts/newest_ts window
     aggregates — the last four reconstruct the window's first/last POINT,
     so rate/increase/delta are exactly servable too:
@@ -377,8 +273,7 @@ def over_time_from_tier(
     if stride_ms % tier_ms != 0 or stride_ms <= 0:
         raise ValueError("stride must be a positive multiple of the tier width")
     r = range_ms // tier_ms
-    narrow = "skey" in tier.columns
-    ident = "skey" if narrow else "sig"
+    ident = "skey" if "skey" in tier.columns else "sig"
 
     # first on-stride window-end at-or-after this bucket; a bucket whose
     # stride window starts past its last contribution emits nothing
@@ -398,11 +293,11 @@ def over_time_from_tier(
         F.explode(wends).alias("_wend"),
     )
     # numeric-only aggregation keyed by (window-end, series key) stays in
-    # HashAggregate; identity columns rejoin from a broadcast dim below.
+    # HashAggregate; callers attach labels by joining the dim on skey.
     # oldest/newest ts+val reconstruct the window's first/last POINT, so
     # the rate family (rate/increase/delta) is also exactly servable:
     # the earliest contributing bucket's first point IS the window's first.
-    agg = served.groupBy(F.col("_wend").alias("bucket_ts"), ident).agg(
+    return served.groupBy(F.col("_wend").alias("bucket_ts"), ident).agg(
         F.sum("cnt").alias("cnt"),
         F.sum("sum").alias("sum"),
         F.min("min").alias("min"),
@@ -411,16 +306,6 @@ def over_time_from_tier(
         F.max_by("last_val", "_src").alias("newest_val"),
         F.min("first_ts").alias("oldest_ts"),
         F.max("last_ts").alias("newest_ts"),
-    )
-    cols = ["cnt", "sum", "min", "max",
-            "oldest_val", "newest_val", "oldest_ts", "newest_ts"]
-    if narrow or "labels" not in tier.columns:
-        # skey-keyed partials, or label-less tiers (e.g. streaming_tier
-        # output carries sig+name only) — serve keyed, no dim join
-        return agg.select("bucket_ts", ident, *cols)
-    dim = _series_dim_from_wide(tier)
-    return agg.join(F.broadcast(dim), "sig").select(
-        "bucket_ts", "sig", "name", "labels", *cols
     )
 
 
@@ -514,45 +399,12 @@ def hll_estimate(tier: DataFrame) -> DataFrame:
     ).drop("hll")
 
 
-def write_bucketed_tier(
-    partials: DataFrame, table_name: str, path: str, buckets: int = 32
-) -> None:
-    """Persist NARROW tier partials bucketed by ``skey``.
-
-    Bucketing pre-shuffles the table ONCE at write time: any later
-    aggregation or self/tier join whose keys include ``skey`` reads the
-    buckets co-located and plans NO Exchange (HashPartitioning(skey)
-    satisfies ClusteredDistribution for any superset of keys, e.g. the
-    (bucket_ts, skey) re-aggregation of the cascade). Rows are also
-    sorted by (skey, bucket_ts) within buckets so merge-style access
-    stays sequential.
-
-    Bucket metadata lives in the session catalog (``saveAsTable``); on a
-    cluster this is the Hive/Iceberg metastore — in tests the in-memory
-    catalog of the current session."""
-    (
-        partials.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(buckets, "skey")
-        .sortBy("skey", "bucket_ts")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def read_bucketed_tier(spark, table_name: str) -> DataFrame:
-    """Read a bucketed tier WITH its bucketing metadata (must go through
-    the catalog — ``spark.read.parquet(path)`` would lose the bucket
-    spec and re-shuffle)."""
-    return spark.table(table_name)
-
-
 def gapfill(
     tier_df: DataFrame,
     tier_ms: int,
+    dim: DataFrame,
     lookback_buckets: int = 1,
     value_col: str = "last_val",
-    dim: DataFrame | None = None,
 ) -> DataFrame:
     """Explicit gap-fill with staleness-aware lookback (pq instant-vector
     semantics at interval == tier): every bucket in [min, max] of the global
@@ -560,23 +412,19 @@ def gapfill(
     ``lookback_buckets`` behind; series with no value in the window are
     absent (stale), exactly like pq's lookback window (vector.rs:205-223).
 
-    Implemented with the same serving-instant explode as the query planner:
-    each tier row serves the next ``lookback_buckets`` buckets; latest wins.
+    Input: narrow partials plus their series dim. Implemented with the same
+    serving-instant explode as the query planner: each tier row serves the
+    next ``lookback_buckets`` buckets; latest wins.
     Output: (bucket_ts, sig, name, labels, value, filled boolean).
     """
     lb_ms = lookback_buckets * tier_ms
-    narrow = "skey" in tier_df.columns and "labels" not in tier_df.columns
-    if narrow and dim is None:
-        raise ValueError("narrow tier input requires an explicit series dim")
-    ident = "skey" if narrow else "sig"
-
     bounds = tier_df.agg(
         F.min("bucket_ts").alias("_lo"), F.max("bucket_ts").alias("_hi")
     )
     served = (
         tier_df.crossJoin(F.broadcast(bounds))
         .select(
-            ident, "bucket_ts",
+            "skey", "bucket_ts",
             F.col(value_col).alias("_v"),
             F.explode(
                 F.sequence(
@@ -591,15 +439,13 @@ def gapfill(
     # map through first() would SortAggregate every served row); identity
     # columns rejoin from the broadcast-sized series dim
     filled = (
-        served.groupBy(F.col("_serve").alias("bucket_ts"), ident)
+        served.groupBy(F.col("_serve").alias("bucket_ts"), "skey")
         .agg(
             F.max_by("_v", "bucket_ts").alias("value"),
             F.max("bucket_ts").alias("_src"),
         )
     )
-    if not narrow:
-        dim = _series_dim_from_wide(tier_df)
-    return filled.join(F.broadcast(dim), ident).select(
+    return filled.join(F.broadcast(dim), "skey").select(
         "bucket_ts", "sig", "name", "labels", "value",
         (F.col("_src") != F.col("bucket_ts")).alias("filled"),
     )

@@ -105,8 +105,8 @@ def write_hash_manifest(
     """Persist the manifest BUCKETED by hash: every later increment's
     anti-join reads the stored side co-located — only the (small) new
     increment shuffles, the corpus-history side plans NO Exchange
-    regardless of its size. Same catalog mechanics as
-    rollup/tiers.py::write_bucketed_tier."""
+    regardless of its size. Bucket metadata lives in the session catalog
+    (``saveAsTable``); on a cluster that is the Hive/Iceberg metastore."""
     (
         manifest.write.mode("overwrite")
         .option("path", path)

@@ -127,6 +127,8 @@ TIER_FAMILY = [
     "gapfill_1m_day1",
     "pq_sum_by_et_over_tier_1m",
     "pq_sum_over_time_over_tier_1m",
+    "pq_rate_over_tier_1m",
+    "tier_routed_window",
 ]
 
 
@@ -141,6 +143,24 @@ def test_tier_family_no_sort_aggregate(spark, name):
         l for l in plan.splitlines() if re.match(r"^\(\d+\) SortAggregate", l)
     ]
     assert not sort_aggs, f"{name}: SortAggregate in plan\n" + "\n".join(sort_aggs)
+
+
+@pytest.mark.parametrize(
+    "name", ["pq_sum_over_time_over_tier_1m", "pq_rate_over_tier_1m"]
+)
+def test_tier_serving_derives_dim_once(spark, name):
+    """Windows served from tier partials stay keyed by the 64-bit skey and
+    take labels from ONE series dim: exactly one Exchange partitions on the
+    dim's _sig2 discovery key, and no Exchange shuffles rows on the string
+    sig (the retired wide path re-derived the dim per consumer and keyed
+    the window aggregation by sig)."""
+    plan = _formatted_plan(spark, QUERIES[name](spark, SF_DIR))
+    keys = [
+        re.findall(r"(\w+)#", k)
+        for k in re.findall(r"hashpartitioning\((.*?), \d+\)", plan)
+    ]
+    assert sum(1 for k in keys if k == ["_sig2"]) == 1, keys
+    assert not any("sig" in k for k in keys), keys
 
 
 # round-4 pipeline operators: the scale contracts are (a) no SortAggregate,

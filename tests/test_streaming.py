@@ -144,7 +144,9 @@ def test_streamed_tier_serves_over_time_windows(spark, sample_dir):
     partial rows are the same table the batch serving layer reads —
     over_time_from_tier over the streamed output must equal the same
     serving over a batch rollup of the raw samples."""
-    from pq_spark.rollup.tiers import over_time_from_tier, rollup_tier
+    from pq_spark.rollup.tiers import (
+        over_time_from_tier, series_dim, tier_partials,
+    )
 
     stream = spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir)
     tier = streaming_tier(stream, "1m", watermark="0 seconds")
@@ -163,10 +165,10 @@ def test_streamed_tier_serves_over_time_windows(spark, sample_dir):
         "labels", F.create_map(F.lit("__name__"), F.col("name"),
                                F.lit("s"), F.col("sig"))
     )
-    batch_tier = rollup_tier(raw, "1m")
+    batch = over_time_from_tier(tier_partials(raw, "1m"), 60_000, 3 * 60_000)
     expected = {
         (r["bucket_ts"], r["labels"]["s"]): tuple(r[c] for c in cols)
-        for r in over_time_from_tier(batch_tier, 60_000, 3 * 60_000).collect()
+        for r in batch.join(series_dim(raw), "skey").collect()
     }
     assert got == expected and len(got) > 0
 
