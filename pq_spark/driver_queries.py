@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from . import textops
 from .engine.ingest import samples_from_table
 from .engine.runner import PqEngine
+from .materialize import owned, persist
 from .rollup.tiers import (
     gapfill, over_time_from_tier, rollup_cascade, rollup_tier, series_dim,
     tier_partials,
@@ -181,7 +182,7 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, fn, sql: str | None):
-    QUERIES[name] = fn
+    QUERIES[name] = owned(fn)  # the build's caches live as long as its result
     if sql is not None:
         ORACLES[name] = sql
 
@@ -419,7 +420,7 @@ def _gapfill_query(spark, sf):
     # narrow partials + one dim, with the partials materialized once:
     # gapfill reads them twice (global bounds, serving explode)
     dim = series_dim(day1)
-    p = tier_partials(day1, "1m").persist()
+    p = persist(tier_partials(day1, "1m"))
     out = gapfill(p, 60_000, dim, lookback_buckets=5)
     return out.select(
         "bucket_ts",

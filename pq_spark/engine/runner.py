@@ -8,11 +8,13 @@ since/until option semantics (src/query/evaluator.rs:26-52).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import weakref
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import PqError
+from ..materialize import Held, persist
 from ..program import Mapper, ProgramAST, parse_program
 from ..query.ast import Expr, VectorSelector
 from ..timeparse import parse_duration, try_parse_time
@@ -36,7 +38,8 @@ ENGINE_CONFS = {
 }
 
 
-_CONFIGURED_SESSIONS: set[int] = set()
+# weak, not id()-keyed: ids are reused after a session is collected
+_CONFIGURED_SESSIONS: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def configure_session(spark: SparkSession) -> None:
@@ -45,9 +48,8 @@ def configure_session(spark: SparkSession) -> None:
     # this hundreds of times per bench run on one session). The two
     # result-critical confs (IEEE arithmetic, UTC grid math) are still
     # probed so a harness that flips them mid-session gets re-configured.
-    key = id(spark._jsparkSession)
     if (
-        key in _CONFIGURED_SESSIONS
+        spark in _CONFIGURED_SESSIONS
         and spark.conf.get("spark.sql.ansi.enabled", "true") == "false"
         and spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
     ):
@@ -55,7 +57,7 @@ def configure_session(spark: SparkSession) -> None:
     for k, v in ENGINE_CONFS.items():
         spark.conf.set(k, v)
     _disable_dataframe_debugging(spark)
-    _CONFIGURED_SESSIONS.add(key)
+    _CONFIGURED_SESSIONS.add(spark)
 
 
 def _disable_dataframe_debugging(spark: SparkSession) -> None:
@@ -71,17 +73,15 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
     call-site context in error messages, the documented trade-off of the
     public conf. The conf is read once and cached module-side by PySpark,
     so sessions created before us (e.g. a driver harness) need the cache
-    updated too."""
+    updated too. On PySpark 4.1 the conf is static (fixed when the context
+    starts), so the set raises and only the pinned cache takes effect."""
+    import pyspark.errors.utils as _peu
+
     try:
         spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
     except Exception:
-        pass  # static conf on some builds — the cache below still applies
-    try:
-        import pyspark.errors.utils as _peu
-
-        _peu._enable_debugging_cache = False
-    except Exception:
         pass
+    _peu._enable_debugging_cache = False
 
 
 def _count_selectors(node) -> int:
@@ -112,7 +112,7 @@ class ProgramResult:
     records: DataFrame | None = None
     query_result: object | None = None  # ScalarResult | VectorFrame | RangeFrame
     errors: DataFrame | None = None  # DF[line_no, error] — the -v channel
-    _cached: list | None = None  # DataFrames to unpersist after output
+    held: Held = field(default_factory=Held)  # released once output is produced
 
     def error_lines(self) -> list[str]:
         """Per-record decode/map errors in input order (printed to stderr
@@ -156,11 +156,7 @@ class ProgramResult:
                     return fmt.records_human_lines(self.records, verbose)
             raise PqError(f"unsupported formatter for {self.kind} output")
         finally:
-            # unpersist once, then forget — a second output_lines() (or an
-            # error_lines() after) recomputes but must not double-unpersist
-            for df in self._cached or []:
-                df.unpersist()
-            self._cached = []
+            self.held.release()  # a second call recomputes from the source
 
     def dataframe(self) -> DataFrame:
         """Relational access to the result (engine-level API)."""
@@ -225,17 +221,15 @@ class PqEngine:
             return ProgramResult("records", ast.formatter, records=records, errors=errors)
 
         samples = ingest.samples_from_records(records)
-        cached = []
-        if _count_selectors(ast.query) > 1:
-            samples = samples.cache()
-            cached.append(samples)
-
-        result = self.evaluate(
-            ast.query, samples, since_ms, interval_ms, lookback_ms
-        )
-        cached.extend(self.last_persisted)
+        held = Held()
+        with held.current():
+            if _count_selectors(ast.query) > 1:
+                samples = persist(samples)
+            result = self.evaluate(
+                ast.query, samples, since_ms, interval_ms, lookback_ms
+            )
         return ProgramResult(
-            "query", ast.formatter, query_result=result, errors=errors, _cached=cached
+            "query", ast.formatter, query_result=result, errors=errors, held=held
         )
 
     # -- query over an arbitrary samples fact table ---------------------------
@@ -281,10 +275,6 @@ class PqEngine:
             )
             facts = result.facts.select("instant", skey.alias("skey"), "value")
             result = VectorFrame(result.grid, facts, dim, result.checks)
-        # per-selector dims persisted during planning; callers that bypass
-        # run_program may unpersist via this list (they are dim-sized and
-        # LRU-evictable, so leaving them cached is also fine)
-        self.last_persisted = list(ctx.persisted)
         return result
 
 
@@ -460,14 +450,17 @@ def run_cli_live(
     ast = parse_program(o.program)
     lines = consume_stream_lines(spark, ast, line_iter, o.until, chunk_lines)
     result = _run_cli_program(spark, o, lines)
-    if result.kind != "query" or result.formatter is not None:
-        raise PqError("interactive mode is not supported for this type of result")
-    out = out if out is not None else sys.stdout
-    n = 0
-    for frame in fmt.prominteractive_frames(result.query_result):
-        if n and pace_s:
-            time.sleep(pace_s)
-        out.write(frame + "\n")
-        out.flush()
-        n += 1
+    try:
+        if result.kind != "query" or result.formatter is not None:
+            raise PqError("interactive mode is not supported for this type of result")
+        out = out if out is not None else sys.stdout
+        n = 0
+        for frame in fmt.prominteractive_frames(result.query_result):
+            if n and pace_s:
+                time.sleep(pace_s)
+            out.write(frame + "\n")
+            out.flush()
+            n += 1
+    finally:
+        result.held.release()
     return n

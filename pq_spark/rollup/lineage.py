@@ -52,6 +52,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..engine.runner import configure_session
+from ..materialize import Held, persist
+
 SCHEMA_VERSION = 2  # v2: overflow-proof xor digest (v1 summed 64-bit hashes)
 
 
@@ -338,107 +341,106 @@ class TierStore:
         t0 = time.time()
         # the engine's session confs (ANSI off, UTC, AQE) must hold for the
         # fingerprint/write jobs even on a default (ANSI-on) session
-        from ..engine.runner import configure_session
-
         configure_session(df.sparkSession)
         # the input plan is evaluated twice (fingerprint pass + write pass) —
-        # persist so expensive upstreams (tier aggs, Gorilla packing) run once
-        df = df.persist()
-        fps = self.fingerprints(df, part_col)
-        result = CommitResult(table_path=os.path.join(self.base_path, table))
+        # persist so expensive upstreams (tier aggs, Gorilla packing) run once;
+        # released when the write ends, errors included
+        with Held():
+            df = persist(df)
+            fps = self.fingerprints(df, part_col)
+            result = CommitResult(table_path=os.path.join(self.base_path, table))
 
-        stale = []
-        staged_manifests: list[tuple[str, dict]] = []
-        for part, fp in sorted(fps.items()):
-            m = self.read_manifest(table, str(part))
-            if m and m.get("fingerprint") == fp and m.get("schema_version") == SCHEMA_VERSION:
-                result.skipped.append(str(part))
-            else:
-                stale.append(part)
+            stale = []
+            staged_manifests: list[tuple[str, dict]] = []
+            for part, fp in sorted(fps.items()):
+                m = self.read_manifest(table, str(part))
+                if m and m.get("fingerprint") == fp and m.get("schema_version") == SCHEMA_VERSION:
+                    result.skipped.append(str(part))
+                else:
+                    stale.append(part)
 
-        if stale:
-            out = df.filter(F.col(part_col).isin([p for p in stale]))
-            # immutable data files: every commit writes under a fresh
-            # commit-id directory so files referenced by existing snapshots
-            # are never touched — the write needs no overwrite mode at all
-            cid = uuid.uuid4().hex[:12]
-            data_rel = os.path.join("data", cid)
-            # repartition by (partition value, bounded content-hash split):
-            # pure repartition(part_col) would funnel EVERY row of a date
-            # through ONE writer task — a serialization point at any scale
-            # (a 3-day corpus writes on 3 cores of a 1000-core cluster) —
-            # while a raw write would emit (tasks × partitions) small
-            # files. The sub-split width is derived from the EXACT row
-            # counts the fingerprint pass already computed: each stale
-            # partition gets ``_writer_width(rows)`` writer tasks, capped
-            # at the session's parallelism — so a
-            # 10B-row date still spreads over every writer core while a
-            # cascade tier's few-thousand-row date writes one file
-            # instead of parallelism-many tiny ones. The key hashes a
-            # stable atomic column so the layout is deterministic for a
-            # deterministic input.
-            par = df.sparkSession.sparkContext.defaultParallelism
-            # split width PER stale partition, from its exact row count:
-            # a global max-based width would shatter a small date committed
-            # alongside a big one into max-width tiny files (the round-6
-            # small-tier tax, reappearing WITHIN a mixed-size commit).
-            k_by_part = {
-                str(p): self._writer_width(int(fps[p]["rows"]), par)
-                for p in stale
-            }
-            atomic = [
-                f.name for f in out.schema.fields
-                if f.name != part_col
-                and f.dataType.typeName()
-                in ("long", "integer", "string", "double", "timestamp")
-            ]
-            pref = [c for c in ("skey", "sig", "bucket_ts", "block_ts") if c in atomic]
-            split_col = (pref or atomic or [None])[0]
-            if split_col is not None and max(k_by_part.values()) > 1:
-                kmap = F.create_map(
-                    *[x for p, k in sorted(k_by_part.items())
-                      for x in (F.lit(p), F.lit(k))]
-                )
-                split = F.coalesce(
-                    F.pmod(
-                        F.xxhash64(F.col(split_col)),
-                        F.element_at(kmap, F.col(part_col).cast("string")),
-                    ),
-                    F.lit(0),
-                )
-            else:
-                split = F.lit(0)
-            # explicit numPartitions: AQE coalesces column-only
-            # repartitions back down (small-in-bytes tier outputs
-            # collapse to ~1 writer task); an explicit count pins the
-            # write tasks regardless of byte-size heuristics. Hash
-            # collisions between (date, split) groups can only MERGE
-            # writer tasks (fewer files), never fragment; padding the
-            # task count to the session parallelism keeps collision odds
-            # low while empty partitions write no files at all.
-            total_k = max(sum(k_by_part.values()), par)
-            (
-                out.repartition(total_k, F.col(part_col), split)
-                .write.mode("error")
-                .partitionBy(part_col)
-                .parquet(os.path.join(result.table_path, data_rel))
-            )
-
-            for part in stale:
-                entry = {
-                    "partition": str(part),
-                    "fingerprint": fps[part],
-                    "schema_version": SCHEMA_VERSION,
-                    "data_path": os.path.join(
-                        data_rel, f"{part_col}={part}"
-                    ),
-                    "written_at": time.time(),
-                    "metrics": stage_metrics or {},
+            if stale:
+                out = df.filter(F.col(part_col).isin([p for p in stale]))
+                # immutable data files: every commit writes under a fresh
+                # commit-id directory so files referenced by existing snapshots
+                # are never touched — the write needs no overwrite mode at all
+                cid = uuid.uuid4().hex[:12]
+                data_rel = os.path.join("data", cid)
+                # repartition by (partition value, bounded content-hash split):
+                # pure repartition(part_col) would funnel EVERY row of a date
+                # through ONE writer task — a serialization point at any scale
+                # (a 3-day corpus writes on 3 cores of a 1000-core cluster) —
+                # while a raw write would emit (tasks × partitions) small
+                # files. The sub-split width is derived from the EXACT row
+                # counts the fingerprint pass already computed: each stale
+                # partition gets ``_writer_width(rows)`` writer tasks, capped
+                # at the session's parallelism — so a
+                # 10B-row date still spreads over every writer core while a
+                # cascade tier's few-thousand-row date writes one file
+                # instead of parallelism-many tiny ones. The key hashes a
+                # stable atomic column so the layout is deterministic for a
+                # deterministic input.
+                par = df.sparkSession.sparkContext.defaultParallelism
+                # split width PER stale partition, from its exact row count:
+                # a global max-based width would shatter a small date committed
+                # alongside a big one into max-width tiny files (the round-6
+                # small-tier tax, reappearing WITHIN a mixed-size commit).
+                k_by_part = {
+                    str(p): self._writer_width(int(fps[p]["rows"]), par)
+                    for p in stale
                 }
-                staged_manifests.append((str(part), entry))
-                result.written.append(str(part))
+                atomic = [
+                    f.name for f in out.schema.fields
+                    if f.name != part_col
+                    and f.dataType.typeName()
+                    in ("long", "integer", "string", "double", "timestamp")
+                ]
+                pref = [c for c in ("skey", "sig", "bucket_ts", "block_ts") if c in atomic]
+                split_col = (pref or atomic or [None])[0]
+                if split_col is not None and max(k_by_part.values()) > 1:
+                    kmap = F.create_map(
+                        *[x for p, k in sorted(k_by_part.items())
+                          for x in (F.lit(p), F.lit(k))]
+                    )
+                    split = F.coalesce(
+                        F.pmod(
+                            F.xxhash64(F.col(split_col)),
+                            F.element_at(kmap, F.col(part_col).cast("string")),
+                        ),
+                        F.lit(0),
+                    )
+                else:
+                    split = F.lit(0)
+                # explicit numPartitions: AQE coalesces column-only
+                # repartitions back down (small-in-bytes tier outputs
+                # collapse to ~1 writer task); an explicit count pins the
+                # write tasks regardless of byte-size heuristics. Hash
+                # collisions between (date, split) groups can only MERGE
+                # writer tasks (fewer files), never fragment; padding the
+                # task count to the session parallelism keeps collision odds
+                # low while empty partitions write no files at all.
+                total_k = max(sum(k_by_part.values()), par)
+                (
+                    out.repartition(total_k, F.col(part_col), split)
+                    .write.mode("error")
+                    .partitionBy(part_col)
+                    .parquet(os.path.join(result.table_path, data_rel))
+                )
 
-        df.unpersist()
+                for part in stale:
+                    entry = {
+                        "partition": str(part),
+                        "fingerprint": fps[part],
+                        "schema_version": SCHEMA_VERSION,
+                        "data_path": os.path.join(
+                            data_rel, f"{part_col}={part}"
+                        ),
+                        "written_at": time.time(),
+                        "metrics": stage_metrics or {},
+                    }
+                    staged_manifests.append((str(part), entry))
+                    result.written.append(str(part))
+
         result.metrics = {
             "partitions_total": len(fps),
             "partitions_written": len(result.written),
@@ -582,8 +584,6 @@ class TierStore:
         this is the periodic maintenance job that keeps scan task counts
         proportional to data size after a history of mixed-width commits
         or a retuned ``target_rows_per_file``."""
-        from ..engine.runner import configure_session
-
         configure_session(spark)
         root = os.path.join(self.base_path, table)
         parts = self._scan_manifest_parts(table)

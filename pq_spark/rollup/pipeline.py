@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.ingest import samples_from_table
 from ..engine.planner import sig_expr
+from ..engine.runner import configure_session
+from ..materialize import Held, persist
 from . import gorilla
 from .lineage import TierStore, with_date
 from .pages import (
@@ -56,96 +58,93 @@ def run_pipeline(
     fits the cache; at 100 TB leave False and let the columnar source be
     scanned per pass (column pruning reads only what each pass needs).
     """
-    from ..engine.runner import configure_session
-
     configure_session(spark)  # ANSI off / UTC / AQE even on a default session
     store = TierStore(out_path)
     metrics: dict = {"stages": {}}
     t_start = time.time()
-    if cache_pages:
-        pages = pages.persist()
+    with Held():  # every cache below dies with the run, errors included
+        if cache_pages:
+            pages = persist(pages)
 
-    # star schema: the NARROW fact (skey, ts, seq, value) feeds both the
-    # tier cascade and the Gorilla packer — label maps live in the tiny
-    # series dim. Only the fact is cached; at cluster scale it'd be a
-    # checkpointed table.
-    #
-    # FUSED extraction check: the enriched projection already decodes the
-    # heavy `html` column (content_len), so the byte-identity invariant
-    # (`_bad`) rides the SAME scan instead of a second full read of the
-    # page table. The narrow projection is persisted, the Arrow UDF is paid
-    # exactly once, and the post-write `sum(_bad)` below is a cache hit.
-    enriched = _page_enriched(pages, verify=check_extraction).persist()
-    samples_wide = samples_from_table(enriched, **_PAGE_TABLE_ARGS)
-    # `_sig` is the statically-concatenated signature samples_from_table
-    # precomputes (same string sig_expr derives from the map, minus the
-    # per-row map build/sort) — fall back for sample sources without it
-    skey_col = (
-        series_key(F.col("_sig"))
-        if "_sig" in samples_wide.columns
-        else series_key(sig_expr(F.col("labels")))
-    )
-    samples = samples_wide.select(
-        skey_col.alias("skey"), "ts", "seq", "value"
-    ).persist()
-    # label-space fast path: one narrow aggregate over page rows instead of
-    # a signature-distinct over the 3x-wider sample union (round-5 verdict
-    # item 5 — the dim build was ~23% of the tier_1m stage); built from the
-    # persisted enriched projection so it reuses the fused-verify cache.
-    dim = page_series_dim_from_enriched(enriched).persist()
-
-    # tier cascade with resume: the cascade itself stays NARROW (skey-keyed
-    # partials, persisted); labels attach only at each commit edge. Each
-    # tier commits date-partitioned with manifests; unchanged partitions are
-    # skipped on re-runs.
-    t0 = time.time()
-    p1m = tier_partials(samples, "1m").persist()
-    # tier_1m's heavy data write runs BEFORE the invariant check joins, but
-    # with publish=False nothing it wrote is visible (manifests + CURRENT
-    # swap are staged) — a violation aborts with zero published state, so
-    # readers can never serve tiers derived from bad extractions.
-    r1 = store.commit(
-        with_date(attach_series(p1m, dim)), "tier_1m",
-        publish=not check_extraction,
-    )
-
-    if check_extraction:
-        t0v = time.time()
-        mismatches = enriched.agg(F.sum("_bad")).first()[0] or 0
-        if mismatches:
-            raise RuntimeError(
-                f"extraction invariant violated for {mismatches} pages"
-            )
-        store.finalize_commit(r1)
-        metrics["stages"]["verify_extraction"] = {
-            "elapsed_s": round(time.time() - t0v, 3), "fused": True
-        }
-    metrics["stages"]["tier_1m"] = r1.metrics
-
-    p1h = tier_from_tier(p1m, "1h").persist()
-    r2 = store.commit(with_date(attach_series(p1h, dim)), "tier_1h")
-    metrics["stages"]["tier_1h"] = r2.metrics
-
-    p1d = tier_from_tier(p1h, "1d")
-    r3 = store.commit(with_date(attach_series(p1d, dim)), "tier_1d")
-    metrics["stages"]["tier_1d"] = r3.metrics
-    metrics["stages"]["cascade_elapsed_s"] = time.time() - t0
-    p1m.unpersist()
-    p1h.unpersist()
-
-    if pack:
-        t0 = time.time()
-        packed = gorilla.pack_blocks(samples, block_ms=gorilla_block_ms, dim=dim)
-        rp = store.commit(
-            with_date(packed, ts_col="block_ts"), "gorilla_blocks"
+        # star schema: the NARROW fact (skey, ts, seq, value) feeds both the
+        # tier cascade and the Gorilla packer — label maps live in the tiny
+        # series dim. Only the fact is cached; at cluster scale it'd be a
+        # checkpointed table.
+        #
+        # FUSED extraction check: the enriched projection already decodes the
+        # heavy `html` column (content_len), so the byte-identity invariant
+        # (`_bad`) rides the SAME scan instead of a second full read of the
+        # page table. The narrow projection is persisted, the Arrow UDF is
+        # paid exactly once, and the post-write `sum(_bad)` below is a cache
+        # hit.
+        enriched = persist(_page_enriched(pages, verify=check_extraction))
+        samples_wide = samples_from_table(enriched, **_PAGE_TABLE_ARGS)
+        # `_sig` is the statically-concatenated signature samples_from_table
+        # precomputes (same string sig_expr derives from the map, minus the
+        # per-row map build/sort) — fall back for sample sources without it
+        skey_col = (
+            series_key(F.col("_sig"))
+            if "_sig" in samples_wide.columns
+            else series_key(sig_expr(F.col("labels")))
         )
-        metrics["stages"]["gorilla"] = rp.metrics
+        samples = persist(
+            samples_wide.select(skey_col.alias("skey"), "ts", "seq", "value")
+        )
+        # label-space fast path: one narrow aggregate over page rows instead
+        # of a signature-distinct over the 3x-wider sample union (round-5
+        # verdict item 5 — the dim build was ~23% of the tier_1m stage);
+        # built from the persisted enriched projection so it reuses the
+        # fused-verify cache.
+        dim = persist(page_series_dim_from_enriched(enriched))
 
-    samples.unpersist()
-    dim.unpersist()
-    enriched.unpersist()
-    if cache_pages:
-        pages.unpersist()
+        # tier cascade with resume: the cascade itself stays NARROW
+        # (skey-keyed partials, persisted); labels attach only at each commit
+        # edge. Each tier commits date-partitioned with manifests; unchanged
+        # partitions are skipped on re-runs. The partials are released
+        # before Gorilla packing.
+        t0 = time.time()
+        with Held():
+            p1m = persist(tier_partials(samples, "1m"))
+            # tier_1m's heavy data write runs BEFORE the invariant check
+            # joins, but with publish=False nothing it wrote is visible
+            # (manifests + CURRENT swap are staged) — a violation aborts
+            # with zero published state, so readers can never serve tiers
+            # derived from bad extractions.
+            r1 = store.commit(
+                with_date(attach_series(p1m, dim)), "tier_1m",
+                publish=not check_extraction,
+            )
+
+            if check_extraction:
+                t0v = time.time()
+                mismatches = enriched.agg(F.sum("_bad")).first()[0] or 0
+                if mismatches:
+                    raise RuntimeError(
+                        f"extraction invariant violated for {mismatches} pages"
+                    )
+                store.finalize_commit(r1)
+                metrics["stages"]["verify_extraction"] = {
+                    "elapsed_s": round(time.time() - t0v, 3), "fused": True
+                }
+            metrics["stages"]["tier_1m"] = r1.metrics
+
+            p1h = persist(tier_from_tier(p1m, "1h"))
+            r2 = store.commit(with_date(attach_series(p1h, dim)), "tier_1h")
+            metrics["stages"]["tier_1h"] = r2.metrics
+
+            p1d = tier_from_tier(p1h, "1d")
+            r3 = store.commit(with_date(attach_series(p1d, dim)), "tier_1d")
+            metrics["stages"]["tier_1d"] = r3.metrics
+            metrics["stages"]["cascade_elapsed_s"] = time.time() - t0
+
+        if pack:
+            t0 = time.time()
+            packed = gorilla.pack_blocks(samples, block_ms=gorilla_block_ms, dim=dim)
+            rp = store.commit(
+                with_date(packed, ts_col="block_ts"), "gorilla_blocks"
+            )
+            metrics["stages"]["gorilla"] = rp.metrics
+
     total_points = (
         metrics["stages"]["tier_1m"]["rows_total"]
         + metrics["stages"]["tier_1h"]["rows_total"]
@@ -195,13 +194,6 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = SparkSession.builder.appName("pq_spark-rollup").getOrCreate()
-    for k, v in {
-        "spark.sql.ansi.enabled": "false",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-    }.items():
-        spark.conf.set(k, v)
-
     if args.synth_pages:
         from .pages import synth_pages
 

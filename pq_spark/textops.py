@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .materialize import Held, persist
+
 # ---------------------------------------------------------------------------
 # shared primitives
 # ---------------------------------------------------------------------------
@@ -196,7 +198,7 @@ def minhash_lsh_pairs(
     banded = sig.select(F.col(id_col), F.explode(band_keys).alias("band_key"))
     # three consumers (cap count, join a, join b) of the shingle+minhash
     # subtree — materialize the banded keys once (bands × docs rows)
-    banded = banded.persist()
+    banded = persist(banded)
     banded = _cap_buckets(banded, "band_key", max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
@@ -222,10 +224,10 @@ def near_dup_pairs(
     cand = minhash_lsh_pairs(
         docs, num_hashes, bands, shingle_n, text_col, id_col, max_bucket
     )
-    sh = docs.select(
+    sh = persist(docs.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles_col(F.col(text_col), shingle_n)).alias("sh"),
-    ).persist()  # three consumers: sizes + both sides of the verify join
+    ))  # three consumers: sizes + both sides of the verify join
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     sha = sh.select(F.col("doc").alias("doc_a"), "sh")
     shb = sh.select(F.col("doc").alias("doc_b"), "sh")
@@ -260,14 +262,16 @@ def dedup_components(
     aggregation + a convergence count — all shuffles keyed by doc id,
     never quadratic. Rounds needed = component diameter (near-dup clusters
     are shallow; the loop stops at the first unchanged round). Each
-    round's labels are persisted and the previous round unpersisted so
-    lineage stays one round deep; the RESULT is materialized into an eager
-    ``localCheckpoint`` so the final round's cache is released before
-    returning — repeated calls in one session leave nothing pinned in
-    storage (the checkpoint blocks are freed when the returned DataFrame
-    is garbage-collected). Callers that must survive executor loss should
-    write the result to a sink promptly (localCheckpoint stores on
-    executors, the standard trade-off for truncating iterative lineage).
+    round's labels are cached under their own ``Held``, released once the
+    next round's count has materialized its successor, so lineage stays
+    one round deep and no round's cache outlives the call, errors
+    included. The RESULT is materialized into an eager ``localCheckpoint``
+    so the final round's cache is released before returning — repeated
+    calls in one session leave nothing pinned in storage (the checkpoint
+    blocks are freed when the returned DataFrame is garbage-collected).
+    Callers that must survive executor loss should write the result to a
+    sink promptly (localCheckpoint stores on executors, the standard
+    trade-off for truncating iterative lineage).
 
     LOGICAL-PLAN growth is handled separately from data caching: persist
     caches rows but leaves the plan intact, and each round's plan
@@ -304,69 +308,72 @@ def dedup_components(
         # each round see a leaf LogicalRDD instead.
         .localCheckpoint(eager=True)
     )
-    labels = docs.select(F.col(id_col), F.col(id_col).alias("_comp")).persist()
-    cached = labels  # the persisted relation backing `labels`
-    converged = False
-    for _round in range(max_iters):
-        neigh = (
-            edges.join(
-                labels.select(F.col(id_col).alias("_src"), "_comp"), "_src"
+    live = nxt = Held()  # `live` owns the cache behind `labels`
+    try:
+        with live.current():
+            labels = persist(
+                docs.select(F.col(id_col), F.col(id_col).alias("_comp"))
             )
-            .groupBy(F.col("_dst").alias(id_col))
-            .agg(F.min("_comp").alias("_ncomp"))
-        )
-        new = (
-            labels.withColumnRenamed("_comp", "_old")
-            .join(neigh, id_col, "left")
-            .select(
-                id_col,
-                F.least(
-                    F.col("_old"), F.coalesce(F.col("_ncomp"), F.col("_old"))
-                ).alias("_comp"),
-                "_old",
+        for _round in range(max_iters):
+            neigh = (
+                edges.join(
+                    labels.select(F.col(id_col).alias("_src"), "_comp"), "_src"
+                )
+                .groupBy(F.col("_dst").alias(id_col))
+                .agg(F.min("_comp").alias("_ncomp"))
             )
-            .persist()
-        )
-        if plan_probe is not None:
-            plan_probe(new)
-        # the convergence count MATERIALIZES new's cache; `labels` stays a
-        # projection over that live cache (unpersisting it here would force
-        # every later round to replay the whole join chain from round 0)
-        changed = new.filter(F.col("_comp") != F.col("_old")).count()
-        cached.unpersist()
-        cached = new
-        labels = new.select(id_col, "_comp")
-        if changed == 0:
-            converged = True
-            break
-        if (_round + 1) % checkpoint_every == 0:
-            # plan truncation: each round's plan references the previous
-            # round TWICE (join left side + neighbor agg) and persisted
-            # rounds print with their full cached subtree — ~4x growth per
-            # round; re-anchoring the labels on a leaf LogicalRDD every
-            # few rounds bounds the plan at ~4**checkpoint_every small
-            # subtrees regardless of graph diameter. The rows are already
-            # materialized (the count above), so this is a cache-to-cache
-            # copy, not a recompute.
-            anchored = labels.localCheckpoint(eager=True)
-            cached.unpersist()
-            cached = anchored
-            labels = anchored
-    if not converged:
-        # a wrong answer would silently violate the oracle contract; a
-        # component's diameter exceeding max_iters must fail loudly
-        cached.unpersist()
-        raise RuntimeError(
-            f"dedup_components did not converge within {max_iters} rounds "
-            "(a duplicate cluster's diameter exceeds max_iters — raise it)"
-        )
-    out = labels.select(
-        F.col(id_col),
-        F.col("_comp").alias("component_id"),
-        (F.col(id_col) == F.col("_comp")).alias("is_keeper"),
-    ).localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
+            nxt = Held()
+            with nxt.current():
+                new = persist(
+                    labels.withColumnRenamed("_comp", "_old")
+                    .join(neigh, id_col, "left")
+                    .select(
+                        id_col,
+                        F.least(
+                            F.col("_old"),
+                            F.coalesce(F.col("_ncomp"), F.col("_old")),
+                        ).alias("_comp"),
+                        "_old",
+                    )
+                )
+            if plan_probe is not None:
+                plan_probe(new)
+            # the convergence count MATERIALIZES new's cache; `labels` stays
+            # a projection over that live cache (releasing it here would
+            # force every later round to replay the whole join chain from
+            # round 0)
+            changed = new.filter(F.col("_comp") != F.col("_old")).count()
+            live.release()
+            live = nxt
+            labels = new.select(id_col, "_comp")
+            if changed == 0:
+                break
+            if (_round + 1) % checkpoint_every == 0:
+                # plan truncation: each round's plan references the previous
+                # round TWICE (join left side + neighbor agg) and persisted
+                # rounds print with their full cached subtree — ~4x growth
+                # per round; re-anchoring the labels on a leaf LogicalRDD
+                # every few rounds bounds the plan at ~4**checkpoint_every
+                # small subtrees regardless of graph diameter. The rows are
+                # already materialized (the count above), so this is a
+                # cache-to-cache copy, not a recompute.
+                labels = labels.localCheckpoint(eager=True)
+                live.release()
+        else:
+            # a wrong answer would silently violate the oracle contract; a
+            # component's diameter exceeding max_iters must fail loudly
+            raise RuntimeError(
+                f"dedup_components did not converge within {max_iters} rounds "
+                "(a duplicate cluster's diameter exceeds max_iters — raise it)"
+            )
+        return labels.select(
+            F.col(id_col),
+            F.col("_comp").alias("component_id"),
+            (F.col(id_col) == F.col("_comp")).alias("is_keeper"),
+        ).localCheckpoint(eager=True)
+    finally:
+        live.release()
+        nxt.release()
 
 
 def dedup_survivors(
@@ -436,7 +443,7 @@ def ngram_jaccard_pairs(
     )
     # four consumers of the shingle fold (sizes, cap count, join a/b):
     # materialize once instead of re-shingling the corpus per branch
-    sh = sh.persist()
+    sh = persist(sh)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     if max_doc_freq is not None:
         sh = _cap_buckets(sh, "sh", max_doc_freq)
@@ -520,7 +527,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     )
     banded = sh.select(F.col(id_col), F.col("simhash"), F.explode(chunks).alias("chunk"))
     # same three-consumer shape as minhash_lsh_pairs: materialize once
-    banded = banded.persist()
+    banded = persist(banded)
     banded = _cap_buckets(banded, "chunk", max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -701,13 +708,13 @@ def kmeans_centroids(
     keyed (centroid, position) with map-side combine). Per iteration the
     corpus is scanned once and only k×dim aggregated doubles reach the
     driver — the standard scalable k-means shape; empty clusters keep
-    their previous centroid. The (id, vector) projection is persisted for
-    the duration of training so the ``iters`` scans hit cache, not the
-    source (round-3 verdict item 5) — at 100 TB the narrow projection is
-    what you want resident, not the full table; it is unpersisted before
-    returning. Train once and reuse (the centroids ARE the model)."""
-    narrow = embeddings.select(id_col, vec_col).persist()
-    try:
+    their previous centroid. The (id, vector) projection is cached for the
+    duration of training so the ``iters`` scans hit cache, not the source
+    (round-3 verdict item 5) — at 100 TB the narrow projection is what you
+    want resident, not the full table; it is released on return or error.
+    Train once and reuse (the centroids ARE the model)."""
+    with Held():
+        narrow = persist(embeddings.select(id_col, vec_col))
         first = narrow.orderBy(id_col).limit(k).collect()
         centroids = [
             (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(first)
@@ -738,8 +745,6 @@ def kmeans_centroids(
                 for cid, vec in centroids
             ]
         return centroids
-    finally:
-        narrow.unpersist()
 
 
 def ann_topk_ivf(
@@ -1307,7 +1312,7 @@ def doc_repetition(
             ),
         )
     ).alias("t")
-    counts = (
+    counts = persist(
         base.select(id_col, "_nc", tagged)
         .select(
             id_col, "_nc",
@@ -1317,7 +1322,6 @@ def doc_repetition(
         )
         .groupBy(id_col, "_nc", "_gn", "gh", "glen")
         .agg(F.count("*").alias("c"))
-        .persist()
     )
 
     bg = counts.filter(F.col("_gn") == 2)
@@ -1791,9 +1795,9 @@ def pack_sequences(
     bucket totals broadcast back as offsets. The only driver materialization
     is bucket-count-sized; the per-doc explode fans out by
     ceil(n/capacity) + 1 at most. The narrow (id, n, pid, cum) relation
-    stays persisted under the returned DataFrame (it pins one sampled
-    range partitioning — see the in-body comment); looping callers should
-    unpersist/clearCache between batches."""
+    is an eager ``localCheckpoint`` that pins one sampled range
+    partitioning (see the in-body comment); its blocks live as long as
+    any frame over the result."""
     if capacity <= 0:
         raise ValueError("capacity must be positive")
     from pyspark.sql import Window
@@ -1816,12 +1820,15 @@ def pack_sequences(
         Window.partitionBy("_pid").orderBy(F.col(id_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # persist pins ONE range partitioning: the bucket-total collect and the
-    # main output must see identical _pid boundaries (a re-planned
+    # the checkpoint pins ONE range partitioning: the bucket-total collect
+    # and the main output must see identical _pid boundaries (a re-planned
     # repartitionByRange re-samples with a fresh rdd-id-derived seed, so
-    # two separate computations could disagree). The cached relation is
-    # (id, n, pid, cum) — narrow rows, MEMORY_AND_DISK at corpus scale.
-    based = base.withColumn("_cum_local", local).persist()
+    # two separate computations could disagree). An eager localCheckpoint,
+    # not a cache: every frame over it reads the same blocks and keeps
+    # them alive, while a CacheManager entry could be released (or shared
+    # with an identical build) and silently recomputed under a new sample.
+    # The relation is (id, n, pid, cum) — narrow rows, MEMORY_AND_DISK.
+    based = base.withColumn("_cum_local", local).localCheckpoint(eager=True)
     totals = sorted(
         (r["_pid"], r["_t"])
         for r in based.groupBy("_pid").agg(F.max("_cum_local").alias("_t")).collect()
@@ -2177,7 +2184,7 @@ def winnow_pairs(
     # consumers below (bucket-cap count, join side a, join side b) — each
     # would re-run the whole fold. Materialize it once; the fingerprint
     # set is ~2n/(w+1) longs per corpus, far smaller than the text
-    fp = fp.persist()
+    fp = persist(fp)
     fp = _cap_buckets(fp, "fp", max_bucket)
     a = fp.select(F.col(id_col).alias("id_a"), "fp")
     b = fp.select(F.col(id_col).alias("id_b"), "fp")

@@ -86,8 +86,11 @@ _NAMES = sorted(QUERIES)
 
 
 def test_query_against_oracle(spark):
+    import gc
     import traceback
     from concurrent.futures import ThreadPoolExecutor
+
+    spark.catalog.clearCache()
 
     def run(name):
         try:
@@ -99,3 +102,6 @@ def test_query_against_oracle(spark):
     with ThreadPoolExecutor(max_workers=12) as ex:
         failures = [f for f in ex.map(run, _NAMES) if f]
     assert not failures, "\n".join(failures)
+    # every build owned its caches and released them with its result
+    gc.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -353,8 +353,14 @@ def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
         ),
     )
     out = str(tmp_path / "tiers_bad")
+    pages.count()  # the fixture's own cache exists before the snapshot
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted())
     with pytest.raises(RuntimeError, match="extraction invariant violated"):
         run_pipeline(spark, bad, out, pack=False)
+    # the failed run released every relation it cached (the module's
+    # cached fixtures keep the CacheManager itself non-empty)
+    assert set(persisted()) == before
     store = TierStore(out)
     # nothing visible: no CURRENT pointer, no snapshots, no manifests
     assert store.current_snapshot_id("tier_1m") is None

@@ -5,6 +5,7 @@ blocking exhaustiveness."""
 from pyspark.sql import functions as F
 
 from pq_spark import driver_queries as dq, textops
+from pq_spark.materialize import Held
 
 SF = "/root/testdata/sf0.01"
 
@@ -54,9 +55,10 @@ def test_lsh_bucket_cap_drops_degenerate(spark):
     is excluded from candidate generation (no quadratic stage) while pairs
     among normal docs survive."""
     docs = _degenerate_docs(spark)
-    pairs = textops.minhash_lsh_pairs(
-        docs, num_hashes=8, bands=4, max_bucket=100
-    ).collect()
+    with Held():
+        pairs = textops.minhash_lsh_pairs(
+            docs, num_hashes=8, bands=4, max_bucket=100
+        ).collect()
     ids = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
     assert all(i >= 4000 for i in ids), "degenerate bucket leaked into pairs"
     assert len(pairs) > 0, "normal near-dup candidates must survive the cap"
@@ -64,9 +66,10 @@ def test_lsh_bucket_cap_drops_degenerate(spark):
 
 def test_simhash_bucket_cap_drops_degenerate(spark):
     docs = _degenerate_docs(spark)
-    pairs = textops.simhash_pairs(
-        docs, max_hamming=6, max_bucket=100
-    ).collect()
+    with Held():
+        pairs = textops.simhash_pairs(
+            docs, max_hamming=6, max_bucket=100
+        ).collect()
     ids = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
     assert all(i >= 4000 for i in ids), "degenerate bucket leaked into pairs"
 
@@ -83,10 +86,11 @@ def test_simhash_blocking_exhaustive(spark):
         for idb, hb in items[i + 1:]:
             if bin(ha ^ hb).count("1") <= 6:
                 want.add((min(ida, idb), max(ida, idb)))
-    got = {
-        (p["doc_a"], p["doc_b"])
-        for p in textops.simhash_pairs(docs, max_hamming=6).collect()
-    }
+    with Held():
+        got = {
+            (p["doc_a"], p["doc_b"])
+            for p in textops.simhash_pairs(docs, max_hamming=6).collect()
+        }
     assert got == want
 
 
@@ -110,9 +114,10 @@ def test_jaccard_stop_shingle_cap(spark):
     the 4000-identical-doc bucket can't go quadratic, boilerplate-only
     pairs disappear, and genuinely similar distinct docs still pair."""
     docs = _degenerate_docs(spark)
-    pairs = textops.ngram_jaccard_pairs(
-        docs, threshold=0.3, max_doc_freq=100
-    ).collect()
+    with Held():
+        pairs = textops.ngram_jaccard_pairs(
+            docs, threshold=0.3, max_doc_freq=100
+        ).collect()
     ids = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
     assert all(i >= 4000 for i in ids), "boilerplate pairs leaked"
     assert len(pairs) > 0, "similar distinct docs must still pair"
@@ -436,6 +441,35 @@ def test_pack_sequences_semantics(spark):
         (r["bin_id"], r["doc_id"], r["tok_off_in_doc"], r["off_in_bin"],
          r["seg_tokens"]) for r in out2
     ) == rows
+
+
+def test_pack_sequences_prefix_sum_is_per_bucket(spark, monkeypatch):
+    """The running-sum window runs inside the checkpoint that pins the
+    range partitioning, so the result's own plan only shows a scan of it:
+    pin on the checkpointed plan that the window partitions by the range
+    bucket — a GLOBAL running-sum window would serialize the corpus
+    through one task."""
+    from pq_spark.textops import pack_sequences
+
+    docs = spark.createDataFrame(
+        [(i, "a b c") for i in range(20)], "doc_id long, text string"
+    )
+    plans = []
+    checkpoint = type(docs).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", spy)
+    assert pack_sequences(docs, capacity=3, n_partitions=3).count() == 20
+    [plan] = plans
+    wins = [
+        l for l in plan.splitlines()
+        if "windowspecdefinition(" in l and "sum(" in l
+    ]
+    assert wins, plan
+    assert all("windowspecdefinition(_pid" in l for l in wins), plan
 
 
 def test_unigram_logppl_semantics(spark):
@@ -813,12 +847,13 @@ def test_winnow_fingerprint_guarantee_and_plan(spark):
     assert not (by_doc[1] & by_doc[3]) and not (by_doc[2] & by_doc[3])
     assert 4 not in by_doc
     assert len(by_doc[5]) == 1
-    pairs = {(r["id_a"], r["id_b"]): r["n_shared"]
-             for r in winnow_pairs(docs, k=k, w=w, min_shared=1).collect()}
+    with Held():
+        pairs = {(r["id_a"], r["id_b"]): r["n_shared"]
+                 for r in winnow_pairs(docs, k=k, w=w, min_shared=1).collect()}
+        plan = winnow_pairs(docs, k=k, w=w)._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"))
     assert (1, 2) in pairs and all(p == (1, 2) for p in pairs)
 
-    plan = winnow_pairs(docs, k=k, w=w)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"))
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
