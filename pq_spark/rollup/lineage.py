@@ -15,11 +15,11 @@ runtime jars, so tables are parquet directories):
   order-independent, partitioning-independent digest computed in the same
   Spark pass (one tiny aggregate, no extra scan of written data);
 - a partition is (re)written only when its manifest is missing or its
-  input fingerprint changed; rewrites use dynamic partition overwrite so
-  untouched partitions' files are never rewritten;
-- the manifest JSON per partition records the fingerprint, row counts, and
-  stage metrics; ``_snapshots/`` keeps an append-only log of every commit
-  (which partitions were written vs skipped) — the resume audit trail.
+  input fingerprint changed; untouched partitions keep their files;
+- the manifest JSON per partition records the fingerprint, row counts,
+  stage metrics and the partition's ``data_path``; ``_snapshots/`` keeps an
+  append-only log of every commit (which partitions were written vs
+  skipped) — the resume audit trail.
 
 Snapshot isolation (round-4 verdict item 7 — the two Iceberg semantics the
 catalog seam needs, delivered reader-side):
@@ -32,16 +32,21 @@ catalog seam needs, delivered reader-side):
   their previous paths forward), and ``_snapshots/CURRENT`` is swapped to
   ``N`` with an atomic rename only after the manifest is complete — a
   reader that opens mid-commit resolves the PREVIOUS complete snapshot;
-- ``read(..., snapshot_id=K)`` time-travels to any retained snapshot;
+- ``read(..., snapshot_id=K)`` time-travels to any retained snapshot; a
+  table with no published snapshot has nothing to read (FileNotFoundError);
 - concurrent writers converge without a catalog CAS: each commit composes
   its snapshot from a scan of ALL per-partition manifests and then
   re-checks that CURRENT's content matches a fresh scan, swapping again if
   a concurrent commit raced it (bounded retries; manifests only grow, so
-  the last re-check in wall-clock order certifies the final state).
+  the last re-check in wall-clock order certifies the final state);
+- a manifest that does not decode, names no ``data_path``, or names a
+  data dir that is gone is store corruption: publishing refuses
+  (:class:`StoreCorruptionError`) rather than drop a live partition.
 """
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -56,6 +61,7 @@ from ..engine.runner import configure_session
 from ..materialize import Held, persist
 
 SCHEMA_VERSION = 2  # v2: overflow-proof xor digest (v1 summed 64-bit hashes)
+PART_COL = "date"  # every table is partitioned by it (see ``with_date``)
 
 
 class StoreCorruptionError(RuntimeError):
@@ -160,72 +166,39 @@ class TierStore:
         its partition's data files are complete).
 
         Pure read — the publish retry loop calls this repeatedly and must
-        never mutate the store it is scanning. Legacy manifests (pre-
-        snapshot-isolation, no ``data_path``) are RESOLVED in memory to
-        their root-relative ``date=<part>`` dir so every snapshot still
-        carries every live partition; the durable rewrite is an explicit
-        migration (:meth:`migrate_legacy_manifests`). A legacy manifest
-        whose data dir is gone is store corruption — surfaced as
-        :class:`StoreCorruptionError` with a repair hint rather than
-        publishing a silently-shrunk snapshot."""
+        never mutate the store it is scanning. A manifest that does not
+        decode (``os.replace`` only ever lands whole files), names no
+        ``data_path``, or names a data dir that is gone is store
+        corruption — surfaced as :class:`StoreCorruptionError` with a
+        repair hint rather than publishing a silently-shrunk snapshot."""
         d = self._lineage_dir(table)
+        root = os.path.join(self.base_path, table)
         parts: dict[str, str] = {}
         if not os.path.isdir(d):
             return parts
         for fn in sorted(os.listdir(d)):
-            if not fn.endswith(".json") or fn.endswith(".tmp"):
+            if not fn.endswith(".json"):  # in-flight .json.tmp, _expired/
                 continue
+            path = os.path.join(d, fn)
             try:
-                with open(os.path.join(d, fn)) as f:
+                with open(path) as f:
                     m = json.load(f)
-            except (json.JSONDecodeError, OSError):  # mid-rename straggler
+            except FileNotFoundError:  # moved by a concurrent apply_retention
                 continue
-            if m.get("data_path"):
-                parts[m["partition"]] = m["data_path"]
-            elif m.get("partition") is not None:
-                legacy_rel = f"date={m['partition']}"
-                root = os.path.join(self.base_path, table)
-                if not os.path.isdir(os.path.join(root, legacy_rel)):
-                    raise StoreCorruptionError(
-                        f"manifest {fn} of table {table!r} has no data_path "
-                        f"and no legacy data dir {legacy_rel!r} — refusing "
-                        "to publish a snapshot missing a live partition. "
-                        "Repair: restore the data dir, or delete the orphan "
-                        f"manifest {os.path.join(d, fn)!r} if the partition "
-                        "is truly gone, then re-run the commit."
-                    )
-                parts[m["partition"]] = legacy_rel
+            except ValueError:
+                m = {}
+            rel = m.get("data_path")
+            if not rel or not os.path.isdir(os.path.join(root, rel)):
+                raise StoreCorruptionError(
+                    f"manifest {path!r} of table {table!r} is unreadable, "
+                    f"has no data_path, or its data dir {rel!r} is gone — "
+                    "refusing to publish a snapshot missing a live partition. "
+                    "Repair: restore the data dir, or delete the orphan "
+                    f"manifest {path!r} if the partition is truly gone, then "
+                    "re-run the commit."
+                )
+            parts[m["partition"]] = rel
         return parts
-
-    def migrate_legacy_manifests(self, table: str) -> dict[str, list[str]]:
-        """One-shot upgrade of a pre-snapshot-isolation store: durably
-        backfill ``data_path`` into every legacy manifest whose data dir is
-        live, and REPORT (not raise) orphans so an operator can repair a
-        store that the hot publish path refuses to touch. Returns
-        ``{"migrated": [...], "orphaned": [...]}`` partition lists."""
-        d = self._lineage_dir(table)
-        out: dict[str, list[str]] = {"migrated": [], "orphaned": []}
-        if not os.path.isdir(d):
-            return out
-        root = os.path.join(self.base_path, table)
-        for fn in sorted(os.listdir(d)):
-            if not fn.endswith(".json") or fn.endswith(".tmp"):
-                continue
-            try:
-                with open(os.path.join(d, fn)) as f:
-                    m = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                continue
-            if m.get("data_path") or m.get("partition") is None:
-                continue
-            legacy_rel = f"date={m['partition']}"
-            if os.path.isdir(os.path.join(root, legacy_rel)):
-                m["data_path"] = legacy_rel
-                self._write_manifest(table, str(m["partition"]), m)
-                out["migrated"].append(str(m["partition"]))
-            else:
-                out["orphaned"].append(str(m["partition"]))
-        return out
 
     def current_snapshot_id(self, table: str) -> int | None:
         p = os.path.join(self._snapshots_dir(table), "CURRENT")
@@ -242,17 +215,17 @@ class TierStore:
         with open(p) as f:
             return json.load(f)
 
-    def _publish_snapshot(self, table: str, attempts: int = 5) -> int:
+    def _publish_snapshot(self, table: str, attempts: int = 5) -> tuple[int, bool]:
         """Compose a snapshot from the manifest scan and swap CURRENT to it
         atomically; re-check after the swap so concurrent disjoint-partition
-        commits converge (see module docstring)."""
+        commits converge (see module docstring).
+
+        Returns ``(snapshot_id, converged)``: ``converged`` is False when
+        contention outlasted the retries (CURRENT never verified equal to
+        the manifest scan), so a caller never mistakes a racing writer's id
+        for its own certified state."""
         d = self._snapshots_dir(table)
         os.makedirs(d, exist_ok=True)
-        # distinguishes a converged publish (CURRENT verified == manifest
-        # scan) from a gave-up-under-contention one; commit() surfaces it as
-        # metrics['snapshot_converged'] so callers never mistake a racing
-        # writer's id for their own certified state
-        self.last_publish_converged = False
         last_id = self.current_snapshot_id(table) or 0
         for _ in range(attempts):
             parts = self._scan_manifest_parts(table)
@@ -260,8 +233,7 @@ class TierStore:
             if cur_id is not None:
                 cur = self.read_snapshot(table, cur_id)
                 if cur is not None and cur.get("parts") == parts:
-                    self.last_publish_converged = True
-                    return cur_id
+                    return cur_id, True
                 last_id = cur_id
             nid = last_id + 1
             while True:  # unique id under concurrency: O_EXCL create
@@ -281,12 +253,12 @@ class TierStore:
                 f.write(str(nid))
             os.replace(tmp, os.path.join(d, "CURRENT"))
             last_id = nid
-        return last_id
+        return last_id, False
 
     # -- fingerprint -----------------------------------------------------------
 
     @staticmethod
-    def fingerprints(df: DataFrame, part_col: str = "date") -> dict[str, dict]:
+    def fingerprints(df: DataFrame) -> dict[str, dict]:
         """Order/partitioning-independent digest per partition value:
         one distributed aggregate, no collect of data rows.
 
@@ -297,12 +269,12 @@ class TierStore:
         digest: a row repeated an even number of times cancels out — tier
         tables are unique-keyed per partition, and the row count catches
         pure duplications."""
-        id_cols = [c for c in df.columns if c != part_col and c != "labels"]
+        id_cols = [c for c in df.columns if c != PART_COL and c != "labels"]
         h1 = F.xxhash64(*id_cols)
         h2 = F.xxhash64(F.lit("fp2"), *id_cols)
         digest = (
-            df.select(part_col, h1.alias("_h1"), h2.alias("_h2"))
-            .groupBy(part_col)
+            df.select(PART_COL, h1.alias("_h1"), h2.alias("_h2"))
+            .groupBy(PART_COL)
             .agg(
                 F.count("*").alias("rows"),
                 F.expr("bit_xor(_h1)").alias("x1"),
@@ -310,12 +282,72 @@ class TierStore:
             )
         )
         return {
-            r[part_col]: {
+            r[PART_COL]: {
                 "rows": r["rows"],
                 "hashsum": f"{r['x1']}:{r['x2']}",
             }
             for r in digest.collect()
         }
+
+    # -- write ------------------------------------------------------------------
+
+    def _write_parts(self, df: DataFrame, widths: dict[str, int], table: str) -> str:
+        """Write ``df`` — the rows of the partitions in ``widths``, keyed by
+        partition value → writer width (:meth:`_writer_width`) — in ONE
+        Spark write job under a fresh ``data/<cid>/`` dir of ``table``;
+        returns that dir, table-relative. The only writer of ``commit`` and
+        ``compact``, so the two never disagree on a partition's layout.
+
+        Immutable data files: every write lands under a fresh commit-id
+        directory, so files referenced by existing snapshots are never
+        touched — the write needs no overwrite mode at all."""
+        data_rel = os.path.join("data", uuid.uuid4().hex[:12])
+        # repartition by (partition value, bounded content-hash split):
+        # pure repartition(date) would funnel EVERY row of a date through
+        # ONE writer task — a serialization point at any scale (a 3-day
+        # corpus writes on 3 cores of a 1000-core cluster) — while a raw
+        # write would emit (tasks × partitions) small files. Each partition
+        # gets its own width: a global max-based width would shatter a small
+        # date written alongside a big one into max-width tiny files (the
+        # round-6 small-tier tax, reappearing WITHIN a mixed-size commit).
+        # The key hashes a stable atomic column so the layout is
+        # deterministic for a deterministic input.
+        atomic = [
+            f.name for f in df.schema.fields
+            if f.name != PART_COL
+            and f.dataType.typeName()
+            in ("long", "integer", "string", "double", "timestamp")
+        ]
+        pref = [c for c in ("skey", "sig", "bucket_ts", "block_ts") if c in atomic]
+        split_col = (pref or atomic or [None])[0]
+        if split_col is not None and max(widths.values()) > 1:
+            kmap = F.create_map(
+                *[x for p, k in sorted(widths.items()) for x in (F.lit(p), F.lit(k))]
+            )
+            split = F.coalesce(
+                F.pmod(
+                    F.xxhash64(F.col(split_col)),
+                    F.element_at(kmap, F.col(PART_COL).cast("string")),
+                ),
+                F.lit(0),
+            )
+        else:
+            split = F.lit(0)
+        # explicit numPartitions: AQE coalesces column-only repartitions
+        # back down (small-in-bytes tier outputs collapse to ~1 writer
+        # task); an explicit count pins the write tasks regardless of
+        # byte-size heuristics. Hash collisions between (date, split) groups
+        # can only MERGE writer tasks (fewer files), never fragment; padding
+        # the task count to the session parallelism keeps collision odds low
+        # while empty partitions write no files at all.
+        par = df.sparkSession.sparkContext.defaultParallelism
+        (
+            df.repartition(max(sum(widths.values()), par), F.col(PART_COL), split)
+            .write.mode("error")
+            .partitionBy(PART_COL)
+            .parquet(os.path.join(self.base_path, table, data_rel))
+        )
+        return data_rel
 
     # -- commit ------------------------------------------------------------------
 
@@ -323,7 +355,6 @@ class TierStore:
         self,
         df: DataFrame,
         table: str,
-        part_col: str = "date",
         stage_metrics: dict | None = None,
         publish: bool = True,
     ) -> CommitResult:
@@ -347,7 +378,7 @@ class TierStore:
         # released when the write ends, errors included
         with Held():
             df = persist(df)
-            fps = self.fingerprints(df, part_col)
+            fps = self.fingerprints(df)
             result = CommitResult(table_path=os.path.join(self.base_path, table))
 
             stale = []
@@ -360,71 +391,13 @@ class TierStore:
                     stale.append(part)
 
             if stale:
-                out = df.filter(F.col(part_col).isin([p for p in stale]))
-                # immutable data files: every commit writes under a fresh
-                # commit-id directory so files referenced by existing snapshots
-                # are never touched — the write needs no overwrite mode at all
-                cid = uuid.uuid4().hex[:12]
-                data_rel = os.path.join("data", cid)
-                # repartition by (partition value, bounded content-hash split):
-                # pure repartition(part_col) would funnel EVERY row of a date
-                # through ONE writer task — a serialization point at any scale
-                # (a 3-day corpus writes on 3 cores of a 1000-core cluster) —
-                # while a raw write would emit (tasks × partitions) small
-                # files. The sub-split width is derived from the EXACT row
-                # counts the fingerprint pass already computed: each stale
-                # partition gets ``_writer_width(rows)`` writer tasks, capped
-                # at the session's parallelism — so a
-                # 10B-row date still spreads over every writer core while a
-                # cascade tier's few-thousand-row date writes one file
-                # instead of parallelism-many tiny ones. The key hashes a
-                # stable atomic column so the layout is deterministic for a
-                # deterministic input.
+                # writer width from the EXACT row counts the fingerprint pass
+                # already computed, capped at the session parallelism
                 par = df.sparkSession.sparkContext.defaultParallelism
-                # split width PER stale partition, from its exact row count:
-                # a global max-based width would shatter a small date committed
-                # alongside a big one into max-width tiny files (the round-6
-                # small-tier tax, reappearing WITHIN a mixed-size commit).
-                k_by_part = {
-                    str(p): self._writer_width(int(fps[p]["rows"]), par)
-                    for p in stale
-                }
-                atomic = [
-                    f.name for f in out.schema.fields
-                    if f.name != part_col
-                    and f.dataType.typeName()
-                    in ("long", "integer", "string", "double", "timestamp")
-                ]
-                pref = [c for c in ("skey", "sig", "bucket_ts", "block_ts") if c in atomic]
-                split_col = (pref or atomic or [None])[0]
-                if split_col is not None and max(k_by_part.values()) > 1:
-                    kmap = F.create_map(
-                        *[x for p, k in sorted(k_by_part.items())
-                          for x in (F.lit(p), F.lit(k))]
-                    )
-                    split = F.coalesce(
-                        F.pmod(
-                            F.xxhash64(F.col(split_col)),
-                            F.element_at(kmap, F.col(part_col).cast("string")),
-                        ),
-                        F.lit(0),
-                    )
-                else:
-                    split = F.lit(0)
-                # explicit numPartitions: AQE coalesces column-only
-                # repartitions back down (small-in-bytes tier outputs
-                # collapse to ~1 writer task); an explicit count pins the
-                # write tasks regardless of byte-size heuristics. Hash
-                # collisions between (date, split) groups can only MERGE
-                # writer tasks (fewer files), never fragment; padding the
-                # task count to the session parallelism keeps collision odds
-                # low while empty partitions write no files at all.
-                total_k = max(sum(k_by_part.values()), par)
-                (
-                    out.repartition(total_k, F.col(part_col), split)
-                    .write.mode("error")
-                    .partitionBy(part_col)
-                    .parquet(os.path.join(result.table_path, data_rel))
+                data_rel = self._write_parts(
+                    df.filter(F.col(PART_COL).isin(stale)),
+                    {str(p): self._writer_width(int(fps[p]["rows"]), par) for p in stale},
+                    table,
                 )
 
                 for part in stale:
@@ -433,7 +406,7 @@ class TierStore:
                         "fingerprint": fps[part],
                         "schema_version": SCHEMA_VERSION,
                         "data_path": os.path.join(
-                            data_rel, f"{part_col}={part}"
+                            data_rel, f"{PART_COL}={part}"
                         ),
                         "written_at": time.time(),
                         "metrics": stage_metrics or {},
@@ -449,43 +422,33 @@ class TierStore:
             "elapsed_s": round(time.time() - t0, 3),
             **(stage_metrics or {}),
         }
-        snap_entry = {
-            "ts": time.time(),
-            "written": result.written,
-            "skipped": result.skipped,
-            "metrics": result.metrics,
+        result.pending = {
+            "table": table,
+            "manifests": staged_manifests,
+            "snapshot": {
+                "ts": time.time(),
+                "written": result.written,
+                "skipped": result.skipped,
+                "metrics": result.metrics,
+            },
         }
-        if not publish:
-            result.pending = {
-                "table": table,
-                "manifests": staged_manifests,
-                "snapshot": snap_entry,
-            }
-            return result
-        for part, entry in staged_manifests:
-            self._write_manifest(table, part, entry)
-        self._append_snapshot(table, snap_entry)
-        result.metrics["snapshot_id"] = self._publish_snapshot(table)
-        result.metrics["snapshot_converged"] = bool(
-            getattr(self, "last_publish_converged", True)
-        )
-        return result
+        return self.finalize_commit(result) if publish else result
 
     def finalize_commit(self, result: CommitResult) -> CommitResult:
-        """Second half of a ``publish=False`` commit: write the staged
-        manifests, append the snapshot-log entry and swap CURRENT. Until
-        this runs, nothing the first half wrote is visible to readers or
-        to a rerun's staleness scan."""
+        """Publish a commit: write its staged manifests, append the
+        snapshot-log entry and swap CURRENT. Until this runs, nothing the
+        data write produced is visible to readers or to a rerun's
+        staleness scan."""
         if result.pending is None:
-            return result  # already published (publish=True commit)
+            return result  # already published
         table = result.pending["table"]
         for part, entry in result.pending["manifests"]:
             self._write_manifest(table, part, entry)
         self._append_snapshot(table, result.pending["snapshot"])
-        result.metrics["snapshot_id"] = self._publish_snapshot(table)
-        result.metrics["snapshot_converged"] = bool(
-            getattr(self, "last_publish_converged", True)
-        )
+        (
+            result.metrics["snapshot_id"],
+            result.metrics["snapshot_converged"],
+        ) = self._publish_snapshot(table)
         result.pending = None
         return result
 
@@ -514,7 +477,7 @@ class TierStore:
                     self._manifest_path(table, p),
                     os.path.join(exp_dir, f"{p}.json"),
                 )
-        sid = self._publish_snapshot(table)
+        sid, _ = self._publish_snapshot(table)
         self._append_snapshot(
             table,
             {"action": "retention", "cutoff": cutoff_date,
@@ -528,8 +491,11 @@ class TierStore:
         it fails loudly (FileNotFoundError) instead of reading half-deleted
         data. Retained = the newest ``retain_snapshots`` snapshot ids (the
         CURRENT pointer is always among them) plus everything the live
-        partition manifests reference (an unpublished staged commit is
-        never reclaimed)."""
+        partition manifests reference. A ``publish=False`` commit's data is
+        referenced by neither until :meth:`finalize_commit`: a vacuum
+        between the halves reclaims it, and the finalize then raises
+        :class:`StoreCorruptionError` (repair per its hint) instead of
+        publishing a snapshot over missing data."""
         root = os.path.join(self.base_path, table)
         d = self._snapshots_dir(table)
         ids = sorted(
@@ -546,14 +512,14 @@ class TierStore:
             snap = self.read_snapshot(table, sid)
             if snap is not None:
                 referenced.update(snap["parts"].values())
-        # candidate data dirs: snapshot-era data/<cid>/date=* plus legacy
-        # root-level date=*
-        candidates = [
-            os.path.relpath(p, root)
-            for p in glob.glob(os.path.join(root, "data", "*", "date=*"))
-            + glob.glob(os.path.join(root, "date=*"))
-        ]
-        removed = sorted(rel for rel in candidates if rel not in referenced)
+        removed = sorted(
+            rel
+            for rel in (
+                os.path.relpath(p, root)
+                for p in glob.glob(os.path.join(root, "data", "*", f"{PART_COL}=*"))
+            )
+            if rel not in referenced
+        )
         for rel in removed:
             shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
         for cid_dir in glob.glob(os.path.join(root, "data", "*")):
@@ -567,14 +533,14 @@ class TierStore:
                 pass
         return {"removed_dirs": removed, "dropped_snapshots": dropped}
 
-    def compact(self, spark, table: str, slack_files: int = 0) -> dict:
+    def compact(self, spark, table: str) -> dict:
         """Small-file compaction — the ``rewrite_data_files`` maintenance
         action of an Iceberg table, expressed on the manifest store: every
-        live partition whose parquet file count exceeds its row-derived
-        writer width (``_writer_width`` — the rule ``commit`` writes with)
-        by more than ``slack_files`` is rewritten into
-        a fresh immutable ``data/<cid>/`` directory at the correct width,
-        and a new snapshot is published.
+        live partition with more parquet files than its row-derived writer
+        width (``_writer_width``) is rewritten by the commit writer
+        (``_write_parts``, one Spark job for all of them) into a fresh
+        immutable ``data/<cid>/`` directory, and a new snapshot is
+        published.
 
         Data is bit-unchanged: the partition manifests keep their input
         FINGERPRINTS (compaction rewrites layout, not rows), so the next
@@ -586,42 +552,26 @@ class TierStore:
         or a retuned ``target_rows_per_file``."""
         configure_session(spark)
         root = os.path.join(self.base_path, table)
-        parts = self._scan_manifest_parts(table)
         par = spark.sparkContext.defaultParallelism
-        frag: dict[str, tuple[str, int]] = {}  # part -> (rel dir, want width)
-        for part, rel in sorted(parts.items()):
-            m = self.read_manifest(table, part) or {}
-            rows = int((m.get("fingerprint") or {}).get("rows", 0))
-            want = self._writer_width(rows, par)
-            have = len(glob.glob(os.path.join(root, rel, "*.parquet")))
-            if have > want + int(slack_files):
-                frag[part] = (rel, want)
+        frag: dict[str, tuple[dict, str, int]] = {}  # part -> (manifest, dir, width)
+        for part, rel in sorted(self._scan_manifest_parts(table).items()):
+            m = self.read_manifest(table, part)
+            want = self._writer_width(int(m["fingerprint"]["rows"]), par)
+            if len(glob.glob(os.path.join(root, rel, "*.parquet"))) > want:
+                frag[part] = (m, rel, want)
         if not frag:
             return {"rewritten": [], "snapshot": self.current_snapshot_id(table)}
 
-        cid = uuid.uuid4().hex[:12]
-        data_rel = os.path.join("data", cid)
-        for part, (rel, want) in frag.items():
-            df = spark.read.parquet(os.path.join(root, rel))
-            split_col = next(
-                (c for c in ("skey", "sig", "bucket_ts", "block_ts") if c in df.columns),
-                df.columns[0] if df.columns else None,
-            )
-            split = (
-                F.pmod(F.xxhash64(F.col(split_col)), F.lit(want))
-                if split_col is not None and want > 1
-                else F.lit(0)
-            )
-            (
-                df.repartition(want, split)
-                .write.mode("error")
-                .parquet(os.path.join(root, data_rel, f"date={part}"))
-            )
-            m = self.read_manifest(table, part) or {"partition": part}
-            m["data_path"] = os.path.join(data_rel, f"date={part}")
+        data_rel = self._write_parts(
+            self._read_parts(spark, table, [rel for _, rel, _ in frag.values()]),
+            {part: want for part, (_, _, want) in frag.items()},
+            table,
+        )
+        for part, (m, _, _) in frag.items():
+            m["data_path"] = os.path.join(data_rel, f"{PART_COL}={part}")
             m["compacted_at"] = time.time()
             self._write_manifest(table, part, m)
-        sid = self._publish_snapshot(table)
+        sid, _ = self._publish_snapshot(table)
         self._append_snapshot(
             table,
             {"action": "compact", "rewritten": sorted(frag),
@@ -629,36 +579,37 @@ class TierStore:
         )
         return {"rewritten": sorted(frag), "snapshot": sid}
 
+    def _read_parts(self, spark, table: str, rels) -> DataFrame:
+        """One frame over table-relative partition dirs; each ``data/<cid>``
+        is the discovery base of its dirs, so the partition column reads
+        back."""
+        root = os.path.join(self.base_path, table)
+        by_cid: dict[str, list[str]] = {}
+        for rel in rels:
+            by_cid.setdefault(os.path.dirname(rel), []).append(
+                os.path.join(root, rel)
+            )
+        return functools.reduce(DataFrame.unionByName, [
+            spark.read.option("basePath", os.path.join(root, cid_dir))
+            .parquet(*sorted(paths))
+            for cid_dir, paths in sorted(by_cid.items())
+        ])
+
     def read(self, spark, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Read the table at CURRENT (default) or at a retained snapshot id
         (time travel). Resolution is one pointer read + one manifest load —
         a reader racing a writer sees the previous complete snapshot until
-        the writer's atomic CURRENT swap."""
+        the writer's atomic CURRENT swap. Raises FileNotFoundError when
+        there is no such snapshot (nothing published, or not retained) or
+        it has no live partition (all expired): never unpublished data."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id(table)
-        if sid is None:
-            # pre-snapshot table (or bare parquet dir): raw read
-            return spark.read.parquet(os.path.join(self.base_path, table))
-        snap = self.read_snapshot(table, sid)
-        if snap is None:
+        snap = None if sid is None else self.read_snapshot(table, sid)
+        if not (snap and snap["parts"]):
             raise FileNotFoundError(
-                f"snapshot v{sid} of table {table!r} does not exist"
+                f"table {table!r} has no readable snapshot (id {sid}): none "
+                "published, not retained, or every partition expired"
             )
-        root = os.path.join(self.base_path, table)
-        by_cid: dict[str, list[str]] = {}
-        for rel in snap["parts"].values():
-            by_cid.setdefault(os.path.dirname(rel), []).append(
-                os.path.join(root, rel)
-            )
-        dfs = [
-            spark.read.option("basePath", os.path.join(root, cid_dir))
-            .parquet(*sorted(paths))
-            for cid_dir, paths in sorted(by_cid.items())
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
+        return self._read_parts(spark, table, snap["parts"].values())
 
 def with_date(df: DataFrame, ts_col: str = "bucket_ts") -> DataFrame:
     return df.withColumn(

@@ -18,7 +18,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.ingest import samples_from_table
-from ..engine.planner import sig_expr
 from ..engine.runner import configure_session
 from ..materialize import Held, persist
 from . import gorilla
@@ -46,7 +45,6 @@ def run_pipeline(
     pages: DataFrame,
     out_path: str,
     gorilla_block_ms: int = 3_600_000,
-    check_extraction: bool = True,
     pack: bool = True,
     cache_pages: bool = False,
 ) -> dict:
@@ -77,18 +75,14 @@ def run_pipeline(
         # page table. The narrow projection is persisted, the Arrow UDF is
         # paid exactly once, and the post-write `sum(_bad)` below is a cache
         # hit.
-        enriched = persist(_page_enriched(pages, verify=check_extraction))
-        samples_wide = samples_from_table(enriched, **_PAGE_TABLE_ARGS)
+        enriched = persist(_page_enriched(pages, verify=True))
         # `_sig` is the statically-concatenated signature samples_from_table
         # precomputes (same string sig_expr derives from the map, minus the
-        # per-row map build/sort) — fall back for sample sources without it
-        skey_col = (
-            series_key(F.col("_sig"))
-            if "_sig" in samples_wide.columns
-            else series_key(sig_expr(F.col("labels")))
-        )
+        # per-row map build/sort)
         samples = persist(
-            samples_wide.select(skey_col.alias("skey"), "ts", "seq", "value")
+            samples_from_table(enriched, **_PAGE_TABLE_ARGS).select(
+                series_key(F.col("_sig")).alias("skey"), "ts", "seq", "value"
+            )
         )
         # label-space fast path: one narrow aggregate over page rows instead
         # of a signature-distinct over the 3x-wider sample union (round-5
@@ -111,21 +105,18 @@ def run_pipeline(
             # with zero published state, so readers can never serve tiers
             # derived from bad extractions.
             r1 = store.commit(
-                with_date(attach_series(p1m, dim)), "tier_1m",
-                publish=not check_extraction,
+                with_date(attach_series(p1m, dim)), "tier_1m", publish=False
             )
-
-            if check_extraction:
-                t0v = time.time()
-                mismatches = enriched.agg(F.sum("_bad")).first()[0] or 0
-                if mismatches:
-                    raise RuntimeError(
-                        f"extraction invariant violated for {mismatches} pages"
-                    )
-                store.finalize_commit(r1)
-                metrics["stages"]["verify_extraction"] = {
-                    "elapsed_s": round(time.time() - t0v, 3), "fused": True
-                }
+            t0v = time.time()
+            mismatches = enriched.agg(F.sum("_bad")).first()[0] or 0
+            if mismatches:
+                raise RuntimeError(
+                    f"extraction invariant violated for {mismatches} pages"
+                )
+            store.finalize_commit(r1)
+            metrics["stages"]["verify_extraction"] = {
+                "elapsed_s": round(time.time() - t0v, 3), "fused": True
+            }
             metrics["stages"]["tier_1m"] = r1.metrics
 
             p1h = persist(tier_from_tier(p1m, "1h"))

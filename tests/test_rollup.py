@@ -159,69 +159,48 @@ def test_lineage_resume(spark, tmp_path, samples):
     assert set(r3.skipped) == set(r1.written) - {one_date}
 
 
-def test_legacy_manifest_resolution_and_repair(spark, tmp_path, samples):
-    """ADVICE regression: the publish-path manifest scan must be PURE (no
-    rewrites inside the retry loop) yet still resolve legacy manifests
-    (no data_path) to their live table-root dirs; an orphaned legacy
-    manifest raises a documented StoreCorruptionError with a repair hint
-    instead of a bare FileNotFoundError, and migrate_legacy_manifests is
-    the explicit upgrade that backfills durable data_paths / reports
-    orphans without bricking the store."""
+def test_orphaned_manifest_refuses_publish(spark, tmp_path, samples):
+    """A live manifest must resolve to live data: one whose data dir is
+    gone, that names no data_path, or that does not decode raises
+    StoreCorruptionError with a repair hint instead of publishing a
+    snapshot that drops (or cannot read) a live partition. Deleting the
+    orphan manifest as the hint says unbricks publishes."""
     import json as _json
+    import shutil
 
     from pq_spark.rollup.lineage import StoreCorruptionError
 
     store = TierStore(str(tmp_path))
     tier = with_date(rollup_tier(samples, "1h"))
-    r1 = store.commit(tier, "tier_leg")
+    r1 = store.commit(tier, "tier_orph")
     assert len(r1.written) >= 2
-
-    # forge a legacy store: strip data_path, move data to the table root
-    root = tmp_path / "tier_leg"
+    root = tmp_path / "tier_orph"
     lineage = root / "_lineage"
-    for p in lineage.glob("*.json"):
-        m = _json.loads(p.read_text())
-        src = root / m.pop("data_path")
-        dst = root / f"date={m['partition']}"
-        if not dst.exists():
-            os.rename(src, dst)
-        p.write_text(_json.dumps(m))
-    import shutil
 
-    shutil.rmtree(tmp_path / "tier_leg" / "_snapshots")
-
-    # pure scan: legacy parts resolve in-memory, manifest bytes untouched
-    before = {p.name: p.read_text() for p in lineage.glob("*.json")}
-    parts = store._scan_manifest_parts("tier_leg")
-    assert set(parts.values()) == {f"date={d}" for d in r1.written}
-    assert {p.name: p.read_text() for p in lineage.glob("*.json")} == before
-
-    # a publish over the un-migrated store still carries every partition
-    sid = store._publish_snapshot("tier_leg")
-    assert store.read(spark, "tier_leg", snapshot_id=sid).count() > 0
-
-    # explicit migration backfills durable data_paths
-    rep = store.migrate_legacy_manifests("tier_leg")
-    assert sorted(rep["migrated"]) == sorted(r1.written) and not rep["orphaned"]
-    assert all(
-        _json.loads(p.read_text())["data_path"] == f"date={_json.loads(p.read_text())['partition']}"
-        for p in lineage.glob("*.json")
-    )
-
-    # orphan a partition: scan raises the documented error with the hint...
+    # data dir gone: the publish refuses, naming the repair
     victim = r1.written[0]
     m = _json.loads((lineage / f"{victim}.json").read_text())
-    del m["data_path"]
-    (lineage / f"{victim}.json").write_text(_json.dumps(m))
-    shutil.rmtree(root / f"date={victim}")
+    shutil.rmtree(root / m["data_path"])
     with pytest.raises(StoreCorruptionError, match="Repair:"):
-        store._scan_manifest_parts("tier_leg")
-    # ...while the migration REPORTS it instead of bricking
-    rep2 = store.migrate_legacy_manifests("tier_leg")
-    assert rep2["orphaned"] == [victim]
-    # repair per the hint (delete the orphan manifest) unbricks publishes
+        store._publish_snapshot("tier_orph")
+    # repair per the hint: delete the orphan manifest, publish succeeds
     os.remove(lineage / f"{victim}.json")
-    assert store._publish_snapshot("tier_leg") > 0
+    sid, converged = store._publish_snapshot("tier_orph")
+    assert converged and sid > r1.metrics["snapshot_id"]
+    rest = tier.filter(F.col("date") != victim)
+    assert store.read(spark, "tier_orph").count() == rest.count()
+
+    # a manifest with data_path stripped, and a truncated one, also raise
+    other = lineage / f"{r1.written[1]}.json"
+    good = other.read_text()
+    m = _json.loads(good)
+    del m["data_path"]
+    other.write_text(_json.dumps(m))
+    with pytest.raises(StoreCorruptionError, match="Repair:"):
+        store._publish_snapshot("tier_orph")
+    other.write_text(good[: len(good) // 2])
+    with pytest.raises(StoreCorruptionError, match="Repair:"):
+        store._publish_snapshot("tier_orph")
 
 
 def test_concurrent_commits_one_table(spark, tmp_path, samples):
@@ -229,9 +208,9 @@ def test_concurrent_commits_one_table(spark, tmp_path, samples):
     SIMULTANEOUS commits of disjoint partition sets to one table must not
     corrupt the snapshot log, the manifests, or the data. Concurrency
     model under test: manifests are atomic-rename per partition, the
-    snapshot log is a single O_APPEND write per commit, and Spark's
-    dynamic-overwrite staging dirs are per-job — so disjoint-partition
-    writers compose. (Same-partition writers are last-wins, as with any
+    snapshot log is a single O_APPEND write per commit, and every commit
+    writes its own ``data/<cid>/`` dir — so disjoint-partition writers
+    compose. (Same-partition writers are last-wins, as with any
     non-catalog table format; the Iceberg seam exists for that.)"""
     import json
     from concurrent.futures import ThreadPoolExecutor
@@ -282,7 +261,7 @@ def test_reader_isolation_mid_commit(spark, tmp_path, samples):
     real_publish = TierStore._publish_snapshot
     # freeze the commit right before the pointer swap: data + manifests
     # land, CURRENT does not move — exactly the mid-commit window
-    TierStore._publish_snapshot = lambda self, table, attempts=5: -1
+    TierStore._publish_snapshot = lambda self, table, attempts=5: (-1, False)
     try:
         store.commit(bumped, "t_iso")
         assert store.current_snapshot_id("t_iso") == v1
@@ -295,7 +274,7 @@ def test_reader_isolation_mid_commit(spark, tmp_path, samples):
         TierStore._publish_snapshot = real_publish
 
     # completing the publish exposes the new snapshot to new readers
-    v2 = store._publish_snapshot("t_iso")
+    v2, _ = store._publish_snapshot("t_iso")
     assert v2 > v1
     assert store.read(spark, "t_iso").agg(F.sum("cnt")).first()[0] == s1 + n1
     tier.unpersist()
@@ -366,6 +345,10 @@ def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
     assert store.current_snapshot_id("tier_1m") is None
     assert not _glob.glob(os.path.join(out, "tier_1m", "_lineage", "*.json"))
     assert not _glob.glob(os.path.join(out, "tier_1m", "_snapshots", "*"))
+    # and a read serves nothing, not the staged data files on disk
+    assert _glob.glob(os.path.join(out, "tier_1m", "data", "*", "date=*"))
+    with pytest.raises(FileNotFoundError):
+        store.read(spark, "tier_1m")
     # and a rerun after fixing the data starts from clean lineage state
     m = run_pipeline(spark, pages, out, pack=False)
     assert m["stages"]["tier_1m"]["partitions_written"] > 0
@@ -943,3 +926,7 @@ def test_retention_expiry_time_travel_and_vacuum(spark, samples, tmp_path):
     # ...and travel past the horizon fails loudly, not half-reads
     with _pytest.raises(FileNotFoundError):
         store.read(spark, "tier_1m", snapshot_id=pre_sid)
+    # expiring every partition leaves a snapshot with nothing to read
+    assert store.apply_retention("tier_1m", "2099-01-01")["expired"] == dates[1:]
+    with _pytest.raises(FileNotFoundError):
+        store.read(spark, "tier_1m")
