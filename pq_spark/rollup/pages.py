@@ -122,11 +122,8 @@ def _page_enriched(pages: DataFrame, verify: bool = False) -> DataFrame:
     """Narrow per-page projection feeding samples and the series dim.
 
     ``verify=True`` additionally computes ``_bad`` — the byte-identity
-    extraction-invariant flag — in the SAME pass: the scan already decodes
-    the heavy ``html`` column for ``content_len``, so the invariant rides
-    along instead of forcing a second full read of the page table
-    (pipeline.run_pipeline persists this projection, pays the Arrow UDF
-    once, and checks ``sum(_bad)`` as a cache hit before publishing)."""
+    extraction-invariant flag (pipeline.run_pipeline sums it over the
+    pages that feed a stale partition, before any commit)."""
     cols = [
         F.unix_millis("warc_ts").alias("_ts"),
         F.regexp_extract("url", r"^https?://([^/]+)/", 1).alias("domain"),

@@ -304,25 +304,92 @@ def test_time_travel_read(spark, tmp_path, samples):
     tier.unpersist()
 
 
-def test_full_pipeline(spark, tmp_path, pages):
+_COMMIT_STAGES = ("tier_1m", "tier_1h", "tier_1d", "gorilla")
+
+
+@pytest.fixture
+def python_rows(spark, monkeypatch):
+    """Spark accumulators of the rows the extraction UDF and the points the
+    Gorilla kernel receive in the Python workers."""
+    from pyspark.sql.functions import pandas_udf
+
+    from pq_spark.rollup import pages as pages_mod
+
+    udf_rows = spark.sparkContext.accumulator(0)
+    kernel_points = spark.sparkContext.accumulator(0)
+    make_udf, pack = pages_mod.extract_text_udf, gorilla.pack_block
+
+    def counting_udf():
+        inner = make_udf().func
+
+        def counted(s):
+            udf_rows.add(len(s))
+            return inner(s)
+
+        return pandas_udf(counted, "string")
+
+    def counting_pack(ts, vals):
+        kernel_points.add(len(ts))
+        return pack(ts, vals)
+
+    monkeypatch.setattr(pages_mod, "extract_text_udf", counting_udf)
+    monkeypatch.setattr(gorilla, "pack_block", counting_pack)
+    return udf_rows, kernel_points
+
+
+@pytest.fixture
+def output_fingerprinted(monkeypatch):
+    """Partitions each OUTPUT fingerprint pass covered (the input digests
+    fingerprint the fact, the only frame with a ``seq`` column)."""
+    seen: list[set] = []
+    real = TierStore.fingerprints
+
+    def spy(df):
+        fps = real(df)
+        if "seq" not in df.columns:
+            seen.append(set(fps))
+        return fps
+
+    monkeypatch.setattr(TierStore, "fingerprints", staticmethod(spy))
+    return seen
+
+
+def _written(m):
+    return {st: m["stages"][st]["partitions_written"] for st in _COMMIT_STAGES}
+
+
+def test_full_pipeline(spark, tmp_path, pages, python_rows, output_fingerprinted):
+    udf_rows, kernel_points = python_rows
     metrics = run_pipeline(spark, pages, str(tmp_path / "tiers"))
     assert metrics["rolled_up_points"] > 0
     assert metrics["points_per_sec"] > 0
-    # the extraction check is FUSED into the enriched-projection scan, not a
-    # second full read of the page table (round-6 verdict item 4)
-    assert metrics["stages"]["verify_extraction"]["fused"] is True
-    # resume: re-run skips everything
+    # the extraction check covered every page, once, before any commit
+    assert metrics["stages"]["verify_extraction"]["pages"] == pages.count()
+    assert udf_rows.value == pages.count()
+    assert kernel_points.value == 3 * pages.count()
+    first = _written(metrics)
+    assert all(first.values())
+
+    # resume on unchanged pages: the input digests skip every partition
+    # before the cascade — no extraction row, no Gorilla point, no output
+    # fingerprint, no write — and report the same rollup
+    output_fingerprinted.clear()
     m2 = run_pipeline(spark, pages, str(tmp_path / "tiers"))
-    assert m2["stages"]["tier_1m"]["partitions_written"] == 0
-    assert m2["stages"]["tier_1d"]["partitions_written"] == 0
+    assert _written(m2) == dict.fromkeys(_COMMIT_STAGES, 0)
+    assert {st: m2["stages"][st]["partitions_skipped"] for st in _COMMIT_STAGES} == first
+    assert m2["rolled_up_points"] == metrics["rolled_up_points"]
+    assert m2["stages"]["verify_extraction"]["pages"] == 0
+    assert udf_rows.value == pages.count()
+    assert kernel_points.value == 3 * pages.count()
+    assert output_fingerprinted == []
 
 
 def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
-    """ADVICE regression: tier_1m's heavy data write overlaps the extraction
-    check, but manifests + snapshot + CURRENT are staged (publish=False) and
-    land only after the invariant holds — a violation must abort with ZERO
-    published state, so a reader can never serve tiers derived from bad
-    extractions (previously the snapshot was already visible on failure)."""
+    """ADVICE regression: the extraction check runs over the pages feeding
+    the stale partitions BEFORE any commit — a violation must abort with
+    nothing written (no data dir, manifest, snapshot or CURRENT), so a
+    reader can never serve tiers derived from bad extractions (previously
+    the snapshot was already visible on failure)."""
     import glob as _glob
 
     bad = pages.withColumn(
@@ -345,13 +412,151 @@ def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
     assert store.current_snapshot_id("tier_1m") is None
     assert not _glob.glob(os.path.join(out, "tier_1m", "_lineage", "*.json"))
     assert not _glob.glob(os.path.join(out, "tier_1m", "_snapshots", "*"))
-    # and a read serves nothing, not the staged data files on disk
-    assert _glob.glob(os.path.join(out, "tier_1m", "data", "*", "date=*"))
+    # and no data was written at all, so a read has nothing to serve
+    assert not _glob.glob(os.path.join(out, "*", "data", "*", "date=*"))
     with pytest.raises(FileNotFoundError):
         store.read(spark, "tier_1m")
     # and a rerun after fixing the data starts from clean lineage state
     m = run_pipeline(spark, pages, out, pack=False)
     assert m["stages"]["tier_1m"]["partitions_written"] > 0
+
+
+@pytest.fixture(scope="module")
+def published(spark, tmp_path_factory):
+    """A store every table of which ``run_pipeline`` published from a small
+    cached page table (its row positions, hence ``seq``, stay put)."""
+    small = synth_pages(spark, 600, seed=7).cache()
+    out = str(tmp_path_factory.mktemp("published") / "tiers")
+    first = run_pipeline(spark, small, out)
+    yield small, out, first
+    small.unpersist()
+
+
+def _copy_store(published, tmp_path) -> str:
+    import shutil
+
+    out = str(tmp_path / "tiers")
+    shutil.copytree(published[1], out)
+    return out
+
+
+def _last_written(out, table):
+    import json
+
+    with open(os.path.join(out, table, "_snapshots", "log.jsonl")) as f:
+        return json.loads(f.read().splitlines()[-1])["written"]
+
+
+def test_resume_recomputes_only_the_changed_date(
+    spark, tmp_path, published, output_fingerprinted
+):
+    """Relabeling ``lang`` on one date's pages keeps every row in place (so
+    ``seq`` does not move) but changes that date's input digest: only that
+    date is rewritten, in all four tables, and no other date is ever
+    fingerprinted on its output."""
+    small = published[0]
+    out = _copy_store(published, tmp_path)
+    day = F.date_format("warc_ts", "yyyy-MM-dd")
+    dates = sorted(r[0] for r in small.select(day).distinct().collect())
+    assert len(dates) >= 2
+    target = dates[1]
+    relabeled = small.withColumn(
+        "lang", F.when(day == target, F.concat("lang", F.lit("-x"))).otherwise(F.col("lang"))
+    )
+    output_fingerprinted.clear()
+    m = run_pipeline(spark, relabeled, out)
+    assert _written(m) == dict.fromkeys(_COMMIT_STAGES, 1)
+    for table in ("tier_1m", "tier_1h", "tier_1d", "gorilla_blocks"):
+        assert _last_written(out, table) == [target]
+    assert output_fingerprinted and all(s == {target} for s in output_fingerprinted)
+    assert m["stages"]["verify_extraction"]["pages"] == small.filter(day == target).count()
+
+
+def test_block_size_change_rewrites_only_gorilla(spark, tmp_path, published, python_rows):
+    """The Gorilla input digest records the block size: a new one rewrites
+    every Gorilla partition and no tier. A block that does not divide a
+    day keys its own digest by block date, which is stable on a rerun."""
+    small, _, first = published
+    udf_rows, kernel_points = python_rows
+    out = _copy_store(published, tmp_path)
+    block_ms = 7 * 3_600_000
+    m = run_pipeline(spark, small, out, gorilla_block_ms=block_ms)
+    assert _written(m) == {"tier_1m": 0, "tier_1h": 0, "tier_1d": 0,
+                           "gorilla": m["stages"]["gorilla"]["partitions_total"]}
+    assert m["stages"]["gorilla"]["partitions_written"] > 0
+    assert m["rolled_up_points"] == first["rolled_up_points"]
+    assert kernel_points.value == 3 * small.count()
+
+    m2 = run_pipeline(spark, small, out, gorilla_block_ms=block_ms)
+    assert _written(m2) == dict.fromkeys(_COMMIT_STAGES, 0)
+    assert kernel_points.value == 3 * small.count()
+    assert udf_rows.value == small.count()
+
+
+def test_store_without_input_digests_upgrades_in_place(
+    spark, tmp_path, published, python_rows, output_fingerprinted
+):
+    """Manifests that record no input digest (as stores written before
+    input digests do) are matched on their output fingerprint: nothing is
+    written, and the manifests gain their input digests, so the run after
+    that evaluates no cascade."""
+    import glob as _glob
+    import json
+
+    small, _, first = published
+    udf_rows, kernel_points = python_rows
+    out = _copy_store(published, tmp_path)
+    manifests = _glob.glob(os.path.join(out, "*", "_lineage", "*.json"))
+    assert len(manifests) == sum(_written(first).values())
+    for path in manifests:
+        with open(path) as f:
+            m = json.load(f)
+        assert m.pop("input_fingerprint")
+        with open(path, "w") as f:
+            json.dump(m, f)
+    m = run_pipeline(spark, small, out)
+    assert _written(m) == dict.fromkeys(_COMMIT_STAGES, 0)
+    assert m["rolled_up_points"] == first["rolled_up_points"]
+    for path in manifests:
+        with open(path) as f:
+            assert json.load(f)["input_fingerprint"]
+
+    rows, points = udf_rows.value, kernel_points.value
+    output_fingerprinted.clear()
+    m2 = run_pipeline(spark, small, out)
+    assert _written(m2) == dict.fromkeys(_COMMIT_STAGES, 0)
+    assert (udf_rows.value, kernel_points.value) == (rows, points)
+    assert output_fingerprinted == []
+
+
+def test_truncated_manifest_refuses_commit(spark, tmp_path, samples):
+    """``commit`` decodes manifests through the same corruption check as
+    the publish scan: a truncated one raises StoreCorruptionError with the
+    repair hint, not a bare JSON decode error."""
+    from pq_spark.rollup.lineage import StoreCorruptionError
+
+    store = TierStore(str(tmp_path))
+    tier = with_date(rollup_tier(samples, "1d"))
+    r1 = store.commit(tier, "t_trunc")
+    path = tmp_path / "t_trunc" / "_lineage" / f"{r1.written[0]}.json"
+    path.write_text(path.read_text()[:40])
+    with pytest.raises(StoreCorruptionError, match="Repair:"):
+        store.commit(tier, "t_trunc")
+
+
+def test_manifest_records_commit_metrics(spark, tmp_path, samples):
+    """Each manifest a commit writes carries that commit's measured
+    fingerprint and write time and its partition's rows and files."""
+    import json
+
+    store = TierStore(str(tmp_path))
+    r = store.commit(with_date(rollup_tier(samples, "1d")), "t_metrics")
+    for part in r.written:
+        m = json.loads((tmp_path / "t_metrics" / "_lineage" / f"{part}.json").read_text())
+        got = m["metrics"]
+        assert {"fingerprint_s", "write_s", "rows", "files"} <= set(got)
+        assert got["rows"] > 0 and got["files"] > 0
+        assert got["rows"] == m["fingerprint"]["rows"]
 
 
 def test_lineage_fingerprint_on_ansi_session(spark, tmp_path, samples):
