@@ -20,7 +20,7 @@ from ..query.ast import Expr, VectorSelector
 from ..timeparse import parse_duration, try_parse_time
 from . import formatter as fmt
 from . import ingest
-from .frames import RangeFrame, ScalarResult, ScalarSeries, VectorFrame
+from .frames import ScalarResult, ScalarSeries, VectorFrame
 from .planner import PlanContext, Planner
 
 ENGINE_CONFS = {
@@ -157,19 +157,6 @@ class ProgramResult:
             raise PqError(f"unsupported formatter for {self.kind} output")
         finally:
             self.held.release()  # a second call recomputes from the source
-
-    def dataframe(self) -> DataFrame:
-        """Relational access to the result (engine-level API)."""
-        if self.kind == "entries":
-            return self.entries
-        if self.kind == "records":
-            return self.records
-        qr = self.query_result
-        if isinstance(qr, VectorFrame):
-            return qr.cells
-        if isinstance(qr, RangeFrame):
-            return qr.points
-        raise PqError("scalar result has no DataFrame form")
 
 
 class PqEngine:

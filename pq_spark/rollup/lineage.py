@@ -467,7 +467,9 @@ class TierStore:
         self, table: str, manifests: list[tuple[str, dict]], result: CommitResult
     ) -> CommitResult:
         """Publish a commit whose data write is complete: write its
-        manifests, append the snapshot-log entry and swap CURRENT."""
+        manifests, append the snapshot-log entry and swap CURRENT. Adds
+        the time these take as ``publish_s`` to ``result.metrics``."""
+        t0 = time.time()
         for part, entry in manifests:
             self._write_manifest(table, part, entry)
         self._append_snapshot(table, {
@@ -480,6 +482,7 @@ class TierStore:
             result.metrics["snapshot_id"],
             result.metrics["snapshot_converged"],
         ) = self._publish_snapshot(table)
+        result.metrics["publish_s"] = round(time.time() - t0, 3)
         return result
 
     # -- retention ------------------------------------------------------------

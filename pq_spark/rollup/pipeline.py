@@ -14,7 +14,9 @@ extraction UDF and the Gorilla pack kernel.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.ingest import samples_from_table
@@ -133,29 +135,46 @@ def run_pipeline(
 
         # tier cascade with resume: the cascade itself stays NARROW
         # (skey-keyed partials, persisted); labels attach only at each commit
-        # edge. A table none of whose dates is stale runs no Spark job. The
-        # partials are released before Gorilla packing.
+        # edge. A table none of whose dates is stale runs no Spark job.
+        #
+        # The four commits run at once, one driver thread each (Spark runs
+        # jobs from separate threads concurrently), and only after the
+        # extraction check above. Each table publishes on its own: a failed
+        # commit leaves the others' snapshots, and a rerun recomputes only
+        # its dates. So per-stage `elapsed_s` values overlap;
+        # `commits_elapsed_s` is the wall time of all four. Which cached
+        # input of a label join AQE sizes first can flip its broadcast side,
+        # so the row order inside a data file may vary between runs; the
+        # rows of each file and every digest do not.
         t0 = time.time()
-        with Held():
+        with Held():  # outlives the pool: the partials serve every commit
             p1m = persist(tier_partials(fact.filter(date_of(ts).isin(tier_stale)), "1m"))
             p1h = persist(tier_from_tier(p1m, "1h"))
             p1d = tier_from_tier(p1h, "1d")
-            for table, partials in zip(_TIERS, (p1m, p1h, p1d)):
-                r = store.commit(
-                    with_date(attach_series(partials, dim)), table, input_fps=tier_fps
+            commits = [  # (stage, table, frame, input digests)
+                (table, table, with_date(attach_series(partials, dim)), tier_fps)
+                for table, partials in zip(_TIERS, (p1m, p1h, p1d))
+            ]
+            if pack:
+                packed = gorilla.pack_blocks(
+                    fact.filter(block_date(ts).isin(gor_stale)),
+                    block_ms=gorilla_block_ms, dim=dim,
                 )
-                metrics["stages"][table] = r.metrics
-            metrics["stages"]["cascade_elapsed_s"] = time.time() - t0
-
-        if pack:
-            packed = gorilla.pack_blocks(
-                fact.filter(block_date(ts).isin(gor_stale)),
-                block_ms=gorilla_block_ms, dim=dim,
-            )
-            rp = store.commit(
-                with_date(packed, ts_col="block_ts"), "gorilla_blocks", input_fps=gor_fps
-            )
-            metrics["stages"]["gorilla"] = rp.metrics
+                commits.append(("gorilla", "gorilla_blocks",
+                                with_date(packed, ts_col="block_ts"), gor_fps))
+            # each wrap copies the caller's job group and local properties
+            # into its pool thread; the `Held` owner is not inherited, so
+            # `commit` opens its own and nothing else may persist there
+            with ThreadPoolExecutor(len(commits)) as pool:
+                futures = [
+                    (stage, pool.submit(inheritable_thread_target(spark)(store.commit),
+                                        df, table, input_fps=fps))
+                    for stage, table, df, fps in commits
+                ]
+            # every commit has ended: raise the first failure in table order
+            for stage, future in futures:
+                metrics["stages"][stage] = future.result().metrics
+            metrics["stages"]["commits_elapsed_s"] = time.time() - t0
 
     total_points = (
         metrics["stages"]["tier_1m"]["rows_total"]

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pq_spark.materialize import Held, persist
 from pq_spark.rollup import (
     gapfill,
     page_samples,
@@ -113,29 +114,30 @@ def test_gapfill_staleness(spark):
 
 
 def test_gorilla_spark_roundtrip(spark, samples):
-    packed = gorilla.pack_blocks(samples, block_ms=3_600_000)
-    unpacked = gorilla.unpack_blocks(packed)
-    orig = samples.groupBy().agg(
-        F.count("*").alias("n"), F.sum("value").alias("s"),
-        F.sum(F.col("ts")).alias("st"),
-    ).collect()[0]
-    back = unpacked.groupBy().agg(
-        F.count("*").alias("n"), F.sum("value").alias("s"),
-        F.sum(F.col("ts")).alias("st"),
-    ).collect()[0]
-    assert orig["n"] == back["n"]
-    assert orig["st"] == back["st"]
-    assert abs(orig["s"] - back["s"]) <= 1e-9 * max(1.0, abs(orig["s"]))
-    # per-point check on one series
-    sig = packed.select("sig").first()["sig"]
-    a = sorted(
-        (r["ts"], r["value"])
-        for r in samples.withColumn("_sig", F.expr(
-            "array_join(transform(array_sort(map_entries(labels)), e -> concat(e.key, 'ÿ', e.value)), '')"
-        )).filter(F.col("_sig") == sig).select("ts", "value").collect()
-    )
-    b = sorted((r["ts"], r["value"]) for r in unpacked.filter(F.col("sig") == sig).select("ts", "value").collect())
-    assert a == b
+    with Held():
+        packed = persist(gorilla.pack_blocks(samples, block_ms=3_600_000))
+        unpacked = persist(gorilla.unpack_blocks(packed))
+        orig = samples.groupBy().agg(
+            F.count("*").alias("n"), F.sum("value").alias("s"),
+            F.sum(F.col("ts")).alias("st"),
+        ).collect()[0]
+        back = unpacked.groupBy().agg(
+            F.count("*").alias("n"), F.sum("value").alias("s"),
+            F.sum(F.col("ts")).alias("st"),
+        ).collect()[0]
+        assert orig["n"] == back["n"]
+        assert orig["st"] == back["st"]
+        assert abs(orig["s"] - back["s"]) <= 1e-9 * max(1.0, abs(orig["s"]))
+        # per-point check on one series
+        sig = packed.select("sig").first()["sig"]
+        a = sorted(
+            (r["ts"], r["value"])
+            for r in samples.withColumn("_sig", F.expr(
+                "array_join(transform(array_sort(map_entries(labels)), e -> concat(e.key, 'ÿ', e.value)), '')"
+            )).filter(F.col("_sig") == sig).select("ts", "value").collect()
+        )
+        b = sorted((r["ts"], r["value"]) for r in unpacked.filter(F.col("sig") == sig).select("ts", "value").collect())
+        assert a == b
 
 
 def test_lineage_resume(spark, tmp_path, samples):
@@ -369,6 +371,7 @@ def test_full_pipeline(spark, tmp_path, pages, python_rows, output_fingerprinted
     assert kernel_points.value == 3 * pages.count()
     first = _written(metrics)
     assert all(first.values())
+    assert all(metrics["stages"][st]["publish_s"] >= 0 for st in _COMMIT_STAGES)
 
     # resume on unchanged pages: the input digests skip every partition
     # before the cascade — no extraction row, no Gorilla point, no output
@@ -382,6 +385,7 @@ def test_full_pipeline(spark, tmp_path, pages, python_rows, output_fingerprinted
     assert udf_rows.value == pages.count()
     assert kernel_points.value == 3 * pages.count()
     assert output_fingerprinted == []
+    assert all(m2["stages"][st]["publish_s"] >= 0 for st in _COMMIT_STAGES)
 
 
 def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
@@ -527,6 +531,81 @@ def test_store_without_input_digests_upgrades_in_place(
     assert _written(m2) == dict.fromkeys(_COMMIT_STAGES, 0)
     assert (udf_rows.value, kernel_points.value) == (rows, points)
     assert output_fingerprinted == []
+
+
+def test_pipeline_commits_overlap(spark, tmp_path, published, monkeypatch):
+    """The four commits of a fresh call run at the same time: each waits
+    until all four have started (a serial loop breaks the barrier)."""
+    import threading
+
+    barrier = threading.Barrier(4, timeout=60)
+    real = TierStore.commit
+
+    def waiting(self, *args, **kwargs):
+        barrier.wait()
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(TierStore, "commit", waiting)
+    m = run_pipeline(spark, published[0], str(tmp_path / "tiers"))
+    assert all(_written(m).values())
+
+
+def test_failed_commit_leaves_the_others_published(spark, tmp_path, published, monkeypatch):
+    """A failing tier_1m commit fails the call only after the other three
+    tables have published; no commit thread or cache outlives the call, and
+    a rerun writes only tier_1m."""
+    import gc
+    import threading
+
+    small, _, first = published
+    out = str(tmp_path / "tiers")
+    writers: list[threading.Thread] = []
+    real = TierStore._write_parts
+
+    def failing(self, df, widths, table):
+        writers.append(threading.current_thread())
+        if table == "tier_1m":
+            raise OSError("injected tier_1m write failure")
+        return real(self, df, widths, table)
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted())
+    monkeypatch.setattr(TierStore, "_write_parts", failing)
+    with pytest.raises(OSError, match="injected tier_1m"):
+        run_pipeline(spark, small, out)
+    monkeypatch.undo()
+    assert len(writers) == 4 and not any(t.is_alive() for t in writers)
+    gc.collect()
+    # the module's cached fixtures keep the CacheManager itself non-empty
+    assert set(persisted()) == before
+    store = TierStore(out)
+    assert store.current_snapshot_id("tier_1m") is None
+    for table in ("tier_1h", "tier_1d", "gorilla_blocks"):
+        assert store.read(spark, table).count() > 0
+
+    m = run_pipeline(spark, small, out)
+    assert _written(m) == {**dict.fromkeys(_COMMIT_STAGES, 0),
+                           "tier_1m": _written(first)["tier_1m"]}
+    assert all(m["stages"][st]["partitions_skipped"] == m["stages"][st]["partitions_total"]
+               for st in _COMMIT_STAGES if st != "tier_1m")
+    assert m["rolled_up_points"] == first["rolled_up_points"]
+
+
+def test_pipeline_jobs_keep_the_callers_job_group(spark, tmp_path, published):
+    """Every Spark job of a fresh call, the concurrent commits' included,
+    carries the job group its caller set."""
+    sc = spark.sparkContext
+    ungrouped = lambda: set(sc.statusTracker().getJobIdsForGroup(None))  # noqa: E731
+    before = ungrouped()
+    sc.setJobGroup("caller", "run_pipeline under the caller's job group")
+    try:
+        m = run_pipeline(spark, published[0], str(tmp_path / "tiers"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(_written(m).values())
+    assert sc.statusTracker().getJobIdsForGroup("caller")
+    assert ungrouped() - before == set()
 
 
 def test_truncated_manifest_refuses_commit(spark, tmp_path, samples):
