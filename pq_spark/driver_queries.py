@@ -27,8 +27,8 @@ from .engine.ingest import samples_from_table
 from .engine.runner import PqEngine
 from .materialize import owned, persist
 from .rollup.tiers import (
-    gapfill, over_time_from_tier, rollup_cascade, rollup_tier, series_dim,
-    tier_partials,
+    attach_series, gapfill, over_time_from_tier, rollup_cascade, rollup_tier,
+    series_dim, tier_partials,
 )
 
 SINCE_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z
@@ -456,21 +456,29 @@ SELECT bucket_ts, et, ub, value, filled FROM (
 register("gapfill_1m_day1", _gapfill_query, _GAPFILL_SQL)
 
 
-def _sum_over_tier(spark, sf):
-    """pq query served FROM the 1m tier (rollup-serving path): exactly
-    equivalent to the raw-data query at interval == tier with an aligned
-    --since, while scanning #series × #buckets rows."""
+def _sum_by_et_from_tier(spark, tier: DataFrame) -> DataFrame:
+    """``sum by (et) (value)`` served FROM a 1m tier in the public schema
+    (the rollup-serving path, batch or streamed): exactly equivalent to
+    the raw-data query at interval == tier with an aligned --since, while
+    scanning #series × #buckets rows."""
     from .rollup.tiers import samples_from_tier
 
-    tier = rollup_tier(event_samples(spark, sf), "1m")
-    ts = samples_from_tier(tier, value_col="last_val", ts_mode="bucket")
     vf = _engine(spark).evaluate(
-        "sum by (et) (value)", ts, since_ms=SINCE_MS, interval_ms=MIN_MS
+        "sum by (et) (value)", samples_from_tier(tier),
+        since_ms=SINCE_MS, interval_ms=MIN_MS,
     )
     return vf.cells.select(
         "instant",
         F.col("labels").getItem("et").alias("et"),
         F.round(F.col("value") + F.lit(_EPS6), 6).alias("sum_value"),
+    )
+
+
+def _sum_over_tier(spark, sf):
+    """The batch-rolled 1m tier row; ``pq_sum_by_et_streamed`` is its
+    streamed twin over the same serving body and oracle."""
+    return _sum_by_et_from_tier(
+        spark, rollup_tier(event_samples(spark, sf), "1m")
     )
 
 
@@ -2152,9 +2160,10 @@ def _streamed_serve_query(spark, sf):
 
     The sf events replay through the real Structured Streaming tier
     (watermarked windowed aggregate, availableNow trigger — Spark's
-    bounded replay of the unbounded pipeline), partials land in a memory
-    sink, and the REAL engine evaluates ``sum by(et) (value)`` over them
-    via ``pq_query_from_streamed_tier``.  The oracle restates tier
+    bounded replay of the unbounded pipeline) into one memory sink, and
+    ``series_dim`` of the same stream into another. The dim attaches at
+    the edge and the REAL engine serves ``sum by(et) (value)`` through
+    the same body as the batch tier row.  The oracle restates tier
     construction + serving in SQL — the same statement as the batch
     serving row, because batch ≡ stream ≡ oracle is the equivalence
     being pinned.
@@ -2162,10 +2171,6 @@ def _streamed_serve_query(spark, sf):
     import uuid as _uuid
 
     from .streaming import streaming_tier
-    from .streaming.serve import (
-        pq_query_from_streamed_tier,
-        stream_samples_with_sig2,
-    )
 
     # the file stream source requires a DIRECTORY path: stream the sf dir
     # with a glob filter instead of the single events.parquet file
@@ -2178,7 +2183,6 @@ def _streamed_serve_query(spark, sf):
     samples = ev.select(
         F.col("event_id").alias("seq"),
         F.unix_millis(F.col("ts").cast("timestamp")).alias("ts"),
-        F.lit("value").alias("name"),
         F.create_map(
             F.lit("__name__"), F.lit("value"),
             F.lit("et"), F.col("event_type"),
@@ -2186,28 +2190,27 @@ def _streamed_serve_query(spark, sf):
         ).alias("labels"),
         F.col("value"),
     )
-    tier = streaming_tier(
-        stream_samples_with_sig2(samples), "1m", watermark="5 minutes"
-    )
-    sink = f"pq_streamed_serve_{_uuid.uuid4().hex[:8]}"
+
+    def drain(df: DataFrame, mode: str) -> DataFrame:
+        sink = f"pq_streamed_serve_{_uuid.uuid4().hex[:8]}"
+        q = (
+            df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(sink)
+
     # complete mode: the bounded replay's final windows stay observable in
-    # the sink regardless of watermark progression
-    q = (
-        tier.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    # the sink regardless of watermark progression; the dim is a streaming
+    # distinct, emitted once per series in append mode
+    tier = attach_series(
+        drain(streaming_tier(samples, "1m", watermark="5 minutes"), "complete"),
+        drain(series_dim(samples), "append"),
     )
-    q.awaitTermination()
-    vf = pq_query_from_streamed_tier(
-        spark, spark.table(sink), "sum by(et) (value)", SINCE_MS, MIN_MS
-    )
-    return vf.cells.select(
-        "instant",
-        F.col("labels").getItem("et").alias("et"),
-        F.round(F.col("value") + F.lit(_EPS6), 6).alias("sum_value"),
-    )
+    return _sum_by_et_from_tier(spark, tier)
 
 
 register("pq_sum_by_et_streamed", _streamed_serve_query, _SUM_OVER_TIER_SQL)

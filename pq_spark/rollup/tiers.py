@@ -110,14 +110,11 @@ def attach_series(partials: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def tier_partials(samples: DataFrame, tier: str | int) -> DataFrame:
-    """Raw samples → NARROW tier partials (bucket_ts, skey, partial cols).
-
-    Accepts the narrow fact (skey, ts, seq, value) or wide samples with a
-    ``labels`` map (the skey is hashed from their signature). The whole
-    cascade runs on this narrow shape; label maps / signature strings join
-    back from the series dim only at the edges (``attach_series``)."""
-    tier_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
+def _series_fact(samples: DataFrame) -> DataFrame:
+    """Samples → the fact projection every tier aggregates: (skey, ts,
+    value, _okey). Accepts the narrow fact (skey, ts, seq, value) or wide
+    samples with a ``labels`` map (the skey is hashed from their
+    signature). A plain projection, so it is safe on a streaming frame."""
     narrow_input = "skey" in samples.columns and "labels" not in samples.columns
     skey_col = (
         F.col("skey") if narrow_input else series_key(sig_expr(F.col("labels")))
@@ -129,26 +126,44 @@ def tier_partials(samples: DataFrame, tier: str | int) -> DataFrame:
     # arbitrarily; all drivers keep seq (event_id / line_no) far below 2^21
     # per ms.
     _B = F.lit(1 << 21)
+    return samples.select(
+        skey_col.alias("skey"),
+        "ts",
+        "value",
+        (F.col("ts") * _B + F.pmod(F.col("seq"), _B)).alias("_okey"),
+    )
+
+
+def _partial_aggs() -> list[Column]:
+    """The algebraic partials of one bucket, over ``_series_fact`` rows."""
+    return [
+        F.count("value").alias("cnt"),
+        F.sum("value").alias("sum"),
+        F.min("value").alias("min"),
+        F.max("value").alias("max"),
+        F.min("ts").alias("first_ts"),
+        F.min_by("value", "_okey").alias("first_val"),
+        F.max("ts").alias("last_ts"),
+        F.max_by("value", "_okey").alias("last_val"),
+    ]
+
+
+def tier_partials(samples: DataFrame, tier: str | int) -> DataFrame:
+    """Raw samples → NARROW tier partials (bucket_ts, skey, partial cols).
+
+    Takes either input shape of ``_series_fact``. The whole cascade runs on
+    this narrow shape, and ``streaming.streaming_tier`` emits it too; label
+    maps / signature strings join back from the series dim only at the
+    edges (``attach_series``)."""
+    tier_ms = TIER_MS[tier] if isinstance(tier, str) else int(tier)
     return (
-        samples.select(
+        _series_fact(samples)
+        .select(
             _bucket(F.col("ts"), tier_ms).alias("bucket_ts"),
-            skey_col.alias("skey"),
-            "ts",
-            "value",
-            (F.col("ts") * _B + F.pmod(F.col("seq"), _B)).alias("_okey"),
+            "skey", "ts", "value", "_okey",
         )
         .groupBy("bucket_ts", "skey")
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min("ts").alias("first_ts"),
-            F.min_by("value", "_okey").alias("first_val"),
-            F.max("ts").alias("last_ts"),
-            F.max_by("value", "_okey").alias("last_val"),
-        )
-        .select("bucket_ts", "skey", *PARTIAL_COLS)
+        .agg(*_partial_aggs())
     )
 
 
@@ -197,25 +212,18 @@ def rollup_cascade(
     return out
 
 
-def samples_from_tier(
-    tier: DataFrame, value_col: str = "last_val", ts_mode: str = "bucket"
-) -> DataFrame:
+def samples_from_tier(tier: DataFrame, value_col: str = "last_val") -> DataFrame:
     """Serve pq queries FROM a continuous-aggregate tier instead of raw
     samples (the hypertable/rollup-serving pattern): each tier row becomes
-    one sample carrying the chosen partial. With ``value_col='last_val'``,
-    ``ts_mode='bucket'`` and a bucket-aligned ``--since``, an instant-vector
-    query at ``interval == tier`` is EXACTLY equivalent to the same query
-    over raw data (the per-bucket last IS the latest sample in each grid
-    window) while scanning #series × #buckets rows instead of the raw
-    corpus — this is why the cascade exists.
-
-    ts_mode: 'bucket' (grid-aligned, rollup-serving convention) or 'last'
-    (the true timestamp of the bucket's last sample, for staleness-faithful
-    irregular grids)."""
-    ts = F.col("bucket_ts") if ts_mode == "bucket" else F.col("last_ts")
+    one sample at its bucket start carrying the chosen partial. With
+    ``value_col='last_val'`` and a bucket-aligned ``--since``, an
+    instant-vector query at ``interval == tier`` is EXACTLY equivalent to
+    the same query over raw data (the per-bucket last IS the latest sample
+    in each grid window) while scanning #series × #buckets rows instead of
+    the raw corpus — this is why the cascade exists."""
     return tier.select(
         F.col("bucket_ts").alias("seq"),  # unique per (series, bucket)
-        ts.alias("ts"),
+        F.col("bucket_ts").alias("ts"),
         "name",
         "labels",
         F.col(value_col).cast("double").alias("value"),
@@ -251,8 +259,8 @@ def over_time_from_tier(
 
     Output (one row per window-end bucket × series with ≥1 point):
     ``bucket_ts`` = window-END bucket (grid instant = bucket_ts + B − 1),
-    the input's series key (``skey``, or ``sig`` for a tier without one,
-    e.g. the public schema or streaming_tier output), and
+    the input's series key (``skey``, or ``sig`` for a tier in the public
+    schema, e.g. a published ``TierStore`` table), and
     cnt/sum/min/max/oldest_val/newest_val/oldest_ts/newest_ts window
     aggregates — the last four reconstruct the window's first/last POINT,
     so rate/increase/delta are exactly servable too:

@@ -5,11 +5,6 @@ from .rollup_stream import (
     streaming_sessionize,
     streaming_tier,
 )
-from .serve import (
-    pq_query_from_streamed_tier,
-    samples_from_streamed_tier,
-    stream_samples_with_sig2,
-)
 
 __all__ = [
     "streaming_tier",
@@ -17,7 +12,4 @@ __all__ = [
     "streaming_last_value",
     "streaming_sessionize",
     "streaming_hll_tier",
-    "stream_samples_with_sig2",
-    "samples_from_streamed_tier",
-    "pq_query_from_streamed_tier",
 ]

@@ -17,8 +17,12 @@ this module provides the streaming skins:
   built-in window aggs can't express (it must emit rows for buckets with
   NO input).
 
-Both consume a stream of sample rows (ts: long ms, name, labels flattened
-to a ``sig`` string, value) — e.g. from a Kafka/file source of extraction
+``streaming_tier`` takes the batch tier's input shapes (seq, ts, value
+plus a ``labels`` map or a narrow ``skey``) and emits the batch tier's
+narrow skey partials; labels come from ``rollup.tiers.series_dim`` run on
+the same stream and attached at the edge (``attach_series``), as in batch.
+``streaming_last_value`` consumes sample rows keyed by a ``sig`` string
+(seq, ts, sig, value) — e.g. from a Kafka/file source of extraction
 events.
 """
 
@@ -30,35 +34,29 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
+from ..rollup.tiers import PARTIAL_COLS, TIER_MS, _partial_aggs, _series_fact
 
 
 def streaming_tier(
     sample_stream: DataFrame, tier: str = "1m", watermark: str = "5 minutes"
 ) -> DataFrame:
-    """Watermarked windowed partial aggregates (same schema as the batch
-    tier tables, so the batch cascade re-aggregates streaming output)."""
-    secs = TIER_SECONDS[tier]
-    with_event_time = sample_stream.withColumn(
-        "event_time", F.timestamp_millis(F.col("ts"))
-    ).withWatermark("event_time", watermark)
-    win = F.window("event_time", f"{secs} seconds")
+    """Watermarked windowed tier partials: the SAME narrow shape and
+    aggregates as ``tier_partials`` (bucket_ts, skey, partial cols), so the
+    batch cascade and serving read streamed output unchanged. Grouping
+    stays on the watermarked ``window``: append mode needs the event-time
+    column among the keys to evict (and emit) a closed bucket."""
+    fact = (
+        _series_fact(sample_stream)
+        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
+        .withWatermark("event_time", watermark)
+    )
+    win = F.window("event_time", f"{TIER_MS[tier]} milliseconds")
     return (
-        with_event_time.groupBy(win.alias("w"), F.col("sig"), F.col("name"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min("ts").alias("first_ts"),
-            F.min_by("value", F.struct("ts", "seq")).alias("first_val"),
-            F.max("ts").alias("last_ts"),
-            F.max_by("value", F.struct("ts", "seq")).alias("last_val"),
-        )
+        fact.groupBy(win.alias("w"), "skey")
+        .agg(*_partial_aggs())
         .select(
             F.unix_millis(F.col("w.start")).alias("bucket_ts"),
-            "sig", "name", "cnt", "sum", "min", "max",
-            "first_ts", "first_val", "last_ts", "last_val",
+            "skey", *PARTIAL_COLS,
         )
     )
 
@@ -77,11 +75,10 @@ def streaming_hll_tier(
     numeric tiers already have, for the one classic non-algebraic
     aggregate (COUNT DISTINCT). Late data beyond the watermark drops on
     arrival, matching the batch tier's purge semantics."""
-    secs = TIER_SECONDS[tier]
     with_event_time = sample_stream.withColumn(
         "event_time", F.timestamp_millis(F.col("ts"))
     ).withWatermark("event_time", watermark)
-    win = F.window("event_time", f"{secs} seconds")
+    win = F.window("event_time", f"{TIER_MS[tier]} milliseconds")
     return (
         with_event_time.groupBy(win.alias("w"), *[F.col(c) for c in key_cols])
         .agg(

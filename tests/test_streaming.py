@@ -9,9 +9,38 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from pq_spark.rollup.tiers import attach_series, samples_from_tier, series_dim
 from pq_spark.streaming import streaming_last_value, streaming_tier
 
 SAMPLE_SCHEMA = "seq long, ts long, sig string, name string, value double"
+
+
+def _labelled(df):
+    """Sample rows → the tier input: the ``sig`` column becomes label ``s``."""
+    return df.select(
+        "seq", "ts",
+        F.create_map(F.lit("__name__"), F.col("name"),
+                     F.lit("s"), F.col("sig")).alias("labels"),
+        "value",
+    )
+
+
+def _event_samples(df):
+    """(seq, ts, et, ub, value) rows → samples of metric ``m`` labelled
+    by ``et`` and ``ub``."""
+    return df.select(
+        "seq", "ts", F.lit("m").alias("name"),
+        F.create_map(
+            F.lit("__name__"), F.lit("m"),
+            F.lit("et"), F.col("et"), F.lit("ub"), F.col("ub"),
+        ).alias("labels"),
+        "value",
+    )
+
+
+def _series_of(dim):
+    """skey → the series' ``s`` label, from a series dim."""
+    return {r["skey"]: r["labels"]["s"] for r in dim.collect()}
 
 
 def _write_jsonl(path, rows):
@@ -57,12 +86,16 @@ def _run_stream(spark, df, name, mode="append"):
 
 
 def test_streaming_tier(spark, sample_dir):
-    stream = spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir)
+    stream = _labelled(spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir))
     tier = streaming_tier(stream, "1m", watermark="0 seconds")
     # complete mode: in append mode windows past the final watermark stay
     # open when a bounded replay ends — complete shows every window
     out = _run_stream(spark, tier, f"tier_{int(time.time()*1000)}", mode="complete")
-    rows = {(r["sig"], r["bucket_ts"]): r for r in out.collect()}
+    assert out.columns == ["bucket_ts", "skey", "cnt", "sum", "min", "max",
+                           "first_ts", "first_val", "last_ts", "last_val"]
+    series = _series_of(series_dim(
+        _labelled(spark.read.schema(SAMPLE_SCHEMA).json(sample_dir))))
+    rows = {(series[r["skey"]], r["bucket_ts"]): r for r in out.collect()}
     assert rows[("a", 0)]["cnt"] == 2
     assert rows[("a", 0)]["sum"] == 3.0
     assert rows[("a", 0)]["first_val"] == 1.0
@@ -144,33 +177,27 @@ def test_streamed_tier_serves_over_time_windows(spark, sample_dir):
     partial rows are the same table the batch serving layer reads —
     over_time_from_tier over the streamed output must equal the same
     serving over a batch rollup of the raw samples."""
-    from pq_spark.rollup.tiers import (
-        over_time_from_tier, series_dim, tier_partials,
-    )
+    from pq_spark.rollup.tiers import over_time_from_tier, tier_partials
 
-    stream = spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir)
+    stream = _labelled(spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir))
     tier = streaming_tier(stream, "1m", watermark="0 seconds")
     streamed = _run_stream(
         spark, tier, f"serve_{int(time.time()*1000)}", mode="complete"
     )
 
+    raw = _labelled(spark.read.schema(SAMPLE_SCHEMA).json(sample_dir))
+    series = _series_of(series_dim(raw))
     cols = ["cnt", "sum", "min", "max",
             "oldest_val", "newest_val", "oldest_ts", "newest_ts"]
-    got = {
-        (r["bucket_ts"], r["sig"]): tuple(r[c] for c in cols)
-        for r in over_time_from_tier(streamed, 60_000, 3 * 60_000).collect()
-    }
 
-    raw = spark.read.schema(SAMPLE_SCHEMA).json(sample_dir).withColumn(
-        "labels", F.create_map(F.lit("__name__"), F.col("name"),
-                               F.lit("s"), F.col("sig"))
-    )
-    batch = over_time_from_tier(tier_partials(raw, "1m"), 60_000, 3 * 60_000)
-    expected = {
-        (r["bucket_ts"], r["labels"]["s"]): tuple(r[c] for c in cols)
-        for r in batch.join(series_dim(raw), "skey").collect()
-    }
-    assert got == expected and len(got) > 0
+    def served(partials):
+        return {
+            (r["bucket_ts"], series[r["skey"]]): tuple(r[c] for c in cols)
+            for r in over_time_from_tier(partials, 60_000, 3 * 60_000).collect()
+        }
+
+    got = served(streamed)
+    assert got == served(tier_partials(raw, "1m")) and len(got) > 0
 
 
 def test_streaming_hll_tier_matches_batch_cascade(spark, tmp_path):
@@ -231,11 +258,6 @@ def test_streaming_pq_query_serving_equals_batch(spark, tmp_path):
     import os
 
     from pq_spark.engine.runner import PqEngine
-    from pq_spark.streaming import (
-        pq_query_from_streamed_tier,
-        stream_samples_with_sig2,
-        streaming_tier,
-    )
 
     schema = "seq long, ts long, et string, ub string, value double"
     rows1 = [
@@ -258,32 +280,24 @@ def test_streaming_pq_query_serving_equals_batch(spark, tmp_path):
     os.utime(tmp_path / "part-0.jsonl", (now - 60, now - 60))
     os.utime(tmp_path / "part-1.jsonl", (now, now))
 
-    def to_samples(df):
-        return df.select(
-            "seq", "ts", F.lit("m").alias("name"),
-            F.create_map(
-                F.lit("__name__"), F.lit("m"),
-                F.lit("et"), F.col("et"), F.lit("ub"), F.col("ub"),
-            ).alias("labels"),
-            "value",
-        )
-
-    stream = (
+    stream = _event_samples(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .json(str(tmp_path))
     )
     # watermark ≙ lookback (pq's purge rule); complete mode keeps the
-    # bounded replay's final windows observable
-    tier = streaming_tier(
-        stream_samples_with_sig2(to_samples(stream)), "1m",
-        watermark="1 minutes",
-    )
-    streamed = _run_stream(
-        spark, tier, f"pqserve_{int(time.time()*1000)}", mode="complete"
+    # bounded replay's final windows observable. The labels come from a
+    # second query on the same stream, attached at the edge as in batch.
+    tag = int(time.time() * 1000)
+    streamed = attach_series(
+        _run_stream(
+            spark, streaming_tier(stream, "1m", watermark="1 minutes"),
+            f"pqserve_{tag}", mode="complete",
+        ),
+        _run_stream(spark, series_dim(stream), f"pqserve_dim_{tag}"),
     )
 
-    raw = to_samples(spark.read.schema(schema).json(str(tmp_path)))
+    raw = _event_samples(spark.read.schema(schema).json(str(tmp_path)))
     eng = PqEngine(spark, strict=False, extensions=True)
 
     def cells(vf):
@@ -292,9 +306,13 @@ def test_streaming_pq_query_serving_equals_batch(spark, tmp_path):
             for r in vf.cells.collect()
         )
 
+    def serve(expr, value_col="last_val"):
+        return cells(eng.evaluate(
+            expr, samples_from_tier(streamed, value_col), since_ms=0,
+            interval_ms=60_000, lookback_ms=60_000))
+
     # instant-vector aggregation: served from last_val partials
-    got = cells(pq_query_from_streamed_tier(
-        spark, streamed, "sum by(et) (m)", 0, 60_000))
+    got = serve("sum by(et) (m)")
     want = cells(eng.evaluate(
         "sum by(et) (m)", raw, since_ms=0, interval_ms=60_000,
         lookback_ms=60_000))
@@ -302,12 +320,61 @@ def test_streaming_pq_query_serving_equals_batch(spark, tmp_path):
 
     # over-time: served from the sum partial, range == tier and range > tier
     for rng in ("1m", "3m"):
-        got = cells(pq_query_from_streamed_tier(
-            spark, streamed, f"sum_over_time(m[{rng}])", 0, 60_000,
-            value_col="sum"))
+        got = serve(f"sum_over_time(m[{rng}])", value_col="sum")
         want = cells(eng.evaluate(
             f"sum_over_time(m[{rng}])", raw, since_ms=0, interval_ms=60_000))
         assert got == want and len(got) > 0, rng
+
+
+def test_streaming_tier_append_drops_late_rows_and_reports_state(
+    spark, tmp_path
+):
+    """Append mode drops a late row once its window has been evicted, and
+    the query's progress reports the watermark and the state size. The
+    middle file matters: eviction runs at the end of the batch that sees
+    the advanced watermark, so without it the late row still reaches
+    window 0 while that window is in state (and is counted)."""
+    import os
+
+    schema = "seq long, ts long, et string, ub string, value double"
+    files = [
+        [(1, 5_000, "click", "0", 1.0), (2, 65_000, "view", "1", 2.0),
+         (3, 400_000, "click", "1", 4.0)],
+        [(9, 390_000, "click", "1", 32.0)],
+        # ts 10 s is behind the 340 s watermark; window 0 is gone
+        [(4, 10_000, "click", "0", 8.0), (5, 380_000, "view", "0", 16.0)],
+    ]
+    now = time.time()
+    for i, rows in enumerate(files):
+        path = tmp_path / f"part-{i}.jsonl"
+        _write_jsonl(path, [dict(zip(("seq", "ts", "et", "ub", "value"), r))
+                            for r in rows])
+        os.utime(path, (now - 60 + i * 10, now - 60 + i * 10))
+    stream = _event_samples(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(tmp_path))
+    )
+
+    def drain(df, name):
+        q = (df.writeStream.format("memory").queryName(name)
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination()
+        return spark.table(name), q.lastProgress
+
+    tag = int(time.time() * 1000)
+    tier, progress = drain(
+        streaming_tier(stream, "1m", watermark="1 minutes"), f"late_{tag}"
+    )
+    assert sorted(
+        (r["bucket_ts"], r["cnt"], r["sum"]) for r in tier.collect()
+    ) == [(0, 1, 1.0), (60_000, 1, 2.0)]
+    assert progress["eventTime"]["watermark"] == "1970-01-01T00:05:40.000Z"
+    assert progress["stateOperators"][0]["numRowsTotal"] == 2
+
+    dim, progress = drain(series_dim(stream), f"late_dim_{tag}")
+    assert dim.count() == 4
+    assert progress["stateOperators"][0]["numRowsTotal"] == 4
 
 
 def test_streaming_dedup_bounded_state(spark, tmp_path):
