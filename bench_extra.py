@@ -99,53 +99,107 @@ def profile_queries(spark, sf_dir: str, names: list[str], reps: int,
     return out
 
 
-def ts_bench(spark, n: int = 2_000_000) -> dict:
+def ts_bench(spark, n: int = 1_000_000) -> dict:
     """Decoder microbench: format-guess timestamp parsing over n synthetic
-    log-format lines — old pure-pandas cascade vs the staged JVM cascade
-    with masked Python fallback (the shipped no-format decode path)."""
+    log timestamps, one fifth each ISO 'T', nginx, unix seconds, ISO
+    space + fraction and RFC2822. Every figure is the best of 3 noop
+    writes (or gate jobs) over a persisted input, in seconds.
+
+    Mix (all five shapes) and RFC2822 rows alone, in three layouts:
+    - ``*_udf_s``: the pure pandas cascade;
+    - ``*_masked_s``: JVM cascade column, then the masked pandas fallback
+      (RFC2822 rows cross to Python) — the layout without the claim;
+    - ``*_claim_s``: cascade column, RFC2822 claim column, and the
+      fallback as the gate plans it (no Python node here), plus
+      ``*_gate_s``, the gate's own JVM job (``ts_fallback_needed``).
+    Control, the four shapes that are NOT RFC2822, JVM only:
+    ``ctl_cascade_s`` (cascade alone), ``ctl_staged_s`` (claim in its own
+    projection, as shipped) and ``ctl_inline_s`` (claim folded into the
+    cascade expression, one generated method — the JIT cliff).
+    ``diff_rows`` counts mix rows where the shipped layout and the pure
+    pandas cascade differ (must be 0)."""
     import pyspark.sql.functions as F
 
-    from pq_spark.engine.ingest import _guess_ts_jvm, _guess_ts_udf
+    from pq_spark.engine.ingest import (
+        _guess_ts_jvm,
+        _guess_ts_udf,
+        _rfc2822_jvm,
+        _stage_guess_ts,
+        ts_fallback_needed,
+    )
+    from pq_spark.program import parse_program
 
-    base = spark.range(n).select(
-        F.when(F.col("id") % 4 == 0,
-               F.concat(F.lit("2024-03-0"), (F.col("id") % 9 + 1).cast("string"),
+    i = F.col("id")
+    two = lambda c: F.lpad((c % 60).cast("string"), 2, "0")  # noqa: E731
+    shape = i % 5
+    mix = spark.range(n).select(
+        shape.alias("k"),
+        F.when(shape == 0,
+               F.concat(F.lit("2024-03-0"), (i % 9 + 1).cast("string"),
                         F.lit("T10:11:12Z")))
-        .when(F.col("id") % 4 == 1,
-              F.concat(F.lit("01/Jul/2021:00:00:"),
-                       F.lpad((F.col("id") % 60).cast("string"), 2, "0"),
-                       F.lit(" +0200")))
-        .when(F.col("id") % 4 == 2,
-              (F.lit(1600000000) + F.col("id") % 10000).cast("string"))
-        .otherwise(F.concat(F.lit("2021-01-01 00:00:"),
-                            F.lpad((F.col("id") % 60).cast("string"), 2, "0"),
-                            F.lit(".25")))
-        .alias("s")
+        .when(shape == 1,
+              F.concat(F.lit("01/Jul/2021:00:00:"), two(i), F.lit(" +0200")))
+        .when(shape == 2, (F.lit(1600000000) + i % 10000).cast("string"))
+        .when(shape == 3,
+              F.concat(F.lit("2021-01-01 00:00:"), two(i), F.lit(".25")))
+        .otherwise(F.concat(F.lit("Tue, "), (i % 28 + 1).cast("string"),
+                            F.lit(" Jul 2003 10:52:"), two(i), F.lit(" +0200")))
+        .alias("s"),
     ).persist()
-    base.count()
+    rfc = mix.filter("k = 4").select("s").persist()
+    ctl = mix.filter("k != 4").select("s").persist()
+    s = F.col("s")
+    mapper = parse_program("/(.*)/ | map {.0:ts}").mapper
 
-    def t(df, reps=3):
-        df.write.format("noop").mode("overwrite").save()
+    def best(run, reps=3):
+        run()
         out = []
         for _ in range(reps):
             t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            out.append(round(time.time() - t0, 3))
-        return min(out)
+            run()
+            out.append(time.time() - t0)
+        return round(min(out), 3)
 
-    old = t(base.select(_guess_ts_udf()(F.col("s")).alias("t")))
-    st = base.withColumn("_j", _guess_ts_jvm(F.col("s")))
-    new = t(st.withColumn(
-        "t", F.coalesce(F.col("_j"), _guess_ts_udf()(F.when(F.col("_j").isNull(), F.col("s"))))
-    ).select("t"))
-    jvm_only = t(base.select(_guess_ts_jvm(F.col("s")).alias("t")))
-    diffs = st.select(
-        _guess_ts_udf()(F.col("s")).alias("a"),
-        F.coalesce(F.col("_j"), _guess_ts_udf()(F.when(F.col("_j").isNull(), F.col("s")))).alias("b"),
-    ).filter("a IS DISTINCT FROM b").count()
-    base.unpersist()
-    return {"n": n, "old_udf_s": old, "new_staged_s": new,
-            "jvm_only_s": jvm_only, "diff_rows": diffs}
+    def t(build):
+        return best(lambda: build().write.format("noop").mode("overwrite").save())
+
+    def masked(df):
+        st = df.withColumn("_j", _guess_ts_jvm(s))
+        j = F.col("_j")
+        return st.select(F.coalesce(j, _guess_ts_udf()(F.when(j.isNull(), s))).alias("t"))
+
+    def gate(df):
+        entries = df.select(
+            F.lit(0).alias("line_no"), F.array(s).alias("arr"),
+            F.lit(None).cast("map<string,string>").alias("map"),
+        )
+        return ts_fallback_needed(entries, mapper)
+
+    def claimed(df, fallback):
+        st, parsed = _stage_guess_ts(df, s, "_t", fallback)
+        return st.select(s, parsed.alias("t"))
+
+    out = {"n": n, "rfc_rows": rfc.count(), "ctl_rows": ctl.count()}
+    for name, df in (("mix", mix), ("rfc", rfc)):
+        fallback = gate(df)
+        out[f"{name}_fallback"] = fallback
+        out[f"{name}_udf_s"] = t(lambda: df.select(_guess_ts_udf()(s).alias("t")))
+        out[f"{name}_masked_s"] = t(lambda: masked(df))
+        out[f"{name}_gate_s"] = best(lambda: gate(df))
+        out[f"{name}_claim_s"] = t(lambda: claimed(df, fallback))
+    out["ctl_cascade_s"] = t(lambda: ctl.select(_guess_ts_jvm(s).alias("t")))
+    out["ctl_staged_s"] = t(lambda: claimed(ctl, False).select("t"))
+    out["ctl_inline_s"] = t(
+        lambda: ctl.select(F.coalesce(_guess_ts_jvm(s), _rfc2822_jvm(s)).alias("t"))
+    )
+    out["diff_rows"] = (
+        claimed(mix, out["mix_fallback"])
+        .filter(~F.col("t").eqNullSafe(_guess_ts_udf()(s)))
+        .count()
+    )
+    for df in (ctl, rfc, mix):
+        df.unpersist()
+    return out
 
 
 def main() -> None:

@@ -11,8 +11,11 @@ Derivation mirrors the reference pipeline stages (decode → map → sample
 fan-out, reference: src/parse/**, src/query/sample.rs:75-113) but is
 expressed as native Spark SQL expressions so Catalyst can push filters and
 prune columns; the only Python in the hot path is Arrow-batched pandas UDFs
-for the JSON decoder and the timestamp guess-cascade (formats the JVM
-parser can't express).
+for the JSON decoder and the tail of the timestamp guess-cascade (shapes the
+JVM half does not claim). Every reference guess shape, RFC2822 included, is
+claimed in the JVM; a regex-decoded program plans the Python tail only when
+one of its lines needs it (``ts_fallback_needed``), so a log the JVM fully
+claims starts no Python worker.
 
 Scale notes (100 TB):
 - the regex decoder is JVM-side ``regexp_extract`` (codegen'd, no Python);
@@ -241,8 +244,9 @@ def _ts_off_ms(g):
 def _guess_ts_jvm(s):
     """JVM half of the format-guess cascade (reference:
     src/utils/time.rs:50-88): Unix ms for the shapes provably equal to
-    ``try_parse_time``, NULL otherwise — the caller routes NULL rows to
-    the Python cascade. Claim rules that keep the two paths identical:
+    ``try_parse_time``, NULL otherwise — ``_stage_guess_ts`` stages the
+    RFC2822 claim above it and routes rows both leave NULL to the Python
+    cascade. Claim rules that keep the two paths identical:
 
     - fractions limited to ≤3 digits (longer ones need Python's
       round-to-ms); months/weekday pinned to the exact spellings the
@@ -327,12 +331,11 @@ def _guess_ts_jvm(s):
 
     # structural pre-dispatch: each shape implies one cheap substring
     # fact, so a row attempts ~one family instead of all of them.
-    # RFC2822 is deliberately NOT claimed: a JVM expression for it (split
-    # + field checks + try_to_timestamp) pushed the generated whole-stage
-    # method past the JIT's compile threshold and the whole projection
-    # ran as interpreted bytecode — 3x SLOWER than the Python cascade
-    # (measured: 2.8 s vs 1.1 s / 2M rows). parsedate rows ride the
-    # masked Python fallback at the old path's cost.
+    # RFC2822 is claimed by ``_rfc2822_jvm`` in its OWN projection above
+    # this one (``_stage_guess_ts``), never in here: added to this
+    # expression it pushes the generated method past the JIT's
+    # huge-method limit, and rows that are not RFC2822 parse ~2x slower
+    # (bench_extra.py --ts-bench measures both layouts).
     return (
         F.when(F.substring(s, 5, 1) == "-", v_iso)  # yyyy-…
         .when(F.substring(s, 3, 1) == "/", v_nginx)  # dd/Mon/yyyy:…
@@ -359,14 +362,101 @@ def _explicit_ts_udf(fmt: str):
     return _parse
 
 
-def _ts_expr(datum, fmt: str | None):
-    if fmt is None:
-        # JVM shapes first (codegen'd, no Python boundary); only rows no
-        # JVM shape claims reach the pandas cascade, and they arrive
-        # MASKED — claimed rows cross the Arrow boundary as nulls, so the
-        # Python side does ~no per-element work on a typical log corpus
-        jvm = _guess_ts_jvm(datum)
-        return F.coalesce(jvm, _guess_ts_udf()(F.when(jvm.isNull(), datum)))
+_TS_DAYS_RE = "Mon|Tue|Wed|Thu|Fri|Sat|Sun"
+_RFC2822_RE = (
+    rf"^({_TS_DAYS_RE}), \d{{1,2}} ({_TS_MONTHS_RE}) [1-9]\d{{3}} "
+    r"\d{2}:\d{2}:[0-5]\d [+-]\d{4}$"
+)
+
+
+def _rfc2822_jvm(s):
+    """JVM claim of the cascade's RFC2822 stage (``parsedate_to_datetime``)
+    for its common shape ``Www, d[d] Mmm yyyy HH:mm:ss ±hhmm``; NULL
+    otherwise. Claim rules, on top of ``_guess_ts_jvm``'s:
+
+    - proper-case weekday and month only (parsedate lower-cases both and
+      ignores the weekday entirely; Spark's ``MMM`` is case-insensitive),
+      so every case variant falls through to Python;
+    - years 1000–9999 only: parsedate maps a two-digit year into
+      1969–2068, and three-digit years are rare enough to leave to it;
+    - seconds 00–59; hours, minutes, dates and offsets (``+0160``,
+      ``+1801``) that java.time rejects parse to NULL and fall back;
+      ``-0000`` is UTC on both paths;
+    - the weekday is skipped, not parsed: Spark 4 rejects ``EEE`` in
+      parse patterns, and parsedate never checks it against the date.
+    """
+    return F.when(
+        s.rlike(_RFC2822_RE),
+        F.unix_millis(
+            F.try_to_timestamp(F.substring(s, 6, 32), F.lit("d MMM yyyy HH:mm:ss Z"))
+        ),
+    )
+
+
+def _stage_guess_ts(df: DataFrame, datum, prefix: str, fallback: bool = True):
+    """Add the no-format guess cascade of ``datum`` to ``df`` as staged
+    columns; returns ``(df, parsed column)``.
+
+    ``{prefix}j`` is the JVM cascade; ``{prefix}c`` claims RFC2822 on the
+    rows it left NULL, in its OWN projection (each staged column is read
+    twice above it, so Catalyst keeps the projections apart and
+    whole-stage codegen emits one method per projection — one method
+    holding both crosses the JIT's huge-method limit); with ``fallback``,
+    ``{prefix}p`` sends the rows both left NULL, and only those, to the
+    pandas cascade — every other row crosses the Arrow boundary as a
+    null. Without it the plan has no Python node at all: callers pass
+    ``fallback=False`` only when ``ts_fallback_needed`` said no row
+    needs it, which keeps the output identical.
+    """
+    jname, cname, pname = f"{prefix}j", f"{prefix}c", f"{prefix}p"
+    df = df.withColumn(jname, _guess_ts_jvm(datum))
+    j = F.col(jname)
+    df = df.withColumn(cname, F.when(j.isNull(), _rfc2822_jvm(datum)).otherwise(j))
+    parsed = F.col(cname)
+    if fallback:
+        df = df.withColumn(
+            pname,
+            F.coalesce(parsed, _guess_ts_udf()(F.when(parsed.isNull(), datum))),
+        )
+        parsed = F.col(pname)
+    return df, parsed
+
+
+def _datum(fld):
+    # NULL on OOB even under ANSI; try_element_at trips a Janino codegen
+    # bug (interpreted fallback)
+    if isinstance(fld.loc, int):
+        return F.get(F.col("arr"), fld.loc)
+    return F.col("map").getItem(fld.loc)
+
+
+def ts_fallback_needed(entries: DataFrame, mapper: Mapper) -> bool:
+    """Whether any entry has a no-format ``ts`` datum that the JVM half of
+    the cascade leaves NULL — the rows the pandas fallback would receive.
+    One JVM-only aggregate (a map-stage and a result job under AQE);
+    False, with no job, when the mapper has no such field. An aggregate,
+    not ``filter(...).limit(1)``: the optimizer
+    pushes a filter below the staged projections with the whole cascade
+    inlined into one generated method, measured 4x slower per row (and
+    ``limit`` scans the partitions in serial rounds)."""
+    df = entries
+    pending = []
+    for i, fld in enumerate(mapper.fields):
+        if fld.typ != "ts" or fld.ts_format is not None:
+            continue
+        dname = f"_d{i}"
+        df = df.withColumn(dname, _datum(fld))
+        df, parsed = _stage_guess_ts(df, F.col(dname), f"_ts{i}", fallback=False)
+        pending.append(F.col(dname).isNotNull() & parsed.isNull())
+    if not pending:
+        return False
+    left = pending[0]
+    for p in pending[1:]:
+        left = left | p
+    return bool(df.select(F.bool_or(left).alias("left")).first()["left"])
+
+
+def _ts_expr(datum, fmt: str):
     java = strptime_to_java(fmt)
     if java is not None:
         return F.unix_millis(F.try_to_timestamp(datum, F.lit(java)))
@@ -378,6 +468,7 @@ def map_records(
     mapper: Mapper,
     since_ms: int | None = None,
     until_ms: int | None = None,
+    ts_fallback: bool = True,
 ) -> DataFrame:
     """Apply the ``map { … }`` clause (reference:
     src/parse/mapping/strategy.rs:17-93) producing typed records.
@@ -386,8 +477,10 @@ def map_records(
     mismatch) drop the record, matching the reference's skip-on-error loop
     (src/runner.rs:150-157). The ``--since``/``--until`` range filter is a
     plain timestamp predicate (partition-prunable at scale).
+    ``ts_fallback=False`` leaves the pandas tail out of a no-format ``ts``
+    field (see ``_stage_guess_ts``).
     """
-    datum_cols = {}
+    df = entries
     valid = F.lit(True)
     ts_col = F.lit(None).cast("long")
     label_entries = []
@@ -403,14 +496,10 @@ def map_records(
             )
             continue
 
-        if isinstance(fld.loc, int):
-            datum = F.get(F.col("arr"), fld.loc)  # NULL on OOB even under ANSI; try_element_at trips a Janino codegen bug (interpreted fallback)
-            valid = valid & F.col("arr").isNotNull()
-        else:
-            datum = F.col("map").getItem(fld.loc)
-            valid = valid & F.col("map").isNotNull()
+        kind = "arr" if isinstance(fld.loc, int) else "map"
+        valid = valid & F.col(kind).isNotNull()
         dname = f"_d{i}"
-        datum_cols[dname] = datum
+        df = df.withColumn(dname, _datum(fld))
         datum = F.col(dname)
 
         if fld.typ == "str":
@@ -442,27 +531,13 @@ def map_records(
             )
         elif fld.typ == "ts":
             if fld.ts_format is None:
-                # stage the JVM cascade as a REAL column: referencing the
-                # expression from both the fallback mask and the coalesce
-                # would evaluate the 6-regex tree twice (once below, once
-                # above the ArrowEvalPython node — no CSE across it)
-                jname, pname = f"_tsj{i}", f"_tsp{i}"
-                datum_cols[jname] = _guess_ts_jvm(datum)
-                j = F.col(jname)
-                datum_cols[pname] = F.coalesce(
-                    j, _guess_ts_udf()(F.when(j.isNull(), datum))
-                )
-                parsed = F.col(pname)
+                df, parsed = _stage_guess_ts(df, datum, f"_ts{i}", ts_fallback)
             else:
                 parsed = _ts_expr(datum, fld.ts_format)
             valid = valid & datum.isNotNull() & parsed.isNotNull()
             ts_col = parsed
         else:  # pragma: no cover
             raise PqError(f"unknown field type {fld.typ}")
-
-    df = entries
-    for name, col in datum_cols.items():
-        df = df.withColumn(name, col)
 
     def entries_map(entries_list, empty, value_type):
         if not entries_list:
@@ -488,35 +563,37 @@ def map_records(
     return rec
 
 
-def map_errors(entries: DataFrame, mapper: Mapper) -> DataFrame:
+def map_errors(
+    entries: DataFrame, mapper: Mapper, ts_fallback: bool = True
+) -> DataFrame:
     """Per-entry mapping errors → DF[line_no, error] — the ``-v`` channel.
 
     Mirrors the reference's first-failing-field semantics and message texts
     (src/parse/mapping/strategy.rs:43,64,73,77-81,90; utils/time.rs:41):
     the mapper iterates fields in declaration order and returns on the
     first error, so a chained when() in the same order reproduces both the
-    dropped set and the reported message."""
+    dropped set and the reported message. ``ts_fallback`` as in
+    ``map_records``."""
     err = F.lit(None).cast("string")
     staged = entries
 
     def first_err(*cases):
+        # coalesce names ``err`` once; when(err IS NOT NULL, err) named it
+        # twice, doubling the expression tree at every check
         nonlocal err
         for cond, msg in cases:
-            err = F.when(err.isNotNull(), err).otherwise(
-                F.when(cond, F.lit(msg))
-            )
+            err = F.coalesce(err, F.when(cond, F.lit(msg)))
 
     for fi, fld in enumerate(mapper.fields):
         if fld.typ == "const":
             continue
+        datum = _datum(fld)
         if isinstance(fld.loc, int):
-            datum = F.get(F.col("arr"), fld.loc)  # NULL on OOB even under ANSI; try_element_at trips a Janino codegen bug (interpreted fallback)
             first_err(
                 (F.col("arr").isNull(), "dict entry cannot be mapped with positional fields"),
                 (datum.isNull(), "tuple entry index out of range"),
             )
         else:
-            datum = F.col("map").getItem(fld.loc)
             first_err(
                 (F.col("map").isNull(), "tuple entry cannot be mapped with named fields"),
                 (datum.isNull(), "dict entry field not found"),
@@ -525,16 +602,7 @@ def map_errors(entries: DataFrame, mapper: Mapper) -> DataFrame:
             first_err((datum.try_cast("double").isNull(), "could not parse numeric field"))
         elif fld.typ == "ts":
             if fld.ts_format is None:
-                # stage like map_records: one JVM-cascade evaluation, one
-                # masked Python fallback
-                jname, pname = f"_etsj{fi}", f"_etsp{fi}"
-                staged = staged.withColumn(jname, _guess_ts_jvm(datum))
-                j = F.col(jname)
-                staged = staged.withColumn(
-                    pname,
-                    F.coalesce(j, _guess_ts_udf()(F.when(j.isNull(), datum))),
-                )
-                parsed = F.col(pname)
+                staged, parsed = _stage_guess_ts(staged, datum, f"_ets{fi}", ts_fallback)
             else:
                 parsed = _ts_expr(datum, fld.ts_format)
             msg = (

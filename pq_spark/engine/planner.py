@@ -422,14 +422,20 @@ class Planner:
         # of three times. The per-series result is dim-sized; the global
         # bounds reduce over it is a cache-read of #series rows.
         #
-        # localCheckpoint (lazy) instead of persist: the dim feeds MANY
+        # localCheckpoint instead of persist: the dim feeds MANY
         # consumers (bounds broadcast, output-label join, group maps) and
         # each would otherwise re-ANALYZE the whole fact lineage under the
         # cached plan — the truncated LogicalRDD leaf makes every
         # downstream plan small (measured: −0.1 s build and −0.05 s exec
-        # per grid query at sf0.1). Content is identical. It is no
-        # CacheManager entry, so no owner releases it: the ContextCleaner
-        # frees its blocks once every frame over it is garbage-collected.
+        # per grid query at sf0.1). Content is identical. eager=False
+        # skips the collect of the checkpointed rows, but NOT every job:
+        # under AQE, building the LogicalRDD materializes the plan's
+        # shuffle-map stage, so the per-series aggregate's map job (the
+        # whole fact scan below it) runs here, while ``evaluate`` builds
+        # the plan. For a CLI program that job is the first ingest pass
+        # (decode, map, timestamp parse). It is no CacheManager entry, so
+        # no owner releases it: the ContextCleaner frees its blocks once
+        # every frame over it is garbage-collected.
         per_series = (
             matched.select(_sig2_expr(F.col("labels")).alias("_sig2"), "ts")
             .groupBy("_sig2")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import PqError
 from ..materialize import Held, persist
-from ..program import Mapper, ProgramAST, parse_program
+from ..program import Mapper, ProgramAST, RegexDecoder, parse_program
 from ..query.ast import Expr, VectorSelector
 from ..timeparse import parse_duration, try_parse_time
 from . import formatter as fmt
@@ -202,8 +202,19 @@ class PqEngine:
                 raise PqError("'select' without 'map' is not supported for this parser")
             return ProgramResult("entries", ast.formatter, entries=entries, errors=errors)
 
-        records = ingest.map_records(entries, ast.mapper, since_ms, until_ms)
-        errors = errors.unionByName(ingest.map_errors(entries, ast.mapper))
+        # a regex decoder is JVM-only: plan the pandas timestamp fallback
+        # only when some line needs it, so a log the JVM cascade fully
+        # claims runs with no Python worker. The JSON decoder is Python
+        # already (and stays lazy), so it keeps the fallback planned.
+        ts_fallback = not isinstance(
+            ast.decoder, RegexDecoder
+        ) or ingest.ts_fallback_needed(entries, ast.mapper)
+        records = ingest.map_records(
+            entries, ast.mapper, since_ms, until_ms, ts_fallback=ts_fallback
+        )
+        errors = errors.unionByName(
+            ingest.map_errors(entries, ast.mapper, ts_fallback=ts_fallback)
+        )
         if ast.query is None:
             return ProgramResult("records", ast.formatter, records=records, errors=errors)
 

@@ -12,9 +12,13 @@ Reference behavior (all timestamps are Unix **milliseconds** as i64):
   positive totals only (src/utils/parse/duration.rs:21-132).
 
 Spark-side parsing uses JVM ``to_timestamp`` with a translated Java pattern
-when the strptime format is translatable (the fast, codegen'd path); the
-guess cascade falls back to a vectorized pandas UDF (Arrow-batched — no
-per-row Python) defined in ``pq_spark.engine.ingest``.
+when the strptime format is translatable (the fast, codegen'd path). The
+guess cascade runs in the JVM for every reference shape (RFC2822's common
+``Www, d Mmm yyyy HH:mm:ss ±hhmm`` included); ``try_parse_time`` is its
+reference and the kernel of the vectorized pandas fallback (Arrow-batched,
+masked to the rows the JVM leaves NULL) defined in
+``pq_spark.engine.ingest``, which a regex-decoded program plans only when
+one of its lines needs it.
 """
 
 from __future__ import annotations
