@@ -112,6 +112,8 @@ def ts_bench(spark, n: int = 1_000_000) -> dict:
     - ``*_claim_s``: cascade column, RFC2822 claim column, and the
       fallback as the gate plans it (no Python node here), plus
       ``*_gate_s``, the gate's own JVM job (``ts_fallback_needed``).
+    ``mix_records_s``: the records of ``/(.*)/ | map {.0:ts}`` over the
+    mix, as the CLI plans them (``records_of(map_entries(...))``).
     Control, the four shapes that are NOT RFC2822, JVM only:
     ``ctl_cascade_s`` (cascade alone), ``ctl_staged_s`` (claim in its own
     projection, as shipped) and ``ctl_inline_s`` (claim folded into the
@@ -125,6 +127,8 @@ def ts_bench(spark, n: int = 1_000_000) -> dict:
         _guess_ts_udf,
         _rfc2822_jvm,
         _stage_guess_ts,
+        map_entries,
+        records_of,
         ts_fallback_needed,
     )
     from pq_spark.program import parse_program
@@ -168,12 +172,14 @@ def ts_bench(spark, n: int = 1_000_000) -> dict:
         j = F.col("_j")
         return st.select(F.coalesce(j, _guess_ts_udf()(F.when(j.isNull(), s))).alias("t"))
 
-    def gate(df):
-        entries = df.select(
+    def entries(df):
+        return df.select(
             F.lit(0).alias("line_no"), F.array(s).alias("arr"),
             F.lit(None).cast("map<string,string>").alias("map"),
         )
-        return ts_fallback_needed(entries, mapper)
+
+    def gate(df):
+        return ts_fallback_needed(entries(df), mapper)
 
     def claimed(df, fallback):
         st, parsed = _stage_guess_ts(df, s, "_t", fallback)
@@ -187,6 +193,9 @@ def ts_bench(spark, n: int = 1_000_000) -> dict:
         out[f"{name}_masked_s"] = t(lambda: masked(df))
         out[f"{name}_gate_s"] = best(lambda: gate(df))
         out[f"{name}_claim_s"] = t(lambda: claimed(df, fallback))
+    out["mix_records_s"] = t(
+        lambda: records_of(map_entries(entries(mix), mapper, out["mix_fallback"]))
+    )
     out["ctl_cascade_s"] = t(lambda: ctl.select(_guess_ts_jvm(s).alias("t")))
     out["ctl_staged_s"] = t(lambda: claimed(ctl, False).select("t"))
     out["ctl_inline_s"] = t(

@@ -17,6 +17,11 @@ claimed in the JVM; a regex-decoded program plans the Python tail only when
 one of its lines needs it (``ts_fallback_needed``), so a log the JVM fully
 claims starts no Python worker.
 
+The ``map`` clause is one walk of the mapper's fields (``map_entries``):
+each entry gets its mapped columns and a first-error column, and the
+records (``records_of``), the ``-v`` errors (``errors_of``) and the
+fallback gate all read that one column.
+
 Scale notes (100 TB):
 - the regex decoder is JVM-side ``regexp_extract`` (codegen'd, no Python);
   one regex evaluation per capture group — for wide patterns prefer the
@@ -199,7 +204,7 @@ def _decode_json(lines: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# mapper → records(seq, ts, labels, values)
+# mapper → mapped entries(seq, ts, labels, values, error)
 # ---------------------------------------------------------------------------
 
 
@@ -404,9 +409,10 @@ def _stage_guess_ts(df: DataFrame, datum, prefix: str, fallback: bool = True):
     holding both crosses the JIT's huge-method limit); with ``fallback``,
     ``{prefix}p`` sends the rows both left NULL, and only those, to the
     pandas cascade — every other row crosses the Arrow boundary as a
-    null. Without it the plan has no Python node at all: callers pass
-    ``fallback=False`` only when ``ts_fallback_needed`` said no row
-    needs it, which keeps the output identical.
+    null. Without it the plan has no Python node at all. Its one caller
+    is ``map_entries``, which the CLI builds with ``fallback=False`` only
+    when ``ts_fallback_needed`` said no row needs it, which keeps the
+    output identical.
     """
     jname, cname, pname = f"{prefix}j", f"{prefix}c", f"{prefix}p"
     df = df.withColumn(jname, _guess_ts_jvm(datum))
@@ -430,32 +436,6 @@ def _datum(fld):
     return F.col("map").getItem(fld.loc)
 
 
-def ts_fallback_needed(entries: DataFrame, mapper: Mapper) -> bool:
-    """Whether any entry has a no-format ``ts`` datum that the JVM half of
-    the cascade leaves NULL — the rows the pandas fallback would receive.
-    One JVM-only aggregate (a map-stage and a result job under AQE);
-    False, with no job, when the mapper has no such field. An aggregate,
-    not ``filter(...).limit(1)``: the optimizer
-    pushes a filter below the staged projections with the whole cascade
-    inlined into one generated method, measured 4x slower per row (and
-    ``limit`` scans the partitions in serial rounds)."""
-    df = entries
-    pending = []
-    for i, fld in enumerate(mapper.fields):
-        if fld.typ != "ts" or fld.ts_format is not None:
-            continue
-        dname = f"_d{i}"
-        df = df.withColumn(dname, _datum(fld))
-        df, parsed = _stage_guess_ts(df, F.col(dname), f"_ts{i}", fallback=False)
-        pending.append(F.col(dname).isNotNull() & parsed.isNull())
-    if not pending:
-        return False
-    left = pending[0]
-    for p in pending[1:]:
-        left = left | p
-    return bool(df.select(F.bool_or(left).alias("left")).first()["left"])
-
-
 def _ts_expr(datum, fmt: str):
     java = strptime_to_java(fmt)
     if java is not None:
@@ -463,159 +443,125 @@ def _ts_expr(datum, fmt: str):
     return _explicit_ts_udf(fmt)(datum)
 
 
-def map_records(
-    entries: DataFrame,
-    mapper: Mapper,
-    since_ms: int | None = None,
-    until_ms: int | None = None,
-    ts_fallback: bool = True,
+_GUESS_ERR = "couldn't guess time format"
+
+
+def map_entries(
+    entries: DataFrame, mapper: Mapper, ts_fallback: bool = True
 ) -> DataFrame:
     """Apply the ``map { … }`` clause (reference:
-    src/parse/mapping/strategy.rs:17-93) producing typed records.
+    src/parse/mapping/strategy.rs:17-93): one row per entry,
+    ``(seq, ts, labels, values, error)``.
 
-    Per-record errors (missing field, failed num/ts parse, entry-kind
-    mismatch) drop the record, matching the reference's skip-on-error loop
-    (src/runner.rs:150-157). The ``--since``/``--until`` range filter is a
-    plain timestamp predicate (partition-prunable at scale).
-    ``ts_fallback=False`` leaves the pandas tail out of a no-format ``ts``
-    field (see ``_stage_guess_ts``).
+    ``error`` is NULL for a record, else the message of the first failing
+    field (strategy.rs:43,64,73,77-81,90; utils/time.rs:41): the mapper
+    returns on the first error, so a chain in declaration order gives both
+    the dropped set and the reported message. ``records_of`` and
+    ``errors_of`` are its two sides (src/runner.rs:150-157 skips
+    the errors, ``-v`` prints them). ``ts_fallback=False`` leaves the
+    pandas tail out of a no-format ``ts`` field (see ``_stage_guess_ts``).
     """
     df = entries
-    valid = F.lit(True)
+    error = F.lit(None).cast("string")
     ts_col = F.lit(None).cast("long")
-    label_entries = []
-    value_entries = []
+    labels, values = [], []
+
+    def fail(cond, msg):
+        # coalesce names ``error`` once; when(error IS NOT NULL, error)
+        # named it twice, doubling the expression tree at every check
+        nonlocal error
+        error = F.coalesce(error, F.when(cond, F.lit(msg)))
+
+    def entry(name, col):
+        return F.struct(F.lit(name).alias("key"), col.alias("value"))
 
     for i, fld in enumerate(mapper.fields):
         if fld.typ == "const":
-            label_entries.append(
-                F.struct(
-                    F.lit(fld.end_name).alias("key"),
-                    F.lit(fld.const_value).alias("value"),
-                )
-            )
+            labels.append(entry(fld.end_name, F.lit(fld.const_value)))
             continue
-
-        kind = "arr" if isinstance(fld.loc, int) else "map"
-        valid = valid & F.col(kind).isNotNull()
-        dname = f"_d{i}"
-        df = df.withColumn(dname, _datum(fld))
-        datum = F.col(dname)
-
+        df = df.withColumn(f"_d{i}", _datum(fld))
+        datum = F.col(f"_d{i}")
+        if isinstance(fld.loc, int):
+            fail(F.col("arr").isNull(), "dict entry cannot be mapped with positional fields")
+            fail(datum.isNull(), "tuple entry index out of range")
+        else:
+            fail(F.col("map").isNull(), "tuple entry cannot be mapped with named fields")
+            fail(datum.isNull(), "dict entry field not found")
+        num = datum.try_cast("double")
         if fld.typ == "str":
-            valid = valid & datum.isNotNull()
-            label_entries.append(
-                F.struct(F.lit(fld.end_name).alias("key"), datum.alias("value"))
-            )
+            labels.append(entry(fld.end_name, datum))
         elif fld.typ == "num":
-            num = datum.try_cast("double")
-            valid = valid & num.isNotNull()
-            value_entries.append(
-                F.struct(F.lit(fld.end_name).alias("key"), num.alias("value"))
-            )
+            fail(num.isNull(), "could not parse numeric field")
+            values.append(entry(fld.end_name, num))
         elif fld.typ == "auto":
             # numeric ⇒ value, else ⇒ label (strategy.rs:31-38)
-            num = datum.try_cast("double")
-            valid = valid & datum.isNotNull()
-            value_entries.append(
-                F.when(
-                    num.isNotNull(),
-                    F.struct(F.lit(fld.end_name).alias("key"), num.alias("value")),
-                )
-            )
-            label_entries.append(
-                F.when(
-                    num.isNull() & datum.isNotNull(),
-                    F.struct(F.lit(fld.end_name).alias("key"), datum.alias("value")),
-                )
-            )
+            values.append(F.when(num.isNotNull(), entry(fld.end_name, num)))
+            labels.append(F.when(num.isNull(), entry(fld.end_name, datum)))
+        elif fld.typ == "ts" and fld.ts_format is None:
+            df, ts_col = _stage_guess_ts(df, datum, f"_ts{i}", ts_fallback)
+            fail(ts_col.isNull(), _GUESS_ERR)
         elif fld.typ == "ts":
-            if fld.ts_format is None:
-                df, parsed = _stage_guess_ts(df, datum, f"_ts{i}", ts_fallback)
-            else:
-                parsed = _ts_expr(datum, fld.ts_format)
-            valid = valid & datum.isNotNull() & parsed.isNotNull()
-            ts_col = parsed
+            ts_col = _ts_expr(datum, fld.ts_format)
+            fail(ts_col.isNull(), "couldn't parse timestamp")
         else:  # pragma: no cover
             raise PqError(f"unknown field type {fld.typ}")
 
-    def entries_map(entries_list, empty, value_type):
+    def as_map(entries_list, value_type):
         if not entries_list:
-            return empty
+            return _empty_map(value_type)
         return F.map_from_entries(
             F.filter(F.array(*entries_list), lambda x: x.isNotNull())
         )
 
-    rec = df.select(
+    return df.select(
         F.col("line_no").alias("seq"),
         ts_col.alias("ts"),
-        entries_map(label_entries, _empty_map("string"), "string").alias("labels"),
-        entries_map(value_entries, _empty_map("double"), "double").alias("values"),
-        valid.alias("_valid"),
-    ).filter(F.col("_valid")).drop("_valid")
-
-    # --since / --until (reference: src/parse/mapping/mapper.rs:45-54):
-    # untimestamped records pass both checks.
-    if since_ms is not None:
-        rec = rec.filter(F.col("ts").isNull() | (F.col("ts") >= F.lit(since_ms)))
-    if until_ms is not None:
-        rec = rec.filter(F.col("ts").isNull() | (F.col("ts") <= F.lit(until_ms)))
-    return rec
-
-
-def map_errors(
-    entries: DataFrame, mapper: Mapper, ts_fallback: bool = True
-) -> DataFrame:
-    """Per-entry mapping errors → DF[line_no, error] — the ``-v`` channel.
-
-    Mirrors the reference's first-failing-field semantics and message texts
-    (src/parse/mapping/strategy.rs:43,64,73,77-81,90; utils/time.rs:41):
-    the mapper iterates fields in declaration order and returns on the
-    first error, so a chained when() in the same order reproduces both the
-    dropped set and the reported message. ``ts_fallback`` as in
-    ``map_records``."""
-    err = F.lit(None).cast("string")
-    staged = entries
-
-    def first_err(*cases):
-        # coalesce names ``err`` once; when(err IS NOT NULL, err) named it
-        # twice, doubling the expression tree at every check
-        nonlocal err
-        for cond, msg in cases:
-            err = F.coalesce(err, F.when(cond, F.lit(msg)))
-
-    for fi, fld in enumerate(mapper.fields):
-        if fld.typ == "const":
-            continue
-        datum = _datum(fld)
-        if isinstance(fld.loc, int):
-            first_err(
-                (F.col("arr").isNull(), "dict entry cannot be mapped with positional fields"),
-                (datum.isNull(), "tuple entry index out of range"),
-            )
-        else:
-            first_err(
-                (F.col("map").isNull(), "tuple entry cannot be mapped with named fields"),
-                (datum.isNull(), "dict entry field not found"),
-            )
-        if fld.typ == "num":
-            first_err((datum.try_cast("double").isNull(), "could not parse numeric field"))
-        elif fld.typ == "ts":
-            if fld.ts_format is None:
-                staged, parsed = _stage_guess_ts(staged, datum, f"_ets{fi}", ts_fallback)
-            else:
-                parsed = _ts_expr(datum, fld.ts_format)
-            msg = (
-                "couldn't guess time format"
-                if fld.ts_format is None
-                else "couldn't parse timestamp"
-            )
-            first_err((parsed.isNull(), msg))
-
-    return (
-        staged.select("line_no", err.alias("error"))
-        .filter(F.col("error").isNotNull())
+        as_map(labels, "string").alias("labels"),
+        as_map(values, "double").alias("values"),
+        error.alias("error"),
     )
+
+
+def _rows_where(df: DataFrame, cond, *cols) -> DataFrame:
+    # a generator, not a Filter: the optimizer pushes a filter below the
+    # staged timestamp projections and inlines them into it, so every row
+    # would run the guess cascade (and cross to Python) a second time
+    return df.select(F.inline(F.when(cond, F.array(F.struct(*cols)))))
+
+
+def records_of(
+    mapped: DataFrame, since_ms: int | None = None, until_ms: int | None = None
+) -> DataFrame:
+    """The records of ``map_entries``: entries that mapped, inside the
+    ``--since``/``--until`` range (reference: src/parse/mapping/
+    mapper.rs:45-54; untimestamped records pass both checks)."""
+    ts = F.col("ts")
+    keep = F.col("error").isNull()
+    if since_ms is not None:
+        keep = keep & (ts.isNull() | (ts >= F.lit(since_ms)))
+    if until_ms is not None:
+        keep = keep & (ts.isNull() | (ts <= F.lit(until_ms)))
+    return _rows_where(mapped, keep, "seq", "ts", "labels", "values")
+
+
+def errors_of(mapped: DataFrame) -> DataFrame:
+    """The ``-v`` mapping errors of ``map_entries`` → DF[line_no, error]."""
+    error = F.col("error")
+    return _rows_where(mapped, error.isNotNull(), F.col("seq").alias("line_no"), error)
+
+
+def ts_fallback_needed(entries: DataFrame, mapper: Mapper) -> bool:
+    """Whether the pandas timestamp fallback can change the output: some
+    entry's first failing field is a no-format ``ts`` the JVM half of the
+    cascade leaves NULL. An entry that failed an earlier field is dropped
+    with that field's message either way. One JVM-only aggregate (a
+    map-stage and a result job under AQE); False, with no job, when the
+    mapper has no such field. An aggregate, not ``filter(...).limit(1)``:
+    ``limit`` scans the partitions in serial rounds."""
+    if not mapper.guesses_ts:
+        return False
+    mapped = map_entries(entries, mapper, ts_fallback=False)
+    return bool(mapped.select(F.bool_or(F.col("error") == _GUESS_ERR)).first()[0])
 
 
 # ---------------------------------------------------------------------------

@@ -209,12 +209,9 @@ class PqEngine:
         ts_fallback = not isinstance(
             ast.decoder, RegexDecoder
         ) or ingest.ts_fallback_needed(entries, ast.mapper)
-        records = ingest.map_records(
-            entries, ast.mapper, since_ms, until_ms, ts_fallback=ts_fallback
-        )
-        errors = errors.unionByName(
-            ingest.map_errors(entries, ast.mapper, ts_fallback=ts_fallback)
-        )
+        mapped = ingest.map_entries(entries, ast.mapper, ts_fallback)
+        records = ingest.records_of(mapped, since_ms, until_ms)
+        errors = errors.unionByName(ingest.errors_of(mapped))
         if ast.query is None:
             return ProgramResult("records", ast.formatter, records=records, errors=errors)
 
@@ -398,10 +395,10 @@ def consume_stream_lines(
         if not chunk:
             return consumed
         if probe:
-            recs = ingest.map_records(
+            recs = ingest.records_of(ingest.map_entries(
                 ingest.decode(ingest.lines_df(spark, chunk), ast.decoder),
                 ast.mapper,
-            )
+            ))
             first_bad = recs.where(
                 F.col("ts").isNotNull() & (F.col("ts") > F.lit(until_ms))
             ).agg(F.min("seq").alias("m")).collect()[0]["m"]

@@ -58,6 +58,11 @@ class MapperField:
 class Mapper:
     fields: list[MapperField]
 
+    @property
+    def guesses_ts(self) -> bool:
+        """Whether some ``ts`` field has no format (the guess cascade)."""
+        return any(f.typ == "ts" and f.ts_format is None for f in self.fields)
+
 
 @dataclass
 class ProgramAST:

@@ -123,7 +123,8 @@ def _page_enriched(pages: DataFrame, verify: bool = False) -> DataFrame:
 
     ``verify=True`` additionally computes ``_bad`` — the byte-identity
     extraction-invariant flag (pipeline.run_pipeline sums it over the
-    pages that feed a stale partition, before any commit)."""
+    pages that feed a stale partition, before any commit;
+    pipeline.verify_extraction over all pages)."""
     cols = [
         F.unix_millis("warc_ts").alias("_ts"),
         F.regexp_extract("url", r"^https?://([^/]+)/", 1).alias("domain"),
@@ -137,7 +138,7 @@ def _page_enriched(pages: DataFrame, verify: bool = False) -> DataFrame:
             .cast("long")
             .alias("_bad")
         )
-    return pages.select(*cols).withColumn("_ts2", F.col("_ts"))
+    return pages.select(*cols)
 
 
 _PAGE_TABLE_ARGS = dict(

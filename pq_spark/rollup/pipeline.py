@@ -27,7 +27,6 @@ from .lineage import PART_COL, TierStore, date_of, with_date
 from .pages import (
     _PAGE_TABLE_ARGS,
     _page_enriched,
-    extract_text_udf,
     page_series_dim_from_enriched,
 )
 from .tiers import TIER_MS, attach_series, series_key, tier_from_tier, tier_partials
@@ -38,10 +37,8 @@ _TIERS = ("tier_1m", "tier_1h", "tier_1d")
 def verify_extraction(pages: DataFrame) -> int:
     """Byte-identical per-url extraction invariant: count mismatches
     (must be 0). Distributed check — no collect of page data."""
-    extracted = pages.withColumn("_etext", extract_text_udf()(F.col("html")))
-    return extracted.filter(
-        ~F.col("_etext").eqNullSafe(F.col("text"))
-    ).count()
+    bad = _page_enriched(pages, verify=True).agg(F.sum("_bad")).first()[0]
+    return bad or 0
 
 
 def run_pipeline(

@@ -5,6 +5,8 @@ Expected outputs hand-derived from the reference semantics."""
 
 import json
 
+import pytest
+
 from pq_spark import run_cli
 
 PROGRAM = (
@@ -91,23 +93,66 @@ def test_verbose_error_channel(spark):
     ]
 
 
-def test_verbose_map_errors(spark):
+# first-failing-field message per bad entry (strategy.rs:43,64,73,77-81,90;
+# utils/time.rs:41): program, input, stdout, stderr
+MAP_ERRORS = {
+    "json-named": (
+        "json | map {.x:num as v}",
+        ['{"x": "nope"}', '{"y": 1}', "[1,2]", '{"x": 3}'],
+        "4: v=3\n",
+        "could not parse numeric field\ndict entry field not found\n"
+        "tuple entry cannot be mapped with named fields\n",
+    ),
+    "json-positional": (
+        "json | map {.1:num as v}",
+        ['{"x": 1}', "[5]", "[5, 6]"],
+        "3: v=6\n",
+        "dict entry cannot be mapped with positional fields\n"
+        "tuple entry index out of range\n",
+    ),
+    "guess-ts": (
+        r"/^(\S+) (\d+)$/ | map {.0:ts, .1:num as v}",
+        ["2021-01-01T00:00:01 10", "yesterday 20"],
+        "1: 2021-01-01T00:00:01.000\tv=10\n",
+        "couldn't guess time format\n",
+    ),
+    "format-ts": (
+        r'/^(\S+) (\d+)$/ | map {.0:ts "%Y-%m-%d", .1:num as v}',
+        ["2021-01-01 10", "01/01/2021 20"],
+        "1: 2021-01-01T00:00:00.000\tv=10\n",
+        "couldn't parse timestamp\n",
+    ),
+    "order-num-then-ts": (
+        r"/^(\S+) (\S+)$/ | map {.1:num as v, .0:ts}",
+        ["yesterday many", "2021-01-01T00:00:01 7"],
+        "2: 2021-01-01T00:00:01.000\tv=7\n",
+        "could not parse numeric field\n",
+    ),
+    "order-ts-then-num": (
+        r"/^(\S+) (\S+)$/ | map {.0:ts, .1:num as v}",
+        ["yesterday many", "2021-01-01T00:00:01 7"],
+        "2: 2021-01-01T00:00:01.000\tv=7\n",
+        "couldn't guess time format\n",
+    ),
+    "order-key-then-num": (
+        "json | map {.b:str as s, .a:num as v}",
+        ['{"a": "x"}', '{"a": 1, "b": "k"}'],
+        "2: s=k\tv=1\n",
+        "dict entry field not found\n",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", MAP_ERRORS)
+def test_verbose_map_errors(spark, case):
     import contextlib
     import io
 
+    program, log, want_out, want_err = MAP_ERRORS[case]
     err = io.StringIO()
     with contextlib.redirect_stderr(err):
-        out = run_cli(
-            spark, ["pq", "json | map {.x:num as v}", "-v"],
-            ['{"x": "nope"}', '{"y": 1}', "[1,2]", '{"x": 3}'],
-        )
-    assert out.decode().splitlines() == ["4: v=3"]
-    # first-failing-field message per bad entry (strategy.rs:43,73,77)
-    assert err.getvalue().splitlines() == [
-        "could not parse numeric field",
-        "dict entry field not found",
-        "tuple entry cannot be mapped with named fields",
-    ]
+        out = run_cli(spark, ["pq", program, "-v"], log)
+    assert (out.decode(), err.getvalue()) == (want_out, want_err)
 
 
 def test_verbose_json_entry_repr(spark):

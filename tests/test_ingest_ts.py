@@ -4,6 +4,7 @@ RFC2822 claim staged above it) must agree with the Python cascade
 back to Python, so only a non-NULL disagreement can corrupt results."""
 
 import random
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -307,3 +308,36 @@ def test_cli_verbose_errors_run_in_the_jvm(spark, fallback_rows):
             start=1,
         )
     ]
+
+
+def _final_tree(plan):
+    # an adaptive plan prints its final tree, then its initial one
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_cli_runs_the_cascade_once_per_row(spark):
+    # the records view plans no Filter over the staged timestamp columns,
+    # so the cascade (and with it the RFC2822 claim) is in each plan once,
+    # and the fallback crosses to Python in one node
+    program = TS_PROGRAM + " | to_json"
+    for log, python_nodes in ((TS_LOG, 0), (TS_LOG + [UNUSUAL], 1)):
+        _, plans = _executed_plans(spark, lambda: _cli(spark, program, log))
+        assert plans
+        assert max(p.count(ingest._RFC2822_RE) for p in plans) == 1
+        assert max(
+            len(re.findall(r"ArrowEvalPython \(\d+\)", _final_tree(p))) for p in plans
+        ) == python_nodes
+
+
+def test_cli_gate_ignores_lines_an_earlier_field_drops(spark, fallback_rows):
+    # the bad time sits on a line whose numeric field fails first: the
+    # line is dropped with that message, so no row needs the fallback
+    program = r"/^(\w+)\|(.*)$/ | map {.0:num as bytes, .1:ts}"
+    log = ["10|2024-01-01T00:00:01Z", "20|2024-01-01T00:00:03Z", "many|not a time"]
+    (out, err), plans = _executed_plans(spark, lambda: _cli(spark, program, log, "-v"))
+    assert fallback_rows.value == 0
+    assert plans and not [p for p in plans if "EvalPython" in p]
+    assert (out, err) == (
+        b"1: 2024-01-01T00:00:01.000\tbytes=10\n2: 2024-01-01T00:00:03.000\tbytes=20\n",
+        "could not parse numeric field\n",
+    )
