@@ -18,6 +18,7 @@ import contextlib
 import io
 import json
 import os
+import re
 import time
 
 HEADLINE = [
@@ -56,6 +57,19 @@ def _job_count(spark) -> int:
     return len(t.getJobIdsForGroup(None) or [])
 
 
+def _mask_ids(plan: str) -> str:
+    """Mask the session counters in a formatted plan: expression ids
+    (``#123``), lambda variable suffixes (``lambda x_739``), exchange
+    plan ids (``plan_id=96166``) and checkpointed RDD ids
+    (``MapPartitionsRDD[3248]``). They count what the session built
+    before, so they differ between runs of one plan; masked, two
+    captures compare with ``diff -r``."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"(lambda \w+?)_\d+", r"\1_N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
+
+
 def profile_queries(spark, sf_dir: str, names: list[str], reps: int,
                     plans_dir: str | None, suffix: str) -> dict:
     from pq_spark.driver_queries import QUERIES
@@ -80,7 +94,7 @@ def profile_queries(spark, sf_dir: str, names: list[str], reps: int,
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
                     df.explain("formatted")
-                plan_txt = buf.getvalue()
+                plan_txt = _mask_ids(buf.getvalue())
             t1b = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()

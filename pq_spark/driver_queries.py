@@ -1822,7 +1822,7 @@ register(
     # statistical over-time extension family: interpolated window quantile
     # (Prometheus linear-interpolation quantile == SQL quantile_cont);
     # stddev/stdvar_over_time share the machinery (population moments over
-    # the same window groups, _stat_over_time_val)
+    # the same window groups, _over_time_val)
     "pq_quantile_over_time",
     lambda spark, sf: _cells(
         spark, sf, "quantile_over_time(0.5, value[5m])", MIN_MS,

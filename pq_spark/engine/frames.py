@@ -26,8 +26,8 @@ signature string ever rides a fact-sized shuffle:
   (drop ``__name__``, label_replace, aggregation grouping) are dim-side
   transforms — constant cost regardless of fact cardinality.
 
-``cells`` / ``points`` are the legacy wide views (facts ⋈ broadcast dim),
-used only at the output edge (formatters, relational API).
+``VectorFrame.cells`` is the wide view (facts ⋈ broadcast dim), used only
+at the output edge (formatters, relational API).
 
 ``checks`` carries deferred strict-mode validations (duplicate-series /
 many-to-one panics in the reference, src/query/value.rs:86-92,114-116);
@@ -116,10 +116,3 @@ class RangeFrame:
         self.facts = facts
         self.dim = dim
         self.checks = checks if checks is not None else []
-
-    @property
-    def points(self) -> DataFrame:
-        """Wide view [instant, sig, labels, ord, value, ts, seq]."""
-        return self.facts.join(F.broadcast(self.dim), "skey").select(
-            "instant", "sig", "labels", "ord", "value", "ts", "seq"
-        )

@@ -129,7 +129,7 @@ def sig_expr(labels: Column) -> Column:
 _PAIR_SEP = "\xfe"
 
 
-def _sig2_expr(labels: Column) -> Column:
+def sig2_expr(labels: Column) -> Column:
     """Invertible signature variant: same sorted ``k\\xffv`` pairs, joined
     with a ``\\xfe`` pair separator so the label map can be reconstructed
     AFTER a shuffle. This lets the series-dim dedup run as a plain
@@ -147,6 +147,12 @@ def _sig2_expr(labels: Column) -> Column:
     )
 
 
+def _empty_labels() -> Column:
+    return F.map_from_arrays(
+        F.array().cast("array<string>"), F.array().cast("array<string>")
+    )
+
+
 def _labels_from_sig2(sig2: Column) -> Column:
     """Rebuild the label map from the invertible signature."""
     def entry(pair: Column):
@@ -154,12 +160,67 @@ def _labels_from_sig2(sig2: Column) -> Column:
         value = pair.substr(F.length(key) + F.lit(2), F.length(pair))
         return F.struct(key.alias("key"), value.alias("value"))
 
-    empty = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-    return F.when(sig2 == "", empty).otherwise(
+    return F.when(sig2 == "", _empty_labels()).otherwise(
         F.map_from_entries(F.transform(F.split(sig2, _PAIR_SEP), entry))
     )
+
+
+def dim_from_sig2(rel: DataFrame, sig2: str = "_sig2") -> DataFrame:
+    """The series dim [skey, sig, labels, ord] of a relation's invertible
+    signature column ``sig2``, computed on its (dim-sized) rows: the sig is
+    the sig2 without pair separators, the skey its 64-bit hash, the label
+    map rebuilt from the sig2, and the output order the sig itself."""
+    return rel.select(
+        F.replace(F.col(sig2), F.lit(_PAIR_SEP), F.lit("")).alias("sig"), sig2
+    ).select(
+        F.xxhash64("sig").alias("skey"),
+        "sig",
+        _labels_from_sig2(F.col(sig2)).alias("labels"),
+        F.col("sig").alias("ord"),
+    )
+
+
+def labelless_vector(grid: DataFrame, facts: DataFrame, checks=None) -> VectorFrame:
+    """One label-less series (the empty signature) carrying ``facts``'
+    [instant, value] rows: ``vector(s)`` and a top-level per-instant
+    scalar, which the output layer presents as a vector."""
+    skey = F.xxhash64(F.lit(""))
+    dim = grid.limit(1).select(
+        skey.alias("skey"), F.lit("").alias("sig"),
+        _empty_labels().alias("labels"), F.lit("").alias("ord"),
+    )
+    return VectorFrame(
+        grid, facts.select("instant", skey.alias("skey"), "value"), dim, checks
+    )
+
+
+# packed (ts, seq) ordering key: first/last picks over a LONG keep the
+# aggregation in HashAggregate (struct keys force SortAggregate). Ties only
+# wrap at seq deltas of 2^21 within one millisecond of one series, and the
+# ts*2^21 product wraps int64 at ts >= 2^42 ms (~year 2109) — both out of
+# contract for log timestamps (same envelope as the reference's i64-ms
+# model; see COVERAGE.md)
+_OKEY_SEQ_SPAN = 1 << 21
+
+
+def okey_expr(seq: bool = True) -> Column:
+    """The packed ordering key ``ts·2^21 + seq mod 2^21``. ``seq=False``
+    packs a stream with one point per (series, ts), whose seq is 0."""
+    ts = F.col("ts") * F.lit(_OKEY_SEQ_SPAN)
+    return ts + F.pmod(F.col("seq"), F.lit(_OKEY_SEQ_SPAN)) if seq else ts
+
+
+def _relabeled(dim: DataFrame, labels: Column, ord="ord") -> DataFrame:
+    """A dim rewrite: the series' label maps become ``labels`` and are
+    re-signed; the skey, and by default the output order, stay."""
+    return dim.select(
+        "skey", sig_expr(labels).alias("sig"), labels.alias("labels"), ord
+    )
+
+
+def _sample_skey() -> Column:
+    """The 64-bit series key of a sample row, hashed from its labels."""
+    return F.xxhash64(sig_expr(F.col("labels"))).alias("skey")
 
 
 def _labels_with(labels: Column, names) -> Column:
@@ -391,7 +452,7 @@ class Planner:
         matched = self.ctx.samples
         for m in sel.matchers:
             matched = matched.filter(self._matcher_filter(m))
-        if getattr(sel, "offset_ms", 0):
+        if sel.offset_ms:
             # extension (reference TODO, expr.rs:33): evaluate the selector
             # offset_ms in the past. Shifting every matched sample forward
             # by the offset makes a window ending at t equal the original
@@ -437,7 +498,7 @@ class Planner:
         # no owner releases it: the ContextCleaner frees its blocks once
         # every frame over it is garbage-collected.
         per_series = (
-            matched.select(_sig2_expr(F.col("labels")).alias("_sig2"), "ts")
+            matched.select(sig2_expr(F.col("labels")).alias("_sig2"), "ts")
             .groupBy("_sig2")
             .agg(F.min("ts").alias("_tsmin"), F.max("ts").alias("_tsmax"))
             .localCheckpoint(eager=False)
@@ -446,28 +507,18 @@ class Planner:
             F.min("_tsmin").alias("_tsmin"), F.max("_tsmax").alias("_tsmax")
         )
         params, grid = self._params_from_bounds(bounds, lookback)
-        sel_dim = (
-            per_series.select(
-                F.replace(F.col("_sig2"), F.lit(_PAIR_SEP), F.lit("")).alias("sig"),
-                "_sig2",
-            )
-            .select(
-                F.xxhash64("sig").alias("skey"),
-                "sig",
-                _labels_from_sig2(F.col("_sig2")).alias("labels"),
-                F.col("sig").alias("ord"),
-            )
-        )
-        return matched, params, grid, sel_dim
+        return matched, params, grid, dim_from_sig2(per_series)
 
     def _plan_selector(self, sel: VectorSelector):
         ctx = self.ctx
         interval = ctx.interval_ms
         # a range selector's duration overrides the lookback (vector.rs:29-32)
         lookback = sel.duration_ms if sel.duration_ms is not None else ctx.lookback_ms
+        instant = sel.duration_ms is None
         matched, params, grid, sel_dim = self._selector_parts(sel, lookback)
+        cols = (_sample_skey(), "value", "ts", "seq", okey_expr().alias("_okey"))
 
-        if getattr(sel, "at_ms", None) is not None:
+        if sel.at_ms is not None:
             # extension (PromQL `@` modifier): the selector window is
             # pinned to the fixed instant T — every grid instant sees the
             # same sample(s). The grid itself stays the selector's normal
@@ -476,37 +527,39 @@ class Planner:
             # the shifted stream is the original window at T − offset.
             if not ctx.extensions:
                 raise PqError("@ modifier is not implemented")
-            return self._at_fixed(sel, matched, grid, sel_dim, lookback)
+            facts = self._at_fixed(matched, cols, grid, sel.at_ms, lookback, instant)
+        elif instant and math.ceil(lookback / interval) > self.FANOUT_SWITCH:
+            # strategy switch: the serving-instant explode multiplies rows by
+            # ceil(lookback/interval) pre-shuffle — above FANOUT_SWITCH the
+            # skeleton/window plan is cheaper (see _instant_window_strategy)
+            facts = self._instant_window_strategy(matched, grid, sel_dim, lookback)
+        else:
+            facts = self._serve(matched, params, lookback, cols)
+            if instant:
+                # instant vector: latest sample per series in the lookback window
+                facts = facts.groupBy("instant", "skey").agg(
+                    F.max_by("value", "_okey").alias("value"),
+                )
+        return (VectorFrame if instant else RangeFrame)(grid, facts, sel_dim)
 
-        # strategy switch: the serving-instant explode multiplies rows by
-        # ceil(lookback/interval) pre-shuffle — above FANOUT_SWITCH the
-        # skeleton/window plan is cheaper (see _instant_window_strategy)
-        if (
-            sel.duration_ms is None
-            and math.ceil(lookback / interval) > self.FANOUT_SWITCH
-        ):
-            facts = self._instant_window_strategy(
-                matched, grid, sel_dim, interval, lookback
-            )
-            return VectorFrame(grid, facts, sel_dim)
-
-        j = matched.crossJoin(F.broadcast(params.filter(F.col("_kend").isNotNull())))
+    def _serve(
+        self, src: DataFrame, params: DataFrame, lookback: int, cols
+    ) -> DataFrame:
+        """The serving-instant explode: each ``src`` row (a sample at
+        ``ts``) serves the grid instants ``t0 + k·interval`` with
+        ``ts ≤ t < ts + lookback``, k clipped to ``[0, kend]``; one output
+        row [instant, *cols] per served instant."""
+        interval = self.ctx.interval_ms
+        j = src.crossJoin(F.broadcast(params.filter(F.col("_kend").isNotNull())))
         k0 = F.greatest(F.lit(0).cast("long"), _ceildiv(F.col("ts") - F.col("_t0"), interval))
         k1 = F.least(
             F.col("_kend"),
             _floordiv(F.col("ts") + F.lit(lookback - 1) - F.col("_t0"), interval),
         )
-        # packed (ts, seq) ordering key keeps the gap-fill agg in
-        # HashAggregate (struct keys force SortAggregate); ties only wrap at
-        # seq deltas of 2^21 within one millisecond of one series, and the
-        # ts*2^21 product wraps int64 at ts >= 2^42 ms (~year 2109) — both
-        # out of contract for log timestamps (same envelope as the
-        # reference's i64-ms model; see COVERAGE.md)
-        okey = (F.col("ts") * F.lit(1 << 21) + F.pmod(F.col("seq"), F.lit(1 << 21))).alias("_okey")
         # few Dataset ops on purpose: every transformation re-analyzes the
         # whole subtree on the driver (eager per-op analysis), so the
         # serve projection explodes the ALREADY-SHIFTED instants directly
-        served = (
+        return (
             j.select("*", k0.alias("_k0"), k1.alias("_k1"))
             .filter(F.col("_k1") >= F.col("_k0"))
             .select(
@@ -516,56 +569,37 @@ class Planner:
                         lambda k: F.col("_t0") + k * F.lit(interval),
                     )
                 ).alias("instant"),
-                F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
-                "value",
-                "ts",
-                "seq",
-                okey,
+                *cols,
             )
         )
 
-        if sel.duration_ms is None:
-            # instant vector: latest sample per series in the lookback window
-            facts = served.groupBy("instant", "skey").agg(
-                F.max_by("value", "_okey").alias("value"),
-            )
-            return VectorFrame(grid, facts, sel_dim)
-
-        return RangeFrame(grid, served, sel_dim)
-
+    @staticmethod
     def _at_fixed(
-        self, sel: VectorSelector, matched: DataFrame, grid: DataFrame,
-        sel_dim: DataFrame, lookback: int,
-    ):
+        src: DataFrame, cols, grid: DataFrame, t_at: int, lookback: int,
+        instant: bool,
+    ) -> DataFrame:
         """Fixed-instant (`@`) evaluation: one window (T−lookback, T] over
-        the matched samples, replicated to every grid instant.
+        the ``src`` rows, replicated to every grid instant: the latest row
+        per series for an instant vector, every window point for a range.
 
         Scale shape: the fixed-window aggregate is series-dim-sized (one
         row per series for instants, window-point-bounded for ranges), so
         it BROADCASTS against the grid — a BroadcastNestedLoopJoin over
         grid × dim rows, never a data-sized cartesian."""
-        t_at = int(sel.at_ms)
-        okey = (
-            F.col("ts") * F.lit(1 << 21) + F.pmod(F.col("seq"), F.lit(1 << 21))
-        ).alias("_okey")
-        fixed = matched.filter(
+        t_at = int(t_at)
+        fixed = src.filter(
             (F.col("ts") > F.lit(t_at - lookback)) & (F.col("ts") <= F.lit(t_at))
-        ).select(
-            F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
-            "value", "ts", "seq", okey,
-        )
-        if sel.duration_ms is None:
+        ).select(*cols)
+        if instant:
             latest = fixed.groupBy("skey").agg(
                 F.max_by("value", "_okey").alias("value")
             )
-            facts = grid.crossJoin(F.broadcast(latest)).select(
+            return grid.crossJoin(F.broadcast(latest)).select(
                 "instant", "skey", "value"
             )
-            return VectorFrame(grid, facts, sel_dim)
-        facts = grid.crossJoin(F.broadcast(fixed)).select(
+        return grid.crossJoin(F.broadcast(fixed)).select(
             "instant", "skey", "value", "ts", "seq", "_okey"
         )
-        return RangeFrame(grid, facts, sel_dim)
 
     # explode fan-out above this, the skeleton/window strategy wins: the
     # explode multiplies every sample by ceil(lookback/interval) rows BEFORE
@@ -573,22 +607,20 @@ class Planner:
     # rows exactly once
     FANOUT_SWITCH = 16
 
-    def _instant_window_strategy(
-        self, matched: DataFrame, grid: DataFrame,
-        sel_dim: DataFrame, interval: int, lookback: int,
-    ) -> DataFrame:
-        """High-fanout instant vectors (lookback ≫ interval): union the
-        samples with a (series × grid-instant) skeleton, carry the latest
-        sample per series with a last-value window, keep skeleton rows
-        whose source sample is still fresh. One shuffle keyed by skey; the
-        per-series sort replaces the explode's ceil(lookback/interval)×
-        row multiplication.
+    @staticmethod
+    def _skeleton_carry(
+        matched: DataFrame, grid: DataFrame, sel_dim: DataFrame, lookback: int,
+    ):
+        """The window strategies' input: the samples [skey, ts, _okey,
+        value] unioned with a (series × grid-instant) skeleton whose rows
+        carry ``_isinst = 1`` (NULL on samples, which therefore sort first
+        at equal ts) and NULL value/_okey. Returns it with the
+        (skey, time-block) window partitioning both strategies order.
 
-        Skew immunity: the window partitions by (skey, time-block) with
-        block width = lookback. A carried value at instant t only survives
-        the freshness filter if its source sample is within ``lookback``
-        behind, i.e. in t's block or the one before — so each sample is
-        replicated into its own block and the next (fan-out exactly 2,
+        Skew immunity: block width = lookback. A window ending at t reaches
+        back at most ``lookback − 1`` ms, into t's block or the one before
+        — so each sample is replicated into its own block and the next
+        (fan-out exactly 2 ≪ FANOUT_SWITCH, the explode path's break-even,
         mirroring the Gorilla super-block boundary carry), and a
         pathologically hot series shards across ceil(span/lookback) tasks
         instead of serializing on one."""
@@ -596,11 +628,7 @@ class Planner:
 
         blk = _floordiv(F.col("ts"), lookback)
         pts = matched.select(
-            F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
-            "ts",
-            F.pmod(F.col("seq"), F.lit(1 << 21)).alias("_seq"),
-            "value",
-            F.lit(0).alias("_isinst"),
+            _sample_skey(), "ts", okey_expr().alias("_okey"), "value"
         )
         # native copy in its own block + boundary carry into the next
         pts = pts.withColumn("_blk", blk).unionByName(
@@ -609,23 +637,36 @@ class Planner:
         skeleton = grid.crossJoin(F.broadcast(sel_dim.select("skey"))).select(
             "skey",
             F.col("instant").alias("ts"),
-            F.lit(None).cast("long").alias("_seq"),
+            F.lit(None).cast("long").alias("_okey"),
             F.lit(None).cast("double").alias("value"),
-            F.lit(1).alias("_isinst"),
         ).withColumn("_blk", _floordiv(F.col("ts"), lookback))
-        w = (
-            Window.partitionBy("skey", "_blk")
-            .orderBy("ts", "_isinst", "_seq")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        unioned = pts.unionByName(
+            skeleton.withColumn("_isinst", F.lit(1)), allowMissingColumns=True
         )
-        unioned = pts.unionByName(skeleton)
+        return unioned, Window.partitionBy("skey", "_blk")
+
+    def _instant_window_strategy(
+        self, matched: DataFrame, grid: DataFrame,
+        sel_dim: DataFrame, lookback: int,
+    ) -> DataFrame:
+        """High-fanout instant vectors (lookback ≫ interval): carry the
+        latest sample per series over the skeleton with a last-value
+        window, keep skeleton rows whose source sample is still fresh. One
+        shuffle keyed by (skey, block); the per-series sort replaces the
+        explode's ceil(lookback/interval)× row multiplication."""
+        from pyspark.sql import Window
+
+        unioned, part = self._skeleton_carry(matched, grid, sel_dim, lookback)
+        w = part.orderBy("ts", "_isinst", "_okey").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
         carried = unioned.select(
             "skey",
             "ts",
             "_isinst",
             F.last("value", ignorenulls=True).over(w).alias("_lv"),
             F.last(
-                F.when(F.col("_isinst") == 0, F.col("ts")), ignorenulls=True
+                F.when(F.col("_isinst").isNull(), F.col("ts")), ignorenulls=True
             ).over(w).alias("_lts"),
         )
         return carried.filter(
@@ -664,7 +705,6 @@ class Planner:
         if not isinstance(inner, VectorFrame):
             raise PqError("subquery expects an instant vector expression")
 
-        interval = self.ctx.interval_ms
         lookback = int(node.range_ms)
         # offset: shift the inner sample stream forward (selector
         # convention) — a window ending at t over the shifted stream equals
@@ -674,57 +714,21 @@ class Planner:
             ts.cast("long").alias("ts"), "skey", "value"
         )
         params, grid = self._grid_params(samples, lookback)
-
+        # one inner sample per (series, instant): seq ≡ 0 in the packed
+        # ordering key
+        cols = (
+            "skey", "value", "ts", F.lit(0).cast("long").alias("seq"),
+            okey_expr(seq=False).alias("_okey"),
+        )
         if node.at_ms is not None:
             # `expr[r:s] @ T`: the outer window is pinned to T; every grid
             # instant sees the same inner points (same broadcast shape as
             # the selector `@` — inner points in one window are bounded by
             # series × ceil(range/step))
-            t_at = int(node.at_ms)
-            fixed = samples.filter(
-                (F.col("ts") > F.lit(t_at - lookback))
-                & (F.col("ts") <= F.lit(t_at))
-            ).select(
-                "skey", "value", "ts", F.lit(0).cast("long").alias("seq"),
-                (F.col("ts") * F.lit(1 << 21)).alias("_okey"),
-            )
-            facts = grid.crossJoin(F.broadcast(fixed)).select(
-                "instant", "skey", "value", "ts", "seq", "_okey"
-            )
-            return RangeFrame(grid, facts, inner.dim, inner.checks)
-        j = samples.crossJoin(
-            F.broadcast(params.filter(F.col("_kend").isNotNull()))
-        )
-        k0 = F.greatest(
-            F.lit(0).cast("long"), _ceildiv(F.col("ts") - F.col("_t0"), interval)
-        )
-        k1 = F.least(
-            F.col("_kend"),
-            _floordiv(F.col("ts") + F.lit(lookback - 1) - F.col("_t0"), interval),
-        )
-        served = (
-            j.withColumn("_k0", k0)
-            .withColumn("_k1", k1)
-            .filter(F.col("_k1") >= F.col("_k0"))
-            .select(
-                F.explode(F.sequence("_k0", "_k1")).alias("_k"),
-                "_t0",
-                "skey",
-                "value",
-                "ts",
-            )
-            .select(
-                (F.col("_t0") + F.col("_k") * F.lit(interval)).alias("instant"),
-                "skey",
-                "value",
-                "ts",
-                F.lit(0).cast("long").alias("seq"),
-                # one inner sample per (series, instant): seq ≡ 0 in the
-                # packed ordering key
-                (F.col("ts") * F.lit(1 << 21)).alias("_okey"),
-            )
-        )
-        return RangeFrame(grid, served, inner.dim, inner.checks)
+            facts = self._at_fixed(samples, cols, grid, node.at_ms, lookback, False)
+        else:
+            facts = self._serve(samples, params, lookback, cols)
+        return RangeFrame(grid, facts, inner.dim, inner.checks)
 
     # -- unary -----------------------------------------------------------------
 
@@ -771,7 +775,7 @@ class Planner:
         # the dim subtree once per column on the driver; the duplicated
         # subexpressions only re-evaluate on dim-sized rows
         _glabels = group_labels_expr(F.col("labels"), node.modifier)
-        _gsig2 = _sig2_expr(_glabels)
+        _gsig2 = sig2_expr(_glabels)
         _gsig = F.replace(_gsig2, F.lit(_PAIR_SEP), F.lit(""))
         gmap = inner.dim.select(
             "*",
@@ -943,28 +947,18 @@ class Planner:
                 raise PqError(f"unknown aggregation {op}")
 
         facts = agg.select("instant", F.col("_gkey").alias("skey"), "value")
-        gdim = (
-            gmap.select("_gsig2")
-            .distinct()
-            .select(
-                F.replace(F.col("_gsig2"), F.lit(_PAIR_SEP), F.lit("")).alias("sig"),
-                "_gsig2",
-            )
-            .select(
-                F.xxhash64("sig").alias("skey"),
-                "sig",
-                _labels_from_sig2(F.col("_gsig2")).alias("labels"),
-                F.col("sig").alias("ord"),
-            )
-        )
+        gdim = dim_from_sig2(gmap.select("_gsig2").distinct(), "_gsig2")
         return VectorFrame(inner.grid, facts, gdim, inner.checks)
 
     # -- over-time functions -------------------------------------------------------
 
     def _plan_function(self, node: FunctionCall):
         name = node.name
-        if name in AGG_OVER_TIME_FUNCS:
-            argnode = node.args[0]
+        if name in AGG_OVER_TIME_FUNCS or (
+            self.ctx.extensions and name in _STAT_OVER_TIME_FNS
+        ):
+            argnode = node.args[-1]
+            q = float(node.args[0]) if name == "quantile_over_time" else None
             if (
                 isinstance(argnode, VectorSelector)
                 and argnode.duration_ms is not None
@@ -975,31 +969,16 @@ class Planner:
                 # high window/interval ratio: fuse selector+function into a
                 # sliding-window plan instead of materializing each point
                 # ceil(range/interval) times (see _over_time_fused)
-                return self._over_time_fused(name, argnode)
-            arg = self.plan(argnode)
-            if not isinstance(arg, RangeFrame):
-                raise PqError(f"{name} expects a range vector")
-            return self._over_time(name, arg)
-        if self.ctx.extensions and name in EXTENSION_OVER_TIME_FUNCS:
-            arg = self.plan(node.args[0])
-            if not isinstance(arg, RangeFrame):
-                raise PqError(f"{name} expects a range vector")
-            return self._rate_family(name, arg)
-        if self.ctx.extensions and name in _STAT_OVER_TIME_FNS:
-            argnode = node.args[-1]
-            q = float(node.args[0]) if name == "quantile_over_time" else None
-            if (
-                isinstance(argnode, VectorSelector)
-                and argnode.duration_ms is not None
-                and argnode.at_ms is None  # @-pinned windows take _at_fixed
-                and math.ceil(argnode.duration_ms / self.ctx.interval_ms)
-                > self.FANOUT_SWITCH
-            ):
                 return self._over_time_fused(name, argnode, q)
             arg = self.plan(argnode)
             if not isinstance(arg, RangeFrame):
                 raise PqError(f"{name} expects a range vector")
             return self._over_time(name, arg, q)
+        if self.ctx.extensions and name in EXTENSION_OVER_TIME_FUNCS:
+            arg = self.plan(node.args[0])
+            if not isinstance(arg, RangeFrame):
+                raise PqError(f"{name} expects a range vector")
+            return self._rate_family(name, arg)
         if self.ctx.extensions and name in ("clamp", "clamp_max", "clamp_min"):
             arg = self.plan(node.args[0])
             if not isinstance(arg, VectorFrame):
@@ -1072,20 +1051,7 @@ class Planner:
         carrying ``s`` at every grid instant; the grid anchors on the full
         sample stream (a matcher-less selector)."""
         _, grid = self._grid_params(self.ctx.samples, self.ctx.lookback_ms)
-        skey = F.xxhash64(F.lit(""))
-        facts = grid.select(
-            "instant", skey.alias("skey"), F.lit(s).alias("value")
-        )
-        empty_labels = F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        )
-        dim = grid.limit(1).select(
-            skey.alias("skey"),
-            F.lit("").alias("sig"),
-            empty_labels.alias("labels"),
-            F.lit("").alias("ord"),
-        )
-        return VectorFrame(grid, facts, dim)
+        return labelless_vector(grid, grid.select("instant", F.lit(s).alias("value")))
 
     def _histogram_quantile(self, phi: float, vf: VectorFrame) -> VectorFrame:
         """Extension (Prometheus ``histogram_quantile(φ, v)``): per
@@ -1124,7 +1090,7 @@ class Planner:
             vf.dim.select(
                 "skey",
                 le_val.alias("_le"),
-                _sig2_expr(out_labels).alias("_gsig2"),
+                sig2_expr(out_labels).alias("_gsig2"),
             )
             .where(F.col("_le").isNotNull())
             .withColumn(
@@ -1132,18 +1098,7 @@ class Planner:
             )
             .withColumn("_gkey", F.xxhash64("_gsig"))
         )
-        gdim = (
-            gmap.select("_gsig2")
-            .distinct()
-            .select(
-                F.replace(F.col("_gsig2"), F.lit(_PAIR_SEP), F.lit("")).alias("sig"),
-                _labels_from_sig2(F.col("_gsig2")).alias("labels"),
-            )
-            .select(
-                F.xxhash64("sig").alias("skey"), "sig", "labels",
-                F.col("sig").alias("ord"),
-            )
-        )
+        gdim = dim_from_sig2(gmap.select("_gsig2").distinct(), "_gsig2")
         joined = vf.facts.join(
             F.broadcast(gmap.select("skey", "_gkey", "_le")), "skey"
         ).select("instant", "_gkey", "_le", "value")
@@ -1311,54 +1266,50 @@ class Planner:
         )
 
     @staticmethod
-    def _dropname_dim(dim: DataFrame) -> DataFrame:
-        """Dim rewrite: drop __name__, re-sign; output order stays the
-        ORIGINAL series sig (the reference emits in input-series order)."""
-        out_labels = _labels_without(F.col("labels"), [])
-        return dim.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            F.col("sig").alias("ord"),
+    def _dropname_dim(dim: DataFrame, keep_ord: bool = False) -> DataFrame:
+        """Dim rewrite: drop __name__, re-sign. The output order is the
+        ORIGINAL series sig (the reference emits in input-series order),
+        or with ``keep_ord`` the dim's existing ord."""
+        return _relabeled(
+            dim, _labels_without(F.col("labels"), []),
+            "ord" if keep_ord else F.col("sig").alias("ord"),
         )
 
     def _over_time(self, name: str, rf: RangeFrame, q: float | None = None) -> VectorFrame:
-        g = rf.facts.groupBy("instant", "skey")
-        if name == "count_over_time":
-            val = F.count("value").cast("double")
-        elif name == "sum_over_time":
-            val = F.sum("value")
-        elif name == "min_over_time":
-            val = F.min("value")
-        elif name == "max_over_time":
-            val = F.max("value")
-        elif name == "avg_over_time":
-            val = F.sum("value") / F.count("value")
-        elif name == "last_over_time":
-            # reference quirk: iterates the DESC-ordered window and takes
-            # .last() ⇒ the OLDEST point (function.rs:56 + vector.rs:235),
-            # diverging from Prometheus. Replicate with min_by over the
-            # packed ordering key (HashAggregate-friendly).
-            val = F.min_by("value", "_okey")
-        elif name in _STAT_OVER_TIME_FNS:
-            val = self._stat_over_time_val(name, q)
-        else:  # pragma: no cover
-            raise PqError(f"unknown over-time function {name}")
-
-        facts = g.agg(val.alias("value"))
+        facts = rf.facts.groupBy("instant", "skey").agg(
+            self._over_time_val(name, q).alias("value")
+        )
         return VectorFrame(rf.grid, facts, self._dropname_dim(rf.dim), rf.checks)
 
     @staticmethod
-    def _stat_over_time_val(name: str, q: float | None, w=None):
-        """Shared value expression for the statistical over-time
-        extensions, grouped (w=None) or windowed. Population moments
-        (Prometheus uses stddev/stdvar over the window population);
-        quantile is the exact interpolated percentile (Prometheus's
-        linear-interpolation quantile == SQL percentile_cont), with the
-        Prometheus out-of-range rule φ<0 → −Inf, φ>1 → +Inf."""
+    def _over_time_val(name: str, q: float | None, w=None):
+        """The value expression of an over-time function, grouped (w=None)
+        or windowed over ``w``. The statistical extensions use population
+        moments (Prometheus uses stddev/stdvar over the window
+        population); quantile is the exact interpolated percentile
+        (Prometheus's linear-interpolation quantile == SQL
+        percentile_cont), with the Prometheus out-of-range rule
+        φ<0 → −Inf, φ>1 → +Inf."""
         def over(c):
             return c.over(w) if w is not None else c
 
+        if name == "count_over_time":
+            return over(F.count("value")).cast("double")
+        if name == "sum_over_time":
+            return over(F.sum("value"))
+        if name == "min_over_time":
+            return over(F.min("value"))
+        if name == "max_over_time":
+            return over(F.max("value"))
+        if name == "avg_over_time":
+            return over(F.sum("value")) / over(F.count("value"))
+        if name == "last_over_time":
+            # reference quirk: iterates the DESC-ordered window and takes
+            # .last() ⇒ the OLDEST point (function.rs:56 + vector.rs:235),
+            # diverging from Prometheus. Replicate with min_by over the
+            # packed ordering key (HashAggregate-friendly; in a window it
+            # ignores the skeleton rows' null ordering keys).
+            return over(F.min_by("value", "_okey"))
         if name == "present_over_time":
             # 1 for any non-empty window; empty windows never reach here
             # (grouped: group requires a point; fused: the _n >= 1 filter)
@@ -1394,13 +1345,15 @@ class Planner:
                 ),
             )
             return F.element_at(F.element_at(bound, 1), 1)
+        if name != "quantile_over_time":  # pragma: no cover
+            raise PqError(f"unknown over-time function {name}")
         # NaN first: it passes both range guards (NaN<0 and NaN>1 are
         # false) but Spark's percentile rejects it — Prometheus says NaN
-        if q is not None and math.isnan(q):
+        if math.isnan(q):
             return F.lit(float("nan"))
-        if q is not None and q < 0:
+        if q < 0:
             return F.lit(float("-inf"))
-        if q is not None and q > 1:
+        if q > 1:
             return F.lit(float("inf"))
         return over(F.percentile("value", F.lit(q)))
 
@@ -1409,67 +1362,18 @@ class Planner:
     ) -> VectorFrame:
         """High-fanout over-time functions (range ≫ interval): instead of
         exploding every sample into ceil(range/interval) window copies,
-        union the samples with a (series × grid-instant) skeleton and
-        compute the function as a per-series SLIDING RANGE window.
-
-        Skew immunity: partitioned by (skey, time-block) with block width
-        = range. A window ending in block k reaches back at most
-        ``range − 1`` ms — into block k−1 at the furthest — so each sample
-        is replicated into its own block and the next (fan-out exactly 2 ≪
-        FANOUT_SWITCH, the explode path's break-even) and a hot series
-        shards across ceil(span/range) tasks. Equivalence incl. the
-        last_over_time oldest-point quirk is pinned by a force-both-paths
-        test."""
-        from pyspark.sql import Window
-
+        compute the function as a per-series SLIDING RANGE window over the
+        skeleton carry (``_skeleton_carry``: samples ∪ series × grid
+        instants, partitioned by (skey, range-wide block)). Equivalence
+        with the explode path, incl. the last_over_time oldest-point quirk,
+        is pinned by a force-both-paths test."""
         lookback = sel.duration_ms
         matched, params, grid, sel_dim = self._selector_parts(sel, lookback)
-        okey = (
-            F.col("ts") * F.lit(1 << 21) + F.pmod(F.col("seq"), F.lit(1 << 21))
-        )
-        blk = _floordiv(F.col("ts"), lookback)
-        pts = matched.select(
-            F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
-            "ts",
-            okey.alias("_okey"),
-            "value",
-        )
-        pts = pts.withColumn("_blk", blk).unionByName(
-            pts.withColumn("_blk", blk + F.lit(1))
-        )
-        skeleton = grid.crossJoin(F.broadcast(sel_dim.select("skey"))).select(
-            "skey",
-            F.col("instant").alias("ts"),
-            F.lit(None).cast("long").alias("_okey"),
-            F.lit(None).cast("double").alias("value"),
-        ).withColumn("_blk", _floordiv(F.col("ts"), lookback))
-        w = (
-            Window.partitionBy("skey", "_blk")
-            .orderBy("ts")
-            .rangeBetween(-(lookback - 1), 0)
-        )
-        if name == "count_over_time":
-            val = F.count("value").over(w).cast("double")
-        elif name == "sum_over_time":
-            val = F.sum("value").over(w)
-        elif name == "min_over_time":
-            val = F.min("value").over(w)
-        elif name == "max_over_time":
-            val = F.max("value").over(w)
-        elif name == "avg_over_time":
-            val = F.sum("value").over(w) / F.count("value").over(w)
-        elif name == "last_over_time":
-            # OLDEST point (reference quirk); min_by ignores the skeleton
-            # rows' null ordering keys
-            val = F.min_by("value", "_okey").over(w)
-        elif name in _STAT_OVER_TIME_FNS:
-            val = self._stat_over_time_val(name, q, w)
-        else:  # pragma: no cover
-            raise PqError(f"unknown over-time function {name}")
-
+        unioned, part = self._skeleton_carry(matched, grid, sel_dim, lookback)
+        w = part.orderBy("ts").rangeBetween(-(lookback - 1), 0)
         carried = (
-            pts.unionByName(skeleton.withColumn("_isinst", F.lit(1)), allowMissingColumns=True)
-            .withColumn("_val", val)
+            unioned
+            .withColumn("_val", self._over_time_val(name, q, w))
             .withColumn("_n", F.count("value").over(w))
         )
         facts = carried.filter(
@@ -1645,13 +1549,9 @@ class Planner:
             new_val != "",
             F.map_concat(without_dst, F.create_map(F.lit(dst), new_val)),
         ).otherwise(without_dst)
-        dim = vf.dim.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            "ord",
+        return VectorFrame(
+            vf.grid, vf.facts, _relabeled(vf.dim, out_labels), vf.checks
         )
-        return VectorFrame(vf.grid, vf.facts, dim, vf.checks)
 
     def _label_replace(
         self, vf: VectorFrame, dst: str, replacement: str, src: str, regex: str
@@ -1674,13 +1574,9 @@ class Planner:
             matched & (new_val == ""),
             F.map_filter(F.col("labels"), lambda k, _: k != F.lit(dst)),
         ).otherwise(F.col("labels"))
-        dim = vf.dim.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            "ord",
+        return VectorFrame(
+            vf.grid, vf.facts, _relabeled(vf.dim, out_labels), vf.checks
         )
-        return VectorFrame(vf.grid, vf.facts, dim, vf.checks)
 
     def _clamp(self, name: str, vf: VectorFrame, args: list) -> VectorFrame:
         v = F.col("value")
@@ -1692,14 +1588,9 @@ class Planner:
         else:
             v = F.greatest(v, F.lit(float(args[0])))
         facts = vf.facts.withColumn("value", v)
-        out_labels = _labels_without(F.col("labels"), [])
-        dim = vf.dim.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            "ord",
+        return VectorFrame(
+            vf.grid, facts, self._dropname_dim(vf.dim, keep_ord=True), vf.checks
         )
-        return VectorFrame(vf.grid, facts, dim, vf.checks)
 
     def _math_fn(self, name: str, vf: VectorFrame) -> VectorFrame:
         """Extension (Prometheus math functions; the reference's evaluator
@@ -1787,14 +1678,9 @@ class Planner:
             "year": lambda: calendar(F.year),
         }
         facts = vf.facts.withColumn("value", exprs[name]())
-        out_labels = _labels_without(F.col("labels"), [])
-        dim = vf.dim.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            "ord",
+        return VectorFrame(
+            vf.grid, facts, self._dropname_dim(vf.dim, keep_ord=True), vf.checks
         )
-        return VectorFrame(vf.grid, facts, dim, vf.checks)
 
     # -- binary ----------------------------------------------------------------
 
@@ -1842,6 +1728,27 @@ class Planner:
         if isinstance(rhs, ScalarResult):
             return self._scalar_vector(node, rhs.value, lhs, scalar_on_left=False)
         return self._vector_vector(node, lhs, rhs)
+
+    @staticmethod
+    def _with_binop_value(
+        node: BinaryOperation, df: DataFrame, l: Column, r: Column,
+        out: str, kept: Column | None = None,
+    ) -> DataFrame:
+        """``df`` with the op's result in column ``out``: arithmetic
+        computes it; a bool comparison gives 1/0; a filter-mode comparison
+        keeps the rows it holds for, with ``kept`` as the value when given.
+        vector⊗vector keeps the LEFT value (binary.rs:304 comp_value=ls);
+        vector⊗scalar keeps the VECTOR side's sample value, already in
+        ``out`` (binary.rs:156-158,216-218 comp_value = s)."""
+        if op_kind(node.op) != "comparison":
+            return df.withColumn(out, _binop_col(node.op, l, r))
+        pred = _compare_pred(node.op, l, r)
+        if node.bool_modifier:
+            return df.withColumn(
+                out, F.when(pred, F.lit(1.0)).otherwise(F.lit(0.0))
+            )
+        df = df.filter(pred)
+        return df if kept is None else df.withColumn(out, kept)
 
     @staticmethod
     def _const_series(grid: DataFrame, s: ScalarResult) -> ScalarSeries:
@@ -1897,19 +1804,8 @@ class Planner:
         )
         s, v = F.col("_s"), F.col("value")
         l, r = (s, v) if scalar_on_left else (v, s)
-        if kind == "comparison":
-            pred = _compare_pred(node.op, l, r)
-            if node.bool_modifier:
-                facts = facts.withColumn(
-                    "value", F.when(pred, F.lit(1.0)).otherwise(F.lit(0.0))
-                )
-            else:
-                # filter mode keeps the VECTOR side's sample value
-                facts = facts.filter(pred)
-        else:
-            facts = facts.withColumn("value", _binop_col(node.op, l, r))
-        facts = facts.drop("_s")
-        dim = vf.dim if keep_name else self._dropname_dim_keep_ord(vf.dim)
+        facts = self._with_binop_value(node, facts, l, r, "value").drop("_s")
+        dim = vf.dim if keep_name else self._dropname_dim(vf.dim, keep_ord=True)
         return VectorFrame(
             grid, facts, dim, vf.checks + ss.checks
         )
@@ -1922,34 +1818,9 @@ class Planner:
         s = F.lit(scalar)
         v = F.col("value")
         l, r = (s, v) if scalar_on_left else (v, s)
-
-        facts = vf.facts
-        if kind == "comparison":
-            pred = _compare_pred(node.op, l, r)
-            if node.bool_modifier:
-                facts = facts.withColumn(
-                    "value", F.when(pred, F.lit(1.0)).otherwise(F.lit(0.0))
-                )
-            else:
-                # filter mode keeps the VECTOR side's sample value
-                # (binary.rs:156-158,216-218 comp_value = s)
-                facts = facts.filter(pred)
-        else:
-            facts = facts.withColumn("value", _binop_col(node.op, l, r))
-
-        dim = vf.dim if keep_name else self._dropname_dim_keep_ord(vf.dim)
+        facts = self._with_binop_value(node, vf.facts, l, r, "value")
+        dim = vf.dim if keep_name else self._dropname_dim(vf.dim, keep_ord=True)
         return VectorFrame(vf.grid, facts, dim, vf.checks)
-
-    @staticmethod
-    def _dropname_dim_keep_ord(dim: DataFrame) -> DataFrame:
-        """Drop __name__ and re-sign, keeping the dim's existing ord."""
-        out_labels = _labels_without(F.col("labels"), [])
-        return dim.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            "ord",
-        )
 
     def _grid_merge(self, lgrid: DataFrame, rgrid: DataFrame) -> DataFrame:
         """Aligned output grid of a vector⊗vector op: the two-pointer merge
@@ -2010,19 +1881,10 @@ class Planner:
 
         joined = lf.join(rf, ["instant", "_mkey"], "inner")
 
-        l, r = F.col("_lvalue"), F.col("_rvalue")
-        if kind == "comparison":
-            pred = _compare_pred(node.op, l, r)
-            if node.bool_modifier:
-                joined = joined.withColumn(
-                    "_value", F.when(pred, F.lit(1.0)).otherwise(F.lit(0.0))
-                )
-            else:
-                # filter mode keeps the LEFT value (binary.rs:304 comp_value=ls)
-                joined = joined.filter(pred).withColumn("_value", l)
-        else:
-            joined = joined.withColumn("_value", _binop_col(node.op, l, r))
-
+        l = F.col("_lvalue")
+        joined = self._with_binop_value(
+            node, joined, l, F.col("_rvalue"), "_value", kept=l
+        )
         facts = joined.select("instant", "skey", F.col("_value").alias("value"))
 
         # output labels: the matching labels (+ the lhs __name__ for
@@ -2037,12 +1899,7 @@ class Planner:
             ).otherwise(F.col("_mlabels"))
         else:
             out_labels = F.col("_mlabels")
-        out_dim = lmap.select(
-            "skey",
-            sig_expr(out_labels).alias("sig"),
-            out_labels.alias("labels"),
-            "ord",
-        )
+        out_dim = _relabeled(lmap, out_labels)
 
         checks = list(lhs.checks) + list(rhs.checks)
         if self.ctx.strict:
@@ -2083,8 +1940,7 @@ class Planner:
         the fact join itself stays all-longs)."""
         kind, include = node.group_modifier
         matching = node.label_matching
-        opk = op_kind(node.op)
-        keep_name = opk == "comparison" and not node.bool_modifier
+        keep_name = op_kind(node.op) == "comparison" and not node.bool_modifier
 
         many, one = (lhs, rhs) if kind == "left" else (rhs, lhs)
         grid = self._grid_merge(lhs.grid, rhs.grid)
@@ -2106,16 +1962,7 @@ class Planner:
             if kind == "left"
             else (F.col("_ovalue"), F.col("_mvalue"))
         )
-        if opk == "comparison":
-            pred = _compare_pred(node.op, l, r)
-            if node.bool_modifier:
-                joined = joined.withColumn(
-                    "_value", F.when(pred, F.lit(1.0)).otherwise(F.lit(0.0))
-                )
-            else:
-                joined = joined.filter(pred).withColumn("_value", l)
-        else:
-            joined = joined.withColumn("_value", _binop_col(node.op, l, r))
+        joined = self._with_binop_value(node, joined, l, r, "_value", kept=l)
 
         pkey = F.xxhash64("_mskey", "_oskey")
         facts = joined.select(

@@ -20,8 +20,8 @@ from ..query.ast import Expr, VectorSelector
 from ..timeparse import parse_duration, try_parse_time
 from . import formatter as fmt
 from . import ingest
-from .frames import ScalarResult, ScalarSeries, VectorFrame
-from .planner import PlanContext, Planner
+from .frames import ScalarResult, ScalarSeries
+from .planner import PlanContext, Planner, labelless_vector
 
 ENGINE_CONFS = {
     # pq arithmetic is IEEE f64 end-to-end; ANSI mode would raise on /0.
@@ -258,18 +258,7 @@ class PqEngine:
             # top-level per-instant scalar (scalar(v)/time()): present as a
             # single label-less series, like vector(s) — the output layer
             # has no scalar-stream kind (extension refinement)
-            from pyspark.sql import functions as F
-
-            skey = F.xxhash64(F.lit(""))
-            empty_labels = F.map_from_arrays(
-                F.array().cast("array<string>"), F.array().cast("array<string>")
-            )
-            dim = result.grid.limit(1).select(
-                skey.alias("skey"), F.lit("").alias("sig"),
-                empty_labels.alias("labels"), F.lit("").alias("ord"),
-            )
-            facts = result.facts.select("instant", skey.alias("skey"), "value")
-            result = VectorFrame(result.grid, facts, dim, result.checks)
+            result = labelless_vector(result.grid, result.facts, result.checks)
         return result
 
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..engine.planner import sig_expr
+from ..engine.planner import dim_from_sig2, okey_expr, sig2_expr, sig_expr
 
 TIER_MS = {"1m": 60_000, "1h": 3_600_000, "1d": 86_400_000}
 
@@ -62,23 +62,14 @@ def series_dim(samples: DataFrame, check_collisions: bool = False) -> DataFrame:
     INVERTIBLE signature; the label map is rebuilt from the string on the
     post-shuffle dim-sized rows. Grouping on the map (or carrying it
     through first()) would force SortAggregate — a per-partition sort of
-    every fact row (the engine's planner uses the same trick)."""
+    every fact row. The rebuild is the planner's ``dim_from_sig2``, the one
+    its selector dims use; its skey is ``series_key(sig)``."""
     from ..engine.ingest import NAME_LABEL
-    from ..engine.planner import _PAIR_SEP, _labels_from_sig2, _sig2_expr
 
-    dim = (
-        samples.select(_sig2_expr(F.col("labels")).alias("_sig2"))
-        .distinct()
-        .select(
-            F.replace(F.col("_sig2"), F.lit(_PAIR_SEP), F.lit("")).alias("sig"),
-            _labels_from_sig2(F.col("_sig2")).alias("labels"),
-        )
-        .select(
-            series_key(F.col("sig")).alias("skey"),
-            "sig",
-            F.col("labels").getItem(NAME_LABEL).alias("name"),
-            "labels",
-        )
+    dim = dim_from_sig2(
+        samples.select(sig2_expr(F.col("labels")).alias("_sig2")).distinct()
+    ).select(
+        "skey", "sig", F.col("labels").getItem(NAME_LABEL).alias("name"), "labels"
     )
     if check_collisions:
         agg = dim.agg(
@@ -125,12 +116,8 @@ def _series_fact(samples: DataFrame) -> DataFrame:
     # millisecond whose seqs differ by a multiple of 2^21 would tie-break
     # arbitrarily; all drivers keep seq (event_id / line_no) far below 2^21
     # per ms.
-    _B = F.lit(1 << 21)
     return samples.select(
-        skey_col.alias("skey"),
-        "ts",
-        "value",
-        (F.col("ts") * _B + F.pmod(F.col("seq"), _B)).alias("_okey"),
+        skey_col.alias("skey"), "ts", "value", okey_expr().alias("_okey")
     )
 
 

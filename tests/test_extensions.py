@@ -230,8 +230,9 @@ def test_high_fanout_window_strategy_equivalence(spark):
 
 def test_high_fanout_over_time_fused_equivalence(spark):
     """range >> interval triggers the fused sliding-window over-time plan;
-    output must equal the explode path's exactly for every function, incl.
-    the last_over_time oldest-point quirk with same-ms seq ties."""
+    output must equal the explode path's for every function (the core six
+    and the statistical extensions), incl. the last_over_time oldest-point
+    quirk with same-ms seq ties."""
     from pq_spark.engine.planner import Planner
     from pq_spark.engine.runner import PqEngine
 
@@ -245,12 +246,18 @@ def test_high_fanout_over_time_fused_equivalence(spark):
     samples = spark.createDataFrame(
         rows, "seq long, ts long, labels map<string,string>, name string, value double"
     )
-    eng = PqEngine(spark, strict=False)
+    eng = PqEngine(spark, strict=False, extensions=True)
     fns = ["count_over_time", "sum_over_time", "min_over_time",
-           "max_over_time", "avg_over_time", "last_over_time"]
+           "max_over_time", "avg_over_time", "last_over_time",
+           "quantile_over_time", "stddev_over_time", "stdvar_over_time",
+           "present_over_time", "mad_over_time"]
+    # the population moments may differ in the last bits: the sliding
+    # window and the merged aggregate buffers sum in different orders
+    moments = {"stddev_over_time", "stdvar_over_time"}
 
     def run(fn):
-        vf = eng.evaluate(f"{fn}(v[60s])", samples, interval_ms=1_000)
+        arg = "0.5, v[60s]" if fn == "quantile_over_time" else "v[60s]"
+        vf = eng.evaluate(f"{fn}({arg})", samples, interval_ms=1_000)
         return fn, sorted(
             (r["instant"], r["sig"], r["value"]) for r in vf.cells.collect()
         )
@@ -258,7 +265,7 @@ def test_high_fanout_over_time_fused_equivalence(spark):
     from concurrent.futures import ThreadPoolExecutor
 
     # one concurrent batch per PLAN PATH (FANOUT_SWITCH is planner-global
-    # state, so the two paths can't interleave — but within a path the six
+    # state, so the two paths can't interleave — but within a path the
     # functions are independent jobs)
     assert 60 > Planner.FANOUT_SWITCH
     with ThreadPoolExecutor(max_workers=6) as ex:
@@ -271,7 +278,15 @@ def test_high_fanout_over_time_fused_equivalence(spark):
     finally:
         Planner.FANOUT_SWITCH = old
     for fn in fns:
-        assert fused[fn] == exploded[fn] and len(fused[fn]) > 0, fn
+        assert len(fused[fn]) > 0, fn
+        if fn not in moments:
+            assert fused[fn] == exploded[fn], fn
+            continue
+        assert [r[:2] for r in fused[fn]] == [r[:2] for r in exploded[fn]], fn
+        # pytest.approx's default abs=1e-12 also admits a window whose
+        # exact moment is 0 and whose other sum order leaves ~1e-15
+        for f_row, e_row in zip(fused[fn], exploded[fn]):
+            assert f_row[2] == pytest.approx(e_row[2], rel=1e-12), (fn, f_row)
 
 
 def test_hot_series_window_plans_shard_and_match(spark):
