@@ -304,11 +304,11 @@ def kernel_bench(executors: int, n_pages: int) -> dict:
     spark = _mk_spark(0, executors=executors)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        from pq_spark.engine.planner import sig_expr
+        from pq_spark.engine.frames import series_key, sig_expr
         from pq_spark.rollup import gorilla
         from pq_spark.rollup.pages import page_samples, synth_pages
         from pq_spark.rollup.tiers import (
-            series_dim, series_key, tier_from_tier, tier_partials,
+            series_dim, tier_from_tier, tier_partials,
         )
 
         # at sandbox scale the whole fact table is a few dozen MB — the

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..errors import MatchingError
 from ..floatfmt import json_f64_str, rust_f64_str
+from ..query.ast import NAME_LABEL
 from .frames import Check, RangeFrame, ScalarResult, VectorFrame
 
 
@@ -242,7 +243,6 @@ def promhuman_lines(result, strict_checks: bool = True, verbose: bool = False) -
     if strict_checks:
         _run_checks(result.checks)
 
-    NAME = "__name__"
     lines: list[str] = []
 
     def no_data_lines(populated_instants) -> list[tuple[int, str]]:
@@ -259,7 +259,7 @@ def promhuman_lines(result, strict_checks: bool = True, verbose: bool = False) -
         keyed: list[tuple[int, str]] = []
         for r in rows:
             labels = dict(r["labels"])
-            name = labels.pop(NAME, None)
+            name = labels.pop(NAME_LABEL, None)
             parts = [_ts_human(r["instant"]) + "\t"]
             if name is not None:
                 parts.append(name)
@@ -285,7 +285,7 @@ def promhuman_lines(result, strict_checks: bool = True, verbose: bool = False) -
         keyed = []
         for r in per_series:
             labels = dict(r["labels"])
-            name = labels.pop(NAME, None)
+            name = labels.pop(NAME_LABEL, None)
             parts = [_ts_human(r["instant"]) + "\t"]
             if name is not None:
                 parts.append(name)
@@ -313,7 +313,7 @@ def _render_interactive_frame(instant: int, rows: list) -> str:
     prefix = ""
     for r in rows:
         labels = dict(r["labels"])
-        name = labels.get("__name__")
+        name = labels.get(NAME_LABEL)
         if name is not None:
             lines.append(name)
             lines.append("\n")

@@ -34,22 +34,17 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import re as _pyre
+from functools import reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..errors import PqError
 from ..program import JsonDecoder, Mapper, RegexDecoder
+from ..query.ast import LINE_METRIC, NAME_LABEL
 from ..timeparse import parse_time, strptime_to_java, try_parse_time
-
-NAME_LABEL = "__name__"
-LINE_METRIC = "__line__"
-
-def _empty_map(value_type: str):
-    return F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast(f"array<{value_type}>")
-    )
+from .frames import empty_map, series_key, static_sig_expr
 
 
 def lines_df(spark: SparkSession, lines: list[str]) -> DataFrame:
@@ -508,7 +503,7 @@ def map_entries(
 
     def as_map(entries_list, value_type):
         if not entries_list:
-            return _empty_map(value_type)
+            return empty_map(value_type)
         return F.map_from_entries(
             F.filter(F.array(*entries_list), lambda x: x.isNotNull())
         )
@@ -597,24 +592,6 @@ def samples_from_records(records: DataFrame) -> DataFrame:
     )
 
 
-def static_sig_expr(entries: dict[str, "Column"]) -> "Column":
-    """``sig_expr`` specialized for a label set whose KEYS are known at
-    plan time (table ingest: label_cols + __name__): the sorted
-    key\\xffvalue concatenation becomes a plain string concat — no map
-    build, no array_sort, no lambda transform per row.  Null-value pairs
-    contribute nothing, matching ``array_join``'s null-element skip.
-    Key order: Python's codepoint sort == Spark's binary string sort
-    (UTF-8 byte order preserves codepoint order).  Equivalence is pinned
-    in tests/test_rollup.py against ``sig_expr`` on the same rows."""
-    pieces = [
-        F.when(entries[k].isNull(), F.lit("")).otherwise(
-            F.concat(F.lit(k + "\xff"), entries[k])
-        )
-        for k in sorted(entries)
-    ]
-    return F.concat(*pieces) if pieces else F.lit("")
-
-
 def _table_base(
     df: DataFrame,
     ts_col: str,
@@ -637,6 +614,23 @@ def _table_base(
     ).filter(F.col("ts").isNotNull())
 
 
+def _table_series(label_cols: list[str], name: Column) -> tuple[Column, Column]:
+    """The label map and the signature of the table-ingest series ``name``
+    over the label columns: ``samples_from_table`` keys its rows and
+    ``series_dim_for_table`` its dim rows with these same two expressions."""
+    labels = F.map_concat(
+        F.map_from_arrays(
+            F.array(*[F.lit(c) for c in label_cols]),
+            F.array(*[F.col(c) for c in label_cols]),
+        )
+        if label_cols
+        else empty_map(),
+        F.create_map(F.lit(NAME_LABEL), name),
+    )
+    sig = static_sig_expr({NAME_LABEL: name, **{c: F.col(c) for c in label_cols}})
+    return labels, sig
+
+
 def series_dim_for_table(
     df: DataFrame,
     ts_col: str,
@@ -646,17 +640,17 @@ def series_dim_for_table(
     ts_unit: str = "timestamp",
     with_line_metric: bool = True,
 ) -> DataFrame:
-    """Series label space of ``samples_from_table(df, …)`` WITHOUT scanning
-    the (rows × metrics) sample union: one narrow aggregate over the base
-    rows collapses to the distinct label combos (map-side combine makes the
-    shuffle dim-sized), then the per-metric dim rows are built on the tiny
-    result. Equivalence contract: a (labels, metric) series exists iff ≥1
-    base row has that label combo and a non-null value for the metric (the
-    union branch's ``value.isNotNull()`` filter); ``__line__``'s value is
-    ``seq``, so its presence flag is ``seq IS NOT NULL``.
-
-    Returns (name, labels) rows — the same shape ``series_dim`` derives
-    from wide samples (the caller attaches sig/skey).
+    """Series dim (skey, sig, name, labels) of ``samples_from_table(df, …)``
+    WITHOUT scanning the (rows × metrics) sample union: one narrow
+    aggregate over the base rows collapses to the distinct label combos
+    (map-side combine makes the shuffle dim-sized), then the per-metric dim
+    rows are built on the tiny result. Equivalence contract: a (labels,
+    metric) series exists iff ≥1 base row has that label combo and a
+    non-null value for the metric (the union branch's ``value.isNotNull()``
+    filter); ``__line__``'s value is ``seq``, so its presence flag is
+    ``seq IS NOT NULL``. The rows equal ``tiers.series_dim`` of the
+    samples, and the sig is the samples' ``_sig`` expression, so fact and
+    dim keys come from one ``series_key(static_sig_expr(…))``.
     """
     base = _table_base(df, ts_col, value_cols, label_cols, seq_col, ts_unit)
     flag_cols = list(value_cols) + (["seq"] if with_line_metric else [])
@@ -667,25 +661,14 @@ def series_dim_for_table(
     if with_line_metric:
         metrics.append((LINE_METRIC, "_has_seq"))
 
-    label_map_of = lambda name: F.map_concat(  # noqa: E731
-        F.map_from_arrays(
-            F.array(*[F.lit(c) for c in label_cols]),
-            F.array(*[F.col(c) for c in label_cols]),
+    def part(name: str, flag: str) -> DataFrame:
+        labels, sig = _table_series(label_cols, F.lit(name))
+        return combos.filter(F.col(flag)).select(
+            series_key(sig).alias("skey"), sig.alias("sig"),
+            F.lit(name).alias("name"), labels.alias("labels"),
         )
-        if label_cols
-        else _empty_map("string"),
-        F.create_map(F.lit(NAME_LABEL), F.lit(name)),
-    )
-    parts = [
-        combos.filter(F.col(flag)).select(
-            F.lit(m).alias("name"), label_map_of(m).alias("labels")
-        )
-        for m, flag in metrics
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+    return reduce(DataFrame.unionByName, [part(m, flag) for m, flag in metrics])
 
 
 def samples_from_table(
@@ -727,19 +710,9 @@ def samples_from_table(
     branches = [_branch(m, F.col(m).cast("double")) for m in value_cols]
     if with_line_metric:
         branches.append(_branch(LINE_METRIC, F.col("seq").cast("double")))
-    unpivoted = branches[0]
-    for b in branches[1:]:
-        unpivoted = unpivoted.unionByName(b)
+    unpivoted = reduce(DataFrame.unionByName, branches)
 
-    label_map = F.map_concat(
-        F.map_from_arrays(
-            F.array(*[F.lit(c) for c in label_cols]),
-            F.array(*[F.col(c) for c in label_cols]),
-        )
-        if label_cols
-        else _empty_map("string"),
-        F.create_map(F.lit(NAME_LABEL), F.col("name")),
-    )
+    label_map, sig = _table_series(label_cols, F.col("name"))
     # keep the raw label columns as `_lbl_<name>` passthroughs: label
     # matchers filter on plain columns instead of map lookups, so Catalyst
     # can push them into the parquet/Iceberg scan (partition pruning on
@@ -751,7 +724,5 @@ def samples_from_table(
         # a plain concat — consumers that key rows by series (the rollup
         # pipeline's fact projection) use it instead of re-deriving
         # sig_expr(labels) per row (map build + sort + transform)
-        static_sig_expr(
-            {NAME_LABEL: F.col("name"), **{c: F.col(c) for c in label_cols}}
-        ).alias("_sig"),
+        sig.alias("_sig"),
     )

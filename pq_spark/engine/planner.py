@@ -53,6 +53,7 @@ from ..query.ast import (
     Expr,
     FunctionCall,
     LabelMatcher,
+    NAME_LABEL,
     NumberLiteral,
     Parentheses,
     Subquery,
@@ -62,9 +63,11 @@ from ..query.ast import (
     op_kind,
 )
 from ..textops import portable_hash
-from .frames import Check, RangeFrame, ScalarResult, ScalarSeries, VectorFrame
+from .frames import (
+    Check, RangeFrame, ScalarResult, ScalarSeries, VectorFrame, dim_from_sig2,
+    empty_map, okey_expr, series_key, sig2_expr, sig_expr, sig_from_sig2,
+)
 
-NAME_LABEL = "__name__"
 F64_EPSILON = 2.220446049250313e-16
 
 # Prometheus math functions (extensions — see _math_fn)
@@ -114,100 +117,18 @@ def _arr_median(a: Column) -> Column:
     return (lo + hi) / F.lit(2)
 
 
-def sig_expr(labels: Column) -> Column:
-    """Series signature: sorted ``key\\xffvalue`` concatenation
-    (reference: src/model/labels.rs:51-57)."""
-    return F.array_join(
-        F.transform(
-            F.array_sort(F.map_entries(labels)),
-            lambda e: F.concat(e.getField("key"), F.lit("\xff"), e.getField("value")),
-        ),
-        "",
-    )
-
-
-_PAIR_SEP = "\xfe"
-
-
-def sig2_expr(labels: Column) -> Column:
-    """Invertible signature variant: same sorted ``k\\xffv`` pairs, joined
-    with a ``\\xfe`` pair separator so the label map can be reconstructed
-    AFTER a shuffle. This lets the series-dim dedup run as a plain
-    string-distinct HashAggregate (grouping/first() on a map type forces
-    SortAggregate and would sort every fact row per partition); the map is
-    rebuilt only on the post-shuffle dim-sized rows. Caveat: like the
-    reference's own separator-free signature (labels.rs:51-57), this assumes
-    label text contains no ``\\xff``/``\\xfe`` control bytes."""
-    return F.array_join(
-        F.transform(
-            F.array_sort(F.map_entries(labels)),
-            lambda e: F.concat(e.getField("key"), F.lit("\xff"), e.getField("value")),
-        ),
-        _PAIR_SEP,
-    )
-
-
-def _empty_labels() -> Column:
-    return F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-
-
-def _labels_from_sig2(sig2: Column) -> Column:
-    """Rebuild the label map from the invertible signature."""
-    def entry(pair: Column):
-        key = F.substring_index(pair, "\xff", 1)
-        value = pair.substr(F.length(key) + F.lit(2), F.length(pair))
-        return F.struct(key.alias("key"), value.alias("value"))
-
-    return F.when(sig2 == "", _empty_labels()).otherwise(
-        F.map_from_entries(F.transform(F.split(sig2, _PAIR_SEP), entry))
-    )
-
-
-def dim_from_sig2(rel: DataFrame, sig2: str = "_sig2") -> DataFrame:
-    """The series dim [skey, sig, labels, ord] of a relation's invertible
-    signature column ``sig2``, computed on its (dim-sized) rows: the sig is
-    the sig2 without pair separators, the skey its 64-bit hash, the label
-    map rebuilt from the sig2, and the output order the sig itself."""
-    return rel.select(
-        F.replace(F.col(sig2), F.lit(_PAIR_SEP), F.lit("")).alias("sig"), sig2
-    ).select(
-        F.xxhash64("sig").alias("skey"),
-        "sig",
-        _labels_from_sig2(F.col(sig2)).alias("labels"),
-        F.col("sig").alias("ord"),
-    )
-
-
 def labelless_vector(grid: DataFrame, facts: DataFrame, checks=None) -> VectorFrame:
     """One label-less series (the empty signature) carrying ``facts``'
     [instant, value] rows: ``vector(s)`` and a top-level per-instant
     scalar, which the output layer presents as a vector."""
-    skey = F.xxhash64(F.lit(""))
+    skey = series_key(F.lit(""))
     dim = grid.limit(1).select(
         skey.alias("skey"), F.lit("").alias("sig"),
-        _empty_labels().alias("labels"), F.lit("").alias("ord"),
+        empty_map().alias("labels"), F.lit("").alias("ord"),
     )
     return VectorFrame(
         grid, facts.select("instant", skey.alias("skey"), "value"), dim, checks
     )
-
-
-# packed (ts, seq) ordering key: first/last picks over a LONG keep the
-# aggregation in HashAggregate (struct keys force SortAggregate). Ties only
-# wrap at seq deltas of 2^21 within one millisecond of one series, and the
-# ts*2^21 product wraps int64 at ts >= 2^42 ms (~year 2109) — both out of
-# contract for log timestamps (same envelope as the reference's i64-ms
-# model; see COVERAGE.md)
-_OKEY_SEQ_SPAN = 1 << 21
-
-
-def okey_expr(seq: bool = True) -> Column:
-    """The packed ordering key ``ts·2^21 + seq mod 2^21``. ``seq=False``
-    packs a stream with one point per (series, ts), whose seq is 0."""
-    ts = F.col("ts") * F.lit(_OKEY_SEQ_SPAN)
-    return ts + F.pmod(F.col("seq"), F.lit(_OKEY_SEQ_SPAN)) if seq else ts
 
 
 def _relabeled(dim: DataFrame, labels: Column, ord="ord") -> DataFrame:
@@ -216,11 +137,6 @@ def _relabeled(dim: DataFrame, labels: Column, ord="ord") -> DataFrame:
     return dim.select(
         "skey", sig_expr(labels).alias("sig"), labels.alias("labels"), ord
     )
-
-
-def _sample_skey() -> Column:
-    """The 64-bit series key of a sample row, hashed from its labels."""
-    return F.xxhash64(sig_expr(F.col("labels"))).alias("skey")
 
 
 def _labels_with(labels: Column, names) -> Column:
@@ -516,7 +432,8 @@ class Planner:
         lookback = sel.duration_ms if sel.duration_ms is not None else ctx.lookback_ms
         instant = sel.duration_ms is None
         matched, params, grid, sel_dim = self._selector_parts(sel, lookback)
-        cols = (_sample_skey(), "value", "ts", "seq", okey_expr().alias("_okey"))
+        skey = series_key(sig_expr(F.col("labels"))).alias("skey")
+        cols = (skey, "value", "ts", "seq", okey_expr().alias("_okey"))
 
         if sel.at_ms is not None:
             # extension (PromQL `@` modifier): the selector window is
@@ -628,7 +545,8 @@ class Planner:
 
         blk = _floordiv(F.col("ts"), lookback)
         pts = matched.select(
-            _sample_skey(), "ts", okey_expr().alias("_okey"), "value"
+            series_key(sig_expr(F.col("labels"))).alias("skey"),
+            "ts", okey_expr().alias("_okey"), "value",
         )
         # native copy in its own block + boundary carry into the next
         pts = pts.withColumn("_blk", blk).unionByName(
@@ -776,13 +694,13 @@ class Planner:
         # subexpressions only re-evaluate on dim-sized rows
         _glabels = group_labels_expr(F.col("labels"), node.modifier)
         _gsig2 = sig2_expr(_glabels)
-        _gsig = F.replace(_gsig2, F.lit(_PAIR_SEP), F.lit(""))
+        _gsig = sig_from_sig2(_gsig2)
         gmap = inner.dim.select(
             "*",
             _glabels.alias("_glabels"),
             _gsig2.alias("_gsig2"),
             _gsig.alias("_gsig"),
-            F.xxhash64(_gsig).alias("_gkey"),
+            series_key(_gsig).alias("_gkey"),
         )
 
         # iteration-order quirks (count/group seeding, topk tie-breaks)
@@ -1093,10 +1011,8 @@ class Planner:
                 sig2_expr(out_labels).alias("_gsig2"),
             )
             .where(F.col("_le").isNotNull())
-            .withColumn(
-                "_gsig", F.replace(F.col("_gsig2"), F.lit(_PAIR_SEP), F.lit(""))
-            )
-            .withColumn("_gkey", F.xxhash64("_gsig"))
+            .withColumn("_gsig", sig_from_sig2(F.col("_gsig2")))
+            .withColumn("_gkey", series_key(F.col("_gsig")))
         )
         gdim = dim_from_sig2(gmap.select("_gsig2").distinct(), "_gsig2")
         joined = vf.facts.join(
@@ -1227,7 +1143,7 @@ class Planner:
             F.array(*[F.lit(labels[k]) for k in keys]).cast("array<string>"),
         )
         sigc = sig_expr(label_expr)
-        skey = F.xxhash64(sigc)
+        skey = series_key(sigc)
         facts = missing.select(
             "instant", skey.alias("skey"), F.lit(1.0).alias("value")
         )
@@ -1849,7 +1765,7 @@ class Planner:
         return (
             dim.withColumn("_mlabels", ml)
             .withColumn("_msig", sig_expr(F.col("_mlabels")))
-            .withColumn("_mkey", F.xxhash64("_msig"))
+            .withColumn("_mkey", series_key(F.col("_msig")))
         )
 
     def _vector_vector(

@@ -345,9 +345,10 @@ def _emit_cli(result: ProgramResult, o: CliOptions) -> bytes:
 
 def run_cli(spark: SparkSession, argv: list[str], input_lines: list[str]) -> bytes:
     """Replicates the reference CLI (reference: src/cliopt.rs, tests/e2e.rs):
-    argv = ["pq", PROGRAM, flags...]; returns the output byte stream."""
-    o = parse_cli_args(argv)
-    return _emit_cli(_run_cli_program(spark, o, input_lines), o)
+    argv = ["pq", PROGRAM, flags...]; returns the output byte stream. The
+    lines are read as the stream ``run_cli_stream`` reads, so ``--until``
+    ends the input at the first record past the range end."""
+    return run_cli_stream(spark, argv, iter(input_lines))
 
 
 def consume_stream_lines(
@@ -402,7 +403,7 @@ def run_cli_stream(
     spark: SparkSession, argv: list[str], line_iter,
     chunk_lines: int = 4096,
 ) -> bytes:
-    """Streaming CLI entry: like ``run_cli`` but over a line ITERATOR
+    """Streaming CLI entry: the reference CLI over a line ITERATOR
     (stdin, a tailed file, a socket) with the reference's early
     termination at ``--until`` — on an infinite input this returns once
     the stream passes the range end. Output is byte-identical to

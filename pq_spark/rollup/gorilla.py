@@ -43,6 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..engine.frames import fact_skey, narrow_fact
+from .tiers import series_dim
+
 _MAGIC = 0x4731
 
 
@@ -282,15 +285,9 @@ def pack_blocks(
     per-group Arrow/pandas overhead that would otherwise dominate when
     blocks are small.
     """
-    from ..engine.planner import sig_expr
-    from .tiers import series_dim
-
-    from .tiers import series_key
-
     super_ms = block_ms * blocks_per_group
-    narrow_input = "skey" in samples.columns and "labels" not in samples.columns
     if dim is None:
-        if narrow_input:
+        if narrow_fact(samples):
             raise ValueError("narrow fact input requires an explicit series dim")
         dim = series_dim(samples)
     # NARROW kernel input: 8-byte series keys instead of signature strings;
@@ -299,8 +296,7 @@ def pack_blocks(
     # instead of shipping a fifth long per row through the shuffle and
     # the Arrow boundary (~-15% kernel-input bytes)
     keyed = samples.select(
-        (F.col("skey") if narrow_input
-         else series_key(sig_expr(F.col("labels")))).alias("skey"),
+        fact_skey(samples).alias("skey"),
         (F.col("ts") - F.pmod(F.col("ts"), F.lit(super_ms))).alias("super_ts"),
         "ts", "seq", "value",
     )

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..engine.ingest import samples_from_table
+from ..engine.ingest import samples_from_table, series_dim_for_table
 
 LANGS = ["en", "de", "fr", "nl", "ru"]
 # Zipf-ish domain popularity: domain i gets weight ~ 1/(i+1); domain00 is hot.
@@ -165,12 +165,7 @@ def page_series_dim_from_enriched(enriched: DataFrame) -> DataFrame:
     contract — pinned in tests/test_rollup.py). Built from an
     already-enriched (possibly persisted) projection so the pipeline's
     fused-verify cache is reused instead of re-scanning the page table."""
-    from ..engine.ingest import series_dim_for_table
-    from .tiers import series_dim_from_labelspace
-
-    return series_dim_from_labelspace(
-        series_dim_for_table(enriched, **_PAGE_TABLE_ARGS)
-    )
+    return series_dim_for_table(enriched, **_PAGE_TABLE_ARGS)
 
 
 def pages_from_warc(spark, path_glob: str, http_payload: bool = False):

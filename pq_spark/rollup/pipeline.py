@@ -19,6 +19,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.frames import series_key
 from ..engine.ingest import samples_from_table
 from ..engine.runner import configure_session
 from ..materialize import Held, persist
@@ -29,7 +30,7 @@ from .pages import (
     _page_enriched,
     page_series_dim_from_enriched,
 )
-from .tiers import TIER_MS, attach_series, series_key, tier_from_tier, tier_partials
+from .tiers import TIER_MS, attach_series, tier_from_tier, tier_partials
 
 _TIERS = ("tier_1m", "tier_1h", "tier_1d")
 

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..engine.planner import dim_from_sig2, okey_expr, sig2_expr, sig_expr
+from ..engine.frames import dim_from_sig2, fact_skey, okey_expr, sig2_expr
+from ..query.ast import NAME_LABEL
 
 TIER_MS = {"1m": 60_000, "1h": 3_600_000, "1d": 86_400_000}
 
@@ -43,16 +44,6 @@ def _bucket(ts: Column, tier_ms: int) -> Column:
     return ts - F.pmod(ts, F.lit(tier_ms))
 
 
-def series_key(sig: Column) -> Column:
-    """64-bit shuffle key for a series: fact rows carry an 8-byte hash of
-    the signature instead of the ~60-byte string — big shuffles shrink ~3×.
-    The string signature lives only in the series dim; ``series_dim``
-    asserts hash-injectivity over the observed series on request (a 64-bit
-    collision over even 10^9 series is ~3% birthday risk — the check
-    catches it)."""
-    return F.xxhash64(sig)
-
-
 def series_dim(samples: DataFrame, check_collisions: bool = False) -> DataFrame:
     """The tiny series dimension (skey → sig, name, labels). Fact rows carry
     only the 64-bit skey; label maps and signature strings never enter the
@@ -62,10 +53,8 @@ def series_dim(samples: DataFrame, check_collisions: bool = False) -> DataFrame:
     INVERTIBLE signature; the label map is rebuilt from the string on the
     post-shuffle dim-sized rows. Grouping on the map (or carrying it
     through first()) would force SortAggregate — a per-partition sort of
-    every fact row. The rebuild is the planner's ``dim_from_sig2``, the one
-    its selector dims use; its skey is ``series_key(sig)``."""
-    from ..engine.ingest import NAME_LABEL
-
+    every fact row. The rebuild is ``frames.dim_from_sig2``, the one the
+    planner's selector dims use; its skey is ``series_key(sig)``."""
     dim = dim_from_sig2(
         samples.select(sig2_expr(F.col("labels")).alias("_sig2")).distinct()
     ).select(
@@ -80,20 +69,6 @@ def series_dim(samples: DataFrame, check_collisions: bool = False) -> DataFrame:
     return dim
 
 
-def series_dim_from_labelspace(name_labels: DataFrame) -> DataFrame:
-    """(name, labels) rows — e.g. from ``ingest.series_dim_for_table`` —
-    → the dim shape ``series_dim`` produces (skey, sig, name, labels).
-    The fast path for table-backed corpora: the label space comes from one
-    narrow aggregate over base rows instead of a signature-distinct over
-    the (rows × metrics) sample union."""
-    return name_labels.select(
-        series_key(sig_expr(F.col("labels"))).alias("skey"),
-        sig_expr(F.col("labels")).alias("sig"),
-        "name",
-        "labels",
-    )
-
-
 def attach_series(partials: DataFrame, dim: DataFrame) -> DataFrame:
     """Narrow partials (skey-keyed) + series dim → the public tier schema."""
     return partials.join(dim, "skey").select(
@@ -106,10 +81,6 @@ def _series_fact(samples: DataFrame) -> DataFrame:
     value, _okey). Accepts the narrow fact (skey, ts, seq, value) or wide
     samples with a ``labels`` map (the skey is hashed from their
     signature). A plain projection, so it is safe on a streaming frame."""
-    narrow_input = "skey" in samples.columns and "labels" not in samples.columns
-    skey_col = (
-        F.col("skey") if narrow_input else series_key(sig_expr(F.col("labels")))
-    )
     # packed (ts, seq) ordering key: min_by/max_by over a LONG keeps the
     # aggregation in HashAggregate (a struct key forces SortAggregate — a
     # per-partition sort). Tie caveat: two samples of one series in the SAME
@@ -117,7 +88,7 @@ def _series_fact(samples: DataFrame) -> DataFrame:
     # arbitrarily; all drivers keep seq (event_id / line_no) far below 2^21
     # per ms.
     return samples.select(
-        skey_col.alias("skey"), "ts", "value", okey_expr().alias("_okey")
+        fact_skey(samples).alias("skey"), "ts", "value", okey_expr().alias("_okey")
     )
 
 

@@ -212,6 +212,19 @@ def minhash_lsh_pairs(
     )
 
 
+def _jaccard_pairs(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """Pairs (doc_a, doc_b, inter) with their shared-shingle count, scored
+    against the per-doc shingle counts ``sizes`` (doc, n_sh): the pairs
+    whose Jaccard is at least ``threshold``, the score rounded to 6 places."""
+    return (
+        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
+        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
+        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
+        .filter(F.col("jaccard") >= F.lit(threshold))
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def near_dup_pairs(
     docs: DataFrame, threshold: float = 0.5, num_hashes: int = 16, bands: int = 4,
     shingle_n: int = 3, text_col: str = "text", id_col: str = "doc_id",
@@ -237,13 +250,7 @@ def near_dup_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("long").alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_pairs(inter, sizes, threshold)
 
 
 def dedup_components(
@@ -455,13 +462,7 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count("*").cast("long").alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_pairs(inter, sizes, threshold)
 
 
 SIMHASH_BITS = 60  # portable_hash width
@@ -819,12 +820,7 @@ def embedding_near_dup_pairs(
     if bucket_hamming not in (0, 1):
         raise ValueError("bucket_hamming must be 0 or 1")
     b = lsh_buckets(embeddings, num_planes, vec_col, id_col, dim)
-    if max_bucket is not None:
-        b = b.join(
-            b.groupBy("bucket").agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= F.lit(max_bucket)).select("bucket"),
-            "bucket", "left_semi",
-        )
+    b = _cap_buckets(b, "bucket", max_bucket)
     # probe keys: own bucket + every bucket within the hamming radius
     keys = [F.col("bucket")]
     if bucket_hamming >= 1:

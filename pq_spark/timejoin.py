@@ -18,10 +18,6 @@ Scale design (the part Spark's own API gets wrong by default):
   within partitions, and the latest right row is carried forward with a
   single ``last(ignorenulls)`` running window. One Exchange, one Sort,
   whole-stage-codegen window — the same shape at 60k rows and 100 TB.
-  Hot-key skew composes with the engine's (skey, time-block) sharding:
-  pre-split each hot series into blocks, run the carry per block, and
-  seed each block with the per-(key, block) boundary row — the seed table
-  is one row per (key, block) and broadcast-sized.
 - ``range_join`` buckets time: each interval explodes to the fixed-width
   buckets it covers (bounded fan-out, asserted at runtime) and each left
   row joins its OWN bucket with an equi-join, then the exact containment
@@ -125,129 +121,6 @@ def asof_join(
     )
 
 
-def asof_join_blocked(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    block_ms: int,
-    values: list[str] | None = None,
-    tolerance_ms: int | None = None,
-) -> DataFrame:
-    """``asof_join`` (backward inclusive) with HOT-KEY SHARDING: partitions
-    by (key, time-block) instead of key, so one Zipf-hot series spreads
-    over ``span/block_ms`` reducers instead of serializing on one.
-
-    Exactness across block boundaries comes from a seed pass: the right
-    side collapses to one row per (key, block) — its latest row — a
-    running carry over that TINY block-level table (one window over
-    #key×#active-block rows) yields, for every left-active block, the
-    latest right row from any EARLIER block, and that seed is injected
-    into the block's partition at sort-position −∞. Within a block the
-    plain union+carry runs unchanged. Result is row-for-row identical to
-    ``asof_join`` (property-tested); cost is two extra small shuffles of
-    block-granularity tables, which is the right trade only for skewed
-    keys — default to ``asof_join`` otherwise.
-
-    Backward-inclusive only; timestamps must be non-negative (epoch-ms):
-    the cross-block seed sits at sort position −1, below every real
-    in-block position.
-    """
-    on = list(on)
-    if values is None:
-        values = [c for c in right.columns if c not in on and c != right_ts]
-    lpayload = [c for c in left.columns if c not in on]
-    clash = [c for c in [right_ts, *values] if c in left.columns]
-    if clash:
-        raise ValueError(f"right columns collide with left: {clash} — rename first")
-    B = int(block_ms)
-
-    rrow = F.struct(
-        F.col(right_ts).cast("long").alias("_rts"),
-        *[F.col(c) for c in values],
-    )
-    r = right.filter(F.col(right_ts).isNotNull()).select(
-        *on,
-        F.col(right_ts).cast("long").alias("_ots"),
-        rrow.alias("_rrow"),
-    )
-    rrow_t = r.schema["_rrow"].dataType
-
-    # one row per (key, block): the block's LATEST right row
-    blk_last = r.groupBy(*on, F.expr(f"_ots div {B}").alias("_blk")).agg(
-        F.max_by("_rrow", "_ots").alias("_rrow"), F.max("_ots").alias("_bts")
-    )
-    # running carry over the block-level table: after this, row (key, blk)
-    # holds the latest right row in ANY block <= blk
-    wblk = (
-        Window.partitionBy(*on)
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    blk_cum = blk_last.select(
-        *on, "_blk", F.last("_rrow").over(wblk).alias("_rrow")
-    )
-    # seed each LEFT-active block with the carry from strictly-earlier
-    # blocks: a plain as-of at block granularity (tiny tables both sides)
-    lblocks = left.select(
-        *on, F.expr(f"CAST({left_ts} AS LONG) div {B}").alias("_blk")
-    ).distinct()
-    seeds = (
-        asof_join(
-            lblocks,
-            blk_cum.select(*on, (F.col("_blk") + 1).alias("_sblk"), "_rrow"),
-            on=on,
-            left_ts="_blk",
-            right_ts="_sblk",
-            values=["_rrow"],
-        )
-        .filter(F.col("_rrow").isNotNull())
-        # sort-position -inf within the block: _pos=-1 beats every real row
-        .select(*on, "_blk", F.lit(-1).alias("_pos"), F.lit(0).alias("_tag"),
-                F.col("_rrow"),
-                *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-                  for c in lpayload])
-    )
-    rb = r.select(
-        *on,
-        F.expr(f"_ots div {B}").alias("_blk"),
-        F.col("_ots").alias("_pos"),
-        F.lit(0).alias("_tag"),
-        "_rrow",
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lpayload],
-    )
-    lb = left.select(
-        *on,
-        F.expr(f"CAST({left_ts} AS LONG) div {B}").alias("_blk"),
-        F.col(left_ts).cast("long").alias("_pos"),
-        F.lit(1).alias("_tag"),
-        F.lit(None).cast(rrow_t).alias("_rrow"),
-        *lpayload,
-    )
-    w = (
-        Window.partitionBy(*on, "_blk")
-        .orderBy("_pos", "_tag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = (
-        seeds.unionByName(rb)
-        .unionByName(lb)
-        .withColumn("_m", F.last("_rrow", ignorenulls=True).over(w))
-        .filter(F.col("_tag") == 1)
-    )
-    if tolerance_ms is not None:
-        dist = F.col("_pos") - F.col("_m._rts")
-        carried = carried.withColumn(
-            "_m", F.when(dist <= F.lit(int(tolerance_ms)), F.col("_m"))
-        )
-    return carried.select(
-        *left.columns,
-        F.col("_m._rts").alias(right_ts),
-        *[F.col(f"_m.{c}").alias(c) for c in values],
-    )
-
-
 def range_join(
     left: DataFrame,
     intervals: DataFrame,
@@ -335,9 +208,7 @@ def sessionize(
     reshuffle. Per-key work is inherently sequential (a session boundary
     depends on every prior gap), so the unit of parallelism is the key —
     the right unit for web logs (hosts/users are many and individually
-    small). A single pathological key bounded only by the corpus would
-    need the engine's (key, time-block) sharding with boundary seeds, the
-    asof_join_blocked pattern above."""
+    small)."""
     w = Window.partitionBy(*keys).orderBy(ts_col)
     prev = F.lag(ts_col).over(w)
     new_s = F.when(

@@ -924,8 +924,7 @@ def test_static_sig_expr_equals_sig_expr(spark):
     """static_sig_expr (plain concat over known keys) must byte-equal
     sig_expr (map build + sort + transform) — including the null-value
     pair skip and key ordering."""
-    from pq_spark.engine.ingest import static_sig_expr
-    from pq_spark.engine.planner import sig_expr
+    from pq_spark.engine.frames import sig_expr, static_sig_expr
 
     rows = [
         ("m", "en", "a.com"),
@@ -948,6 +947,57 @@ def test_static_sig_expr_equals_sig_expr(spark):
         ).alias("b"),
     ).collect()
     assert all(r["a"] == r["b"] for r in got), got
+
+
+def test_series_identity_has_one_owner():
+    """Series identity (signature, 64-bit key, ordering key, sig2 dim
+    rebuild) is defined once, in engine/frames.py: no rollup or streaming
+    module imports the PromQL planner, ``NAME_LABEL`` is assigned once, and
+    the rollup modules bind identity names at import, not in a function."""
+    import ast
+    import pathlib
+
+    import pq_spark
+
+    root = pathlib.Path(pq_spark.__file__).parent
+
+    def imported(node):
+        if isinstance(node, ast.ImportFrom):
+            return (node.module or "").split("."), [a.name for a in node.names]
+        if isinstance(node, ast.Import):
+            return [p for a in node.names for p in a.name.split(".")], []
+        return None
+
+    for path in [*(root / "rollup").glob("*.py"), *(root / "streaming").glob("*.py")]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            got = imported(node)
+            if got is not None:
+                assert "planner" not in got[0] + got[1], (path.name, node.lineno)
+
+    assigned = [
+        (path.name, node.lineno)
+        for path in root.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and t.id == "NAME_LABEL"
+    ]
+    assert len(assigned) == 1, assigned
+
+    identity = {
+        "NAME_LABEL", "dim_from_sig2", "empty_map", "fact_skey", "narrow_fact",
+        "okey_expr", "series_dim", "series_dim_for_table", "series_key",
+        "sig2_expr", "sig_expr", "sig_from_sig2", "static_sig_expr",
+    }
+    for name in ("tiers.py", "gorilla.py", "pages.py"):
+        tree = ast.parse((root / "rollup" / name).read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                got = imported(node)
+                if got is not None:
+                    assert not identity & set(got[1]), (name, fn.name, node.lineno)
 
 
 def test_commit_write_parallelism(spark, tmp_path, samples):

@@ -184,89 +184,6 @@ def test_range_join_no_nested_loop_plan(spark):
     assert "NestedLoop" not in plan and "Cartesian" not in plan, plan
 
 
-def _rand_frames(spark, seed, n_left=400, n_right=150, keys=3, span=2000):
-    """Deterministic pseudo-random frames with ts collisions (mulberry-ish
-    LCG so runs are reproducible without RNG imports)."""
-    def lcg(x):
-        return (x * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-
-    x, lrows, rrows = seed, [], []
-    for i in range(n_left):
-        x = lcg(x)
-        lrows.append(Row(k=f"k{x % keys}", lts=(x >> 8) % span, pay=f"p{i}"))
-    for i in range(n_right):
-        x = lcg(x)
-        rrows.append(Row(k=f"k{x % keys}", rts=(x >> 8) % span,
-                         v=float((x >> 16) % 97), s=f"r{i}"))
-    # right must be unique per (k, rts): keep the max-v representative
-    uniq = {}
-    for r in rrows:
-        cur = uniq.get((r.k, r.rts))
-        if cur is None or r.v > cur.v:
-            uniq[(r.k, r.rts)] = r
-    l = spark.createDataFrame(lrows, "k string, lts long, pay string")
-    r = spark.createDataFrame(list(uniq.values()),
-                              "k string, rts long, v double, s string")
-    return l, r
-
-
-def _asof_dict(df):
-    return {
-        (r["k"], r["lts"], r["pay"]): (r["rts"], r["v"], r["s"])
-        for r in df.collect()
-    }
-
-
-def test_asof_blocked_equals_plain(spark):
-    """The hot-key sharded variant must be row-for-row identical to the
-    plain carry — block boundaries (including blocks with no right rows,
-    requiring multi-block seed carry) can't change the answer. One plain
-    reference, every block width checked against it concurrently (the
-    parallel-battery pattern: wall time here is job latency, not compute)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pq_spark.timejoin import asof_join_blocked
-
-    l, r = _rand_frames(spark, seed=20260818)
-    l, r = l.cache(), r.cache()
-    plain = _asof_dict(asof_join(l, r, on=["k"], left_ts="lts",
-                                 right_ts="rts"))
-
-    def run(block_ms):
-        return block_ms, _asof_dict(
-            asof_join_blocked(l, r, on=["k"], left_ts="lts",
-                              right_ts="rts", block_ms=block_ms))
-
-    with ThreadPoolExecutor(max_workers=5) as ex:
-        for block_ms, blocked in ex.map(run, [1, 7, 100, 500, 10_000]):
-            assert blocked == plain, block_ms
-    l.unpersist(), r.unpersist()
-
-
-def test_asof_blocked_tolerance_equals_plain(spark):
-    from pq_spark.timejoin import asof_join_blocked
-
-    l, r = _rand_frames(spark, seed=7)
-    plain = _asof_dict(asof_join(l, r, on=["k"], left_ts="lts",
-                                 right_ts="rts", tolerance_ms=40))
-    blocked = _asof_dict(asof_join_blocked(l, r, on=["k"], left_ts="lts",
-                                           right_ts="rts", block_ms=64,
-                                           tolerance_ms=40))
-    assert blocked == plain
-
-
-def test_asof_blocked_partitions_by_block(spark):
-    """The scale property the variant exists for: the main carry window
-    partitions by (key, block) — a hot key's rows spread over many
-    reducers instead of one."""
-    from pq_spark.timejoin import asof_join_blocked
-
-    l, r = _rand_frames(spark, seed=3)
-    plan = _plan(spark, asof_join_blocked(l, r, on=["k"], left_ts="lts",
-                                          right_ts="rts", block_ms=100))
-    assert re.search(r"hashpartitioning\(k#\d+[^)]*_blk", plan), plan
-
-
 def test_sessionize_semantics(spark):
     """Hand-computed sessions: gap > gap_ms splits, gap == gap_ms does
     not, ties at one ts never split, per-key streams are independent,
