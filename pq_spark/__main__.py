@@ -10,8 +10,8 @@ place per grid instant as each instant's cells arrive
 golden harness pins via run_cli.
 
 Parallelism comes from ``SPARK_GRAFT_CPUS`` (default ``*``); the bulk
-path for archived logs is the distributed file readers
-(ingest.lines_from_text / parquet sources), not this pipe.
+path for archived logs is a parquet table (ingest.samples_from_table),
+not this pipe.
 """
 
 from __future__ import annotations

@@ -2949,11 +2949,10 @@ def _incremental_dedup_query(spark, sf):
     against the content-hash manifest of an already-ingested corpus
     (deterministically: docs with doc_id % 3 == 0) — the recurring-crawl
     shape where 100 TB of history is consulted as a hash manifest, never
-    re-read. In production the manifest is stored hash-bucketed
-    (textops.write_hash_manifest) so the history side of the anti-join
-    plans zero Exchanges (pinned by tests/test_textops_scale.py); the
-    driver row checks the join/collapse semantics against SQL
-    NOT EXISTS."""
+    re-read. Stored hash-bucketed (``bucketBy`` on ``text_hash``), the
+    history side of the anti-join plans zero Exchanges (pinned by
+    tests/test_textops_scale.py); the driver row checks the
+    join/collapse semantics against SQL NOT EXISTS."""
     docs = _docs(spark, sf)
     prior = textops.hash_manifest(docs.filter(F.col("doc_id") % 3 == 0))
     return textops.incremental_dedup(docs, prior)

@@ -26,9 +26,8 @@ Scale notes (100 TB):
 - the regex decoder is JVM-side ``regexp_extract`` (codegen'd, no Python);
   one regex evaluation per capture group — for wide patterns prefer the
   table-ingest path (``samples_from_table``) which skips decoding entirely.
-- ``lines_from_text`` assigns global line numbers with zipWithIndex (one
-  extra pass); the line number only feeds the synthetic ``__line__`` metric,
-  so table-based ingest uses a per-partition id instead.
+- the line number only feeds the synthetic ``__line__`` metric, so
+  table-based ingest uses a per-partition id instead of a global one.
 """
 
 from __future__ import annotations
@@ -52,12 +51,6 @@ def lines_df(spark: SparkSession, lines: list[str]) -> DataFrame:
     (reference: src/input/reader.rs:25-38)."""
     rows = [(i + 1, s) for i, s in enumerate(lines)]
     return spark.createDataFrame(rows, "line_no long, line string")
-
-
-def lines_from_text(spark: SparkSession, path: str) -> DataFrame:
-    """Read a text file with global 1-based line numbers."""
-    rdd = spark.read.text(path).rdd.zipWithIndex()
-    return rdd.map(lambda t: (t[1] + 1, t[0][0])).toDF(["line_no", "line"])
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import PqError
 from ..materialize import Held, persist
-from ..program import Mapper, ProgramAST, RegexDecoder, parse_program
-from ..query.ast import Expr, VectorSelector
+from ..program import ProgramAST, RegexDecoder, parse_program
+from ..query.ast import Expr
 from ..timeparse import parse_duration, try_parse_time
 from . import formatter as fmt
 from . import ingest
@@ -181,14 +181,14 @@ class PqEngine:
 
     def run_program(
         self,
-        program: str,
+        program: str | ProgramAST,
         lines: list[str] | DataFrame,
         since_ms: int | None = None,
         until_ms: int | None = None,
         interval_ms: int | None = None,
         lookback_ms: int | None = None,
     ) -> ProgramResult:
-        ast = parse_program(program)
+        ast = program if isinstance(program, ProgramAST) else parse_program(program)
         lines_df = (
             lines
             if isinstance(lines, DataFrame)
@@ -323,11 +323,11 @@ def parse_cli_args(argv: list[str]) -> CliOptions:
 
 
 def _run_cli_program(
-    spark: SparkSession, o: CliOptions, input_lines: list[str]
+    spark: SparkSession, o: CliOptions, ast: ProgramAST, input_lines: list[str]
 ) -> ProgramResult:
     engine = PqEngine(spark, strict=True, extensions=False)
     return engine.run_program(
-        o.program, input_lines, since_ms=o.since, until_ms=o.until,
+        ast, input_lines, since_ms=o.since, until_ms=o.until,
         interval_ms=o.interval, lookback_ms=o.lookback,
     )
 
@@ -411,7 +411,7 @@ def run_cli_stream(
     o = parse_cli_args(argv)
     ast = parse_program(o.program)
     lines = consume_stream_lines(spark, ast, line_iter, o.until, chunk_lines)
-    return _emit_cli(_run_cli_program(spark, o, lines), o)
+    return _emit_cli(_run_cli_program(spark, o, ast, lines), o)
 
 
 def run_cli_live(
@@ -434,7 +434,7 @@ def run_cli_live(
         raise PqError("run_cli_live requires -i/--interactive")
     ast = parse_program(o.program)
     lines = consume_stream_lines(spark, ast, line_iter, o.until, chunk_lines)
-    result = _run_cli_program(spark, o, lines)
+    result = _run_cli_program(spark, o, ast, lines)
     try:
         if result.kind != "query" or result.formatter is not None:
             raise PqError("interactive mode is not supported for this type of result")

@@ -1,17 +1,14 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-A training-data pipeline at 100 TB carries media as ``binary`` columns with
-a typed metadata struct alongside. The Spark-side plumbing here — schemas,
-Arrow batch shapes, partition-friendly UDF signatures — is production-
-shaped, and the image/audio codecs are REAL formats (pq_spark.codecs):
+A training-data pipeline carries media as ``binary`` columns with a typed
+metadata struct alongside. ``synth_media`` generates such a table in real
+formats (pq_spark.codecs) and ``media_header_facts`` validates it without
+decoding a payload:
 
-- images are spec-compliant 8-bit grayscale **PNG** files (any viewer
-  opens them; any external grayscale PNG decodes here),
+- images are spec-compliant 8-bit grayscale **PNG** files,
 - audio is **WAV** PCM16 mono,
-- video is the one remaining seam: an MJPEG-style container of PNG frames
-  (header below + per-frame length-prefixed PNGs). A real deployment swaps
-  ``_split_video``/``_make_video`` for ffmpeg without touching any Spark
-  code.
+- video is an MJPEG-style container of PNG frames (header below +
+  per-frame length-prefixed PNGs).
 
 Video container format (little-endian):
     magic   u16 = 0x4D4D ('MM')
@@ -25,29 +22,14 @@ Video container format (little-endian):
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .codecs import decode_png, decode_wav, encode_png, encode_wav
+from .codecs import encode_png, encode_wav
 
 MAGIC = 0x4D4D
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, blob binary, "
-    "meta struct<width:int, height:int, frames:int, sample_rate:int, n_bytes:int>"
-)
-
-FEATURES_SCHEMA = (
-    "media_id long, kind string, width int, height int, frames int, "
-    "mean_intensity double, n_payload int"
-)
-
-THUMB_SCHEMA = "media_id long, thumb binary, thumb_w int, thumb_h int"
-FRAME_SCHEMA = "media_id long, frame_idx int, frame binary"
-
 SAMPLE_RATE = 16_000
 
 
@@ -58,18 +40,6 @@ def _make_video(frames: list[np.ndarray], w: int, h: int) -> bytes:
         png = encode_png(fr)
         parts.append(struct.pack("<I", len(png)) + png)
     return b"".join(parts)
-
-
-def _split_video(blob: bytes) -> tuple[int, int, list[bytes]]:
-    magic, kind, w, h, n = struct.unpack_from("<HBHHH", blob, 0)
-    if magic != MAGIC or kind != 2:
-        raise ValueError("bad video container")
-    pos, frames = 9, []
-    for _ in range(n):
-        (length,) = struct.unpack_from("<I", blob, pos)
-        frames.append(blob[pos + 4 : pos + 4 + length])
-        pos += 4 + length
-    return w, h, frames
 
 
 def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
@@ -114,94 +84,6 @@ def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
             w.alias("width"), ht.alias("height"), frames.alias("frames"),
             F.lit(SAMPLE_RATE).alias("sample_rate"), F.length(blob).alias("n_bytes"),
         ).alias("meta"),
-    )
-
-
-def _decode_any(blob: bytes) -> tuple[str, int, int, int, np.ndarray]:
-    """(kind, width, height, frames, u8 payload) from a media blob, by
-    sniffing the real format signatures."""
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        img = decode_png(blob)
-        return "image", img.shape[1], img.shape[0], 1, img.ravel()
-    if blob[:4] == b"RIFF":
-        _, s16 = decode_wav(blob)
-        u8 = ((s16 >> 8) + 128).astype(np.uint8)
-        return "audio", len(u8), 1, 1, u8
-    w, h, frames = _split_video(blob)
-    pix = (
-        np.concatenate([decode_png(fr).ravel() for fr in frames])
-        if frames
-        else np.zeros(0, dtype=np.uint8)  # zero-frame container is valid
-    )
-    return "video", w, h, len(frames), pix
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract via ``mapInPandas`` (Arrow batches),
-    format-sniffing PNG/WAV/video-container per row."""
-
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("media_id", "kind", "width", "height", "frames",
-                     "mean_intensity", "n_payload")}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                kind, w, h, frames, payload = _decode_any(bytes(blob))
-                rows["media_id"].append(mid)
-                rows["kind"].append(kind)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["frames"].append(frames)
-                rows["mean_intensity"].append(
-                    float(payload.mean()) if len(payload) else 0.0
-                )
-                rows["n_payload"].append(len(payload))
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "blob").mapInPandas(fe, FEATURES_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
-    """Resize images: nearest-neighbor downsample, re-encoded as a REAL
-    PNG thumbnail (decodable by any viewer)."""
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, thumbs = [], []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                img = decode_png(bytes(blob))
-                h, w = img.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                ids.append(mid)
-                thumbs.append(encode_png(img[np.ix_(yi, xi)]))
-            yield pd.DataFrame(
-                {"media_id": ids, "thumb": thumbs,
-                 "thumb_w": [out_w] * len(ids), "thumb_h": [out_h] * len(ids)}
-            )
-
-    return media.filter(F.col("kind") == "image").select("media_id", "blob").mapInPandas(
-        rs, THUMB_SCHEMA
-    )
-
-
-def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
-    """Frame-sample videos: emit every Nth frame as its own standalone PNG
-    row (the fan-out shape of a real frame extractor)."""
-
-    def sf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames_out = [], [], []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                _w, _h, frames = _split_video(bytes(blob))
-                for i in range(0, len(frames), every):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames_out.append(frames[i])
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames_out})
-
-    return media.filter(F.col("kind") == "video").select("media_id", "blob").mapInPandas(
-        sf, FRAME_SCHEMA
     )
 
 

@@ -1,7 +1,5 @@
 from .rollup_stream import (
     streaming_dedup,
-    streaming_hll_tier,
-    streaming_last_value,
     streaming_sessionize,
     streaming_tier,
 )
@@ -9,7 +7,5 @@ from .rollup_stream import (
 __all__ = [
     "streaming_tier",
     "streaming_dedup",
-    "streaming_last_value",
     "streaming_sessionize",
-    "streaming_hll_tier",
 ]

@@ -9,30 +9,18 @@ this module provides the streaming skins:
   src/query/vector.rs:125-126,178-202 — drop samples older than
   ``next_instant − lookback``) maps exactly onto the watermark: late data
   beyond the lookback is dropped on arrival (vector.rs:100-102).
-- ``streaming_last_value``: the staleness-aware lookback gap-fill (pq's
-  instant-vector selector) as a custom stateful operator via
-  ``applyInPandasWithState`` — per series, keeps the last sample and emits
-  one row per closed bucket while the sample is fresh (within lookback),
-  dropping the series when it goes stale. This is the operator Spark's
-  built-in window aggs can't express (it must emit rows for buckets with
-  NO input).
+- ``streaming_dedup`` and ``streaming_sessionize``: the continuous forms
+  of the batch text dedup and ``timejoin.sessionize``.
 
 ``streaming_tier`` takes the batch tier's input shapes (seq, ts, value
 plus a ``labels`` map or a narrow ``skey``) and emits the batch tier's
 narrow skey partials; labels come from ``rollup.tiers.series_dim`` run on
 the same stream and attached at the edge (``attach_series``), as in batch.
-``streaming_last_value`` consumes sample rows keyed by a ``sig`` string
-(seq, ts, sig, value) — e.g. from a Kafka/file source of extraction
-events.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..rollup.tiers import PARTIAL_COLS, TIER_MS, _partial_aggs, _series_fact
 
@@ -58,152 +46,6 @@ def streaming_tier(
             F.unix_millis(F.col("w.start")).alias("bucket_ts"),
             "skey", *PARTIAL_COLS,
         )
-    )
-
-
-def streaming_hll_tier(
-    sample_stream: DataFrame, item_col: str, tier: str = "1m",
-    watermark: str = "5 minutes", key_cols: tuple = ("sig",),
-    lg_k: int = 12,
-) -> DataFrame:
-    """Streaming distinct-count continuous aggregate: a watermarked
-    windowed ``hll_sketch_agg`` of ``item_col`` per (bucket, keys) — the
-    streaming skin of ``rollup.tiers.hll_tier``, emitting the SAME
-    (bucket_ts, keys, hll) schema, so the batch sketch cascade
-    (``hll_tier_from_tier``) coarsens streamed output and
-    ``hll_estimate`` serves it: the lambda-architecture property the
-    numeric tiers already have, for the one classic non-algebraic
-    aggregate (COUNT DISTINCT). Late data beyond the watermark drops on
-    arrival, matching the batch tier's purge semantics."""
-    with_event_time = sample_stream.withColumn(
-        "event_time", F.timestamp_millis(F.col("ts"))
-    ).withWatermark("event_time", watermark)
-    win = F.window("event_time", f"{TIER_MS[tier]} milliseconds")
-    return (
-        with_event_time.groupBy(win.alias("w"), *[F.col(c) for c in key_cols])
-        .agg(
-            F.hll_sketch_agg(F.col(item_col).cast("string"), F.lit(lg_k)).alias("hll")
-        )
-        .select(
-            F.unix_millis(F.col("w.start")).alias("bucket_ts"),
-            *key_cols, "hll",
-        )
-    )
-
-
-_LAST_VALUE_STATE_SCHEMA = (
-    "pend_bucket array<long>, pend_ts array<long>, pend_val array<double>, "
-    "emitted_until long"
-)
-_LAST_VALUE_OUT_SCHEMA = "sig string, bucket_ts long, value double, filled boolean"
-
-
-def _last_value_fn(interval_ms: int, lookback_ms: int):
-    def fn(
-        key: Tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (sig,) = key
-        wm = state.getCurrentWatermarkMs()
-
-        # state: per-bucket latest sample for every bucket not yet emitted
-        # (still open w.r.t. the watermark), as parallel arrays sorted by
-        # bucket. Size is bounded by (watermark delay / interval) + 1 carry
-        # entry — NOT by the stream length.
-        pending: dict[int, tuple[int, float]] = {}
-        emitted_until = None
-        if state.exists:
-            pb, pt, pv, emitted_until = state.get
-            pending = {int(b): (int(t), float(v)) for b, t, v in zip(pb, pt, pv)}
-
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "seq"])
-            for t, v in zip(pdf["ts"], pdf["value"]):
-                t = int(t)
-                b = (t // interval_ms) * interval_ms
-                cur = pending.get(b)
-                if cur is None or t >= cur[0]:
-                    pending[b] = (t, float(v))
-        if not pending:
-            state.remove()
-            return
-
-        # emit ONLY buckets already closed by the event-time watermark — a
-        # bucket's value may still change until wm passes its end, so eager
-        # emission would silently ignore later in-bucket samples (and make
-        # output depend on micro-batch boundaries).
-        buckets = sorted(pending)
-        b = emitted_until if emitted_until is not None else buckets[0]
-        last_src_bucket = buckets[-1]
-        out_rows = []
-        while b + interval_ms - 1 <= wm:
-            src_bucket = max((x for x in buckets if x <= b), default=None)
-            if src_bucket is None:
-                b += interval_ms
-                continue
-            # fresh while b is within lookback of the source bucket (pq
-            # instant-selector staleness, vector.rs:205-223)
-            if b <= src_bucket + lookback_ms - interval_ms:
-                out_rows.append((sig, b, pending[src_bucket][1], b != src_bucket))
-            b += interval_ms
-            if b > last_src_bucket + lookback_ms - interval_ms:
-                break  # nothing beyond the staleness horizon can emit
-
-        if b > last_src_bucket + lookback_ms - interval_ms and (
-            last_src_bucket + interval_ms - 1 <= wm
-        ):
-            # every bucket the latest sample can serve is emitted (or
-            # stale) — DROP the state (pq purge_before); a later sample
-            # recreates the series fresh from its own bucket
-            state.remove()
-        else:
-            # keep open buckets plus the single latest emitted bucket (the
-            # carry source for upcoming gap buckets)
-            keep = [x for x in buckets if x >= b]
-            carry = [x for x in buckets if x < b]
-            if carry:
-                keep = [carry[-1]] + keep
-            keep.sort()
-            state.update(
-                (
-                    keep,
-                    [pending[x][0] for x in keep],
-                    [pending[x][1] for x in keep],
-                    b,
-                )
-            )
-            # wake up when the watermark closes the next unemitted bucket
-            state.setTimeoutTimestamp(max(b + interval_ms - 1, wm + 1))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=["sig", "bucket_ts", "value", "filled"])
-
-    return fn
-
-
-def streaming_last_value(
-    sample_stream: DataFrame, interval_ms: int = 60_000, lookback_ms: int = 300_000,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Custom stateful gap-fill: per series, carry the last value across
-    empty buckets while within the lookback (pq instant-selector semantics,
-    reference: src/query/vector.rs:205-223). Emission is EVENT-TIME
-    driven: a bucket is emitted only once the watermark passes its end (so
-    late in-bucket samples are never silently ignored), gap-fill rows for
-    quiet series are produced by event-time timeouts as the watermark
-    advances, and fully-stale series are REMOVED from the state store (the
-    analogue of pq's purge_before)."""
-    with_event_time = sample_stream.withColumn(
-        "event_time", F.timestamp_millis(F.col("ts"))
-    ).withWatermark("event_time", watermark)
-    return with_event_time.groupBy("sig").applyInPandasWithState(
-        _last_value_fn(interval_ms, lookback_ms),
-        outputStructType=_LAST_VALUE_OUT_SCHEMA,
-        stateStructType=_LAST_VALUE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

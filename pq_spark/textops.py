@@ -101,24 +101,6 @@ def hash_manifest(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).distinct()
 
 
-def write_hash_manifest(
-    manifest: DataFrame, table_name: str, path: str, buckets: int = 32
-) -> None:
-    """Persist the manifest BUCKETED by hash: every later increment's
-    anti-join reads the stored side co-located — only the (small) new
-    increment shuffles, the corpus-history side plans NO Exchange
-    regardless of its size. Bucket metadata lives in the session catalog
-    (``saveAsTable``); on a cluster that is the Hive/Iceberg metastore."""
-    (
-        manifest.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(buckets, "text_hash")
-        .sortBy("text_hash")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def incremental_dedup(
     new_docs: DataFrame, manifest: DataFrame,
     text_col: str = "text", id_col: str = "doc_id",
@@ -1565,27 +1547,6 @@ def host_stats(
             | (mean_tokens < F.lit(min_mean_tokens))
         ).alias("spam"),
     )
-
-
-def host_spam_filter(
-    docs: DataFrame,
-    max_dup_rate: float = 0.5,
-    min_mean_tokens: float = 5.0,
-    url_col: str = "url",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop every document served by a spam-verdict host (see
-    ``host_stats``). The stats table is host-cardinality-sized, so the
-    verdict comes back as a broadcast left-semi join — the corpus
-    never shuffles."""
-    ok = host_stats(
-        docs, max_dup_rate, min_mean_tokens, url_col, text_col, id_col
-    ).where(~F.col("spam")).select("host")
-    host = F.regexp_extract(F.col(url_col), r"^https?://([^/]+)/", 1)
-    return docs.withColumn("_host", host).join(
-        F.broadcast(ok.withColumnRenamed("host", "_host")), "_host", "left_semi"
-    ).drop("_host")
 
 
 # ---------------------------------------------------------------------------

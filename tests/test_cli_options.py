@@ -237,6 +237,24 @@ def test_stream_early_termination(spark):
     )
 
 
+def test_cli_parses_program_once(spark, monkeypatch):
+    """The --until probe and the engine run share one parsed program."""
+    from pq_spark.engine import runner
+
+    calls = []
+    parse = runner.parse_program
+
+    def counting(text):
+        calls.append(text)
+        return parse(text)
+
+    monkeypatch.setattr(runner, "parse_program", counting)
+    argv = ["pq", PROGRAM, "--until", "2021-01-01 00:00:03"]
+    out = _lines(runner.run_cli_stream(spark, argv, iter(LOG)))
+    assert [r["result"][0]["value"][1] for r in out if r["result"]] == ["10", "20"]
+    assert calls == [PROGRAM]
+
+
 def test_live_interactive_frames(spark):
     """run_cli_live writes each -i frame + flush as the instant's cells
     stream back; the concatenated stream is byte-identical to the batch

@@ -1,4 +1,4 @@
-"""Structured Streaming variant: watermarked tier agg + stateful gap-fill.
+"""Structured Streaming variant: watermarked tier agg, dedup, sessionize.
 
 Runs with a file source + availableNow trigger + memory sink so the test is
 deterministic and bounded."""
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pq_spark.rollup.tiers import attach_series, samples_from_tier, series_dim
-from pq_spark.streaming import streaming_last_value, streaming_tier
+from pq_spark.streaming import streaming_tier
 
 SAMPLE_SCHEMA = "seq long, ts long, sig string, name string, value double"
 
@@ -105,73 +105,6 @@ def test_streaming_tier(spark, sample_dir):
     assert rows[("b", 180_000)]["last_val"] == 9.0
 
 
-def test_streaming_last_value_gapfill(spark, tmp_path):
-    # sentinel series z drives the event-time watermark past every bucket
-    # of a/b, closing them — emission is watermark-gated, never eager
-    rows = [
-        {"seq": 1, "ts": 0, "sig": "a", "name": "m", "value": 1.0},
-        {"seq": 2, "ts": 30_000, "sig": "a", "name": "m", "value": 2.0},
-        {"seq": 3, "ts": 65_000, "sig": "a", "name": "m", "value": 3.0},
-        {"seq": 4, "ts": 10_000, "sig": "b", "name": "m", "value": 7.0},
-        {"seq": 5, "ts": 200_000, "sig": "b", "name": "m", "value": 9.0},
-        {"seq": 6, "ts": 600_000, "sig": "z", "name": "m", "value": 0.0},
-    ]
-    _write_jsonl(tmp_path / "part-0.jsonl", rows)
-    stream = spark.readStream.schema(SAMPLE_SCHEMA).json(str(tmp_path))
-    filled = streaming_last_value(stream, interval_ms=60_000, lookback_ms=120_000)
-    out = _run_stream(spark, filled, f"lv_{int(time.time()*1000)}")
-    got = {(r["sig"], r["bucket_ts"]): (r["value"], r["filled"]) for r in out.collect()}
-    # series a: bucket 0 takes its own latest in-bucket sample (30s → 2.0),
-    # bucket 60k fresh (65s → 3.0), 120k carried, 180k stale
-    assert got[("a", 0)] == (2.0, False)
-    assert got[("a", 60_000)] == (3.0, False)
-    assert got[("a", 120_000)] == (3.0, True)
-    assert ("a", 180_000) not in got
-    # series b: bucket 0 fresh (7.0), 60k carried, 120k stale gap,
-    # 180k fresh (9.0), 240k carried, 300k stale
-    assert got[("b", 0)] == (7.0, False)
-    assert got[("b", 60_000)] == (7.0, True)
-    assert ("b", 120_000) not in got
-    assert got[("b", 180_000)] == (9.0, False)
-    assert got[("b", 240_000)] == (9.0, True)
-    assert ("b", 300_000) not in got
-    # z's own bucket never closes (watermark == its ts) → not emitted
-    assert not any(s == "z" for s, _ in got)
-
-
-def test_streaming_last_value_late_in_bucket_sample(spark, tmp_path):
-    """The bug this design fixes: a later sample arriving inside a
-    NOT-yet-closed bucket must win — eager emission would have locked in
-    the earlier value and silently ignored it."""
-    _write_jsonl(tmp_path / "part-0.jsonl", [
-        {"seq": 1, "ts": 65_000, "sig": "a", "name": "m", "value": 3.0},
-        {"seq": 2, "ts": 100_000, "sig": "z", "name": "m", "value": 0.0},
-    ])
-    _write_jsonl(tmp_path / "part-1.jsonl", [
-        # bucket 60k is still open (wm=100k < 119999): this later sample
-        # must become the bucket's value
-        {"seq": 3, "ts": 110_000, "sig": "a", "name": "m", "value": 5.0},
-        {"seq": 4, "ts": 600_000, "sig": "z", "name": "m", "value": 0.0},
-    ])
-    # the file source orders batches by modification time — make it explicit
-    import os
-
-    now = time.time()
-    os.utime(tmp_path / "part-0.jsonl", (now - 60, now - 60))
-    os.utime(tmp_path / "part-1.jsonl", (now, now))
-    stream = (
-        spark.readStream.schema(SAMPLE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(tmp_path))
-    )
-    filled = streaming_last_value(stream, interval_ms=60_000, lookback_ms=120_000)
-    out = _run_stream(spark, filled, f"lv_late_{int(time.time()*1000)}")
-    got = {(r["sig"], r["bucket_ts"]): (r["value"], r["filled"]) for r in out.collect()}
-    assert got[("a", 60_000)] == (5.0, False)
-    assert got[("a", 120_000)] == (5.0, True)
-    assert ("a", 180_000) not in got
-
-
 def test_streamed_tier_serves_over_time_windows(spark, sample_dir):
     """Lambda-architecture claim, demonstrated: the STREAMING tier's
     partial rows are the same table the batch serving layer reads —
@@ -198,54 +131,6 @@ def test_streamed_tier_serves_over_time_windows(spark, sample_dir):
 
     got = served(streamed)
     assert got == served(tier_partials(raw, "1m")) and len(got) > 0
-
-
-def test_streaming_hll_tier_matches_batch_cascade(spark, tmp_path):
-    """Streamed HLL sketch tier == batch sketch tier, and the batch
-    cascade (hll_tier_from_tier) coarsens the STREAMED output to the same
-    distinct counts — the lambda-architecture property for the
-    non-algebraic COUNT DISTINCT. Item cardinality stays far below
-    2^lg_k, so the sketches are in their sparse-EXACT regime and the
-    comparison is equality, not approximation."""
-    from pq_spark.streaming import streaming_hll_tier
-    from pq_spark.rollup.tiers import hll_estimate, hll_tier, hll_tier_from_tier
-
-    rows = [
-        # sig a, minute 0: users u1,u2 (u1 twice); minute 1: u1
-        {"seq": 1, "ts": 1_000, "sig": "a", "name": "m", "value": 1.0, "user": "u1"},
-        {"seq": 2, "ts": 2_000, "sig": "a", "name": "m", "value": 1.0, "user": "u1"},
-        {"seq": 3, "ts": 30_000, "sig": "a", "name": "m", "value": 1.0, "user": "u2"},
-        {"seq": 4, "ts": 65_000, "sig": "a", "name": "m", "value": 1.0, "user": "u1"},
-        # sig b spans two hours of minutes → cascade merges across buckets
-        {"seq": 5, "ts": 10_000, "sig": "b", "name": "m", "value": 1.0, "user": "u3"},
-        {"seq": 6, "ts": 3_620_000, "sig": "b", "name": "m", "value": 1.0, "user": "u4"},
-        {"seq": 7, "ts": 3_630_000, "sig": "b", "name": "m", "value": 1.0, "user": "u3"},
-    ]
-    _write_jsonl(tmp_path / "part-0.jsonl", rows)
-    schema = SAMPLE_SCHEMA + ", user string"
-
-    stream = spark.readStream.schema(schema).json(str(tmp_path))
-    tier = streaming_hll_tier(stream, "user", tier="1m", watermark="0 seconds")
-    streamed = _run_stream(
-        spark, tier, f"hll_{int(time.time()*1000)}", mode="complete"
-    )
-
-    batch = spark.read.schema(schema).json(str(tmp_path))
-    batch_tier = hll_tier(
-        batch.select(F.col("ts"), "sig", "user"), 60_000, "user",
-        key_cols=("sig",),
-    )
-    def est(df):
-        return {(r["bucket_ts"], r["sig"]): r["distinct_est"]
-                for r in hll_estimate(df).collect()}
-    # buckets: a@0 (u1,u2), a@60000 (u1), b@0 (u3), b@3600000 (u3,u4 — both
-    # 3.62M/3.63M ts land in the same minute bucket)
-    assert est(streamed) == est(batch_tier) and len(est(streamed)) == 4
-    assert est(streamed)[(0, "a")] == 2  # u1,u2 — duplicates collapse
-
-    # batch cascade over STREAMED sketches: 1m → 1h distinct users
-    hourly = est(hll_tier_from_tier(streamed, 3_600_000))
-    assert hourly == {(0, "a"): 2, (0, "b"): 1, (3_600_000, "b"): 2}
 
 
 def test_streaming_pq_query_serving_equals_batch(spark, tmp_path):

@@ -597,16 +597,18 @@ def test_incremental_dedup_bucketed_manifest_no_history_exchange(
     the plan, and it is not on the bucketed-scan side."""
     import re
 
-    from pq_spark.textops import (
-        hash_manifest, incremental_dedup, write_hash_manifest,
-    )
+    from pq_spark.textops import hash_manifest, incremental_dedup
 
     docs = spark.createDataFrame(
         [(i, f"doc number {i % 40}") for i in range(200)],
         "doc_id long, text string",
     )
-    write_hash_manifest(hash_manifest(docs.filter(F.col("doc_id") % 6 == 0)),
-                        "hash_manifest_test", str(tmp_path / "manifest"))
+    (
+        hash_manifest(docs.filter(F.col("doc_id") % 6 == 0))
+        .write.mode("overwrite").option("path", str(tmp_path / "manifest"))
+        .bucketBy(32, "text_hash").sortBy("text_hash").format("parquet")
+        .saveAsTable("hash_manifest_test")
+    )
     stored = spark.table("hash_manifest_test")
     out = incremental_dedup(docs, stored)
     plan = out._jdf.queryExecution().explainString(
@@ -667,14 +669,11 @@ def test_dup_span_removal_semantics(spark):
     assert out2 == {1: (2, ""), 2: (2, "")}
 
 
-def test_host_stats_and_spam_filter(spark):
+def test_host_stats(spark):
     """Host-level aggregation over the derived CC-shaped url: dup_rate
-    counts distinct NORMALIZED texts, the spam verdict triggers on
-    either rule, and host_spam_filter drops exactly the spam hosts'
-    docs."""
-    from pq_spark.textops import (
-        host_spam_filter, host_stats, with_derived_url,
-    )
+    counts distinct NORMALIZED texts and the spam verdict triggers on
+    either rule."""
+    from pq_spark.textops import host_stats, with_derived_url
 
     docs = spark.createDataFrame(
         [
@@ -701,9 +700,6 @@ def test_host_stats_and_spam_filter(spark):
     assert (m["n_unique"], m["dup_rate"], m["spam"]) == (1, 0.5, True)
     s = st["short.example.org"]
     assert (s["mean_tokens"], s["spam"]) == (1.0, True)
-    kept = {r["doc_id"]
-            for r in host_spam_filter(d, 0.4, 2.0).collect()}
-    assert kept == {1, 2}
 
 
 def test_canonical_url_folding(spark):
