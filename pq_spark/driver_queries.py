@@ -878,7 +878,7 @@ def _ann_brute(spark, sf):
         .filter(F.col("vec_id") == 0)
         .select("embedding")
     )
-    return textops.cosine_topk_join(emb, q, k=10)
+    return textops.cosine_topk_join(emb, q)
 
 
 _ANN_SQL = """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
@@ -901,7 +901,7 @@ def _ann_lsh(spark, sf):
     # embeddings (6 planes, recall@10 vs brute force / probed fraction):
     # h=0: 0.2/0.02, h=1: 0.4/0.14, h=2: 0.6/0.36, h=3: 0.9/0.63
     return textops.ann_topk_lsh(
-        _emb(spark, sf), _query_vec(spark, sf), k=10, num_planes=6,
+        _emb(spark, sf), _query_vec(spark, sf), num_planes=6,
         multiprobe_hamming=2,
     )
 
@@ -979,9 +979,7 @@ def _emb_near_dup(spark, sf):
     # threshold 0.35 is a demonstration value for the synthetic embeddings
     # (no true near-dups exist: max blocked-pair cosine ≈ 0.45); real
     # corpora use the 0.9 default
-    return textops.embedding_near_dup_pairs(
-        _emb(spark, sf), threshold=0.35, num_planes=8
-    )
+    return textops.embedding_near_dup_pairs(_emb(spark, sf), threshold=0.35)
 
 
 def _emb_near_dup_sql(max_bucket: int | None = None) -> str:
@@ -1039,7 +1037,7 @@ register("dedup_embedding_pairs", _emb_near_dup, _emb_near_dup_sql())
 
 def _ann_ivf(spark, sf):
     return textops.ann_topk_ivf(
-        _emb(spark, sf), _query_vec(spark, sf), k=10, n_centroids=16, nprobe=4
+        _emb(spark, sf), _query_vec(spark, sf), n_centroids=16, nprobe=4
     )
 
 
@@ -1475,7 +1473,7 @@ WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= 0.3""",
 
 register(
     "text_top_shingles",
-    lambda spark, sf: textops.top_shingles(_docs(spark, sf), k=50),
+    lambda spark, sf: textops.top_shingles(_docs(spark, sf)),
     f"""WITH {_SHINGLE_CTE}
 SELECT sh, CAST(count(*) AS BIGINT) AS doc_freq
 FROM sh GROUP BY sh ORDER BY doc_freq DESC, sh ASC LIMIT 50""",
@@ -1519,7 +1517,7 @@ FROM reach GROUP BY doc_id""",
 register(
     "ann_ivf_kmeans_topk",
     lambda spark, sf: textops.ann_topk_ivf(
-        _emb(spark, sf), _query_vec(spark, sf), k=10, n_centroids=16,
+        _emb(spark, sf), _query_vec(spark, sf), n_centroids=16,
         nprobe=4, train_iters=3,
     ),
     None,
@@ -1530,7 +1528,7 @@ register(
 # rounding contract).
 register(
     "text_doc_keywords",
-    lambda spark, sf: textops.doc_keywords(_docs(spark, sf), k=3),
+    lambda spark, sf: textops.doc_keywords(_docs(spark, sf)),
     f"""WITH w AS (
   SELECT doc_id, x AS w
   FROM (SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS x FROM documents)
@@ -1558,7 +1556,7 @@ def _distinct_users_tier(spark, sf):
     """Distinct users per (1h bucket, event type), served from a 1m→1h
     HLL-sketch cascade (sketch union = the distinct-count analog of the
     partial-merge cascade). Datasketches HLL is EXACT while in sparse
-    mode (≪ 2^lg_k items); with ≤10 user buckets the estimate equals the
+    mode (≪ 2^12 items); with ≤10 user buckets the estimate equals the
     true count, so the oracle is a plain COUNT(DISTINCT)."""
     from .rollup.tiers import hll_estimate, hll_tier, hll_tier_from_tier
 
@@ -1913,7 +1911,7 @@ register(
     # deterministic Bernoulli: membership is a pure function of doc_id
     "sample_bernoulli",
     lambda spark, sf: textops.sample_docs(
-        _docs(spark, sf), rate=0.25, seed="smp"
+        _docs(spark, sf), rate=0.25
     ).select("doc_id"),
     "SELECT doc_id FROM documents "
     f"WHERE ({_hash_sql('CAST(doc_id AS VARCHAR)', 'smp')} % 1000000) < 250000",
@@ -1923,7 +1921,7 @@ register(
     # per-stratum quota draw (rebalance over-represented languages)
     "sample_stratified",
     lambda spark, sf: textops.sample_stratified(
-        _docs(spark, sf), "lang", quota=50, seed="strat"
+        _docs(spark, sf), "lang", quota=50
     ).select("doc_id", "lang"),
     f"""SELECT doc_id, lang FROM (
   SELECT doc_id, lang, row_number() OVER (
@@ -2007,7 +2005,6 @@ register(
     lambda spark, sf: textops.contamination(
         _docs(spark, sf),
         _docs(spark, sf).where(F.col("doc_id") < 20),
-        shingle_n=8,
     ),
     f"""WITH {_SHINGLE8_CTE},
 ds AS (SELECT doc_id, {_hash_sql('sh', 'ctm')} AS bh FROM sh8),
@@ -2068,7 +2065,7 @@ FROM top t JOIN dup d ON t.doc_id = d.doc_id WHERE t.rn = 1""",
 register(
     # deterministic training-shard layout + balance summary
     "shard_stats",
-    lambda spark, sf: textops.shard_stats(_docs(spark, sf), n_shards=16),
+    lambda spark, sf: textops.shard_stats(_docs(spark, sf)),
     f"""SELECT ({_hash_sql('CAST(doc_id AS VARCHAR)', 'shard')} % 16) AS shard,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(len(string_split({_NORM_SQL}, ' '))) AS BIGINT) AS n_tokens
@@ -2207,7 +2204,7 @@ def _streamed_serve_query(spark, sf):
     # the sink regardless of watermark progression; the dim is a streaming
     # distinct, emitted once per series in append mode
     tier = attach_series(
-        drain(streaming_tier(samples, "1m", watermark="5 minutes"), "complete"),
+        drain(streaming_tier(samples, watermark="5 minutes"), "complete"),
         drain(series_dim(samples), "append"),
     )
     return _sum_by_et_from_tier(spark, tier)
@@ -2280,7 +2277,7 @@ register(
             "doc_id",
             (F.length("text") + F.lit(1)).cast("long").alias("w"),
         ),
-        k=500, weight_col="w", seed="wsmp",
+        k=500, weight_col="w",
     ),
     f"""WITH d AS (
   SELECT doc_id, CAST(length(text) + 1 AS BIGINT) AS w FROM documents),
@@ -2452,7 +2449,7 @@ register(
     # Grams ride exchanges as 60-bit hashes; dup detection is one
     # min(doc)≠max(doc) aggregate; the oracle recomputes the identical
     # hash and union. Integer/int division → 6-dp + _EPS6 on both sides.
-    lambda spark, sf: textops.dup_ngram_coverage(_docs(spark, sf), n=5).select(
+    lambda spark, sf: textops.dup_ngram_coverage(_docs(spark, sf)).select(
         "doc_id", "n_tokens",
         F.round(F.col("dup_ngram_frac") + F.lit(_EPS6), 6)
         .alias("dup_ngram_frac"),
@@ -2623,7 +2620,7 @@ FROM comp c JOIN best b ON b.component_id = c.component_id""".replace(
 register(
     "dedup_semantic",
     lambda spark, sf: textops.semantic_dedup_survivors(
-        _emb(spark, sf), threshold=0.35, num_planes=8, quality_col="label",
+        _emb(spark, sf), threshold=0.35, quality_col="label",
         max_bucket=1024,
     ),
     f"""WITH RECURSIVE
@@ -2981,7 +2978,7 @@ register(
     # Grams ride exchanges as 60-bit hashes; dup detection is the same
     # min(doc)≠max(doc) aggregate; the rewrite is per-row JVM array
     # logic. clean_text strings are hash-compared verbatim.
-    lambda spark, sf: textops.dup_span_removal(_docs(spark, sf), n=5),
+    lambda spark, sf: textops.dup_span_removal(_docs(spark, sf)),
     f"""WITH w AS (
   SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws FROM documents),
 g AS (
@@ -3207,7 +3204,7 @@ register(
     # non-binding at every test scale, bounds the equi-join's largest
     # key group at corpus scale).
     lambda spark, sf: textops.winnow_pairs(
-        _docs(spark, sf), k=5, w=4, min_shared=2, max_bucket=256
+        _docs(spark, sf), k=5, w=4, min_shared=2
     ),
     f"""WITH t AS (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws
            FROM documents),

@@ -58,7 +58,7 @@ def _metric_json_col() -> F.Column:
     return F.to_json(F.map_from_entries(F.array_sort(F.map_entries(F.col("labels")))))
 
 
-def promapi_lines(result, strict_checks: bool = True) -> list[str]:
+def promapi_lines(result) -> list[str]:
     """Serialize a query result to promapi JSON lines (one per instant)."""
     if isinstance(result, ScalarResult):
         # scalar ts hardcoded 0.0 and emitted exactly once
@@ -67,8 +67,7 @@ def promapi_lines(result, strict_checks: bool = True) -> list[str]:
             '{"resultType":"scalar","result":[0.0,"%s"]}' % rust_f64_str(result.value)
         ]
 
-    if strict_checks:
-        _run_checks(result.checks)
+    _run_checks(result.checks)
 
     if isinstance(result, VectorFrame):
         cells = result.cells.withColumn("_mj", _metric_json_col())
@@ -234,14 +233,13 @@ def records_human_lines(records: DataFrame, verbose: bool = False) -> list[str]:
     return out
 
 
-def promhuman_lines(result, strict_checks: bool = True, verbose: bool = False) -> list[str]:
+def promhuman_lines(result, verbose: bool = False) -> list[str]:
     """Human formatter for query values (humanreadable.rs:70-177).
     Non-verbose: empty vectors produce NO output line; verbose prints
     ``<ts> <no data>`` for them (humanreadable.rs:88-97,153-160)."""
     if isinstance(result, ScalarResult):
         return [rust_f64_str(result.value)]
-    if strict_checks:
-        _run_checks(result.checks)
+    _run_checks(result.checks)
 
     lines: list[str] = []
 
@@ -324,7 +322,7 @@ def _render_interactive_frame(instant: int, rows: list) -> str:
     return "\n".join(lines)
 
 
-def prominteractive_frames(result, strict_checks: bool = True):
+def prominteractive_frames(result):
     """Generator over ``-i`` frames: yields each instant's screen-refresh
     block AS SOON as that instant's cells have streamed back to the
     driver. The grid (instants only) is tiny and collected up front; the
@@ -339,8 +337,7 @@ def prominteractive_frames(result, strict_checks: bool = True):
 
     if not isinstance(result, VectorFrame):
         raise PqError("interactive mode is not supported for this type of result")
-    if strict_checks:
-        _run_checks(result.checks)
+    _run_checks(result.checks)
 
     instants = [r["instant"] for r in result.grid.orderBy("instant").collect()]
     it = result.cells.orderBy("instant", "ord").toLocalIterator()
@@ -354,7 +351,7 @@ def prominteractive_frames(result, strict_checks: bool = True):
         yield _render_interactive_frame(instant, rows)
 
 
-def prominteractive_lines(result, strict_checks: bool = True) -> list[str]:
+def prominteractive_lines(result) -> list[str]:
     """Batch form of ``prominteractive_frames`` (golden/pytest harness):
     the full frame sequence as a list."""
-    return list(prominteractive_frames(result, strict_checks))
+    return list(prominteractive_frames(result))

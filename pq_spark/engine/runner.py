@@ -121,18 +121,13 @@ class ProgramResult:
             return []
         return [r["error"] for r in self.errors.orderBy("line_no").collect()]
 
-    def output_lines(
-        self,
-        strict_checks: bool = True,
-        verbose: bool = False,
-        interactive: bool = False,
-    ) -> list[str]:
+    def output_lines(self, verbose: bool = False, interactive: bool = False) -> list[str]:
         try:
             if self.kind == "query":
                 if interactive and self.formatter is None:
-                    return fmt.prominteractive_lines(self.query_result, strict_checks)
+                    return fmt.prominteractive_lines(self.query_result)
                 if self.formatter == "promapi":
-                    return fmt.promapi_lines(self.query_result, strict_checks)
+                    return fmt.promapi_lines(self.query_result)
                 if self.formatter == "json":
                     # to_json delegates vectors to promapi; scalars render
                     # as a bare number (reference: src/format/json.rs:88-95)
@@ -141,9 +136,9 @@ class ProgramResult:
 
                     if isinstance(self.query_result, ScalarResult):
                         return [rust_f64_str(self.query_result.value)]
-                    return fmt.promapi_lines(self.query_result, strict_checks)
+                    return fmt.promapi_lines(self.query_result)
                 # default: human-readable
-                return fmt.promhuman_lines(self.query_result, strict_checks, verbose)
+                return fmt.promhuman_lines(self.query_result, verbose)
             if self.kind == "entries":
                 if self.formatter == "json":
                     return fmt.entries_json_lines(self.entries, verbose)
@@ -415,25 +410,22 @@ def run_cli_stream(
 
 
 def run_cli_live(
-    spark: SparkSession, argv: list[str], line_iter,
-    out=None, pace_s: float = 0.0, chunk_lines: int = 4096,
+    spark: SparkSession, argv: list[str], line_iter, out=None,
 ):
     """LIVE ``-i`` mode: consume the stream (early-terminating at
     ``--until``), then write each screen-refresh frame to ``out`` and
     FLUSH as soon as that instant's cells stream back from the cluster
     (formatter.prominteractive_frames → toLocalIterator), redrawing the
     terminal in place like the reference's interactive loop
-    (humanreadable.rs:103-130). ``pace_s`` optionally paces frames on
-    the wall clock for demo replay. Returns the number of frames
-    written; frame bytes are identical to the batch ``-i`` output."""
+    (humanreadable.rs:103-130). Returns the number of frames written;
+    frame bytes are identical to the batch ``-i`` output."""
     import sys
-    import time
 
     o = parse_cli_args(argv)
     if not o.interactive:
         raise PqError("run_cli_live requires -i/--interactive")
     ast = parse_program(o.program)
-    lines = consume_stream_lines(spark, ast, line_iter, o.until, chunk_lines)
+    lines = consume_stream_lines(spark, ast, line_iter, o.until)
     result = _run_cli_program(spark, o, ast, lines)
     try:
         if result.kind != "query" or result.formatter is not None:
@@ -441,8 +433,6 @@ def run_cli_live(
         out = out if out is not None else sys.stdout
         n = 0
         for frame in fmt.prominteractive_frames(result.query_result):
-            if n and pace_s:
-                time.sleep(pace_s)
             out.write(frame + "\n")
             out.flush()
             n += 1

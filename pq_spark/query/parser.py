@@ -176,9 +176,9 @@ _FUNC_ARG_KINDS: dict[str, list[str]] = {
 class Cursor:
     __slots__ = ("s", "pos")
 
-    def __init__(self, s: str, pos: int = 0):
+    def __init__(self, s: str):
         self.s = s
-        self.pos = pos
+        self.pos = 0
 
     def ws(self) -> None:
         self.pos = _WS.match(self.s, self.pos).end()

@@ -272,20 +272,19 @@ PACKED_SCHEMA = (
 def pack_blocks(
     samples: DataFrame,
     block_ms: int = 3_600_000,
-    blocks_per_group: int = 24,
     dim: DataFrame | None = None,
 ) -> DataFrame:
     """samples (seq, ts, name, labels, value) → one Gorilla blob per
     (series, block).
 
-    Shuffle key is the SUPER-block ``(series, blocks_per_group × block_ms)``
+    Shuffle key is the SUPER-block ``(series, 24 × block_ms)``
     — a hot series' points still spread across reducers over time (the
     paper's own sharding scheme), while each Python invocation packs many
     blocks at once (``pandas.groupby`` inside the kernel), amortizing the
     per-group Arrow/pandas overhead that would otherwise dominate when
     blocks are small.
     """
-    super_ms = block_ms * blocks_per_group
+    super_ms = block_ms * 24
     if dim is None:
         if narrow_fact(samples):
             raise ValueError("narrow fact input requires an explicit series dim")

@@ -80,6 +80,7 @@ from ..materialize import Held, persist
 # cannot see code); v2: overflow-proof xor digest (v1 summed 64-bit hashes)
 SCHEMA_VERSION = 2
 PART_COL = "date"  # every table is partitioned by it (see ``with_date``)
+PUBLISH_ATTEMPTS = 5  # snapshot swaps one publish tries before giving up
 
 
 class StoreCorruptionError(RuntimeError):
@@ -235,7 +236,7 @@ class TierStore:
         with open(p) as f:
             return json.load(f)
 
-    def _publish_snapshot(self, table: str, attempts: int = 5) -> tuple[int, bool]:
+    def _publish_snapshot(self, table: str) -> tuple[int, bool]:
         """Compose a snapshot from the manifest scan and swap CURRENT to it
         atomically; re-check after the swap so concurrent disjoint-partition
         commits converge (see module docstring).
@@ -247,7 +248,7 @@ class TierStore:
         d = self._snapshots_dir(table)
         os.makedirs(d, exist_ok=True)
         last_id = self.current_snapshot_id(table) or 0
-        for _ in range(attempts):
+        for _ in range(PUBLISH_ATTEMPTS):
             parts = self._scan_manifest_parts(table)
             cur_id = self.current_snapshot_id(table)
             if cur_id is not None:

@@ -28,6 +28,9 @@ from ..engine.ingest import samples_from_table, series_dim_for_table
 LANGS = ["en", "de", "fr", "nl", "ru"]
 # Zipf-ish domain popularity: domain i gets weight ~ 1/(i+1); domain00 is hot.
 N_DOMAINS = 20
+# capture times fall in [START_TS_MS, START_TS_MS + SPAN_MS): three days
+START_TS_MS = 1_700_000_000_000
+SPAN_MS = 3 * 86_400_000
 
 _HTML_PREFIX = b"<html><head><title>"
 _HTML_MID = b"</title></head><body><p>"
@@ -37,8 +40,6 @@ _HTML_SUFFIX = b"</p></body></html>"
 def synth_pages(
     spark: SparkSession,
     n_rows: int,
-    start_ts_ms: int = 1_700_000_000_000,
-    span_ms: int = 3 * 86_400_000,
     seed: int = 42,
     partitions: int | None = None,
 ) -> DataFrame:
@@ -66,7 +67,7 @@ def synth_pages(
         F.lit("-"), F.col("id").cast("string"),
     )
     lang = F.element_at(F.array(*[F.lit(l) for l in LANGS]), (h3 % len(LANGS) + 1).cast("int"))
-    ts_ms = F.lit(start_ts_ms) + (h2 % F.lit(span_ms))
+    ts_ms = F.lit(START_TS_MS) + (h2 % F.lit(SPAN_MS))
 
     # body text: deterministic function of id; variable length
     words = (h % 37 + 3).cast("int")
@@ -168,7 +169,7 @@ def page_series_dim_from_enriched(enriched: DataFrame) -> DataFrame:
     return series_dim_for_table(enriched, **_PAGE_TABLE_ARGS)
 
 
-def pages_from_warc(spark, path_glob: str, http_payload: bool = False):
+def pages_from_warc(spark, path_glob: str):
     """WARC archives → the full page table: (url, warc_ts, html) from
     ``read_warc`` plus ``text`` via the extraction seam and ``lang`` via
     the trigram language model — the complete ingest path from a
@@ -182,15 +183,14 @@ def pages_from_warc(spark, path_glob: str, http_payload: bool = False):
     from ..textops import lang_id
     from .warc import read_warc
 
-    base = read_warc(spark, path_glob, http_payload=http_payload)
+    base = read_warc(spark, path_glob)
     ckey = F.xxhash64(
         F.col("url"), F.col("warc_ts").cast("string"), F.md5(F.col("html"))
     )
     with_text = base.withColumn("text", extract_text_udf()(F.col("html")))         .withColumn("_ck", ckey)
     langs = lang_id(
         with_text.select(F.col("_ck").alias("doc_id"), "text")
-        .dropDuplicates(["doc_id"]),
-        id_col="doc_id",
+        .dropDuplicates(["doc_id"])
     ).select(F.col("doc_id").alias("_ck"), F.col("pred_lang").alias("lang"))
     return with_text.join(langs, "_ck").select(
         "url", "warc_ts", "html", "text", "lang"

@@ -306,9 +306,7 @@ def route_tier(
     return max(cands) if cands else None
 
 
-def serve_over_time_routed(
-    tiers: dict, interval_ms: int, range_ms: int, phase_ms: int = 0,
-):
+def serve_over_time_routed(tiers: dict, interval_ms: int, range_ms: int):
     """Serve ``*_over_time(v[range])`` on an ``interval``-stride grid from
     the coarsest exact tier in ``tiers`` ({name-or-width: tier DataFrame}).
     Returns ``(tier_ms, served)``; raises when no tier qualifies (the
@@ -317,33 +315,30 @@ def serve_over_time_routed(
     widths = {
         (TIER_MS[k] if isinstance(k, str) else int(k)): k for k in tiers
     }
-    b = route_tier(widths, interval_ms, range_ms, phase_ms)
+    b = route_tier(widths, interval_ms, range_ms)
     if b is None:
         raise ValueError(
             f"no tier in {sorted(widths)} serves interval={interval_ms} "
-            f"range={range_ms} anchor={phase_ms} exactly — use raw samples"
+            f"range={range_ms} exactly — use raw samples"
         )
-    served = over_time_from_tier(
-        tiers[widths[b]], b, range_ms, stride_ms=interval_ms,
-        phase_ms=phase_ms,
-    )
+    served = over_time_from_tier(tiers[widths[b]], b, range_ms, stride_ms=interval_ms)
     return b, served
 
 
 def hll_tier(
     df: DataFrame, tier_ms: int, item_col: str,
-    key_cols: tuple = ("skey",), ts_col: str = "ts", lg_k: int = 12,
+    key_cols: tuple = ("skey",),
 ) -> DataFrame:
     """Distinct-count continuous aggregate: a Datasketches HLL sketch of
     ``item_col`` per (bucket, keys). COUNT DISTINCT is the classic
     non-algebraic aggregate — raw partials can't merge — but its sketch
     CAN: ``hll_union_agg`` re-aggregates a finer tier into a coarser one
     without touching raw data, exactly like the algebraic partial columns.
-    Sketches are exact while in sparse mode (up to ~2^lg_k items) and
-    ~1.6%/sqrt(2^lg_k) beyond; one hash aggregation, map-side combined."""
-    bucket = _bucket(F.col(ts_col), tier_ms)
+    Sketches (lg_k 12) are exact while in sparse mode (up to ~2^12 items)
+    and ~1.6%/sqrt(2^12) beyond; one hash aggregation, map-side combined."""
+    bucket = _bucket(F.col("ts"), tier_ms)
     return df.groupBy(bucket.alias("bucket_ts"), *key_cols).agg(
-        F.hll_sketch_agg(F.col(item_col).cast("string"), F.lit(lg_k)).alias("hll")
+        F.hll_sketch_agg(F.col(item_col).cast("string"), F.lit(12)).alias("hll")
     )
 
 
@@ -370,7 +365,6 @@ def gapfill(
     tier_ms: int,
     dim: DataFrame,
     lookback_buckets: int = 1,
-    value_col: str = "last_val",
 ) -> DataFrame:
     """Explicit gap-fill with staleness-aware lookback (pq instant-vector
     semantics at interval == tier): every bucket in [min, max] of the global
@@ -391,7 +385,7 @@ def gapfill(
         tier_df.crossJoin(F.broadcast(bounds))
         .select(
             "skey", "bucket_ts",
-            F.col(value_col).alias("_v"),
+            F.col("last_val").alias("_v"),
             F.explode(
                 F.sequence(
                     F.col("bucket_ts"),

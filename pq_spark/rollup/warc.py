@@ -79,14 +79,12 @@ def _record_bytes(url: str, ts, html: bytes) -> bytes:
     return head + html + _CRLF + _CRLF
 
 
-def write_warc(
-    pages: DataFrame, out_dir: str, gzip_members: bool = True
-) -> None:
-    """Write (url, warc_ts, html) rows as one ``part-NNNNN.warc[.gz]``
+def write_warc(pages: DataFrame, out_dir: str) -> None:
+    """Write (url, warc_ts, html) rows as one ``part-NNNNN.warc.gz``
     file per partition (executor-side sequential writes — the same
-    one-file-per-task shape a Hadoop committer produces). With
-    ``gzip_members`` each record is its own gzip member, the Common-Crawl
-    convention that keeps records individually seekable.
+    one-file-per-task shape a Hadoop committer produces). Each record is
+    its own gzip member, the Common-Crawl convention that keeps records
+    individually seekable.
 
     Arrow-batched (``mapInPandas`` + ``TaskContext.partitionId``): rows
     reach Python as columnar batches, not per-row pickled Rows, and the
@@ -94,13 +92,12 @@ def write_warc(
     ``read_warc``, so the round trip is timezone-stable under the
     package's pinned UTC session regardless of the host OS timezone."""
     os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.gz" if gzip_members else ".warc"
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}{ext}")
+        path = os.path.join(out_dir, f"part-{pid:05d}.warc.gz")
         n = 0
         with open(path, "wb") as f:
             for pdf in batches:
@@ -108,7 +105,7 @@ def write_warc(
                     pdf["url"], pdf["warc_ts"], pdf["html"]
                 ):
                     rec = _record_bytes(url, ts, bytes(html))
-                    f.write(gzip.compress(rec) if gzip_members else rec)
+                    f.write(gzip.compress(rec))
                     n += 1
         yield pd.DataFrame({"n": [n]})
 

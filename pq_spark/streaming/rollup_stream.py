@@ -4,8 +4,9 @@ pq is a streaming engine over stdin; on bounded input our batch planner is
 observationally equivalent (SURVEY §2.8). For genuinely unbounded input,
 this module provides the streaming skins:
 
-- ``streaming_tier``: the 1m/1h/1d continuous aggregate as a watermarked
-  windowed aggregation. pq's buffer eviction (reference:
+- ``streaming_tier``: the 1m continuous aggregate as a watermarked
+  windowed aggregation (the 1h/1d tiers cascade from its partials).
+  pq's buffer eviction (reference:
   src/query/vector.rs:125-126,178-202 — drop samples older than
   ``next_instant − lookback``) maps exactly onto the watermark: late data
   beyond the lookback is dropped on arrival (vector.rs:100-102).
@@ -25,10 +26,8 @@ from pyspark.sql import DataFrame, functions as F
 from ..rollup.tiers import PARTIAL_COLS, TIER_MS, _partial_aggs, _series_fact
 
 
-def streaming_tier(
-    sample_stream: DataFrame, tier: str = "1m", watermark: str = "5 minutes"
-) -> DataFrame:
-    """Watermarked windowed tier partials: the SAME narrow shape and
+def streaming_tier(sample_stream: DataFrame, watermark: str = "5 minutes") -> DataFrame:
+    """Watermarked windowed 1m tier partials: the SAME narrow shape and
     aggregates as ``tier_partials`` (bucket_ts, skey, partial cols), so the
     batch cascade and serving read streamed output unchanged. Grouping
     stays on the watermarked ``window``: append mode needs the event-time
@@ -38,7 +37,7 @@ def streaming_tier(
         .withColumn("event_time", F.timestamp_millis(F.col("ts")))
         .withWatermark("event_time", watermark)
     )
-    win = F.window("event_time", f"{TIER_MS[tier]} milliseconds")
+    win = F.window("event_time", f"{TIER_MS['1m']} milliseconds")
     return (
         fact.groupBy(win.alias("w"), "skey")
         .agg(*_partial_aggs())
@@ -52,8 +51,6 @@ def streaming_tier(
 def streaming_dedup(
     docs: DataFrame,
     watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    text_col: str = "text",
 ) -> DataFrame:
     """Streaming exact dedup over an unbounded document stream: keep the
     FIRST ARRIVAL of each normalized-text hash within the watermark
@@ -71,16 +68,16 @@ def streaming_dedup(
     the watermark horizon and Spark evicts entries older than the
     event-time watermark, so a perpetual crawl stream runs in BOUNDED
     state (the horizon × ingest rate), unlike a naive dropDuplicates
-    whose state grows with the corpus. ``ts_col`` is epoch ms (the
+    whose state grows with the corpus. ``ts`` is epoch ms (the
     crawl timestamp); duplicates arriving farther apart than the horizon
     are NOT collapsed — dedup beyond the horizon belongs to the batch
     compaction pass (the standard lambda split).
     """
     h = F.md5(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     )
     return (
-        docs.withColumn("_ets", F.timestamp_millis(F.col(ts_col)))
+        docs.withColumn("_ets", F.timestamp_millis(F.col("ts")))
         .withColumn("_text_hash", h)
         .withWatermark("_ets", watermark)
         .dropDuplicatesWithinWatermark(["_text_hash"])

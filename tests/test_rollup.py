@@ -789,7 +789,7 @@ def test_warc_roundtrip(spark, tmp_path, pages):
 
     subset = pages.limit(300).repartition(4).cache()
     out = str(tmp_path / "warc")
-    write_warc(subset, out, gzip_members=True)
+    write_warc(subset, out)
     assert len(glob.glob(out + "/part-*.warc.gz")) == 4
 
     back = read_warc(spark, out + "/*.warc.gz")

@@ -87,7 +87,7 @@ def _run_stream(spark, df, name, mode="append"):
 
 def test_streaming_tier(spark, sample_dir):
     stream = _labelled(spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir))
-    tier = streaming_tier(stream, "1m", watermark="0 seconds")
+    tier = streaming_tier(stream, watermark="0 seconds")
     # complete mode: in append mode windows past the final watermark stay
     # open when a bounded replay ends — complete shows every window
     out = _run_stream(spark, tier, f"tier_{int(time.time()*1000)}", mode="complete")
@@ -113,7 +113,7 @@ def test_streamed_tier_serves_over_time_windows(spark, sample_dir):
     from pq_spark.rollup.tiers import over_time_from_tier, tier_partials
 
     stream = _labelled(spark.readStream.schema(SAMPLE_SCHEMA).json(sample_dir))
-    tier = streaming_tier(stream, "1m", watermark="0 seconds")
+    tier = streaming_tier(stream, watermark="0 seconds")
     streamed = _run_stream(
         spark, tier, f"serve_{int(time.time()*1000)}", mode="complete"
     )
@@ -176,7 +176,7 @@ def test_streaming_pq_query_serving_equals_batch(spark, tmp_path):
     tag = int(time.time() * 1000)
     streamed = attach_series(
         _run_stream(
-            spark, streaming_tier(stream, "1m", watermark="1 minutes"),
+            spark, streaming_tier(stream, watermark="1 minutes"),
             f"pqserve_{tag}", mode="complete",
         ),
         _run_stream(spark, series_dim(stream), f"pqserve_dim_{tag}"),
@@ -249,7 +249,7 @@ def test_streaming_tier_append_drops_late_rows_and_reports_state(
 
     tag = int(time.time() * 1000)
     tier, progress = drain(
-        streaming_tier(stream, "1m", watermark="1 minutes"), f"late_{tag}"
+        streaming_tier(stream, watermark="1 minutes"), f"late_{tag}"
     )
     assert sorted(
         (r["bucket_ts"], r["cnt"], r["sum"]) for r in tier.collect()

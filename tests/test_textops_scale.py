@@ -15,17 +15,17 @@ def test_ann_multiprobe_recall(spark):
     strictly beat single-bucket probing (measured 0.6 vs 0.2)."""
     emb = dq._emb(spark, SF)
     q = dq._query_vec(spark, SF)
-    exact = {r["vec_id"] for r in textops.cosine_topk(emb, q, k=10).collect()}
+    exact = {r["vec_id"] for r in textops.cosine_topk(emb, q).collect()}
     multi = {
         r["vec_id"]
         for r in textops.ann_topk_lsh(
-            emb, q, k=10, num_planes=6, multiprobe_hamming=2
+            emb, q, num_planes=6, multiprobe_hamming=2
         ).collect()
     }
     single = {
         r["vec_id"]
         for r in textops.ann_topk_lsh(
-            emb, q, k=10, num_planes=6, multiprobe_hamming=0
+            emb, q, num_planes=6, multiprobe_hamming=0
         ).collect()
     }
     recall_multi = len(exact & multi) / 10
@@ -101,10 +101,10 @@ def test_ann_ivf_recall(spark):
     buckets (LSH multiprobe h<=2 measures 0.6 at ~36% read)."""
     emb = dq._emb(spark, SF)
     q = dq._query_vec(spark, SF)
-    exact = {r["vec_id"] for r in textops.cosine_topk(emb, q, k=10).collect()}
+    exact = {r["vec_id"] for r in textops.cosine_topk(emb, q).collect()}
     ivf = {
         r["vec_id"]
-        for r in textops.ann_topk_ivf(emb, q, k=10, n_centroids=16, nprobe=4).collect()
+        for r in textops.ann_topk_ivf(emb, q, n_centroids=16, nprobe=4).collect()
     }
     assert len(exact & ivf) / 10 >= 0.8
 
@@ -204,9 +204,9 @@ def test_ivf_kmeans_balances_inverted_lists(spark):
 
     # exact recall retained at the tightest probe budget
     qv = [float(x) for x in centers[7] + rng.normal(0, 0.18, DIM)]
-    exact = {r["vec_id"] for r in textops.cosine_topk(emb, qv, k=10).collect()}
+    exact = {r["vec_id"] for r in textops.cosine_topk(emb, qv).collect()}
     got = {r["vec_id"] for r in textops.ann_topk_ivf(
-        emb, qv, k=10, n_centroids=K_TRUE, nprobe=1, train_iters=4
+        emb, qv, n_centroids=K_TRUE, nprobe=1, train_iters=4
     ).collect()}
     assert len(exact & got) / 10 == 1.0
 
@@ -519,7 +519,7 @@ def test_dup_ngram_coverage_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in dup_ngram_coverage(docs, n=5).collect()}
+    out = {r["doc_id"]: r for r in dup_ngram_coverage(docs).collect()}
     exp = {1: (6, 1.0), 2: (6, 5 / 6), 3: (2, 0.0), 4: (10, 1.0),
            6: (7, 6 / 7)}
     assert set(out) == set(exp)
@@ -531,7 +531,7 @@ def test_dup_ngram_coverage_semantics(spark):
         [(1, "zz yy"), (2, "zz yy")], "doc_id long, text string"
     )
     out2 = {r["doc_id"]: r["dup_ngram_frac"]
-            for r in dup_ngram_coverage(short, n=5).collect()}
+            for r in dup_ngram_coverage(short).collect()}
     assert out2 == {1: 1.0, 2: 1.0}
 
 
@@ -647,7 +647,7 @@ def test_dup_span_removal_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in dup_span_removal(docs, n=5).collect()}
+    out = {r["doc_id"]: r for r in dup_span_removal(docs).collect()}
     exp = {
         1: (6, 6, ""),
         2: (6, 5, "x"),       # mixed case/extra spaces normalize first
@@ -665,7 +665,7 @@ def test_dup_span_removal_semantics(spark):
         [(1, "zz yy"), (2, "zz yy")], "doc_id long, text string"
     )
     out2 = {r["doc_id"]: (r["n_removed"], r["clean_text"])
-            for r in dup_span_removal(short, n=5).collect()}
+            for r in dup_span_removal(short).collect()}
     assert out2 == {1: (2, ""), 2: (2, "")}
 
 
